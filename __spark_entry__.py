@@ -4347,9 +4347,9 @@ def q_merge_intervals(spark, sf_dir):
 
 def q_drift_report(spark, sf_dir):
     """The drift panel (monitor.py:drift_report): eight two-sample
-    monitors (KS/CvM/MW/Cliff/PSI/JSD/EMD/chi2+V) off ONE pair of
-    persisted bin tables, joined per series — at 100 TB the panel
-    costs two hist-tier reads, never eight raw scans."""
+    monitors (KS/CvM/MW/Cliff/PSI/JSD/EMD/chi2+V) as ONE groupBy over
+    one aligned bin table built from one pair of histograms — at 100 TB
+    the panel costs two hist-tier reads, never eight raw scans."""
     from traval_spark.operators.monitor import drift_report
 
     ev = _events(spark, sf_dir).select(

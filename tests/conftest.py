@@ -6,6 +6,8 @@ mirroring the reference fixtures (FIXTURES.md F1-F5).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -15,8 +17,13 @@ from traval_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # get_spark's 48g driver-memory default is sized for a large host; a
+    # test JVM allowed that much heap outgrows a small machine's RAM and is
+    # OOM-killed mid-suite (SPARK_DRIVER_MEM still overrides)
     s = get_spark(
-        app_name="traval-spark-tests", master="local[4]", shuffle_partitions=4
+        app_name="traval-spark-tests", master="local[4]", shuffle_partitions=4,
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "4g")},
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from traval_spark.operators.monitor import (
     counter_windows,
@@ -1943,3 +1944,93 @@ def test_drift_report_panel_disagrees_informatively(spark):
     assert (same["ks_drifted"], same["cvm_drifted"],
             same["mw_shifted"]) == (0, 0, 0)
     assert same["delta"] == 0.0 and same["cvm"] == 0.0
+
+
+# drift_report's column for each *_from_hists output column it carries
+_PANEL_COLS = {
+    "ks_from_hists": [("ks_d", "ks_d"), ("drifted", "ks_drifted")],
+    "cvm_from_hists": [("cvm", "cvm"), ("drifted", "cvm_drifted")],
+    "mw_from_hists": [("z", "mw_z"), ("shifted", "mw_shifted")],
+    "cliffs_from_hists": [("delta", "delta"), ("magnitude", "magnitude")],
+    "psi_from_hists": [("psi", "psi")],
+    "jsd_from_hists": [("jsd_norm", "jsd_norm")],
+    "emd_from_hists": [("emd", "emd")],
+    "chi2_from_hists": [("cramers_v", "cramers_v"),
+                        ("drifted", "chi2_drifted")],
+}
+
+# two-sided with many bins / one bin on both sides / one snapshot only
+_DRIFT_A = {"two": [1, 2, 2, 3, 5, 8, 8], "one_bin": [4, 4],
+            "only_a": [1, 1, 2]}
+_DRIFT_B = {"two": [2, 3, 3, 4, 6, 9, 9, 9], "one_bin": [4],
+            "only_b": [5, 6]}
+
+
+def _drift_inputs(spark):
+    from collections import Counter
+
+    def raw(groups):
+        return spark.createDataFrame(
+            [(s, float(v)) for s, vs in groups.items() for v in vs],
+            "source string, value double")
+
+    def hist(groups, cname):
+        return spark.createDataFrame(
+            [(s, b, c) for s, vs in groups.items()
+             for b, c in Counter(vs).items()],
+            f"source string, bin long, {cname} long")
+
+    return (raw(_DRIFT_A), raw(_DRIFT_B),
+            hist(_DRIFT_A, "ca"), hist(_DRIFT_B, "cb"))
+
+
+@pytest.mark.parametrize("name", sorted(_PANEL_COLS))
+def test_drift_report_columns_equal_from_hists(spark, name):
+    """Every drift_report column equals its *_from_hists read row for
+    row, on a two-sided group, a one-bin group and groups seen in one
+    snapshot only.  One-sided groups keep their counts and report NULL
+    statistics (PSI excepted: its smoothing keeps it finite) instead of
+    dividing by zero; chi2_from_hists drops the one-bin group (dof 0),
+    where the panel reports NULL."""
+    from traval_spark.operators import monitor
+
+    a, b, ha, hb = _drift_inputs(spark)
+    cols = _PANEL_COLS[name]
+    panel = {r["source"]: r for r in monitor.drift_report(a, b).collect()}
+    fh = {r["source"]: r
+          for r in getattr(monitor, name)(ha, hb).collect()}
+    assert set(panel) == {"two", "one_bin", "only_a", "only_b"}
+    assert set(fh) <= set(panel)
+    for s, row in panel.items():
+        want = fh.get(s)
+        got = tuple(row[p] for _, p in cols)
+        assert got == (tuple(want[c] for c, _ in cols) if want
+                       else (None,) * len(cols)), (s, name)
+        if want is not None and "n_a" in want:
+            assert (want["n_a"], want["n_b"]) == (row["n_a"], row["n_b"])
+    assert (panel["only_a"]["n_a"], panel["only_a"]["n_b"]) == (3, 0)
+    assert (panel["only_b"]["n_a"], panel["only_b"]["n_b"]) == (0, 2)
+    if name != "psi_from_hists":
+        for s in ("only_a", "only_b"):
+            assert all(fh[s][c] is None for c, _ in cols), (s, name)
+    else:
+        assert fh["only_a"]["psi"] > 0
+    if name == "chi2_from_hists":
+        assert "one_bin" not in fh
+
+
+def test_drift_report_schema(spark):
+    from traval_spark.operators.monitor import drift_report
+
+    a, b, _, _ = _drift_inputs(spark)
+    got = [(f.name, f.dataType.simpleString())
+           for f in drift_report(a, b).schema.fields]
+    assert got == [
+        ("source", "string"), ("n_a", "bigint"), ("n_b", "bigint"),
+        ("ks_d", "double"), ("ks_drifted", "int"),
+        ("cvm", "double"), ("cvm_drifted", "int"),
+        ("mw_z", "double"), ("mw_shifted", "int"),
+        ("delta", "double"), ("magnitude", "string"),
+        ("psi", "double"), ("jsd_norm", "double"), ("emd", "double"),
+        ("cramers_v", "double"), ("chi2_drifted", "int"),
+    ]

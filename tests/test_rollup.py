@@ -793,6 +793,48 @@ def test_verify_cascade_audit(spark, seqs, tmp_path):
     assert rep.count() == 2
 
 
+def test_verify_cascade_all_flagged_bucket_is_consistent(spark, seqs,
+                                                         tmp_path):
+    """An hour bucket whose every point is rule-flagged (NULL value)
+    has NULL sum/min/max on both tiers: that is agreement, not drift.
+    A measure NULL on one side only is still drift."""
+    from traval_spark.sources.tierstore import verify_cascade
+
+    hour = F.date_trunc("hour", "ts")
+    first = seqs.select("source", hour.alias("h")).orderBy("source", "h") \
+        .first()
+    in_bucket = (F.col("source") == first["source"]) & (hour == first["h"])
+    flagged = seqs.withColumn(
+        "n_tok", F.when(in_bucket, F.lit(None)).otherwise(F.col("n_tok")))
+    store = TierStore(str(tmp_path / "tiers"))
+    t1m = rollup_raw(flagged, "1m")
+    t1h = rollup_cascade(t1m, "1h")
+    for tier, df in [("1m", t1m), ("1h", t1h)]:
+        fps = partition_fingerprints(
+            df.withColumn("day", F.date_trunc("day", "bucket")))
+        store.write_tier(tier, df, fps)
+
+    row = t1h.filter((F.col("source") == first["source"])
+                     & (F.col("bucket") == first["h"])).first()
+    assert row["n_points"] == 0 and row["sum_tok"] is None
+    assert verify_cascade(store, "1m", "1h", spark).count() == 0
+
+    # the stored side loses one bucket's max_tok: NULL vs value drifts
+    stored = store.read_tier("1h", spark).drop("day")
+    last = stored.orderBy(F.col("source").desc(), F.col("bucket").desc()) \
+        .first()
+    lost = stored.withColumn(
+        "max_tok",
+        F.when((F.col("source") == last["source"])
+               & (F.col("bucket") == last["bucket"]), F.lit(None))
+        .otherwise(F.col("max_tok")))
+    store.write_tier("1h", lost, partition_fingerprints(
+        lost.withColumn("day", F.date_trunc("day", "bucket"))))
+    rep = verify_cascade(store, "1m", "1h", spark).collect()
+    assert [(r["source"], r["bucket"], r["status"]) for r in rep] == [
+        (last["source"], last["bucket"], "value_drift")]
+
+
 def test_routed_sketch_and_hist_reads(spark, seqs, tmp_path):
     """Downsample-on-read over sketch/hist tier stores: old days served
     from the coarse (1h) tier, the newest day from the fine (1m) tier,

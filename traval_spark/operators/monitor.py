@@ -70,7 +70,10 @@ __all__ = [
     "threshold_episodes", "decayed_topk",
     "bucket_count_signal", "counts_from_tier", "stl_decompose",
     "stl_anomaly", "kw_from_hists", "kruskal_drift", "runs_test",
-    "lead_lag",
+    "lead_lag", "turning_points", "variance_ratio", "pettitt_change",
+    "seasonal_mk", "seasonal_sen", "hurst_rs", "kpss_level",
+    "fleet_report", "sen_slope_ci", "cvm_from_hists", "cvm_drift",
+    "cliffs_delta", "cliffs_from_hists", "drift_report",
 ]
 
 
@@ -910,78 +913,6 @@ def time_weighted_avg(
     )
 
 
-def psi_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    val: str = "value",
-    scale: int = 1,
-    ndigits: int = 6,
-) -> DataFrame:
-    """Population Stability Index between two snapshots of the same
-    measure — THE standard distribution-drift monitor (is this week's
-    token-length / value distribution still the one we trained on?).
-
-        PSI = sum_bins (p_i - q_i) * ln(p_i / q_i)
-
-    Bins are the discretized-value histogram (``round(v*scale)``, the
-    hist.py convention) over the UNION of bins observed in either
-    snapshot, with Laplace smoothing (+0.5 per bin) so one-sided bins
-    contribute finitely instead of forcing an epsilon hack:
-
-        p_i = (c_a + 0.5) / (n_a + 0.5 * B)
-
-    Everything derives from exact integer counts; the only float ops
-    (division, ln, the term sum) run identically per term in any
-    engine, and the cross-engine sum-association noise is ~1e-15 —
-    far under the rounding.  Rule of thumb: PSI < 0.1 stable, 0.1-0.25
-    drifting, > 0.25 shifted.  One groupBy per snapshot + a full-outer
-    join on the tiny bin table.  Output: ``*by, n_bins, psi``.
-    """
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return psi_from_hists(hist(df_a, "ca"), hist(df_b, "cb"),
-                          by=by, ndigits=ndigits)
-
-
-def psi_from_hists(
-    ha: DataFrame,
-    hb: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    ndigits: int = 6,
-) -> DataFrame:
-    """PSI from two histogram count frames (``*by, bin, ca`` / ``*by,
-    bin, cb``) — the tier-served drift path: feed it per-period bin
-    counts summed straight off a stored hist tier (hist.py) and the
-    drift read never re-scans raw (pytest proves tiered == direct)."""
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
-        F.count("*").alias("n_bins"),
-    )
-    t = j.join(tot, list(by))
-    p = (F.col("ca") + F.lit(0.5)) / (F.col("na") + 0.5 * F.col("n_bins"))
-    q = (F.col("cb") + F.lit(0.5)) / (F.col("nb") + 0.5 * F.col("n_bins"))
-    term = (p - q) * F.log(p / q)
-    return (
-        t.groupBy(*by)
-        .agg(
-            F.max("n_bins").alias("n_bins"),
-            F.round(F.sum(term), ndigits).alias("psi"),
-        )
-    )
-
-
 def slo_burn(
     df: DataFrame,
     is_error,
@@ -1259,113 +1190,6 @@ def forecast_backtest(
     )
 
 
-def ks_from_hists(
-    ha: DataFrame,
-    hb: DataFrame,
-    by: tuple[str, ...] = ("source",),
-) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov D from two histogram count frames
-    (``*by, bin, ca`` / ``*by, bin, cb``) — PSI's rank-based companion
-    (:func:`psi_from_hists`): PSI weighs every bin's log-odds shift, KS
-    reports the single worst CDF gap, so it catches a concentrated
-    shift PSI's smoothing dilutes and is distribution-free (the 1.36 *
-    sqrt((na+nb)/(na*nb)) alpha=0.05 fence applies regardless of
-    shape).  Like the PSI pair, this is the tier-served drift path:
-    feed per-period bin counts summed straight off a stored hist tier
-    (hist.py) and the read never re-scans raw.
-
-    Exactness: with per-bin cumulative counts CA_i, CB_i and totals
-    na, nb,
-
-        D = max_i |CA_i/na - CB_i/nb| = max_i |CA_i*nb - CB_i*na| / (na*nb)
-
-    — the numerator is an EXACT integer per bin (decimal(38,0); counts
-    up to 1e12 x 1e12 fit), so the argmax bin and the max numerator are
-    engine-identical; the one division to ``ks_d`` runs on the same two
-    decimal-cast doubles in both engines.  Tie rule: equal numerators
-    resolve to the LARGEST bin (struct-max), deterministic.
-
-    Plan shape: one full-outer join on the tiny bin table, one cumsum
-    window per series over bins (bin-table-sized, never raw-sized),
-    one groupBy.  Output: ``*by, n_a, n_b, ks_d, at_bin, drifted``
-    (drifted = D above the alpha=0.05 distribution-free fence).
-    """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    w = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = j.select(
-        *by, "bin",
-        F.sum(F.col("ca").cast("decimal(38,0)")).over(w).alias("cca"),
-        F.sum(F.col("cb").cast("decimal(38,0)")).over(w).alias("ccb"),
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    t = cum.join(tot, list(by))
-    num = F.abs(
-        F.col("cca") * F.col("n_b").cast("decimal(38,0)")
-        - F.col("ccb") * F.col("n_a").cast("decimal(38,0)")
-    )
-    best = t.groupBy(*by).agg(
-        F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
-        F.max(F.struct(num.alias("num"), F.col("bin"))).alias("__m"),
-    )
-    ks_d = (
-        F.col("__m")["num"].cast("double")
-        / (
-            F.col("n_a").cast("decimal(38,0)")
-            * F.col("n_b").cast("decimal(38,0)")
-        ).cast("double")
-    )
-    # the alpha=0.05 large-sample fence c(alpha)*sqrt((na+nb)/(na*nb)),
-    # c(0.05)=1.358 — distribution-free, so the drifted verdict needs no
-    # assumption about the measure's shape; both operands are doubles of
-    # exact integers, rounded 9dp before the compare (the slo_burn guard
-    # against a last-ulp flip flipping the verdict cross-engine)
-    fence = F.lit(1.358) * F.sqrt(
-        (F.col("n_a") + F.col("n_b")).cast("double")
-        / (
-            F.col("n_a").cast("decimal(38,0)")
-            * F.col("n_b").cast("decimal(38,0)")
-        ).cast("double")
-    )
-    return best.select(
-        *by, "n_a", "n_b",
-        ks_d.alias("ks_d"),
-        F.col("__m")["bin"].alias("at_bin"),
-        (F.round(ks_d, 9) > F.round(fence, 9)).cast("int").alias("drifted"),
-    )
-
-
-def ks_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    val: str = "value",
-    scale: int = 1,
-) -> DataFrame:
-    """Two-sample KS drift between two snapshots of the same measure,
-    binned by the hist.py discretization (``round(v*scale)``) so the
-    same read serves from raw or from a stored histogram tier
-    (:func:`ks_from_hists`, parity-tested).  One groupBy per snapshot;
-    everything downstream runs on the tiny bin table."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return ks_from_hists(hist(df_a, "ca"), hist(df_b, "cb"), by=by)
-
-
 def fano_dispersion(
     df: DataFrame | None = None,
     bucket: str = "1h",
@@ -1418,128 +1242,6 @@ def fano_dispersion(
         F.when(F.col("__s") > 0,
                (fano > 1.0).cast("int")).alias("over_dispersed"),
     )
-
-
-def mw_from_hists(
-    ha: DataFrame,
-    hb: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    ndigits: int = 9,
-) -> DataFrame:
-    """Mann–Whitney U (Wilcoxon rank-sum) location-shift test from two
-    histogram count frames (``*by, bin, ca`` / ``*by, bin, cb``) — the
-    third member of the tier-served drift family: PSI weighs every
-    bin's log-odds shift, KS reports the worst CDF gap (shape), MW asks
-    the LOCATION question "did the measure systematically move up or
-    down?" with a signed, tie-corrected z.  A distribution can drift
-    heavily (KS fires) with zero median shift (MW silent) and vice
-    versa, so monitors want both verdicts.
-
-    Rank sums straight off the bin table — no per-row ranking ever
-    happens: with tie-group size t_v = ca_v + cb_v at bin v and
-    cum_lt(v) = count of observations in smaller bins, every member of
-    bin v has average rank cum_lt + (t_v + 1)/2, so
-
-        2*R_a = sum_v ca_v * (2*cum_lt(v) + t_v + 1)   (EXACT integer)
-        2*U_a = 2*R_a - n_a*(n_a + 1)                  (EXACT integer)
-
-    (doubling clears the half-integer average ranks).  The normal
-    approximation with tie correction (T = sum_v t_v^3 - t_v):
-
-        Var(U) = n_a*n_b * (n^3 - n - T) / (12*n*(n-1)),  n = n_a+n_b
-        z = (2U - n_a*n_b -/+ 1) / (2*sqrt(Var))   (continuity-corrected)
-
-    Exactness: 2R, 2U, the variance numerator ``n^3 - n - T`` and the
-    denominator ``12n(n-1)`` are all exact decimal(38,0) integers
-    (magnitude budget: n^3 fits 38 digits to n ~ 10^12 observations per
-    group); each is cast to double ONCE and combined in a fixed
-    parenthesization, so z is engine-identical and only rounded to
-    ``ndigits`` as a guard.  Degenerate regimes return NULL z: a group
-    present in only one sample (n_a*n_b = 0) and the all-tied group
-    (T = n^3 - n, variance 0) — no shift is decidable.  ``shifted`` is
-    the alpha=0.05 two-sided verdict |z| > 1.96 (NULL propagates).
-
-    Plan shape: ks_from_hists' exactly — full-outer join of the two
-    tiny bin tables, one cumsum window over bins per group, one
-    groupBy.  Serve per-period ``ca``/``cb`` by summing a stored hist
-    tier's counts (parity-tested) and the read never re-scans raw.
-    Output: ``*by, n_a, n_b, u_a, z, shifted``.
-    """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).cast("decimal(38,0)").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("decimal(38,0)").alias("cb"),
-        )
-    )
-    w_lt = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    t = F.col("ca") + F.col("cb")
-    per_bin = j.select(
-        *by, "ca", "cb", t.alias("t"),
-        F.coalesce(F.sum(t).over(w_lt), F.lit(0).cast("decimal(38,0)"))
-        .alias("cum_lt"),
-    )
-    g = per_bin.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"),
-        F.sum("cb").alias("n_b"),
-        F.sum(
-            F.col("ca") * (2 * F.col("cum_lt") + F.col("t") + 1)
-        ).alias("__r2"),
-        F.sum(
-            F.col("t") * F.col("t") * F.col("t") - F.col("t")
-        ).alias("__tt"),
-    )
-    n = F.col("n_a") + F.col("n_b")
-    u2 = F.col("__r2") - F.col("n_a") * (F.col("n_a") + 1)  # 2*U_a, exact
-    d2 = u2 - F.col("n_a") * F.col("n_b")                   # 2*(U - mu)
-    var_num = n * n * n - n - F.col("__tt")                 # exact
-    var_s = (
-        (F.col("n_a") * F.col("n_b")).cast("double")
-        * var_num.cast("double")
-        / (12 * n * (n - 1)).cast("double")
-    )
-    z = F.when(d2 > 0, (d2 - 1).cast("double") / (2 * F.sqrt(var_s))) \
-         .when(d2 < 0, (d2 + 1).cast("double") / (2 * F.sqrt(var_s))) \
-         .otherwise(F.lit(0.0))
-    z_out = F.when(
-        (F.col("n_a") * F.col("n_b") > 0) & (var_num > 0),
-        F.round(z, ndigits),
-    )
-    return g.select(
-        *by,
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        (u2.cast("double") / F.lit(2.0)).alias("u_a"),
-        z_out.alias("z"),
-        (F.round(F.abs(z_out), ndigits) > 1.96).cast("int").alias("shifted"),
-    )
-
-
-def mann_whitney(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    val: str = "value",
-    scale: int = 1,
-) -> DataFrame:
-    """Two-sample Mann–Whitney location-shift drift between two
-    snapshots of the same measure, binned by the hist.py discretization
-    (``round(v*scale)``) so the same read serves from raw or from a
-    stored histogram tier (:func:`mw_from_hists`, parity-tested) —
-    ks_drift's signed companion: KS says THAT the distribution moved,
-    MW says WHICH WAY and whether the shift survives the alpha=0.05
-    rank test.  One groupBy per snapshot; everything downstream runs on
-    the tiny bin table."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return mw_from_hists(hist(df_a, "ca"), hist(df_b, "cb"), by=by)
 
 
 def mann_kendall(
@@ -1856,292 +1558,6 @@ def benford_digits(
         F.round(F.col("__o1").cast("double") / n, ndigits).alias("d1_share"),
         (chi2 <= F.lit(_CHI2_8DF_05)).cast("int").alias("benford_ok"),
     )
-
-
-def _pair_hists(df_a, df_b, by, val, scale):
-    """The psi/ks/mw snapshot discretization (``round(v*scale)``, the
-    hist.py bin convention) — two count frames ready for any
-    ``*_from_hists`` read, so every drift statistic in this family can
-    also be served from a stored histogram tier."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return hist(df_a, "ca"), hist(df_b, "cb")
-
-
-def emd_from_hists(
-    ha: DataFrame,
-    hb: DataFrame,
-    by: tuple[str, ...] = ("source",),
-) -> DataFrame:
-    """1-D earth mover's distance (Wasserstein-1) between two histogram
-    count frames (``*by, bin, ca`` / ``*by, bin, cb``) — the
-    MAGNITUDE companion to :func:`ks_from_hists`: KS reports the single
-    worst CDF gap (did it drift?), EMD integrates |CDF_a - CDF_b| over
-    the value axis (by how MUCH, in bin units — divide by the hist
-    scale for value units), so a small shift of the whole mass and a
-    large shift of a sliver score differently where KS can tie them.
-
-    Exactness: on a discrete support the CDF is a step function —
-    constant between observed bins — so
-
-        W1 = sum_i |CA_i*nb - CB_i*na| * (bin_{i+1} - bin_i) / (na*nb)
-
-    where the per-step numerator |CA*nb - CB*na| * gap is an EXACT
-    decimal integer (the ks_from_hists CDF-gap numerator times an
-    integer gap), the sum of exact decimals is exact, and the ONE
-    final division runs on the same two doubles in any engine — no
-    rounding guard needed, unlike the ln-based family.  The last bin
-    contributes nothing (both CDFs have reached 1, the numerator is
-    identically 0), so ``lead`` needing no default is not a hole.
-
-    Like the PSI/KS pair this is the tier-served drift path: feed
-    per-period bin counts summed straight off a stored hist tier and
-    the read never re-scans raw.  Plan shape: one full-outer join on
-    the tiny bin table, one cumsum + lead window per series over bins,
-    one groupBy.  Output: ``*by, n_a, n_b, emd`` (bin units).
-    """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    wo = Window.partitionBy(*by).orderBy("bin")
-    w = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = j.select(
-        *by, "bin",
-        F.sum(F.col("ca").cast("decimal(38,0)")).over(w).alias("cca"),
-        F.sum(F.col("cb").cast("decimal(38,0)")).over(w).alias("ccb"),
-        (F.lead("bin").over(wo) - F.col("bin")).alias("__gap"),
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    t = cum.join(tot, list(by))
-    num = F.abs(
-        F.col("cca") * F.col("n_b").cast("decimal(38,0)")
-        - F.col("ccb") * F.col("n_a").cast("decimal(38,0)")
-    ) * F.coalesce(F.col("__gap"), F.lit(0)).cast("decimal(38,0)")
-    agg = t.groupBy(*by).agg(
-        F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
-        F.sum(num).alias("__num"),
-    )
-    return agg.select(
-        *by, "n_a", "n_b",
-        (
-            F.col("__num").cast("double")
-            / (
-                F.col("n_a").cast("decimal(38,0)")
-                * F.col("n_b").cast("decimal(38,0)")
-            ).cast("double")
-        ).alias("emd"),
-    )
-
-
-def emd_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    val: str = "value",
-    scale: int = 1,
-) -> DataFrame:
-    """Wasserstein-1 drift between two snapshots of the same measure,
-    binned by the hist.py discretization so the same read serves from
-    raw or from a stored histogram tier (:func:`emd_from_hists`,
-    parity-tested).  One groupBy per snapshot; everything downstream
-    runs on the tiny bin table."""
-    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
-    return emd_from_hists(ha, hb, by=by)
-
-
-def jsd_from_hists(
-    ha: DataFrame,
-    hb: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    ndigits: int = 6,
-) -> DataFrame:
-    """Jensen-Shannon divergence between two histogram count frames —
-    the BOUNDED, symmetric member of the drift family: PSI is unbounded
-    and needs Laplace smoothing to survive one-sided bins; JSD is
-    finite by construction (a bin observed on one side only contributes
-    p/2 * ln 2 through the mixture), symmetric, and capped at ln 2, so
-    thresholds transfer across measures with different supports.
-
-        JSD = ( KL(p || m) + KL(q || m) ) / 2,    m = (p + q)/2
-
-    with p_i = ca_i/na, q_i = cb_i/nb — doubles of exact integers, so
-    every per-bin term is engine-identical; the term SUM is the one
-    order-dependent float reduction, rounded to ``ndigits`` (the
-    source_entropy convention; association noise ~1e-15 sits far under
-    it).  Zero-count bins contribute exactly 0 for their side (the
-    0*ln(0) limit), taken via a WHEN guard, never an epsilon.
-
-    Tier-served like the rest of the family (feed per-period bin counts
-    off a stored hist tier).  Output: ``*by, n_bins, n_a, n_b, jsd,
-    jsd_norm`` (jsd_norm = jsd/ln 2 in [0, 1]).
-    """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by,
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
-        F.count("*").alias("n_bins"),
-    )
-    t = j.join(tot, list(by))
-    p = F.col("ca").cast("double") / F.col("na").cast("double")
-    q = F.col("cb").cast("double") / F.col("nb").cast("double")
-    m = (p + q) / F.lit(2.0)
-    term = (
-        F.when(F.col("ca") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
-        + F.when(F.col("cb") > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
-    ) / F.lit(2.0)
-    out = t.groupBy(*by).agg(
-        F.max("n_bins").alias("n_bins"),
-        F.max("na").alias("n_a"), F.max("nb").alias("n_b"),
-        F.sum(term).alias("__jsd"),
-    )
-    return out.select(
-        *by, "n_bins", "n_a", "n_b",
-        F.round(F.col("__jsd"), ndigits).alias("jsd"),
-        F.round(F.col("__jsd") / F.lit(float(_LN2)), ndigits)
-        .alias("jsd_norm"),
-    )
-
-
-_LN2 = 0.6931471805599453
-
-
-def jsd_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    val: str = "value",
-    scale: int = 1,
-    ndigits: int = 6,
-) -> DataFrame:
-    """JSD drift between two snapshots of the same measure, binned by
-    the hist.py discretization so the same read serves from raw or from
-    a stored histogram tier (:func:`jsd_from_hists`, parity-tested)."""
-    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
-    return jsd_from_hists(ha, hb, by=by, ndigits=ndigits)
-
-
-def chi2_from_hists(
-    ha: DataFrame,
-    hb: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    alpha_z: float = 1.6449,
-    ndigits: int = 6,
-) -> DataFrame:
-    """Pearson chi-square homogeneity test between two histogram count
-    frames — the SIGNIFICANCE member of the drift family: PSI/JSD/EMD
-    report effect sizes with rule-of-thumb thresholds; chi-square turns
-    the same 2 x B contingency table into a test statistic with a
-    calibrated false-alarm rate, so tiny drifts on huge samples and
-    huge drifts on tiny samples are judged on the same footing.
-
-    For the 2 x B table with row totals na, nb (N = na + nb) and bin
-    column totals t_i = ca_i + cb_i, the classic statistic collapses to
-
-        chi2 = sum_i (ca_i*nb - cb_i*na)^2 / t_i   /   (na * nb)
-
-    (derivation: both rows' (o-e)^2/e terms share the numerator
-    (ca*nb - cb*na)^2/N^2 and their 1/e factors sum to N^2/(t*na*nb)).
-    The per-bin difference ca*nb - cb*na is an exact decimal integer;
-    SQUARING it can exceed decimal(38) at the 1e12-count design scale,
-    so each term is computed as a double OF exact integers (d*d/t —
-    engine-identical per term) and the term sum is the one
-    order-dependent float reduction, rounded to ``ndigits`` with the
-    result (association noise ~1e-15 relative).
-
-    Verdict: ``drifted`` compares chi2 against the Wilson-Hilferty
-    alpha≈0.05 critical value  dof*(1 - 2/(9 dof) + z*sqrt(2/(9 dof)))^3
-    with z = ``alpha_z`` (1.6449 = one-sided 0.05 normal quantile) —
-    the standard closed-form chi-square quantile approximation (exact
-    enough for dof >= 3, slightly conservative below), both sides
-    rounded to 9 dp before the compare (the slo_burn guard).  Also
-    reported: ``cramers_v`` = sqrt(chi2/N) (the 2-row Cramer's V),
-    the sample-size-free effect size.
-
-    Tier-served like the rest of the family.  Output: ``*by, n_a, n_b,
-    dof, chi2, cramers_v, drifted``.  Bins empty on BOTH sides can't
-    occur (the join only yields observed bins); dof = n_bins - 1.
-    """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by,
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
-        F.count("*").alias("n_bins"),
-    )
-    t = j.join(tot, list(by))
-    d = (
-        F.col("ca").cast("decimal(38,0)") * F.col("nb").cast("decimal(38,0)")
-        - F.col("cb").cast("decimal(38,0)") * F.col("na").cast("decimal(38,0)")
-    ).cast("double")
-    term = d * d / (F.col("ca") + F.col("cb")).cast("double")
-    g = t.groupBy(*by).agg(
-        F.max("na").alias("n_a"), F.max("nb").alias("n_b"),
-        (F.max("n_bins") - 1).alias("dof"),
-        F.sum(term).alias("__s"),
-    )
-    chi2 = F.round(
-        F.col("__s")
-        / (
-            F.col("n_a").cast("decimal(38,0)")
-            * F.col("n_b").cast("decimal(38,0)")
-        ).cast("double"),
-        ndigits,
-    )
-    dofd = F.col("dof").cast("double")
-    wh = dofd * F.pow(
-        F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofd)
-        + F.lit(float(alpha_z)) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofd)),
-        F.lit(3.0),
-    )
-    n_tot = (F.col("n_a") + F.col("n_b")).cast("double")
-    return (
-        g.filter(F.col("dof") >= 1)
-        .withColumn("chi2", chi2)
-        .select(
-            *by, "n_a", "n_b", "dof", "chi2",
-            F.round(F.sqrt(F.col("chi2") / n_tot), ndigits)
-            .alias("cramers_v"),
-            (F.round(F.col("chi2"), 9) > F.round(wh, 9)).cast("int")
-            .alias("drifted"),
-        )
-    )
-
-
-def chi2_drift(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    by: tuple[str, ...] = ("source",),
-    val: str = "value",
-    scale: int = 1,
-    ndigits: int = 6,
-) -> DataFrame:
-    """Chi-square homogeneity drift between two snapshots of the same
-    measure, binned by the hist.py discretization so the same read
-    serves from raw or from a stored histogram tier
-    (:func:`chi2_from_hists`, parity-tested)."""
-    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
-    return chi2_from_hists(ha, hb, by=by, ndigits=ndigits)
 
 
 def welch_ttest(
@@ -3826,6 +3242,574 @@ def sen_slope_ci(
     )
 
 
+# ---------------------------------------------------------------------------
+# two-sample drift family
+# ---------------------------------------------------------------------------
+#
+# Every two-sample monitor below reads the same bin table: the two
+# snapshots' histogram count frames (``*by, bin, ca`` / ``*by, bin, cb``,
+# built by :func:`_pair_hists` from raw or summed off a stored hist tier)
+# aligned on (*by, bin) by :func:`_aligned_bins`.  Each statistic is a
+# pair (aggregates over that frame, output columns over the aggregates),
+# written once in its ``_*_stat`` builder; a ``*_from_hists`` read is one
+# groupBy with its own aggregates, and :func:`drift_report` is ONE
+# groupBy with all of them.
+
+_DEC = "decimal(38,0)"
+_LN2 = 0.6931471805599453
+
+
+def _pair_hists(df_a, df_b, by, val, scale):
+    """The snapshot discretization of the whole family (``round(v*scale)``,
+    the hist.py bin convention) — two count frames ready for any
+    ``*_from_hists`` read, so every drift statistic in this family can
+    also be served from a stored histogram tier."""
+    def hist(d, cname):
+        return d.groupBy(
+            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
+        ).agg(F.count("*").alias(cname))
+
+    return hist(df_a, "ca"), hist(df_b, "cb")
+
+
+def _aligned_bins(ha, hb, by):
+    """The family's one bin table: the union of bins observed in either
+    count frame per ``by`` group (one full-outer join, zero-filled) with
+
+      ``ca``, ``cb``     the bin's counts,
+      ``cca``, ``ccb``   inclusive cumulative counts (decimal(38,0)),
+      ``gap``            distance to the next bin (NULL on the last),
+      ``n_a``, ``n_b``   the group's totals, ``n_bins`` its bin count —
+
+    the totals as window aggregates over the group, so no join back.
+    Every window partitions by ``by`` over bins: bin-table-sized, never
+    raw-sized."""
+    grp = Window.partitionBy(*by)
+    ordered = grp.orderBy("bin")
+    upto = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    j = ha.join(hb, [*by, "bin"], "full_outer").select(
+        *by, "bin",
+        F.coalesce("ca", F.lit(0)).alias("ca"),
+        F.coalesce("cb", F.lit(0)).alias("cb"),
+    )
+    return j.select(
+        "*",
+        F.sum(_dec("ca")).over(upto).alias("cca"),
+        F.sum(_dec("cb")).over(upto).alias("ccb"),
+        (F.lead("bin").over(ordered) - F.col("bin")).alias("gap"),
+        F.sum("ca").over(grp).alias("n_a"),
+        F.sum("cb").over(grp).alias("n_b"),
+        F.count("*").over(grp).alias("n_bins"),
+    )
+
+
+def _dec(c):
+    return F.col(c).cast(_DEC)
+
+
+def _nab():
+    """n_a * n_b as the double of an exact integer."""
+    return (_dec("n_a") * _dec("n_b")).cast("double")
+
+
+def _cdf_gap():
+    """Per-bin CA*n_b - CB*n_a: the cleared-denominator CDF gap."""
+    return _dec("cca") * _dec("n_b") - _dec("ccb") * _dec("n_a")
+
+
+def _rank_sum2():
+    """2*R_a = sum_v ca_v * (2*cum_lt(v) + t_v + 1), exact (midranks)."""
+    t = _dec("ca") + _dec("cb")
+    cum_lt = F.col("cca") + F.col("ccb") - t
+    return F.sum(_dec("ca") * (2 * cum_lt + t + 1))
+
+
+def _two_sided(outs, *conds):
+    """The family's one-sided guard: a group seen in only one snapshot
+    has no two-sample statistic, so its outputs are NULL (its counts
+    are still reported).  Each output is a CASE branch, so nothing
+    dividing by n_a*n_b is evaluated for such a group."""
+    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
+    for c in conds:
+        ok = ok & c
+    return {k: F.when(ok, c) for k, c in outs.items()}
+
+
+def _psi_stat(ndigits=6):
+    half = 0.5 * F.col("n_bins")
+    p = (F.col("ca") + F.lit(0.5)) / (F.col("n_a") + half)
+    q = (F.col("cb") + F.lit(0.5)) / (F.col("n_b") + half)
+    return (
+        {"__psi": F.sum((p - q) * F.log(p / q))},
+        {"psi": F.round(F.col("__psi"), ndigits)},
+    )
+
+
+def _ks_stat():
+    ks_d = F.col("__ks")["num"].cast("double") / _nab()
+    # the alpha=0.05 large-sample fence c(alpha)*sqrt((na+nb)/(na*nb)),
+    # c(0.05)=1.358 — distribution-free, so the drifted verdict needs no
+    # assumption about the measure's shape; both operands are doubles of
+    # exact integers, rounded 9dp before the compare (the slo_burn guard
+    # against a last-ulp flip flipping the verdict cross-engine)
+    fence = F.lit(1.358) * F.sqrt(
+        (F.col("n_a") + F.col("n_b")).cast("double") / _nab()
+    )
+    return (
+        {"__ks": F.max(F.struct(F.abs(_cdf_gap()).alias("num"),
+                                F.col("bin")))},
+        _two_sided({
+            "ks_d": ks_d,
+            "at_bin": F.col("__ks")["bin"],
+            "drifted": (F.round(ks_d, 9) > F.round(fence, 9)).cast("int"),
+        }),
+    )
+
+
+def _mw_stat(ndigits=9):
+    na, nb = _dec("n_a"), _dec("n_b")
+    n = na + nb
+    t = _dec("ca") + _dec("cb")
+    u2 = F.col("__r2") - na * (na + 1)                 # 2*U_a, exact
+    d2 = u2 - na * nb                                  # 2*(U - mu)
+    var_num = n * n * n - n - F.col("__tt")            # exact
+    var_s = (
+        _nab() * var_num.cast("double")
+        / (12 * n * (n - 1)).cast("double")
+    )
+    z = F.when(d2 > 0, (d2 - 1).cast("double") / (2 * F.sqrt(var_s))) \
+         .when(d2 < 0, (d2 + 1).cast("double") / (2 * F.sqrt(var_s))) \
+         .otherwise(F.lit(0.0))
+    z_out = F.when(var_num > 0, F.round(z, ndigits))
+    return (
+        {"__r2": _rank_sum2(), "__tt": F.sum(t * t * t - t)},
+        {
+            "u_a": u2.cast("double") / F.lit(2.0),
+            **_two_sided({
+                "z": z_out,
+                "shifted": (F.round(F.abs(z_out), ndigits) > 1.96)
+                .cast("int"),
+            }),
+        },
+    )
+
+
+def _cliffs_stat(ndigits=9):
+    na, nb = _dec("n_a"), _dec("n_b")
+    d2 = F.col("__r2") - na * (na + 1) - na * nb
+    delta = F.round(d2.cast("double") / _nab(), ndigits)
+    mag = (
+        F.when(F.abs(delta) < 0.147, F.lit("negligible"))
+        .when(F.abs(delta) < 0.33, F.lit("small"))
+        .when(F.abs(delta) < 0.474, F.lit("medium"))
+        .otherwise(F.lit("large"))
+    )
+    return {"__r2": _rank_sum2()}, _two_sided({"delta": delta,
+                                                "magnitude": mag})
+
+
+def _emd_stat():
+    step = F.abs(_cdf_gap()) * F.coalesce(F.col("gap"), F.lit(0)).cast(_DEC)
+    return (
+        {"__emd": F.sum(step)},
+        _two_sided({"emd": F.col("__emd").cast("double") / _nab()}),
+    )
+
+
+def _jsd_stat(ndigits=6):
+    # try_divide: the one-sided group's empty side divides by 0 here;
+    # its term goes NULL and the guard NULLs the output
+    p = F.try_divide(F.col("ca").cast("double"), F.col("n_a").cast("double"))
+    q = F.try_divide(F.col("cb").cast("double"), F.col("n_b").cast("double"))
+    m = (p + q) / F.lit(2.0)
+    term = (
+        F.when(F.col("ca") > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
+        + F.when(F.col("cb") > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
+    ) / F.lit(2.0)
+    return (
+        {"__jsd": F.sum(term)},
+        _two_sided({
+            "jsd": F.round(F.col("__jsd"), ndigits),
+            "jsd_norm": F.round(F.col("__jsd") / F.lit(_LN2), ndigits),
+        }),
+    )
+
+
+def _chi2_stat(alpha_z=1.6449, ndigits=6):
+    d = (
+        _dec("ca") * _dec("n_b") - _dec("cb") * _dec("n_a")
+    ).cast("double")
+    dof = F.col("n_bins") - 1
+    chi2 = F.round(F.col("__chi2") / _nab(), ndigits)
+    dofd = dof.cast("double")
+    wh = dofd * F.pow(
+        F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * dofd)
+        + F.lit(float(alpha_z)) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dofd)),
+        F.lit(3.0),
+    )
+    n_tot = (F.col("n_a") + F.col("n_b")).cast("double")
+    return (
+        {"__chi2": F.sum(d * d / (F.col("ca") + F.col("cb")).cast("double"))},
+        {
+            "dof": dof,
+            **_two_sided({
+                "chi2": chi2,
+                "cramers_v": F.round(F.sqrt(chi2 / n_tot), ndigits),
+                "drifted": (F.round(chi2, 9) > F.round(wh, 9)).cast("int"),
+            }, dof >= 1),
+        },
+    )
+
+
+def _cvm_stat(ndigits=6):
+    d = _cdf_gap().cast("double")
+    nn = (F.col("n_a") + F.col("n_b")).cast(_DEC)
+    den = _nab() * (nn * nn).cast("double")
+    cvm = F.round(F.col("__cvm") / den, ndigits)
+    return (
+        {"__cvm": F.sum((F.col("ca") + F.col("cb")).cast("double") * d * d)},
+        _two_sided({"cvm": cvm, "drifted": (cvm > 0.461).cast("int")}),
+    )
+
+
+def _drift_agg(ha, hb, by, aggs):
+    """One groupBy over the aligned bin table: the group's counts plus
+    the given statistics' aggregates."""
+    return _aligned_bins(ha, hb, by).groupBy(*by).agg(
+        *(F.max(c).alias(c) for c in ("n_a", "n_b", "n_bins")),
+        *(c.alias(k) for k, c in aggs.items()),
+    )
+
+
+def _from_hists(ha, hb, by, stat, counts=("n_a", "n_b")):
+    aggs, outs = stat
+    return _drift_agg(ha, hb, by, aggs).select(
+        *by, *counts, *(c.alias(k) for k, c in outs.items())
+    )
+
+
+def psi_drift(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    val: str = "value",
+    scale: int = 1,
+    ndigits: int = 6,
+) -> DataFrame:
+    """Population Stability Index between two snapshots of the same
+    measure — THE standard distribution-drift monitor (is this week's
+    token-length / value distribution still the one we trained on?).
+
+        PSI = sum_bins (p_i - q_i) * ln(p_i / q_i)
+
+    Bins are the discretized-value histogram (``round(v*scale)``, the
+    hist.py convention) over the UNION of bins observed in either
+    snapshot, with Laplace smoothing (+0.5 per bin) so one-sided bins
+    contribute finitely instead of forcing an epsilon hack:
+
+        p_i = (c_a + 0.5) / (n_a + 0.5 * B)
+
+    Everything derives from exact integer counts; the only float ops
+    (division, ln, the term sum) run identically per term in any
+    engine, and the cross-engine sum-association noise is ~1e-15 —
+    far under the rounding.  Rule of thumb: PSI < 0.1 stable, 0.1-0.25
+    drifting, > 0.25 shifted.  One groupBy per snapshot, then one
+    groupBy over the aligned bin table.  Output: ``*by, n_bins, psi``.
+    """
+    return psi_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
+                          by=by, ndigits=ndigits)
+
+
+def psi_from_hists(
+    ha: DataFrame,
+    hb: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    ndigits: int = 6,
+) -> DataFrame:
+    """PSI from two histogram count frames (``*by, bin, ca`` / ``*by,
+    bin, cb``) — the tier-served drift path: feed it per-period bin
+    counts summed straight off a stored hist tier (hist.py) and the
+    drift read never re-scans raw (pytest proves tiered == direct)."""
+    return _from_hists(ha, hb, by, _psi_stat(ndigits), counts=("n_bins",))
+
+
+def ks_from_hists(
+    ha: DataFrame,
+    hb: DataFrame,
+    by: tuple[str, ...] = ("source",),
+) -> DataFrame:
+    """Two-sample Kolmogorov–Smirnov D from two histogram count frames
+    (``*by, bin, ca`` / ``*by, bin, cb``) — PSI's rank-based companion
+    (:func:`psi_from_hists`): PSI weighs every bin's log-odds shift, KS
+    reports the single worst CDF gap, so it catches a concentrated
+    shift PSI's smoothing dilutes and is distribution-free (the 1.36 *
+    sqrt((na+nb)/(na*nb)) alpha=0.05 fence applies regardless of
+    shape).  Like the PSI pair, this is the tier-served drift path:
+    feed per-period bin counts summed straight off a stored hist tier
+    (hist.py) and the read never re-scans raw.
+
+    Exactness: with per-bin cumulative counts CA_i, CB_i and totals
+    na, nb,
+
+        D = max_i |CA_i/na - CB_i/nb| = max_i |CA_i*nb - CB_i*na| / (na*nb)
+
+    — the numerator is an EXACT integer per bin (decimal(38,0); counts
+    up to 1e12 x 1e12 fit), so the argmax bin and the max numerator are
+    engine-identical; the one division to ``ks_d`` runs on the same two
+    decimal-cast doubles in both engines.  Tie rule: equal numerators
+    resolve to the LARGEST bin (struct-max), deterministic.
+
+    Plan shape: the aligned bin table (one full-outer join, windows
+    over bins per series — bin-table-sized, never raw-sized), one
+    groupBy.  Output: ``*by, n_a, n_b, ks_d, at_bin, drifted``
+    (drifted = D above the alpha=0.05 distribution-free fence); a
+    group present in only one snapshot reports NULL ``ks_d``,
+    ``at_bin`` and ``drifted``.
+    """
+    return _from_hists(ha, hb, by, _ks_stat())
+
+
+def ks_drift(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    val: str = "value",
+    scale: int = 1,
+) -> DataFrame:
+    """Two-sample KS drift between two snapshots of the same measure,
+    binned by the hist.py discretization (``round(v*scale)``) so the
+    same read serves from raw or from a stored histogram tier
+    (:func:`ks_from_hists`, parity-tested).  One groupBy per snapshot;
+    everything downstream runs on the tiny bin table."""
+    return ks_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by)
+
+
+def mw_from_hists(
+    ha: DataFrame,
+    hb: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    ndigits: int = 9,
+) -> DataFrame:
+    """Mann–Whitney U (Wilcoxon rank-sum) location-shift test from two
+    histogram count frames (``*by, bin, ca`` / ``*by, bin, cb``) — the
+    third member of the tier-served drift family: PSI weighs every
+    bin's log-odds shift, KS reports the worst CDF gap (shape), MW asks
+    the LOCATION question "did the measure systematically move up or
+    down?" with a signed, tie-corrected z.  A distribution can drift
+    heavily (KS fires) with zero median shift (MW silent) and vice
+    versa, so monitors want both verdicts.
+
+    Rank sums straight off the bin table — no per-row ranking ever
+    happens: with tie-group size t_v = ca_v + cb_v at bin v and
+    cum_lt(v) = count of observations in smaller bins, every member of
+    bin v has average rank cum_lt + (t_v + 1)/2, so
+
+        2*R_a = sum_v ca_v * (2*cum_lt(v) + t_v + 1)   (EXACT integer)
+        2*U_a = 2*R_a - n_a*(n_a + 1)                  (EXACT integer)
+
+    (doubling clears the half-integer average ranks).  The normal
+    approximation with tie correction (T = sum_v t_v^3 - t_v):
+
+        Var(U) = n_a*n_b * (n^3 - n - T) / (12*n*(n-1)),  n = n_a+n_b
+        z = (2U - n_a*n_b -/+ 1) / (2*sqrt(Var))   (continuity-corrected)
+
+    Exactness: 2R, 2U, the variance numerator ``n^3 - n - T`` and the
+    denominator ``12n(n-1)`` are all exact decimal(38,0) integers
+    (magnitude budget: n^3 fits 38 digits to n ~ 10^12 observations per
+    group); each is cast to double ONCE and combined in a fixed
+    parenthesization, so z is engine-identical and only rounded to
+    ``ndigits`` as a guard.  Degenerate regimes return NULL z: a group
+    present in only one sample (n_a*n_b = 0) and the all-tied group
+    (T = n^3 - n, variance 0) — no shift is decidable.  ``shifted`` is
+    the alpha=0.05 two-sided verdict |z| > 1.96 (NULL propagates).
+
+    Plan shape: ks_from_hists' exactly — the aligned bin table (cum_lt
+    is its inclusive cca + ccb less the bin's own t), one groupBy.
+    Serve per-period ``ca``/``cb`` by summing a stored hist tier's
+    counts (parity-tested) and the read never re-scans raw.
+    Output: ``*by, n_a, n_b, u_a, z, shifted``.
+    """
+    return _from_hists(ha, hb, by, _mw_stat(ndigits))
+
+
+def mann_whitney(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    val: str = "value",
+    scale: int = 1,
+) -> DataFrame:
+    """Two-sample Mann–Whitney location-shift drift between two
+    snapshots of the same measure, binned by the hist.py discretization
+    (``round(v*scale)``) so the same read serves from raw or from a
+    stored histogram tier (:func:`mw_from_hists`, parity-tested) —
+    ks_drift's signed companion: KS says THAT the distribution moved,
+    MW says WHICH WAY and whether the shift survives the alpha=0.05
+    rank test.  One groupBy per snapshot; everything downstream runs on
+    the tiny bin table."""
+    return mw_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by)
+
+
+def emd_from_hists(
+    ha: DataFrame,
+    hb: DataFrame,
+    by: tuple[str, ...] = ("source",),
+) -> DataFrame:
+    """1-D earth mover's distance (Wasserstein-1) between two histogram
+    count frames (``*by, bin, ca`` / ``*by, bin, cb``) — the
+    MAGNITUDE companion to :func:`ks_from_hists`: KS reports the single
+    worst CDF gap (did it drift?), EMD integrates |CDF_a - CDF_b| over
+    the value axis (by how MUCH, in bin units — divide by the hist
+    scale for value units), so a small shift of the whole mass and a
+    large shift of a sliver score differently where KS can tie them.
+
+    Exactness: on a discrete support the CDF is a step function —
+    constant between observed bins — so
+
+        W1 = sum_i |CA_i*nb - CB_i*na| * (bin_{i+1} - bin_i) / (na*nb)
+
+    where the per-step numerator |CA*nb - CB*na| * gap is an EXACT
+    decimal integer (the ks_from_hists CDF-gap numerator times an
+    integer gap), the sum of exact decimals is exact, and the ONE
+    final division runs on the same two doubles in any engine — no
+    rounding guard needed, unlike the ln-based family.  The last bin
+    contributes nothing (both CDFs have reached 1, the numerator is
+    identically 0), so its NULL ``gap`` counting as 0 is not a hole.
+
+    Like the PSI/KS pair this is the tier-served drift path: feed
+    per-period bin counts summed straight off a stored hist tier and
+    the read never re-scans raw.  Plan shape: the aligned bin table,
+    one groupBy.  Output: ``*by, n_a, n_b, emd`` (bin units; NULL for
+    a group present in only one snapshot).
+    """
+    return _from_hists(ha, hb, by, _emd_stat())
+
+
+def emd_drift(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    val: str = "value",
+    scale: int = 1,
+) -> DataFrame:
+    """Wasserstein-1 drift between two snapshots of the same measure,
+    binned by the hist.py discretization so the same read serves from
+    raw or from a stored histogram tier (:func:`emd_from_hists`,
+    parity-tested).  One groupBy per snapshot; everything downstream
+    runs on the tiny bin table."""
+    return emd_from_hists(*_pair_hists(df_a, df_b, by, val, scale), by=by)
+
+
+def jsd_from_hists(
+    ha: DataFrame,
+    hb: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    ndigits: int = 6,
+) -> DataFrame:
+    """Jensen-Shannon divergence between two histogram count frames —
+    the BOUNDED, symmetric member of the drift family: PSI is unbounded
+    and needs Laplace smoothing to survive one-sided bins; JSD is
+    finite by construction (a bin observed on one side only contributes
+    p/2 * ln 2 through the mixture), symmetric, and capped at ln 2, so
+    thresholds transfer across measures with different supports.
+
+        JSD = ( KL(p || m) + KL(q || m) ) / 2,    m = (p + q)/2
+
+    with p_i = ca_i/na, q_i = cb_i/nb — doubles of exact integers, so
+    every per-bin term is engine-identical; the term SUM is the one
+    order-dependent float reduction, rounded to ``ndigits`` (the
+    source_entropy convention; association noise ~1e-15 sits far under
+    it).  Zero-count bins contribute exactly 0 for their side (the
+    0*ln(0) limit), taken via a WHEN guard, never an epsilon.
+
+    Tier-served like the rest of the family (feed per-period bin counts
+    off a stored hist tier).  Output: ``*by, n_bins, n_a, n_b, jsd,
+    jsd_norm`` (jsd_norm = jsd/ln 2 in [0, 1]; both NULL for a group
+    present in only one snapshot).
+    """
+    return _from_hists(ha, hb, by, _jsd_stat(ndigits),
+                       counts=("n_bins", "n_a", "n_b"))
+
+
+def jsd_drift(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    val: str = "value",
+    scale: int = 1,
+    ndigits: int = 6,
+) -> DataFrame:
+    """JSD drift between two snapshots of the same measure, binned by
+    the hist.py discretization so the same read serves from raw or from
+    a stored histogram tier (:func:`jsd_from_hists`, parity-tested)."""
+    return jsd_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
+                          by=by, ndigits=ndigits)
+
+
+def chi2_from_hists(
+    ha: DataFrame,
+    hb: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    alpha_z: float = 1.6449,
+    ndigits: int = 6,
+) -> DataFrame:
+    """Pearson chi-square homogeneity test between two histogram count
+    frames — the SIGNIFICANCE member of the drift family: PSI/JSD/EMD
+    report effect sizes with rule-of-thumb thresholds; chi-square turns
+    the same 2 x B contingency table into a test statistic with a
+    calibrated false-alarm rate, so tiny drifts on huge samples and
+    huge drifts on tiny samples are judged on the same footing.
+
+    For the 2 x B table with row totals na, nb (N = na + nb) and bin
+    column totals t_i = ca_i + cb_i, the classic statistic collapses to
+
+        chi2 = sum_i (ca_i*nb - cb_i*na)^2 / t_i   /   (na * nb)
+
+    (derivation: both rows' (o-e)^2/e terms share the numerator
+    (ca*nb - cb*na)^2/N^2 and their 1/e factors sum to N^2/(t*na*nb)).
+    The per-bin difference ca*nb - cb*na is an exact decimal integer;
+    SQUARING it can exceed decimal(38) at the 1e12-count design scale,
+    so each term is computed as a double OF exact integers (d*d/t —
+    engine-identical per term) and the term sum is the one
+    order-dependent float reduction, rounded to ``ndigits`` with the
+    result (association noise ~1e-15 relative).
+
+    Verdict: ``drifted`` compares chi2 against the Wilson-Hilferty
+    alpha≈0.05 critical value  dof*(1 - 2/(9 dof) + z*sqrt(2/(9 dof)))^3
+    with z = ``alpha_z`` (1.6449 = one-sided 0.05 normal quantile) —
+    the standard closed-form chi-square quantile approximation (exact
+    enough for dof >= 3, slightly conservative below), both sides
+    rounded to 9 dp before the compare (the slo_burn guard).  Also
+    reported: ``cramers_v`` = sqrt(chi2/N) (the 2-row Cramer's V),
+    the sample-size-free effect size.
+
+    Tier-served like the rest of the family.  Output: ``*by, n_a, n_b,
+    dof, chi2, cramers_v, drifted`` for groups with dof >= 1; a group
+    present in only one snapshot reports NULL chi2, cramers_v and
+    drifted.  Bins empty on BOTH sides can't occur (the join only
+    yields observed bins); dof = n_bins - 1.
+    """
+    return _from_hists(ha, hb, by, _chi2_stat(alpha_z, ndigits)).filter(
+        F.col("dof") >= 1
+    )
+
+
+def chi2_drift(
+    df_a: DataFrame,
+    df_b: DataFrame,
+    by: tuple[str, ...] = ("source",),
+    val: str = "value",
+    scale: int = 1,
+    ndigits: int = 6,
+) -> DataFrame:
+    """Chi-square homogeneity drift between two snapshots of the same
+    measure, binned by the hist.py discretization so the same read
+    serves from raw or from a stored histogram tier
+    (:func:`chi2_from_hists`, parity-tested)."""
+    return chi2_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
+                           by=by, ndigits=ndigits)
+
+
 def cvm_from_hists(
     ha: DataFrame,
     hb: DataFrame,
@@ -3859,54 +3843,10 @@ def cvm_from_hists(
     distribution the two-sample statistic converges to (asymptotic;
     documented, the standard table use).
 
-    Plan shape: ks_from_hists' exactly — one full-outer join on the
-    tiny bin table, one cumsum window, one groupBy.  Output: ``*by,
-    n_a, n_b, cvm, drifted``.
+    Plan shape: ks_from_hists' exactly — the aligned bin table, one
+    groupBy.  Output: ``*by, n_a, n_b, cvm, drifted``.
     """
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    w = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = j.select(
-        *by, "bin",
-        (F.col("ca") + F.col("cb")).cast("decimal(38,0)").alias("h"),
-        F.sum(F.col("ca").cast("decimal(38,0)")).over(w).alias("cca"),
-        F.sum(F.col("cb").cast("decimal(38,0)")).over(w).alias("ccb"),
-    )
-    tot = j.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
-    )
-    t = cum.join(tot, list(by))
-    d = (F.col("cca") * F.col("n_b").cast("decimal(38,0)")
-         - F.col("ccb") * F.col("n_a").cast("decimal(38,0)"))
-    term = (F.col("h").cast("double")
-            * d.cast("double") * d.cast("double"))
-    agg = t.groupBy(*by).agg(
-        F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"),
-        F.sum(term).alias("__s"),
-    )
-    na = F.col("n_a").cast("decimal(38,0)")
-    nb_ = F.col("n_b").cast("decimal(38,0)")
-    nn = ((F.col("n_a") + F.col("n_b"))).cast("decimal(38,0)")
-    den = (na * nb_).cast("double") * (nn * nn).cast("double")
-    cvm = F.when(
-        (F.col("n_a") > 0) & (F.col("n_b") > 0),
-        F.round(F.col("__s") / den, ndigits),
-    )
-    return agg.select(
-        *by, "n_a", "n_b",
-        cvm.alias("cvm"),
-        F.when(cvm.isNotNull(),
-               (cvm > 0.461).cast("int")).alias("drifted"),
-    )
+    return _from_hists(ha, hb, by, _cvm_stat(ndigits))
 
 
 def cvm_drift(
@@ -3923,13 +3863,8 @@ def cvm_drift(
     from a stored histogram tier (:func:`cvm_from_hists`,
     parity-tested).  One groupBy per snapshot; everything downstream
     runs on the tiny bin table."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return cvm_from_hists(hist(df_a, "ca"), hist(df_b, "cb"), by=by,
-                          ndigits=ndigits)
+    return cvm_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
+                          by=by, ndigits=ndigits)
 
 
 def cliffs_delta(
@@ -3959,17 +3894,11 @@ def cliffs_delta(
     large), deterministic because the compare runs on the fenced
     value.  Groups present in only one sample report NULL.
 
-    Plan shape: mann_whitney's exactly — two tiny bin tables,
-    full-outer join, one cumsum window, one groupBy; serves from a
-    stored hist tier unchanged.  Output: ``*by, n_a, n_b, delta,
-    magnitude``.
+    Plan shape: mann_whitney's exactly — two tiny bin tables, the
+    aligned bin table, one groupBy; serves from a stored hist tier
+    unchanged.  Output: ``*by, n_a, n_b, delta, magnitude``.
     """
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    return cliffs_from_hists(hist(df_a, "ca"), hist(df_b, "cb"),
+    return cliffs_from_hists(*_pair_hists(df_a, df_b, by, val, scale),
                              by=by, ndigits=ndigits)
 
 
@@ -3982,55 +3911,24 @@ def cliffs_from_hists(
     """:func:`cliffs_delta` fed pre-aggregated bin count frames
     (``*by, bin, ca`` / ``*by, bin, cb``) — the hist-tier-served form,
     identical arithmetic (see cliffs_delta for the construction)."""
-    j = (
-        ha.join(hb, [*by, "bin"], "full_outer")
-        .select(
-            *by, "bin",
-            F.coalesce("ca", F.lit(0)).cast("decimal(38,0)").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("decimal(38,0)").alias("cb"),
-        )
-    )
-    t = (F.col("ca") + F.col("cb"))
-    w_lt = (
-        Window.partitionBy(*by).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    per_bin = j.select(
-        *by, "ca", "cb", t.alias("t"),
-        F.coalesce(F.sum(t).over(w_lt), F.lit(0).cast("decimal(38,0)"))
-        .alias("cum_lt"),
-    )
-    g = per_bin.groupBy(*by).agg(
-        F.sum("ca").alias("n_a"),
-        F.sum("cb").alias("n_b"),
-        F.sum(
-            F.col("ca") * (2 * F.col("cum_lt") + F.col("t") + 1)
-        ).alias("__r2"),
-    )
-    d2 = (F.col("__r2") - F.col("n_a") * (F.col("n_a") + 1)
-          - F.col("n_a") * F.col("n_b"))
-    delta = F.when(
-        F.col("n_a") * F.col("n_b") > 0,
-        F.round(
-            d2.cast("double")
-            / (F.col("n_a") * F.col("n_b")).cast("double"),
-            ndigits,
-        ),
-    )
-    mag = F.when(
-        delta.isNotNull(),
-        F.when(F.abs(delta) < 0.147, F.lit("negligible"))
-         .when(F.abs(delta) < 0.33, F.lit("small"))
-         .when(F.abs(delta) < 0.474, F.lit("medium"))
-         .otherwise(F.lit("large")),
-    )
-    return g.select(
-        *by,
-        F.col("n_a").cast("long").alias("n_a"),
-        F.col("n_b").cast("long").alias("n_b"),
-        delta.alias("delta"),
-        mag.alias("magnitude"),
-    )
+    return _from_hists(ha, hb, by, _cliffs_stat(ndigits))
+
+
+# drift_report's columns: (statistic, its output column, panel name)
+_PANEL = (
+    ("ks", "ks_d", "ks_d"), ("ks", "drifted", "ks_drifted"),
+    ("cvm", "cvm", "cvm"), ("cvm", "drifted", "cvm_drifted"),
+    ("mw", "z", "mw_z"), ("mw", "shifted", "mw_shifted"),
+    ("cliffs", "delta", "delta"), ("cliffs", "magnitude", "magnitude"),
+    ("psi", "psi", "psi"), ("jsd", "jsd_norm", "jsd_norm"),
+    ("emd", "emd", "emd"),
+    ("chi2", "cramers_v", "cramers_v"), ("chi2", "drifted", "chi2_drifted"),
+)
+_STATS = {
+    "ks": _ks_stat, "cvm": _cvm_stat, "mw": _mw_stat,
+    "cliffs": _cliffs_stat, "psi": _psi_stat, "jsd": _jsd_stat,
+    "emd": _emd_stat, "chi2": _chi2_stat,
+}
 
 
 def drift_report(
@@ -4053,39 +3951,22 @@ def drift_report(
     This is :func:`fleet_report`'s two-snapshot sibling and the same
     counts-contract payoff: the two histograms are built ONCE
     (``round(v*scale)`` — the hist.py discretization, so both can
-    come straight off a stored hist tier) and persisted; all eight
-    monitors run on the tiny bin tables and join back on ``by``.  At
-    100 TB the panel costs two tier reads, never eight scans of raw.
+    come straight off a stored hist tier), aligned once
+    (:func:`_aligned_bins`), and all eight statistics are ONE groupBy
+    over that tiny table — each column equals its ``*_from_hists``
+    read, with no join back and nothing cached.  At 100 TB the panel
+    costs two tier reads, never eight scans of raw.  A group present
+    in only one snapshot reports its counts and psi; its other
+    statistics are NULL, as are chi-square's for a single-bin group.
 
     Output: ``*by, n_a, n_b, ks_d, ks_drifted, cvm, cvm_drifted,
     mw_z, mw_shifted, delta, magnitude, psi, jsd_norm, emd,
     cramers_v, chi2_drifted``.
     """
-    def hist(d, cname):
-        return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
-        ).agg(F.count("*").alias(cname))
-
-    ha = hist(df_a, "ca").persist()
-    hb = hist(df_b, "cb").persist()
-    base = ks_from_hists(ha, hb, by=by).select(
-        *by, "n_a", "n_b", "ks_d",
-        F.col("drifted").alias("ks_drifted"))
-    parts = [
-        cvm_from_hists(ha, hb, by=by).select(
-            *by, "cvm", F.col("drifted").alias("cvm_drifted")),
-        mw_from_hists(ha, hb, by=by).select(
-            *by, F.col("z").alias("mw_z"),
-            F.col("shifted").alias("mw_shifted")),
-        cliffs_from_hists(ha, hb, by=by).select(
-            *by, "delta", "magnitude"),
-        psi_from_hists(ha, hb, by=by).select(*by, "psi"),
-        jsd_from_hists(ha, hb, by=by).select(*by, "jsd_norm"),
-        emd_from_hists(ha, hb, by=by).select(*by, "emd"),
-        chi2_from_hists(ha, hb, by=by).select(
-            *by, "cramers_v", F.col("drifted").alias("chi2_drifted")),
-    ]
-    out = base
-    for p in parts:
-        out = out.join(p, list(by), "left")
-    return out
+    stats = {k: f() for k, f in _STATS.items()}
+    aggs = {k: c for a, _ in stats.values() for k, c in a.items()}
+    ha, hb = _pair_hists(df_a, df_b, by, val, scale)
+    return _drift_agg(ha, hb, by, aggs).select(
+        *by, "n_a", "n_b",
+        *(stats[s][1][c].alias(name) for s, c, name in _PANEL),
+    )

@@ -436,11 +436,17 @@ def verify_cascade(
         *[F.col(m).alias(f"{m}_stored") for m in measures])
     j = e.join(g, ["source", "bucket"], "full_outer")
 
+    # NULL-safe: a bucket whose every point was rule-flagged has NULL
+    # sum/min/max on both sides, which is agreement, not drift
     drift = F.lit(False)
     for m in measures:
         a, b = F.col(f"{m}_expected"), F.col(f"{m}_stored")
-        neq = F.abs(a - b) > tol if m == "sum_tok" else a != b
-        drift = drift | F.coalesce(neq, F.lit(True))
+        if m == "sum_tok":
+            neq = F.when(a.isNull() & b.isNull(), F.lit(False)).otherwise(
+                F.coalesce(F.abs(a - b) > tol, F.lit(True)))
+        else:
+            neq = ~a.eqNullSafe(b)
+        drift = drift | neq
     status = (
         F.when(F.col(f"{measures[0]}_expected").isNull(),
                F.lit("missing_in_finer"))
