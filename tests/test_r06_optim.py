@@ -124,13 +124,17 @@ def test_hash_bucket_matches_full_chain(spark):
     from traval_spark.operators.sampling import hash_bucket, hash_uniform
 
     df = spark.range(0, 2000).select(F.col("id").cast("string").alias("k"))
-    for width in (256, 4096, 100):  # two shortcut widths + one fallback
+    # three shortcut widths (16**7 is the widest) + one fallback
+    for width in (256, 4096, 16**7, 100):
         bad = df.select(
-            (hash_bucket(F.col("k"), seed=3, width=width)
-             != F.floor(hash_uniform(F.col("k"), 3) * width).cast("int"))
+            (~hash_bucket(F.col("k"), seed=3, width=width).eqNullSafe(
+                F.floor(hash_uniform(F.col("k"), 3) * width).cast("int")))
             .alias("ne")
         ).filter("ne").count()
         assert bad == 0, width
+    # 16**8 buckets do not fit an int: rejected when the column is built
+    with pytest.raises(ValueError, match="2\\^31"):
+        hash_bucket(F.col("k"), seed=3, width=16**8)
 
 
 if __name__ == "__main__":

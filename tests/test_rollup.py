@@ -471,6 +471,44 @@ def test_ingest_late_matches_full_rebuild_and_skips_clean_days(
     late.unpersist()
 
 
+def test_ingest_late_behind_fine_retention_refreshes_coarse_tiers(
+    spark, tmp_path
+):
+    """A late batch for a day the 1m tier has already aged out still
+    refreshes the coarser tiers that keep that day: they cascade from
+    the cleaning plan, since the stored 1m tier no longer holds it."""
+    from traval_spark.pipeline import ingest_late, init_raw, run
+    from traval_spark.sources.synth import synth_sequences
+
+    full = synth_sequences(spark, 3000, seed=9, span_days=4).cache()
+    days = sorted(
+        str(r[0])
+        for r in full.select(F.col("ts").cast("date")).distinct().collect()
+    )
+    is_late = F.col("ts").cast("date").cast("string") == days[0]
+    late = full.filter(is_late).cache()
+    rs, ret = _local_reach_ruleset(), {"1m": 1}
+
+    raw_a, out_a = str(tmp_path / "rawA"), str(tmp_path / "outA")
+    init_raw(full, raw_a)
+    run(spark, out_a, input_path=raw_a, ruleset=rs, retention=ret)
+    raw_b, out_b = str(tmp_path / "rawB"), str(tmp_path / "outB")
+    init_raw(full.filter(~is_late), raw_b)
+    run(spark, out_b, input_path=raw_b, ruleset=rs, retention=ret)
+    store_a, store_b = TierStore(out_a), TierStore(out_b)
+    assert store_b.retention_cutoff("1m") > days[1]
+
+    m = ingest_late(spark, raw_b, out_b, late, ruleset=rs)
+    assert m["partitions"]["1m"] == []
+    assert days[0] in m["partitions"]["1h"]
+    for tier in ("1m", "1h", "1d"):
+        rows_a = sorted(map(str, store_a.read_tier(tier, spark).collect()))
+        rows_b = sorted(map(str, store_b.read_tier(tier, spark).collect()))
+        assert rows_a == rows_b, tier
+    full.unpersist()
+    late.unpersist()
+
+
 def test_tierstore_resume_safe_under_static_overwrite_session(spark, tmp_path):
     """write_tier's resume-subset write enforces dynamic overwrite on the
     writer: under a STATIC-default session it would truncate every day
@@ -720,6 +758,125 @@ def test_write_tier_sorted_layout(spark, tmp_path):
     store2 = TierStore(str(tmp_path / "unsorted"))
     store2.write_tier("1h", t1h, fps, sort_within=None)
     assert store2.read_tier("1h", spark).count() == t1h.count()
+
+
+def _plan_fps(frame):
+    """The plan-side fingerprints a resumed run compares manifests to."""
+    return partition_fingerprints(frame.withColumn(
+        "day", F.date_trunc("day", F.col("bucket")).cast("timestamp_ntz")))
+
+
+def _manifest_fps(store, tier):
+    return {d: m["input"] for d, m in store.manifests(tier).items()}
+
+
+@pytest.mark.parametrize("kind", ["measure", "m4"])
+def test_write_tier_fingerprints_landed_rows(spark, seqs, tmp_path, kind):
+    """Without input_fps, write_tier fingerprints the landed partitions:
+    the manifests equal partition_fingerprints of the same frame (the
+    M4 tier's bucket is TIMESTAMP, stored as TIMESTAMP_NTZ)."""
+    from traval_spark.operators.downsample import m4_downsample
+
+    frame = (rollup_raw(seqs, "1h") if kind == "measure" else
+             m4_downsample(seqs, "1h", val="n_tok", bucket_col="bucket"))
+    store = TierStore(str(tmp_path / kind))
+    res = store.write_tier("1h", frame)
+    want = _plan_fps(frame)
+    assert len(want) >= 2
+    assert res["written_partitions"] == sorted(want)
+    assert res["rows"] == frame.count()
+    assert _manifest_fps(store, "1h") == want
+    # the returned schema is the stored one
+    assert store.read_tier("1h", spark, schema=res["schema"]).exceptAll(
+        store.read_tier("1h", spark)).count() == 0
+
+
+def test_write_tier_without_fps_keeps_days_the_frame_lacks(
+        spark, seqs, tmp_path):
+    """A day on disk that the written frame lacks keeps its partition and
+    its manifest byte-for-byte, also when ``days`` lists it."""
+    from traval_spark.sources import fsutil
+
+    t1h = rollup_raw(seqs, "1h")
+    store = TierStore(str(tmp_path / "tiers"))
+    days = store.write_tier("1h", t1h)["written_partitions"]
+    old, newest = days[:-1], days[-1]
+    texts = {d: fsutil.read_text(spark, store._manifest_path("1h", d))
+             for d in old}
+    part = t1h.filter(F.col("bucket").cast("date").cast("string") == newest)
+    for kw in ({}, {"days": days}):
+        res = store.write_tier("1h", part, **kw)
+        assert res["written_partitions"] == [newest]
+        assert res["rows"] == part.count()
+        for d in old:
+            assert fsutil.read_text(
+                spark, store._manifest_path("1h", d)) == texts[d], d
+    assert store.read_tier("1h", spark).drop("day").exceptAll(
+        t1h).count() == 0
+    assert _manifest_fps(store, "1h") == _plan_fps(t1h)
+
+
+def test_write_tier_without_fps_respects_retention(spark, seqs, tmp_path):
+    """The retention cutoff tombstones aged-out days on the
+    fingerprint-on-write path too."""
+    import os
+
+    root = str(tmp_path / "tiers")
+    store = TierStore(root)
+    t1d = rollup_raw(seqs, "1d")
+    days = store.write_tier("1d", t1d)["written_partitions"]
+    ret = store.apply_retention("1d", 0, as_of=days[-1])
+    kept = [d for d in days if d >= ret["cutoff"]]
+    assert ret["dropped"] and kept
+    res = store.write_tier("1d", t1d)
+    assert res["written_partitions"] == kept
+    for d in ret["dropped"]:
+        assert not os.path.isdir(os.path.join(root, "1d", f"day={d}"))
+        assert store.read_manifest("1d", d) is None
+    assert sorted(store.manifests("1d")) == kept
+
+
+@pytest.mark.parametrize("sketches", [False, True])
+def test_run_manifests_equal_plan_fingerprints(spark, tmp_path, sketches):
+    """Every tier ``run()`` lands records the fingerprint of the frame it
+    was built from — what ``run(resume=True)`` compares against — so a
+    resumed run over the same input skips every partition."""
+    from traval_spark.hist import hist_cascade, hist_tier
+    from traval_spark.operators.downsample import m4_merge
+    from traval_spark.pipeline import (combined_sketch_leaf, run,
+                                       split_combined_leaf)
+    from traval_spark.rollup import fl_cascade
+    from traval_spark.sketch import distinct_cascade
+
+    out = str(tmp_path / "tiers")
+    m1 = run(spark, out, synth_rows=3000, ruleset=None, sketches=sketches)
+    kinds = {"": (salted_rollup(synth_sequences(spark, 3000), "1m"),
+                  rollup_cascade)}
+    if sketches:
+        cleaned = spark.read.parquet(out + "/cleaned")
+        leaves = split_combined_leaf(combined_sketch_leaf(cleaned))
+        kinds.update({
+            "kmv": (leaves["kmv"], distinct_cascade),
+            "hist": (hist_tier(cleaned, "1m"), hist_cascade),
+            "m4": (leaves["m4"],
+                   lambda cur, t: m4_merge(cur, t, bucket_col="bucket")),
+            "fl": (leaves["fl"], fl_cascade),
+        })
+    for kind, (plan, casc) in kinds.items():
+        store = TierStore(f"{out}/{kind}" if kind else out)
+        for tier in ("1m", "1h", "1d"):
+            if tier != "1m":  # as run() does: from the stored finer tier
+                finer = "1m" if tier == "1h" else "1h"
+                plan = casc(store.read_tier(finer, spark).drop("day"), tier)
+            fps = _plan_fps(plan)
+            assert fps, (kind, tier)
+            assert _manifest_fps(store, tier) == fps, (kind, tier)
+    m2 = run(spark, out, synth_rows=3000, ruleset=None, sketches=sketches,
+             resume=True)
+    assert len(m2["partitions"]) == len(m1["partitions"])
+    for name, written in m1["partitions"].items():
+        assert m2["partitions"][name] == [], name
+        assert m2["skipped"][name] == written, name
 
 
 def test_tierstore_holds_sketch_and_hist_tiers(spark, seqs, tmp_path):

@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _DENOM = float(1 << 32)
+#: widest hash_bucket grid whose buckets all fit an int
+_MAX_WIDTH = 1 << 31
 
 
 def hash_uniform(col: Column, seed: int = 0) -> Column:
@@ -48,14 +50,22 @@ def hash_bucket(col: Column, seed: int, width: int) -> Column:
     v >> (32-4j) = the int value of the first j hex digits), so the
     shortcut parses j characters instead of 8 and skips the double
     division/multiply/floor — value-identical, just cheaper.  Any
-    other width falls back to the full chain."""
+    other width falls back to the full chain.
+
+    The bucket is an int, so ``width`` may be at most 2^31 (the largest
+    bucket is then 2^31 - 1); wider grids raise ``ValueError``. The hex
+    shortcut stops at j = 7: eight hex digits can exceed int range."""
     w = int(width)
+    if w > _MAX_WIDTH:
+        raise ValueError(
+            f"hash_bucket width {w} exceeds 2^31 = {_MAX_WIDTH}: buckets "
+            "are int, so the largest supported width is 2^31")
     j = 0
     p = 1
     while p < w:
         p *= 16
         j += 1
-    if p == w and 1 <= j <= 8:
+    if p == w and 1 <= j <= 7:
         h = F.md5(F.concat(F.lit(f"{seed}|"), col.cast("string")))
         return F.conv(F.substring(h, 1, j), 16, 10).cast("int")
     return F.floor(hash_uniform(col, seed) * F.lit(w)).cast("int")

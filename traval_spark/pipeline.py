@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from traval_spark.compress import pack_tier
 from traval_spark.plans.ruleset import SparkRuleSet, apply_ruleset
-from traval_spark.rollup import build_cascade, gap_fill
+from traval_spark.rollup import gap_fill, rollup_cascade, salted_rollup
 from traval_spark.session import get_spark
 from traval_spark.sources.synth import synth_sequences
 from traval_spark.sources.tierstore import TierStore, partition_fingerprints
@@ -171,6 +171,32 @@ def init_raw(df: DataFrame, raw_root: str) -> None:
     )
 
 
+def _stored(store: TierStore, tier: str, res: dict, spark,
+            days: list[str] | None = None) -> DataFrame:
+    """Reread a tier ``write_tier`` just landed (``res`` is its result),
+    pruned to ``days`` if given, without the ``day`` column."""
+    df = store.read_tier(tier, spark, schema=res["schema"])
+    if days is not None:
+        df = df.filter(F.col("day").cast("string").isin(days))
+    return df.drop("day")
+
+
+def _land(store: TierStore, tier: str, df: DataFrame,
+          resume: bool) -> tuple[dict, list[str], list[str]]:
+    """Write one tier of ``run``; returns the write result, the tier's
+    days and the days skipped as already current. Without ``resume`` the
+    plan executes once, inside the write; with it, the plan is first
+    fingerprinted, because the skip decision needs the fingerprints."""
+    if not resume:
+        res = store.write_tier(tier, df)
+        return res, res["written_partitions"], []
+    fps = partition_fingerprints(df.withColumn(
+        "day", F.date_trunc("day", F.col("bucket")).cast("timestamp_ntz")))
+    todo = store.stale_days(tier, fps)
+    res = store.write_tier(tier, df, fps, days=todo)
+    return res, sorted(fps), sorted(set(fps) - set(todo))
+
+
 def _expand_days(days: set[str], margin: int) -> set[str]:
     import datetime as dt
 
@@ -200,8 +226,8 @@ def ingest_late(
     over its timestamps) — never from re-fingerprinting the corpus, so
     the cost of absorbing late data is proportional to the late batch's
     day span, not to history size. Compare ``run(resume=True)``, which
-    re-executes the cleaning plan over ALL of raw per tier just to
-    recompute fingerprints: correct, but a full-corpus scan per refresh.
+    re-executes the cleaning plan over ALL of raw just to recompute
+    fingerprints: correct, but a full-corpus scan per refresh.
 
     Steps:
 
@@ -212,13 +238,17 @@ def ingest_late(
        only the dirty day directories, so replaying the same batch is
        idempotent (the second merge is a fixpoint).
     2. **Refresh**: days within ``margin_days`` of a dirty day are
-       recomputed (clean -> salted cascade) from a raw read that is
-       partition-pruned to the refresh window plus one more margin (the
-       cleaning context), and written back via the tier store's dynamic
-       partition overwrite + fresh manifests. Every aggregate in the
-       cascade is integer-exact, so the refreshed partitions are
-       BYTE-identical to a from-scratch rebuild over the merged corpus
-       (parity-tested).
+       recomputed from a raw read that is partition-pruned to the
+       refresh window plus one more margin (the cleaning context): clean
+       -> salted 1m, written back via the tier store's dynamic partition
+       overwrite + fresh manifests. The 1h and 1d partitions then
+       cascade from the just-refreshed STORED finer tier, pruned to the
+       refreshed days, as ``run()`` does, so the cleaning plan executes
+       once. (If retention already dropped a refreshed day from the
+       finer tier, the coarser one cascades from the plan instead.)
+       Every aggregate in the cascade is integer-exact, so the refreshed
+       partitions are BYTE-identical to a from-scratch rebuild over the
+       merged corpus (parity-tested).
 
     Contract: exact full-rebuild parity requires every rule's temporal
     reach <= ``margin_days`` (spike/lag/lead/bounded windows qualify).
@@ -274,21 +304,26 @@ def ingest_late(
         .select(*cols)
     )
     cleaned = clean_sequences(raw, ruleset)
-    tiers = build_cascade(cleaned, salted=True, n_salt=n_salt)
     store = TierStore(out_root)
+    todo = sorted(affected)
     metrics: dict = {
         "dirty_days": dirty,
-        "refreshed_days": sorted(affected),
+        "refreshed_days": todo,
         "partitions": {},
     }
-    for tier_name, tier_df in tiers.items():
-        with_day = tier_df.withColumn(
-            "day", F.date_trunc("day", F.col("bucket")).cast("timestamp_ntz")
+    for tier_name in ("1m", "1h", "1d"):
+        tier_df = (
+            salted_rollup(cleaned, "1m", n_salt=n_salt)
+            if tier_name == "1m"
+            else rollup_cascade(tier_df, tier_name)
         )
-        fps = partition_fingerprints(with_day)
-        todo = sorted(set(fps) & affected)
-        res = store.write_tier(tier_name, tier_df, fps, days=todo)
+        res = store.write_tier(tier_name, tier_df, days=todo)
         metrics["partitions"][tier_name] = res["written_partitions"]
+        # the next tier cascades from the refreshed stored one, unless
+        # retention already dropped some affected day from it
+        cutoff = store.retention_cutoff(tier_name)
+        if cutoff is None or todo[0] >= cutoff:
+            tier_df = _stored(store, tier_name, res, spark, todo)
     return metrics
 
 
@@ -329,11 +364,8 @@ def run(
         cleaned.write.mode("overwrite").parquet(cleaned_path)
         cleaned = spark.read.parquet(cleaned_path)
 
-    from traval_spark.rollup import rollup_cascade, salted_rollup
-
     store = TierStore(out_root)
     metrics: dict = {"partitions": {}, "rows": {}, "skipped": {}}
-    n_input = None
     max_day = None
     tier_names = ("1m", "1h", "1d")
     prev_stored = None
@@ -343,19 +375,15 @@ def run(
             if tier_name == "1m"
             else rollup_cascade(prev_stored, tier_name)
         )
-        with_day = tier_df.withColumn(
-            "day", F.date_trunc("day", F.col("bucket")).cast("timestamp_ntz")
-        )
-        fps = partition_fingerprints(with_day)
-        if fps:
-            max_day = max(max(fps), max_day or "")
-        todo = store.stale_days(tier_name, fps) if resume else sorted(fps)
-        skipped = sorted(set(fps) - set(todo))
-        res = store.write_tier(tier_name, tier_df, fps, days=todo)
+        res, tier_days, skipped = _land(store, tier_name, tier_df, resume)
+        if tier_days:
+            max_day = max(tier_days[-1], max_day or "")
         metrics["partitions"][tier_name] = res["written_partitions"]
         metrics["rows"][tier_name] = res["rows"]
         metrics["skipped"][tier_name] = skipped
-        prev_stored = store.read_tier(tier_name, spark).drop("day")
+        prev_stored = _stored(store, tier_name, res, spark)
+        if tier_name == "1m":
+            t1m = prev_stored
 
     if sketches:
         # companion mergeable-tier stores (one root per tier kind; the
@@ -389,36 +417,28 @@ def run(
             for tname in ("1m", "1h", "1d"):
                 if tname != "1m":
                     cur = casc(cur, tname)
-                with_day = cur.withColumn(
-                    "day", F.date_trunc("day", F.col("bucket"))
-                )
-                fps = partition_fingerprints(with_day)
-                todo = sub.stale_days(tname, fps) if resume else sorted(fps)
-                res = sub.write_tier(tname, cur, fps, days=todo)
+                res, _, skipped = _land(sub, tname, cur, resume)
                 metrics["partitions"][f"{kind}_{tname}"] = res[
                     "written_partitions"]
                 metrics["rows"][f"{kind}_{tname}"] = res["rows"]
-                metrics["skipped"][f"{kind}_{tname}"] = sorted(
-                    set(fps) - set(todo))
-                cur = sub.read_tier(tname, spark).drop("day")
+                metrics["skipped"][f"{kind}_{tname}"] = skipped
+                cur = _stored(sub, tname, res, spark)
         combined.unpersist()
 
     # gap-filled + packed views of the 1m tier
-    t1m = store.read_tier("1m", spark)
-    dense = gap_fill(t1m.drop("day"), "1m", method=gapfill_method)
+    dense = gap_fill(t1m, "1m", method=gapfill_method)
     dense.write.mode("overwrite").parquet(f"{out_root}/1m_dense")
-    packed = pack_tier(t1m.drop("day"), measures=["sum_tok", "n_points"])
+    packed = pack_tier(t1m, measures=["sum_tok", "n_points"])
     packed.write.mode("overwrite").parquet(f"{out_root}/1m_gorilla")
-    comp = packed.agg(
+    # byte totals from the written blocks, not a second pack
+    comp = spark.read.schema(packed.schema).parquet(
+        f"{out_root}/1m_gorilla").agg(
         F.sum("raw_bytes").alias("raw"), F.sum("packed_bytes").alias("packed")
     ).collect()[0]
-    if n_input is None:
-        # rolled-up (non-flagged) point count read back from the tiny
-        # written 1m tier — never re-execute the full cleaning plan just
-        # for a metrics field (it is the dominant stage of the job)
-        n_input = int(
-            t1m.agg(F.sum("n_points").alias("n")).collect()[0]["n"] or 0
-        )
+    # rolled-up (non-flagged) point count read back from the tiny
+    # written 1m tier — never re-execute the full cleaning plan just
+    # for a metrics field (it is the dominant stage of the job)
+    n_input = int(t1m.agg(F.sum("n_points").alias("n")).collect()[0]["n"] or 0)
 
     if retention and max_day:
         # Last step of the job: TTL per tier, anchored on the newest data

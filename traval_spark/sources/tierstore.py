@@ -12,13 +12,14 @@ tests/test_rollup.py (skipped here; see ``use_iceberg``).
 Checkpoint/resume contract (north_rule):
 
 - tiers are partitioned by ``day`` (derived from the bucket);
-- each written partition gets a manifest JSON recording its input
-  fingerprint (count + order-insensitive hash-sum of the partition's input
-  rows), row count, bucket range, and measure checksums;
-- a resumed run recomputes only partitions whose input fingerprint
-  changed or whose manifest is missing — writes are idempotent via
-  dynamic partition overwrite, so a crashed run re-runs at most its
-  in-flight partitions.
+- each written partition gets a manifest JSON recording its
+  fingerprint (count + order-insensitive hash-sum of the partition's own
+  tier rows, day included), row count, bucket range, and measure
+  checksums;
+- a resumed run fingerprints the tier it would write and recomputes only
+  partitions whose fingerprint changed or whose manifest is missing —
+  writes are idempotent via dynamic partition overwrite, so a crashed
+  run re-runs at most its in-flight partitions.
 """
 
 from __future__ import annotations
@@ -28,8 +29,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from traval_spark.functions.ts import ensure_ntz
 from traval_spark.sources import fsutil
@@ -73,23 +75,27 @@ DEFAULT_RETENTION: dict[str, int | None] = {
 }
 
 
+def _fingerprint_aggs(cols: list[Column]) -> list[Column]:
+    """The fingerprint aggregates over ``cols``: ``rows`` and ``hashsum``."""
+    return [
+        F.count("*").alias("rows"),
+        # decimal(38,0) sum: order-insensitive and overflow-free under
+        # ANSI mode (int64 hash sums overflow at ~2^63)
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("hashsum"),
+    ]
+
+
 def partition_fingerprints(df: DataFrame, day_col: str = "day") -> dict[str, dict]:
     """Per-day input fingerprint: row count + order-insensitive hash sum.
 
     One cheap aggregation over the input; the hash covers every column so
     any upstream change flips the fingerprint.
     """
-    hashed = df.withColumn("__h", F.xxhash64(*[F.col(c) for c in df.columns]))
     rows = (
         # day keys are 'YYYY-MM-DD' strings everywhere (manifest filenames,
         # stale_days comparisons, partition dirs)
-        hashed.groupBy(F.to_date(F.col(day_col)).cast("string").alias("day"))
-        .agg(
-            F.count("*").alias("rows"),
-            # decimal(38,0) sum: order-insensitive and overflow-free under
-            # ANSI mode (int64 hash sums overflow at ~2^63)
-            F.sum(F.col("__h").cast("decimal(38,0)")).alias("hashsum"),
-        )
+        df.groupBy(F.to_date(F.col(day_col)).cast("string").alias("day"))
+        .agg(*_fingerprint_aggs([F.col(c) for c in df.columns]))
         .collect()
     )
     return {
@@ -133,8 +139,11 @@ class TierStore:
             .partitionBy("day").parquet(self.tier_path(tier))
         )
 
-    def _read_data(self, spark, tier: str) -> DataFrame:
-        return spark.read.parquet(self.tier_path(tier))
+    def _read_data(self, spark, tier: str,
+                   schema: StructType | None = None) -> DataFrame:
+        # a known schema skips Spark's footer-inference job
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self.tier_path(tier))
 
     def _drop_day(self, tier: str, day: str) -> None:
         part_dir = os.path.join(self.tier_path(tier), f"day={day}")
@@ -164,15 +173,28 @@ class TierStore:
         self,
         tier: str,
         df: DataFrame,
-        input_fps: dict[str, dict],
+        input_fps: dict[str, dict] | None = None,
         days: list[str] | None = None,
         sort_within: tuple[str, ...] | None = ("source", "bucket"),
     ) -> dict:
-        """Write (a subset of days of) a tier + manifests; returns metrics.
+        """Write (a subset of days of) a tier + manifests; returns metrics
+        (``written_partitions``, ``rows``) and the stored ``schema``, which
+        rereads pass to :meth:`read_tier`.
 
-        ``days=None`` writes everything in ``input_fps``; otherwise only the
-        listed partitions are (over)written — idempotent via dynamic
-        partition overwrite (spark.sql.sources.partitionOverwriteMode).
+        ``input_fps`` are the fingerprints the manifests record, as
+        :func:`partition_fingerprints` computes them. With ``days=None``
+        every day in ``input_fps`` is written; otherwise only the listed
+        partitions are (over)written — idempotent via dynamic partition
+        overwrite (spark.sql.sources.partitionOverwriteMode).
+
+        ``input_fps=None`` executes ``df``'s plan once: the write learns
+        which days it landed from an observation on the written frame
+        (no extra Spark job), and the manifests' fingerprints come from
+        the post-write stats aggregation over the landed partitions —
+        equal to ``partition_fingerprints`` of ``df`` plus its
+        TIMESTAMP_NTZ ``day``. Every landed day (within ``days`` if
+        given) is written; days already on disk that ``df`` lacks keep
+        their partitions and manifests.
 
         ``sort_within`` clusters each write task's rows by (day, *cols)
         before writing — no shuffle (sortWithinPartitions), two layout
@@ -187,44 +209,69 @@ class TierStore:
         df = ensure_ntz(df, "bucket").withColumn(
             "day", F.date_trunc("day", F.col("bucket")).cast("date")
         )
-        todo = sorted(input_fps if days is None else days)
+        # as a reread sees it: the partition column comes last
+        fields = df.schema.fields
+        schema = StructType([f for f in fields if f.name != "day"]
+                            + [f for f in fields if f.name == "day"])
+        nothing = {"written_partitions": [], "rows": 0, "schema": schema}
+        day = F.col("day").cast("string")
         cutoff = self.retention_cutoff(tier)
-        if cutoff is not None:  # aged-out days are tombstoned, never rewritten
-            todo = [d for d in todo if d >= cutoff]
-        if not todo:
-            return {"written_partitions": [], "rows": 0}
-        sub = df.filter(F.col("day").cast("string").isin(todo))
+        todo = None
+        if input_fps is not None or days is not None:
+            todo = sorted(input_fps if days is None else days)
+            # aged-out days are tombstoned, never rewritten
+            if cutoff is not None:
+                todo = [d for d in todo if d >= cutoff]
+            if not todo:
+                return nothing
+            sub = df.filter(day.isin(todo))
+        else:
+            sub = df if cutoff is None else df.filter(day >= cutoff)
+        if input_fps is None:
+            # a set, so tasks that Spark re-executes cannot skew it
+            landed = Observation()
+            sub = sub.observe(landed, F.collect_set(day).alias("days"))
         if sort_within:
             cols = [c for c in sort_within if c in sub.columns]
             sub = sub.sortWithinPartitions("day", *cols)
         self._write_data(sub, tier)
-        # per-partition output metrics for the manifests
+        if input_fps is None:
+            got = set(landed.get["days"])
+            todo = sorted(got if todo is None else got.intersection(todo))
+            if not todo:
+                return nothing
+        # per-partition output metrics (and, without input_fps, the
+        # fingerprints) for the manifests
         spark = df.sparkSession
-        written = self._read_data(spark, tier).filter(
-            F.col("day").cast("string").isin(todo)
-        )
+        written = self._read_data(spark, tier, schema).filter(day.isin(todo))
         # sum_tok_total only exists for the measure tiers; sketch/histogram
         # tiers (sketch.py, hist.py) have no sum_tok column
-        stat_aggs = [
-            F.count("*").alias("rows"),
+        stat_aggs = _fingerprint_aggs(
+            [F.col(c) for c in schema.names if c != "day"]
+            + [F.col("day").cast("timestamp_ntz")]
+        ) + [
             F.min("bucket").cast("string").alias("min_bucket"),
             F.max("bucket").cast("string").alias("max_bucket"),
         ]
-        if "sum_tok" in written.columns:
+        if "sum_tok" in schema.names:
             stat_aggs.append(F.sum("sum_tok").alias("sum_tok_total"))
         stats = {
             r["day"]: r
-            for r in written.groupBy(F.col("day").cast("string").alias("day"))
+            for r in written.groupBy(day.alias("day"))
             .agg(*stat_aggs)
             .collect()
         }
         total_rows = 0
-        for day in todo:
-            st = stats.get(day)
+        for d in todo:
+            st = stats.get(d)
+            if input_fps is not None:
+                fp = input_fps.get(d, {})
+            else:
+                fp = {"rows": st["rows"], "hashsum": str(st["hashsum"])}
             manifest = {
                 "tier": tier,
-                "day": day,
-                "input": input_fps.get(day, {}),
+                "day": d,
+                "input": fp,
                 "rows": st["rows"] if st else 0,
                 "min_bucket": st["min_bucket"] if st else None,
                 "max_bucket": st["max_bucket"] if st else None,
@@ -235,10 +282,11 @@ class TierStore:
                 ),
                 "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
-            fsutil.write_text(spark, self._manifest_path(tier, day),
+            fsutil.write_text(spark, self._manifest_path(tier, d),
                               json.dumps(manifest, indent=2))
             total_rows += manifest["rows"]
-        return {"written_partitions": todo, "rows": total_rows}
+        return {"written_partitions": todo, "rows": total_rows,
+                "schema": schema}
 
     def stale_days(self, tier: str, input_fps: dict[str, dict]) -> list[str]:
         """Partitions whose manifest is missing or whose input changed.
@@ -313,11 +361,14 @@ class TierStore:
                           json.dumps(state, indent=2))
         return {"tier": tier, "cutoff": state["cutoff"], "dropped": drop}
 
-    def read_tier(self, tier: str, spark=None) -> DataFrame:
+    def read_tier(self, tier: str, spark=None,
+                  schema: StructType | None = None) -> DataFrame:
+        """The stored tier. Pass the ``schema`` :meth:`write_tier`
+        returned to skip Spark's footer-inference job."""
         # self.spark honors an injected session and raises a clear
         # error when none is resolvable (bare getActiveSession() would
         # hand _read_data a None)
-        return self._read_data(spark or self.spark, tier)
+        return self._read_data(spark or self.spark, tier, schema)
 
 
 class IcebergTierStore(TierStore):
@@ -377,8 +428,9 @@ class IcebergTierStore(TierStore):
         else:
             sub.writeTo(name).overwritePartitions()
 
-    def _read_data(self, spark, tier: str) -> DataFrame:
-        return spark.table(self.table_name(tier))
+    def _read_data(self, spark, tier: str,
+                   schema: StructType | None = None) -> DataFrame:
+        return spark.table(self.table_name(tier))  # schema from the catalog
 
     def _drop_day(self, tier: str, day: str) -> None:
         self.spark.sql(
