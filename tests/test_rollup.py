@@ -701,9 +701,10 @@ def test_read_routed_stitched_equals_direct(spark):
 
 
 def test_read_resolution_from_store(spark, tmp_path):
-    """Store-integrated routing: coverage comes from TierStore manifests
-    (driver metadata), the chosen tier is read back from parquet with
-    the day predicate on the partition column."""
+    """Store-integrated routing: coverage comes from the listing of each
+    tier's manifest directory (driver metadata, ``TierStore.days``), the
+    chosen tier is read back from parquet with the day predicate on the
+    partition column."""
     from traval_spark.router import coverage_of, read_resolution
 
     src = synth_sequences(spark, 3000, seed=11, span_days=4)
@@ -726,6 +727,94 @@ def test_read_resolution_from_store(spark, tmp_path):
         direct = rollup_raw(src, res)
         cols = ["source", "bucket", "n_points", "sum_tok"]
         assert out.select(*cols).exceptAll(direct.select(*cols)).count() == 0
+
+
+def test_read_resolution_on_empty_store_says_no_landed_days(spark,
+                                                             tmp_path):
+    """A store with no landed days has empty coverage: the router says
+    so instead of failing inside its own day arithmetic."""
+    from traval_spark.router import read_resolution
+
+    with pytest.raises(ValueError, match="no landed days"):
+        read_resolution(TierStore(str(tmp_path / "empty"), spark), "1h",
+                        spark=spark)
+
+
+def test_read_resolution_runs_two_spark_jobs(spark, tmp_path):
+    """A routed read plans from manifest listings and reads its tier
+    with the stored schema: no footer-inference job, so exactly the
+    aggregation's two Spark jobs at every resolution."""
+    from traval_spark.pipeline import run
+    from traval_spark.router import read_resolution
+
+    out = str(tmp_path / "tiers")
+    run(spark, out, synth_rows=3000, ruleset=None)
+    store = TierStore(out, spark)
+    sc = spark.sparkContext
+    for res in ("1m", "1h", "1d"):
+        group = f"routed-read-{res}"
+        sc.setJobGroup(group, group)
+        try:
+            read_resolution(store, res, spark=spark).toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n == 2, (res, n)
+
+
+def test_read_tier_without_schema_sidecar(spark, seqs, tmp_path):
+    """A tier written before the schema sidecar existed is read with
+    inference: the same rows and types as a plain parquet read. The
+    next landing records the sidecar again."""
+    from traval_spark.sources import fsutil
+    from traval_spark.sources.tierstore import MANIFEST_DIR, SCHEMA_FILE
+
+    t1h = rollup_raw(seqs, "1h")
+    store = TierStore(str(tmp_path / "old"), spark)
+    store.write_tier("1h", t1h)
+    sidecar = str(tmp_path / "old" / "1h" / MANIFEST_DIR / SCHEMA_FILE)
+    assert fsutil.exists(spark, sidecar)
+    fsutil.delete(spark, sidecar, recursive=False)
+
+    got = store.read_tier("1h", spark)
+    want = spark.read.parquet(store.tier_path("1h"))
+    assert got.schema == want.schema
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+    store.write_tier("1h", t1h)
+    assert fsutil.exists(spark, sidecar)
+    assert store.read_tier("1h", spark).schema == want.schema
+
+
+def test_day_without_manifest_has_not_landed(spark, tmp_path):
+    """The manifests are the commit log: a day whose partition landed
+    but whose manifest is gone is absent from ``days()`` and from the
+    router's coverage, and ``run(resume=True)`` rewrites it."""
+    import os
+
+    from traval_spark.pipeline import run
+    from traval_spark.router import coverage_of
+    from traval_spark.sources import fsutil
+
+    out = str(tmp_path / "tiers")
+    run(spark, out, synth_rows=3000, ruleset=None)
+    store = TierStore(out, spark)
+    landed = store.days("1h")
+    assert len(landed) >= 2 and landed == sorted(store.manifests("1h"))
+    last = landed[-1]
+    fsutil.delete(spark, store._manifest_path("1h", last), recursive=False)
+    assert os.path.isdir(os.path.join(out, "1h", f"day={last}"))
+
+    assert store.days("1h") == landed[:-1]
+    assert coverage_of(store)["1h"] == (landed[0], landed[-2])
+
+    m = run(spark, out, synth_rows=3000, ruleset=None, resume=True)
+    assert m["partitions"]["1h"] == [last]
+    assert m["partitions"]["1m"] == [] and m["partitions"]["1d"] == []
+    assert store.days("1h") == landed
+    assert coverage_of(store)["1h"] == (landed[0], last)
 
 
 def test_write_tier_sorted_layout(spark, tmp_path):
@@ -786,9 +875,13 @@ def test_write_tier_fingerprints_landed_rows(spark, seqs, tmp_path, kind):
     assert res["written_partitions"] == sorted(want)
     assert res["rows"] == frame.count()
     assert _manifest_fps(store, "1h") == want
-    # the returned schema is the stored one
-    assert store.read_tier("1h", spark, schema=res["schema"]).exceptAll(
-        store.read_tier("1h", spark)).count() == 0
+    # the read with the stored schema equals a read with inference
+    got = store.read_tier("1h", spark)
+    inferred = spark.read.parquet(store.tier_path("1h"))
+    assert [f.dataType for f in got.schema] == [
+        f.dataType for f in inferred.schema]
+    assert got.exceptAll(inferred).count() == 0
+    assert inferred.exceptAll(got).count() == 0
 
 
 def test_write_tier_without_fps_keeps_days_the_frame_lacks(

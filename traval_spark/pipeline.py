@@ -171,11 +171,11 @@ def init_raw(df: DataFrame, raw_root: str) -> None:
     )
 
 
-def _stored(store: TierStore, tier: str, res: dict, spark,
+def _stored(store: TierStore, tier: str, spark,
             days: list[str] | None = None) -> DataFrame:
-    """Reread a tier ``write_tier`` just landed (``res`` is its result),
-    pruned to ``days`` if given, without the ``day`` column."""
-    df = store.read_tier(tier, spark, schema=res["schema"])
+    """Reread a tier ``write_tier`` just landed, pruned to ``days`` if
+    given, without the ``day`` column."""
+    df = store.read_tier(tier, spark)
     if days is not None:
         df = df.filter(F.col("day").cast("string").isin(days))
     return df.drop("day")
@@ -323,7 +323,7 @@ def ingest_late(
         # retention already dropped some affected day from it
         cutoff = store.retention_cutoff(tier_name)
         if cutoff is None or todo[0] >= cutoff:
-            tier_df = _stored(store, tier_name, res, spark, todo)
+            tier_df = _stored(store, tier_name, spark, todo)
     return metrics
 
 
@@ -381,7 +381,7 @@ def run(
         metrics["partitions"][tier_name] = res["written_partitions"]
         metrics["rows"][tier_name] = res["rows"]
         metrics["skipped"][tier_name] = skipped
-        prev_stored = _stored(store, tier_name, res, spark)
+        prev_stored = _stored(store, tier_name, spark)
         if tier_name == "1m":
             t1m = prev_stored
 
@@ -422,7 +422,7 @@ def run(
                     "written_partitions"]
                 metrics["rows"][f"{kind}_{tname}"] = res["rows"]
                 metrics["skipped"][f"{kind}_{tname}"] = skipped
-                cur = _stored(sub, tname, res, spark)
+                cur = _stored(sub, tname, spark)
         combined.unpersist()
 
     # gap-filled + packed views of the 1m tier

@@ -19,8 +19,9 @@ asked at 1h) cannot and is never chosen.
 Scale design:
 
 - Planning is driver-side metadata only: day-level coverage per tier
-  (from TierStore manifests or explicit ranges) — O(tiers x days)
-  scalars, no data touched.
+  (from one listing of each tier's manifest directory,
+  ``TierStore.days``, or explicit ranges) — O(tiers x days) scalars; no
+  manifest is opened and no data is touched.
 - Each plan segment becomes one partition-pruned scan: the day-range
   predicate lands on the tier's ``day`` partition column (stored tiers)
   or the bucket/ts column (parquet row-group pruning), so a 2-day read
@@ -92,14 +93,17 @@ def route_plan(
     """Driver-side segment plan for a (resolution, day-range) read.
 
     ``coverage`` maps tier -> (first_day, last_day) available, inclusive
-    — what retention has left standing (see ``TierStore`` manifests /
-    ``coverage_of``). For each day in [day_min, day_max] the coarsest
-    eligible covering tier wins; consecutive days with the same choice
-    merge into one segment (one pruned scan each). Days no eligible tier
-    covers land in ``plan.gaps``.
+    — what retention has left standing (see ``coverage_of``). For each
+    day in [day_min, day_max] the coarsest eligible covering tier wins;
+    consecutive days with the same choice merge into one segment (one
+    pruned scan each). Days no eligible tier covers land in
+    ``plan.gaps``. An open range over empty coverage raises ValueError.
     """
     if resolution not in TIERS:
         raise ValueError(f"Unknown resolution {resolution!r}")
+    if not coverage and (day_min is None or day_max is None):
+        raise ValueError("the store has no landed days (empty coverage): "
+                         "nothing to route")
     order = [t for t in eligible_tiers(resolution) if t in coverage]
     if day_min is None:
         day_min = min(lo for lo, _ in coverage.values())
@@ -129,11 +133,12 @@ def route_plan(
 
 
 def coverage_of(store, tiers: list[str] | None = None) -> dict[str, tuple[str, str]]:
-    """Day coverage per tier from a TierStore's manifests (driver-side
-    metadata read; no data scan). Tiers with no written days are absent."""
+    """Day coverage per tier from a TierStore's manifest listings
+    (``TierStore.days``: driver-side, no manifest or data read). Tiers
+    with no landed days are absent."""
     out: dict[str, tuple[str, str]] = {}
     for t in tiers or list(TIER_SECONDS):
-        days = sorted(store.manifests(t))
+        days = store.days(t)
         if days:
             out[t] = (days[0], days[-1])
     return out
@@ -203,12 +208,7 @@ def read_routed(
         if with_provenance:
             part = part.withColumn("tier", F.lit(seg.tier))
         parts.append(part)
-    if not parts:
-        raise ValueError("empty route plan (no coverage in range)")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _routed_union(parts)
 
 
 def read_resolution(
@@ -221,23 +221,13 @@ def read_resolution(
     strict: bool = False,
     with_provenance: bool = False,
 ) -> DataFrame:
-    """One-call router over a TierStore: plan from manifests, read the
-    chosen tiers, stitch. ``raw=`` supplies the raw frame if the store
-    has a 'raw' tier serving recent days (its schema is the ingest
-    (source, ts, n_tok), not a rollup)."""
-    cov = coverage_of(store)
-    plan = route_plan(cov, resolution, day_min, day_max)
-    frames: dict[str, DataFrame] = {}
-    for seg in plan.segments:
-        if seg.tier not in frames:
-            frames[seg.tier] = (
-                raw if seg.tier == "raw"
-                else store.read_tier(seg.tier, spark=spark)
-            )
-            if frames[seg.tier] is None:
-                raise ValueError("plan chose 'raw' but no raw= frame given")
-    return read_routed(frames, plan, strict=strict,
-                       with_provenance=with_provenance)
+    """One-call router over a TierStore: plan from the manifest
+    listings, read the chosen tiers, stitch. ``raw=`` supplies the raw
+    frame if the store has a 'raw' tier serving recent days (its schema
+    is the ingest (source, ts, n_tok), not a rollup)."""
+    plan = route_plan(coverage_of(store), resolution, day_min, day_max)
+    return read_routed(_plan_frames(store, plan, spark, raw), plan,
+                       strict=strict, with_provenance=with_provenance)
 
 
 def _routed_union(parts: list[DataFrame]) -> DataFrame:

@@ -20,6 +20,18 @@ Checkpoint/resume contract (north_rule):
   partitions whose fingerprint changed or whose manifest is missing —
   writes are idempotent via dynamic partition overwrite, so a crashed
   run re-runs at most its in-flight partitions.
+
+The manifests are the commit log: a day has landed only if its
+``day=….json`` exists, so :meth:`TierStore.days` (the landed days, from
+one listing of the manifest directory) is all that coverage and
+retention need; only ``stale_days`` and ``tier_freshness`` read manifest
+contents. Next to the manifests, the parquet backend keeps the tier's
+stored schema in ``_schema.json`` (``StructType.json()``, ``day``
+last), rewritten only when a landing's schema differs. Reads take the
+schema from it instead of running Spark's footer-inference job; a tier
+without one (written before the sidecar existed) is read with
+inference. Manifests, schema and retention state assume a single
+writer per tier: concurrent writers to one tier are not supported.
 """
 
 from __future__ import annotations
@@ -31,12 +43,13 @@ import time
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from traval_spark.functions.ts import ensure_ntz
 from traval_spark.sources import fsutil
 
 MANIFEST_DIR = "_manifests"
+SCHEMA_FILE = "_schema.json"
 
 
 def use_iceberg(warehouse: str, catalog: str = "tiers") -> dict[str, str]:
@@ -126,6 +139,15 @@ class TierStore:
             self.root, tier, MANIFEST_DIR, f"day={day}.json"
         )
 
+    def _schema_path(self, tier: str) -> str:
+        return os.path.join(self.tier_path(tier), MANIFEST_DIR, SCHEMA_FILE)
+
+    def _stored_schema(self, spark, tier: str) -> StructType | None:
+        p = self._schema_path(tier)
+        if not fsutil.exists(spark, p):
+            return None
+        return StructType.fromJson(json.loads(fsutil.read_text(spark, p)))
+
     # -- data plane (overridden by IcebergTierStore; manifests/retention
     # -- state stay fsutil JSON in both backends) ----------------------------
 
@@ -138,10 +160,19 @@ class TierStore:
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("day").parquet(self.tier_path(tier))
         )
+        # as a reread sees it: the partition column comes last, and
+        # parquet reads every column as nullable
+        fields = [f for f in sub.schema.fields if f.name != "day"] + [
+            f for f in sub.schema.fields if f.name == "day"]
+        schema = StructType([StructField(f.name, f.dataType, True, f.metadata)
+                             for f in fields])
+        spark = sub.sparkSession
+        if self._stored_schema(spark, tier) != schema:
+            fsutil.write_text(spark, self._schema_path(tier), schema.json())
 
-    def _read_data(self, spark, tier: str,
-                   schema: StructType | None = None) -> DataFrame:
-        # a known schema skips Spark's footer-inference job
+    def _read_data(self, spark, tier: str) -> DataFrame:
+        # the stored schema skips Spark's footer-inference job
+        schema = self._stored_schema(spark, tier)
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(self.tier_path(tier))
 
@@ -156,18 +187,22 @@ class TierStore:
             return None
         return json.loads(fsutil.read_text(self.spark, p))
 
-    def manifests(self, tier: str) -> dict[str, dict]:
+    def days(self, tier: str) -> list[str]:
+        """The tier's landed days (YYYY-MM-DD), sorted: one listing of
+        its manifest directory, no manifest read."""
         # derive the dir from _manifest_path so backend subclasses that
         # relocate manifests (IcebergTierStore's _tiermeta) inherit this
         # listing unchanged
         d = os.path.dirname(self._manifest_path(tier, "x"))
-        out = {}
-        for fn in fsutil.list_names(self.spark, d):
-            if fn.startswith("day=") and fn.endswith(".json"):
-                out[fn[4:-5]] = json.loads(
-                    fsutil.read_text(self.spark, os.path.join(d, fn))
-                )
-        return out
+        return sorted(fn[4:-5] for fn in fsutil.list_names(self.spark, d)
+                      if fn.startswith("day=") and fn.endswith(".json"))
+
+    def manifests(self, tier: str) -> dict[str, dict]:
+        return {
+            day: json.loads(
+                fsutil.read_text(self.spark, self._manifest_path(tier, day)))
+            for day in self.days(tier)
+        }
 
     def write_tier(
         self,
@@ -178,8 +213,9 @@ class TierStore:
         sort_within: tuple[str, ...] | None = ("source", "bucket"),
     ) -> dict:
         """Write (a subset of days of) a tier + manifests; returns metrics
-        (``written_partitions``, ``rows``) and the stored ``schema``, which
-        rereads pass to :meth:`read_tier`.
+        (``written_partitions``, ``rows``). The parquet backend also
+        records the tier's schema sidecar, so rereads skip schema
+        inference.
 
         ``input_fps`` are the fingerprints the manifests record, as
         :func:`partition_fingerprints` computes them. With ``days=None``
@@ -209,11 +245,7 @@ class TierStore:
         df = ensure_ntz(df, "bucket").withColumn(
             "day", F.date_trunc("day", F.col("bucket")).cast("date")
         )
-        # as a reread sees it: the partition column comes last
-        fields = df.schema.fields
-        schema = StructType([f for f in fields if f.name != "day"]
-                            + [f for f in fields if f.name == "day"])
-        nothing = {"written_partitions": [], "rows": 0, "schema": schema}
+        nothing = {"written_partitions": [], "rows": 0}
         day = F.col("day").cast("string")
         cutoff = self.retention_cutoff(tier)
         todo = None
@@ -243,17 +275,17 @@ class TierStore:
         # per-partition output metrics (and, without input_fps, the
         # fingerprints) for the manifests
         spark = df.sparkSession
-        written = self._read_data(spark, tier, schema).filter(day.isin(todo))
+        written = self._read_data(spark, tier).filter(day.isin(todo))
         # sum_tok_total only exists for the measure tiers; sketch/histogram
         # tiers (sketch.py, hist.py) have no sum_tok column
         stat_aggs = _fingerprint_aggs(
-            [F.col(c) for c in schema.names if c != "day"]
+            [F.col(c) for c in written.columns if c != "day"]
             + [F.col("day").cast("timestamp_ntz")]
         ) + [
             F.min("bucket").cast("string").alias("min_bucket"),
             F.max("bucket").cast("string").alias("max_bucket"),
         ]
-        if "sum_tok" in schema.names:
+        if "sum_tok" in written.columns:
             stat_aggs.append(F.sum("sum_tok").alias("sum_tok_total"))
         stats = {
             r["day"]: r
@@ -285,8 +317,7 @@ class TierStore:
             fsutil.write_text(spark, self._manifest_path(tier, d),
                               json.dumps(manifest, indent=2))
             total_rows += manifest["rows"]
-        return {"written_partitions": todo, "rows": total_rows,
-                "schema": schema}
+        return {"written_partitions": todo, "rows": total_rows}
 
     def stale_days(self, tier: str, input_fps: dict[str, dict]) -> list[str]:
         """Partitions whose manifest is missing or whose input changed.
@@ -337,7 +368,7 @@ class TierStore:
         if isinstance(as_of, str):
             as_of = dt.date.fromisoformat(as_of)
         cutoff = (as_of - dt.timedelta(days=keep_days)).isoformat()
-        drop = sorted(d for d in self.manifests(tier) if d < cutoff)
+        drop = [d for d in self.days(tier) if d < cutoff]
         for day in drop:
             self._drop_day(tier, day)
             fsutil.delete(self.spark, self._manifest_path(tier, day),
@@ -361,14 +392,15 @@ class TierStore:
                           json.dumps(state, indent=2))
         return {"tier": tier, "cutoff": state["cutoff"], "dropped": drop}
 
-    def read_tier(self, tier: str, spark=None,
-                  schema: StructType | None = None) -> DataFrame:
-        """The stored tier. Pass the ``schema`` :meth:`write_tier`
-        returned to skip Spark's footer-inference job."""
+    def read_tier(self, tier: str, spark=None) -> DataFrame:
+        """The stored tier, ``day`` last. The parquet backend takes the
+        schema from the tier's ``_schema.json``, so the read launches no
+        footer-inference job; a tier written before the sidecar existed
+        is read with inference."""
         # self.spark honors an injected session and raises a clear
         # error when none is resolvable (bare getActiveSession() would
         # hand _read_data a None)
-        return self._read_data(spark or self.spark, tier, schema)
+        return self._read_data(spark or self.spark, tier)
 
 
 class IcebergTierStore(TierStore):
@@ -396,6 +428,8 @@ class IcebergTierStore(TierStore):
     table directories — Iceberg owns those); every resume/stale/TTL
     decision is inherited bit-for-bit from TierStore, so the two
     backends are behaviorally interchangeable above the data plane.
+    The schema comes from the catalog, so no ``_schema.json`` sidecar
+    is written.
     """
 
     def __init__(self, root: str, catalog: str = "tiers",
@@ -428,8 +462,7 @@ class IcebergTierStore(TierStore):
         else:
             sub.writeTo(name).overwritePartitions()
 
-    def _read_data(self, spark, tier: str,
-                   schema: StructType | None = None) -> DataFrame:
+    def _read_data(self, spark, tier: str) -> DataFrame:
         return spark.table(self.table_name(tier))  # schema from the catalog
 
     def _drop_day(self, tier: str, day: str) -> None:
