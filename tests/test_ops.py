@@ -642,25 +642,23 @@ def test_repetition_metrics_exact(spark):
     assert top[3]["top_bigram_char_fraction"] is None
 
 
-@pytest.mark.parametrize("backend", ["star", "propagate"])
-def test_dup_clusters_chain_and_singletons(spark, backend):
-    """Both backends: a diameter-3 chain converges to one cluster,
-    disconnected pairs/singletons keep their own components."""
+def test_dup_clusters_chain_and_singletons(spark):
+    """A diameter-3 chain converges to one cluster, disconnected
+    pairs/singletons keep their own components."""
     from traval_spark.operators.dedup import dup_clusters
 
     docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (5, 6)], "a long, b long")
     out = {r["doc_id"]: r["cluster"]
-           for r in dup_clusters(docs, pairs, backend=backend).collect()}
+           for r in dup_clusters(docs, pairs).collect()}
     assert out == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5, 7: 7}
     # representatives = rows whose label is their own id
     reps = {k for k, v in out.items() if k == v}
     assert reps == {0, 4, 5, 7}
 
 
-@pytest.mark.parametrize("backend", ["star", "propagate"])
-def test_dup_clusters_string_ids_and_nonconvergence(spark, backend):
+def test_dup_clusters_string_ids_and_nonconvergence(spark):
     from traval_spark.operators.dedup import dup_clusters
 
     docs = spark.createDataFrame(
@@ -668,7 +666,7 @@ def test_dup_clusters_string_ids_and_nonconvergence(spark, backend):
     pairs = spark.createDataFrame(
         [("doc_0", "doc_1"), ("doc_3", "doc_4")], "a string, b string")
     out = {r["doc_id"]: r["cluster"]
-           for r in dup_clusters(docs, pairs, backend=backend).collect()}
+           for r in dup_clusters(docs, pairs).collect()}
     assert out == {"doc_0": "doc_0", "doc_1": "doc_0", "doc_2": "doc_2",
                    "doc_3": "doc_3", "doc_4": "doc_3"}
 
@@ -677,11 +675,10 @@ def test_dup_clusters_string_ids_and_nonconvergence(spark, backend):
     chain = spark.createDataFrame([(i, i + 1) for i in range(5)],
                                   "a long, b long")
     with pytest.raises(RuntimeError, match="converge"):
-        dup_clusters(chain_docs, chain, max_iter=2, backend=backend)
+        dup_clusters(chain_docs, chain, max_iter=2)
 
 
-@pytest.mark.parametrize("backend", ["star", "propagate"])
-def test_dup_clusters_degenerate_graphs(spark, backend):
+def test_dup_clusters_degenerate_graphs(spark):
     """Empty pair set -> all self-labels; self-loops and duplicate pairs
     (both orders) are absorbed without phantom clusters."""
     from traval_spark.operators.dedup import dup_clusters
@@ -689,20 +686,19 @@ def test_dup_clusters_degenerate_graphs(spark, backend):
     docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
     empty = spark.createDataFrame([], "a long, b long")
     out = {r["doc_id"]: r["cluster"]
-           for r in dup_clusters(docs, empty, backend=backend).collect()}
+           for r in dup_clusters(docs, empty).collect()}
     assert out == {i: i for i in range(4)}
 
     messy = spark.createDataFrame(
         [(1, 1), (1, 2), (2, 1), (1, 2), (3, 3)], "a long, b long")
     out = {r["doc_id"]: r["cluster"]
-           for r in dup_clusters(docs, messy, backend=backend).collect()}
+           for r in dup_clusters(docs, messy).collect()}
     assert out == {0: 0, 1: 1, 2: 1, 3: 3}
 
 
 def test_dup_clusters_star_handles_long_chain(spark):
-    """The scale fix the propagate backend can't do: a diameter-120 chain
-    (far beyond max_iter=20 label-propagation rounds) converges in
-    O(log n) star rounds; propagate refuses rather than split clusters."""
+    """A diameter-120 chain (far beyond max_iter=20 rounds of min-label
+    propagation) converges in O(log n) star rounds."""
     from traval_spark.operators.dedup import (
         connected_components,
         dup_clusters,
@@ -712,40 +708,53 @@ def test_dup_clusters_star_handles_long_chain(spark):
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "a long, b long")
-    with pytest.raises(RuntimeError, match="converge"):
-        dup_clusters(docs, chain, backend="propagate")
-
     out = {r["doc_id"]: r["cluster"]
-           for r in dup_clusters(docs, chain, backend="star").collect()}
+           for r in dup_clusters(docs, chain).collect()}
     assert out == {i: 0 for i in range(n)}
 
     _, rounds = connected_components(chain)
     assert rounds <= 15  # ~log(121) star rounds + confirmation, not 120
 
 
-def test_dup_clusters_star_equals_propagate_random(spark):
-    """Random sparse graphs: star labels == propagate labels exactly
-    (same min-reachable-id semantics, any orderable id type)."""
+def _union_find_min_labels(nodes, edges):
+    """Reference labels: every node -> the min id of its connected
+    component, by a plain union-find (no Spark)."""
+    parent = {x: x for x in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in nodes}
+
+
+def test_dup_clusters_star_equals_union_find_random(spark):
+    """Random sparse graphs: every doc's star label == the min id of its
+    component from an independent union-find, for long ids (three seeds)
+    and string ids (whose order is not the numeric one: "d10" < "d9")."""
     import numpy as np
 
     from traval_spark.operators.dedup import dup_clusters
 
-    rng = np.random.default_rng(42)
     n = 200
-    edges = {(int(a), int(b)) for a, b in rng.integers(0, n, (180, 2))
-             if a != b}
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame(sorted(edges), "a long, b long")
-    star = sorted(
-        (r["doc_id"], r["cluster"])
-        for r in dup_clusters(docs, pairs, backend="star").collect()
-    )
-    prop = sorted(
-        (r["doc_id"], r["cluster"])
-        for r in dup_clusters(docs, pairs, backend="propagate",
-                              max_iter=60).collect()
-    )
-    assert star == prop
+    for seed, key, ddl in ((42, int, "long"), (7, int, "long"),
+                           (2024, int, "long"),
+                           (42, lambda i: f"d{i}", "string")):
+        rng = np.random.default_rng(seed)
+        edges = {(key(int(a)), key(int(b)))
+                 for a, b in rng.integers(0, n, (180, 2)) if a != b}
+        nodes = [key(i) for i in range(n)]
+        docs = spark.createDataFrame([(x,) for x in nodes], f"doc_id {ddl}")
+        pairs = spark.createDataFrame(sorted(edges), f"a {ddl}, b {ddl}")
+        got = {r["doc_id"]: r["cluster"]
+               for r in dup_clusters(docs, pairs).collect()}
+        assert got == _union_find_min_labels(nodes, edges), (seed, ddl)
 
 
 def test_hot_bucket_cap_discloses_and_bounds(spark, caplog):

@@ -740,6 +740,41 @@ def test_read_resolution_on_empty_store_says_no_landed_days(spark,
                         spark=spark)
 
 
+def test_routed_read_over_gaps_only_is_empty(spark, tmp_path):
+    """A non-strict routed read whose whole day range is gaps (days the
+    1m tier has aged out) returns no rows with the columns and types of
+    a covered read at that resolution, from ``read_resolution`` and from
+    a per-kind reader; ``strict=True`` still raises. With no tier that
+    can serve the resolution landed, the read says so."""
+    from traval_spark.pipeline import run
+    from traval_spark.router import read_resolution, read_routed_m4
+
+    out = str(tmp_path / "tiers")
+    m = run(spark, out, synth_rows=3000, ruleset=None, sketches=True,
+            retention={"1m": 1, "1d": None})
+    aged = m["retention"]["1m"]["dropped"]
+    store = TierStore(out, spark)
+    kept = store.days("1m")[-1]
+    m4 = TierStore(out + "/m4", spark)
+    assert m4.apply_retention("1m", 1, as_of=kept)["dropped"] == aged
+    for read, st in ((read_resolution, store), (read_routed_m4, m4)):
+        empty = read(st, "1m", day_min=aged[0], day_max=aged[-1],
+                     spark=spark)
+        covered = read(st, "1m", day_min=kept, day_max=kept, spark=spark)
+        assert empty.count() == 0 and covered.count() > 0
+        assert empty.schema == covered.schema
+        with pytest.raises(ValueError, match="uncovered"):
+            read(st, "1m", day_min=aged[0], day_max=aged[-1], spark=spark,
+                 strict=True)
+
+    coarse = TierStore(str(tmp_path / "coarse"), spark)
+    t1h = store.read_tier("1h", spark).drop("day")
+    coarse.write_tier("1h", t1h, partition_fingerprints(
+        t1h.withColumn("day", F.date_trunc("day", "bucket"))))
+    with pytest.raises(ValueError, match="can serve '1m' has landed days"):
+        read_resolution(coarse, "1m", spark=spark)
+
+
 def test_read_resolution_runs_two_spark_jobs(spark, tmp_path):
     """A routed read plans from manifest listings and reads its tier
     with the stored schema: no footer-inference job, so exactly the

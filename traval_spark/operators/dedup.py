@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from traval_spark.operators.text import fold_hash, kgrams, ws_tokens
@@ -81,25 +81,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     """k-word shingles as ' '-joined strings (distinct set); sliding-window
     core shared via text.py:kgrams."""
     return F.array_distinct(kgrams(ws_tokens(text), k))
-
-
-def minhash_signature(text: Column, n_hashes: int = 4, k: int = 3) -> list[Column]:
-    """MinHash signature: per hash-family member b, min over shingles of
-    md5(b || '|' || shingle). md5-hex string order is a fixed pseudo-random
-    permutation of the shingle space — the textbook construction with a
-    portable hash.
-
-    Prefer :func:`with_minhash` — it materializes the shingle array once;
-    these raw columns each re-derive the shingles (fine for one column,
-    4x redundant work for a full signature).
-    """
-    sh = shingles(text, k)
-    return [
-        F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{b}|"), s)))
-        ).alias(f"sig_{b}")
-        for b in range(n_hashes)
-    ]
 
 
 def _minhash_over(sh: DataFrame, id_col: str, n_hashes: int) -> DataFrame:
@@ -299,12 +280,6 @@ def with_simhash16(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 
-def _md5_nibble(h: Column, j: int) -> Column:
-    """Integer value of hex digit ``j`` (0-based) of an md5 hex string —
-    portable: DuckDB mirrors it with strpos('0123..f', substr(h, j+1, 1))-1."""
-    return F.conv(F.substring(h, j + 1, 1), 16, 10).cast("int")
-
-
 def with_simhash64(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash as two 32-bit halves (fp_hi bits 32..63, fp_lo 0..31).
@@ -395,8 +370,11 @@ def simhash64_dup_pairs(
     expensive text-hashing aggregation runs TWICE over the corpus;
     persisting the tiny (id, 2xbigint) frame instead measured 6.7x
     faster at sf0.1 (21.2s -> 3.1s). At warehouse scale write the
-    fingerprints to a table and join from that. Storage is reclaimed by
-    Spark's ContextCleaner when the returned plan is garbage-collected.
+    fingerprints to a table and join from that. ``persist`` registers
+    the frame in the session's CacheManager, which holds it until it is
+    unpersisted or the session's cache is cleared
+    (``spark.catalog.clearCache()``); dropping the returned plan does not
+    release it.
 
     ``max_bucket_size``: bound the worst-case hot band bucket (see
     :func:`_cap_bucket_size`) — drops oversize buckets with a logged
@@ -700,11 +678,12 @@ def connected_components(
 
     Per round: two groupBy-min + two joins (all partial-aggregatable;
     no vertex state frame, the edge set IS the state) followed by a
-    localCheckpoint to truncate iterative lineage and ONE scalar agg
-    (count + xxhash64 edge-set checksum) for the convergence test — the
-    driver only ever sees two scalars per round. At the fixed point the
-    edge set is a star forest: every non-root vertex holds exactly its
-    (node, component-min) edge.
+    localCheckpoint to truncate iterative lineage. The round's
+    convergence scalars (count + xxhash64 edge-set checksum) are
+    observed in the checkpoint's own job, so a round is one driver
+    synchronization and the driver only ever sees two scalars. At the
+    fixed point the edge set is a star forest: every non-root vertex
+    holds exactly its (node, component-min) edge.
     """
     e = (
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
@@ -713,14 +692,15 @@ def connected_components(
     )
     prev: tuple | None = None
     for rounds in range(1, max_iter + 1):
-        e = _small_star(_large_star(e)).localCheckpoint()
+        seen = Observation()
         # checksum summed as decimal(38,0): a long sum of 64-bit hashes
         # overflows under ANSI arithmetic
-        row = e.agg(
+        e = _small_star(_large_star(e)).observe(
+            seen,
             F.count("*").alias("n"),
             F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("chk"),
-        ).first()
-        cur = (row["n"], row["chk"])
+        ).localCheckpoint()
+        cur = (seen.get["n"], seen.get["chk"])
         if cur == prev:
             return e, rounds
         prev = cur
@@ -736,7 +716,6 @@ def dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 20,
-    backend: str = "star",
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph: every doc
     labeled with the SMALLEST doc id reachable through dup pairs — its
@@ -744,88 +723,28 @@ def dup_clusters(
     rest: the standard last step of a fuzzy-dedup pipeline). Docs in no
     pair label themselves.
 
-    ``backend="star"`` (default, the 100 TB path): alternating
-    large-star/small-star contraction (see :func:`connected_components`)
-    — O(log n) driver-synchronized rounds regardless of component
-    diameter; a million-node chain converges in ~20 rounds where label
-    propagation needs a million.
+    Alternating large-star/small-star contraction (see
+    :func:`connected_components`) — O(log n) driver-synchronized rounds
+    regardless of component diameter; a million-node chain converges in
+    ~20 rounds where min-label propagation needs a million.
 
-    ``backend="propagate"``: iterative min-label propagation — each
-    round every vertex takes the min of its own and its neighbors'
-    labels; converges in graph-diameter rounds (fine for near-clique
-    dup components, diameter 1-3) and raises at max_iter on long chains.
-    Kept for round-count comparison; labels are identical.
-
-    Both backends keep the id's OWN type throughout (min/least propagate
-    any orderable type — a long cast would silently NULL string ids) and
-    raise on non-convergence instead of returning split clusters.
+    The id keeps its OWN type throughout (min/least order any orderable
+    type — a long cast would silently NULL string ids), and
+    non-convergence within ``max_iter`` star rounds raises instead of
+    returning split clusters.
     """
-    if backend == "star":
-        stars, _rounds = connected_components(pairs, max_iter=max_iter)
-        return (
-            docs.select(F.col(id_col).alias("id"))
-            .join(
-                stars.select(F.col("u").alias("id"),
-                             F.col("v").alias("__root")),
-                "id",
-                "left",
-            )
-            .select(
-                F.col("id").alias(id_col),
-                F.coalesce(F.col("__root"), F.col("id")).alias("cluster"),
-            )
+    stars, _rounds = connected_components(pairs, max_iter=max_iter)
+    return (
+        docs.select(F.col(id_col).alias("id"))
+        .join(
+            stars.select(F.col("u").alias("id"), F.col("v").alias("__root")),
+            "id",
+            "left",
         )
-    if backend != "propagate":
-        raise ValueError(f"unknown backend {backend!r}; use 'star' or "
-                         "'propagate'")
-    edges = (
-        pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(pairs.select(F.col("b").alias("u"),
-                                  F.col("a").alias("v")))
-        .persist()
-    )
-    labels = docs.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("label")
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                labels.select(F.col("id").alias("v"),
-                              F.col("label").alias("nl")),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("nl").alias("nmin"))
+        .select(
+            F.col("id").alias(id_col),
+            F.coalesce(F.col("__root"), F.col("id")).alias("cluster"),
         )
-        # carry the changed flag IN the propagated frame: the convergence
-        # check is then a filter-count over the checkpointed result, not
-        # a second join against the previous labels
-        new = (
-            labels.join(nbr.withColumnRenamed("u", "id"), "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-                (F.coalesce(F.col("nmin"), F.col("label"))
-                 < F.col("label")).alias("__changed"),
-            )
-            .localCheckpoint()
-        )
-        changed = new.filter(F.col("__changed")).count()
-        labels = new.drop("__changed")
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"dup_clusters did not converge within max_iter={max_iter} "
-            "rounds (component diameter exceeds it); raise max_iter — "
-            "returning partial labels would silently split clusters"
-        )
-    edges.unpersist()
-    return labels.select(
-        F.col("id").alias(id_col), F.col("label").alias("cluster")
     )
 
 

@@ -432,12 +432,11 @@ def cosine_dup_pairs(
     probability p, at L bucket joins of cost. The bucketed frame carries
     all L bucket ids from one pass and is persisted before the
     self-joins (a self-join duplicates its input subtree — the round-2
-    dedup lesson). The persisted block stays referenced by the returned
-    lazy plan for as long as the caller holds it — intentional (every
-    action on the plan reuses it); storage is reclaimed by Spark's
-    ContextCleaner once the plan is garbage-collected, or immediately by
-    materializing the pairs (``df.localCheckpoint()``) and dropping the
-    reference."""
+    dedup lesson), so every action on the returned plan reuses it.
+    ``persist`` registers the frame in the session's CacheManager, which
+    holds it until it is unpersisted or the session's cache is cleared
+    (``spark.catalog.clearCache()``); dropping or materializing the
+    returned plan does not release it."""
     # norm stays higher-order: the bucketed path's projection also
     # carries the HOF bucket expressions, so it is interpreted either
     # way, and an unrolled chain evaluates SLOWER interpreted than the

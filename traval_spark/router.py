@@ -30,7 +30,9 @@ Scale design:
   divides one day, so no output bucket spans two segments: per-segment
   aggregation + union is exact with no cross-segment merge shuffle.
 - Uncoverable days are DISCLOSED in the plan (``gaps``), never silently
-  dropped; ``read_routed(strict=True)`` raises on them.
+  dropped; ``read_routed(strict=True)`` raises on them. A non-strict
+  read whose whole range is gaps returns an empty frame with a covered
+  read's columns and types.
 """
 
 from __future__ import annotations
@@ -192,17 +194,16 @@ def read_routed(
     day, so no output bucket spans segments. ``with_provenance`` adds the
     serving tier per row (observability; excluded from oracle-checked
     paths since tier choice is invisible in the answer by construction).
+    A plan of gaps only reads the coarsest eligible tier in ``frames``
+    over an empty day range: no rows, a covered read's schema.
     """
-    if strict and plan.gaps:
-        raise ValueError(
-            f"route has {len(plan.gaps)} uncovered day(s): "
-            f"{plan.gaps[:5]}{'...' if len(plan.gaps) > 5 else ''}"
-        )
-    missing = sorted({s.tier for s in plan.segments} - set(frames))
+    _check_gaps(plan, strict)
+    segments = _read_segments(plan, frames)
+    missing = sorted({s.tier for s in segments} - set(frames))
     if missing:
         raise ValueError(f"plan needs tier frames not provided: {missing}")
     parts = []
-    for seg in plan.segments:
+    for seg in segments:
         part = _segment_frame(frames[seg.tier], seg.tier, seg,
                               plan.resolution, ts_col)
         if with_provenance:
@@ -225,23 +226,48 @@ def read_resolution(
     listings, read the chosen tiers, stitch. ``raw=`` supplies the raw
     frame if the store has a 'raw' tier serving recent days (its schema
     is the ingest (source, ts, n_tok), not a rollup)."""
-    plan = route_plan(coverage_of(store), resolution, day_min, day_max)
-    return read_routed(_plan_frames(store, plan, spark, raw), plan,
-                       strict=strict, with_provenance=with_provenance)
+    coverage = coverage_of(store)
+    plan = route_plan(coverage, resolution, day_min, day_max)
+    _check_gaps(plan, strict)
+    frames = _plan_frames(store, _read_segments(plan, coverage), spark, raw)
+    return read_routed(frames, plan, with_provenance=with_provenance)
+
+
+def _check_gaps(plan: RoutePlan, strict: bool) -> None:
+    if strict and plan.gaps:
+        raise ValueError(
+            f"route has {len(plan.gaps)} uncovered day(s): "
+            f"{plan.gaps[:5]}{'...' if len(plan.gaps) > 5 else ''}"
+        )
+
+
+def _read_segments(plan: RoutePlan, available) -> list[RouteSegment]:
+    """The segments a read scans: the plan's own, or, for a plan of gaps
+    only, one segment of the coarsest eligible tier in ``available``
+    (tier names) over an empty day range (lo > hi), so the empty result
+    comes from the same per-segment code as a covered read and has its
+    columns and types."""
+    if plan.segments:
+        return plan.segments
+    tier = next(
+        (t for t in eligible_tiers(plan.resolution) if t in available), None)
+    if tier is None:
+        raise ValueError(
+            f"no tier that can serve {plan.resolution!r} has landed days: "
+            "nothing to read")
+    return [RouteSegment(tier, "0001-01-02", "0001-01-01")]
 
 
 def _routed_union(parts: list[DataFrame]) -> DataFrame:
-    if not parts:
-        raise ValueError("empty route plan (no coverage in range)")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
 
 
-def _plan_frames(store, plan, spark, raw):
+def _plan_frames(store, segments, spark, raw):
     frames: dict[str, DataFrame] = {}
-    for seg in plan.segments:
+    for seg in segments:
         if seg.tier not in frames:
             frames[seg.tier] = (
                 raw if seg.tier == "raw"
@@ -264,13 +290,14 @@ def _read_routed_kind(store, resolution, day_min, day_max, spark, raw,
     grouped by (source, bucket, *extra_keys), or — for kinds whose
     merge is not a flat groupBy (M4's struct extremes) — with
     ``stored_builder(day_pruned_tier_df)``."""
-    plan = route_plan(coverage_of(store), resolution, day_min, day_max)
-    if strict and plan.gaps:
-        raise ValueError(f"route has {len(plan.gaps)} uncovered day(s)")
-    frames = _plan_frames(store, plan, spark, raw)
+    coverage = coverage_of(store)
+    plan = route_plan(coverage, resolution, day_min, day_max)
+    _check_gaps(plan, strict)
+    segments = _read_segments(plan, coverage)
+    frames = _plan_frames(store, segments, spark, raw)
     unit, _ = TIERS[resolution]
     parts = []
-    for seg in plan.segments:
+    for seg in segments:
         lo = F.lit(seg.day_lo).cast("date")
         hi = F.lit(seg.day_hi).cast("date")
         frame = frames[seg.tier]
