@@ -4428,11 +4428,14 @@ def q_sen_slope_ci(spark, sf_dir):
 
 def q_fleet_report(spark, sf_dir):
     """The fleet health panel (monitor.py:fleet_report): ten
-    counts=-family monitors off ONE persisted signal frame —
-    dispersion, robust trend, seasonality, randomness, persistence,
-    stationarity, change detection — left-joined on g from the
-    always-total fano base (degenerate-series monitors contribute
-    NULLs, absence reported not dropped)."""
+    counts=-family monitors over ONE raw groupBy to the zero-filled
+    signal — dispersion, robust trend (Sen slope and MK z from one
+    pair pass), seasonality, randomness, persistence, stationarity,
+    change detection — left-joined on g from the always-total fano
+    base (degenerate-series monitors contribute NULLs, absence
+    reported not dropped).  Each counts=-fed monitor re-zero-fills the
+    signal, and a run leaves three persisted frames cached until
+    unpersist() or clearCache()."""
     from traval_spark.operators.monitor import fleet_report
 
     ev = _events(spark, sf_dir).select(

@@ -473,6 +473,39 @@ def test_theil_sen_even_median_and_zero_fill(spark):
     assert abs(got["b"]["sen_slope"] - (-1 / 6)) < 1e-12
 
 
+def test_null_key_rows_belong_to_no_series(spark):
+    """Events with a NULL source belong to no series: they neither
+    become an all-zero series of their own nor widen the span the
+    keyed series are zero-filled over — on the raw path and on the
+    counts= path alike."""
+    from traval_spark.operators.monitor import (
+        bucket_count_signal, fano_dispersion)
+
+    rows, eid = [], 0
+    for h, c in enumerate([3, 1, 4, 1, 5]):
+        for k in range(c):
+            rows.append(("a", _t(h * 3600 + k), 0.0, eid)); eid += 1
+    keyed = _frame(spark, rows).select("source", "ts")
+    # NULL-source events before, inside and after the keyed span
+    nulls = [(None, _t(h * 3600 + 7), 0.0, 1000 + h) for h in range(-2, 8)]
+    mixed = _frame(spark, rows + nulls).select("source", "ts")
+
+    def rows_of(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    sig = bucket_count_signal(mixed)
+    assert sig.filter("g IS NULL").count() == 0
+    assert rows_of(sig) == rows_of(bucket_count_signal(keyed))
+    assert len(rows_of(sig)) == 5
+    assert rows_of(fano_dispersion(mixed)) == rows_of(fano_dispersion(keyed))
+
+    counts = spark.createDataFrame(
+        [("a", 0, 3), ("a", 2, 1), (None, 1, 9), (None, 6, 2)],
+        "g string, h long, c long")
+    assert rows_of(bucket_count_signal(counts=counts)) == [
+        ("a", 0, 3), ("a", 1, 0), ("a", 2, 1)]
+
+
 def test_seasonal_strength_periodic_vs_constant(spark):
     """A perfectly period-3 count signal scores exactly 1.0; a
     constant signal (SS_tot = 0) is dropped; a period-3 signal with

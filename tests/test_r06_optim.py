@@ -10,6 +10,8 @@ the semantics it replaced:
 - sen_slope_ci now extracts lo/hi/median in one conditional-aggregation
   pass (the median replicating theil_sen's rank rule instead of calling
   theil_sen) — pinned: sen_slope equals theil_sen's on the same input;
+  the one-season reads are pinned too: seasonal_sen(period=1) equals
+  theil_sen and seasonal_mk(period=1) equals mann_kendall;
 - the _dot_sql/_norm_sql unrolled chains are pinned bit-identical to
   the higher-order folds they replaced (including the float32 element
   widening).
@@ -78,7 +80,8 @@ def test_lev_banded_equals_unbanded_at_boundary(spark):
 
 
 def test_sen_slope_ci_median_equals_theil_sen(spark):
-    from traval_spark.operators.monitor import sen_slope_ci, theil_sen
+    from traval_spark.operators.monitor import (
+        mann_kendall, seasonal_mk, seasonal_sen, sen_slope_ci, theil_sen)
 
     rows = []
     for g, seq in (
@@ -96,6 +99,29 @@ def test_sen_slope_ci_median_equals_theil_sen(spark):
     assert set(ts_rows) == set(ci_rows)
     for g in ts_rows:
         assert _bits(ts_rows[g]) == _bits(ci_rows[g]), g
+
+    # one season is the non-seasonal read: seasonal_sen equals theil_sen
+    # and seasonal_mk equals mann_kendall on their shared columns
+    ss_rows = {r["g"]: r["sen_slope"]
+               for r in seasonal_sen(counts=counts, period=1).collect()}
+    assert set(ss_rows) == set(ts_rows)
+    for g in ts_rows:
+        assert _bits(ss_rows[g]) == _bits(ts_rows[g]), g
+
+    cols = ["g", "n_buckets", "s_stat", "var_s", "z"]
+
+    def mk_rows(df):
+        return {r["g"]: tuple(r[c] for c in cols)
+                for r in df.select(*cols).collect()}
+
+    mk = mk_rows(mann_kendall(counts=counts))
+    smk = mk_rows(seasonal_mk(counts=counts, period=1))
+    assert set(mk) == set(smk) == set(ts_rows)
+    for g in mk:
+        assert mk[g][:3] == smk[g][:3], g
+        for a, b in zip(mk[g][3:], smk[g][3:]):
+            assert (a is None) == (b is None), g
+            assert a is None or _bits(a) == _bits(b), g
 
 
 def test_dot_sql_bit_identical_to_fold(spark):

@@ -1475,6 +1475,10 @@ def test_routed_m4_reads(spark, seqs, tmp_path):
     want = m4_downsample(seqs, bucket="1h", val="n_tok", bucket_col="bucket")
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+    # day bounds are keyword-only: positional days would bind value_col
+    # and day_min and read the whole store from the second day on
+    with pytest.raises(TypeError):
+        read_routed_m4(store, "1h", newest, newest)
 
 
 def test_routed_fl_reads(spark, seqs, tmp_path):

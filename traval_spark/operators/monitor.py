@@ -112,6 +112,10 @@ def bucket_count_signal(
       sums re-aggregate exactly, so tier-served == raw-served
       bit-for-bit (parity-tested).
 
+    A row with no key (NULL ``by``, or NULL ``g`` in ``counts``) belongs
+    to no series: it is dropped before the span is taken, so it neither
+    widens the span nor becomes an all-zero series of its own.
+
     The spine and everything downstream run on the tiny signal frame
     (|series| x span/bucket).
     """
@@ -128,6 +132,7 @@ def bucket_count_signal(
         # relied on across these branches
         counts = src.groupBy("g", "h").agg(
             F.count("*").alias("c")).persist()
+    counts = counts.filter(F.col("g").isNotNull())
     span = counts.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     spine = (
         counts.select("g").distinct()
@@ -985,6 +990,137 @@ def slo_burn(
     )
 
 
+# ---------------------------------------------------------------------------
+# Kendall–Sen family
+# ---------------------------------------------------------------------------
+#
+# theil_sen, seasonal_sen, sen_slope_ci, mann_kendall and seasonal_mk all
+# read the within-season bucket pairs i < j of the zero-filled count
+# signal (season m = h % period for the seasonal reads, one season for the
+# others).  :func:`_kendall_census` counts them per series and writes the
+# tie-corrected Mann–Kendall variance numerator, :func:`_kendall_pairs` is
+# the one O(m^2) self-join, and :func:`_sen_pick` reads order statistics
+# of the pooled slope multiset.  :func:`_kendall_sen` joins them: S and
+# every order statistic asked for come from ONE aggregation over ONE pair
+# frame, which is how fleet_report reads its slope and MK z in one pass.
+
+
+def _kendall_census(sig: DataFrame) -> DataFrame:
+    """Per series of a ``(g, m, h, c)`` signal (``m`` the season):
+    ``n_buckets``, ``n_seasons``, ``n_pairs`` = Σ_m n_m(n_m−1)/2 and the
+    Mann–Kendall variance numerator
+
+        var_num = Σ_m [n_m(n_m−1)(2n_m+5) − Σ_t t(t−1)(2t+5)]
+
+    (t = tie-group sizes within a season) — an exact integer, summed
+    over seasons BEFORE the single /18 of Var(S).  Two count windows
+    give every bucket its season's size n_m and its tie group's size t,
+    so ONE groupBy sums the per-bucket shares (n_m−1)/2 and
+    (n_m−1)(2n_m+5) − (t−1)(2t+5): a season's term is added n_m times,
+    a tie group's t times.
+    """
+    t, nm = F.col("t"), F.col("n_m")
+    return (
+        sig.withColumn("n_m", F.count(F.lit(1)).over(
+            Window.partitionBy("g", "m")))
+        .withColumn("t", F.count(F.lit(1)).over(
+            Window.partitionBy("g", "m", "c")))
+        .groupBy("g")
+        .agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.countDistinct("m").alias("n_seasons"),
+            (F.sum(nm - 1) / 2).cast("long").alias("n_pairs"),
+            F.sum((nm - 1) * (2 * nm + 5) - (t - 1) * (2 * t + 5))
+            .alias("var_num"),
+        )
+    )
+
+
+def _kendall_pairs(sig: DataFrame) -> DataFrame:
+    """Every within-season bucket pair i < j of a ``(g, m, h, c)``
+    signal as ``g, s, sgn``: the slope (c_j − c_i)/(h_j − h_i) — one
+    division of two exact integers, the same IEEE double in every
+    engine — and sign(c_j − c_i).  Keying the self-join on the season
+    shrinks the quadratic period-fold.
+    """
+    a = sig.select("g", "m", F.col("h").alias("hi"), F.col("c").alias("ci"))
+    b = sig.select("g", "m", F.col("h").alias("hj"), F.col("c").alias("cj"))
+    dc = F.col("cj") - F.col("ci")
+    return (
+        a.join(b, ["g", "m"])
+        .filter(F.col("hj") > F.col("hi"))
+        .select(
+            "g",
+            (dc.cast("double")
+             / (F.col("hj") - F.col("hi")).cast("double")).alias("s"),
+            F.signum(dc).cast("long").alias("sgn"),
+        )
+    )
+
+
+def _sen_pick(extra: dict):
+    """Order statistics of each series' slope multiset: the Sen median
+    ``sen_slope`` (the average of ascending ranks ⌊(N+1)/2⌋ and
+    ⌊(N+2)/2⌋, N = ``n_pairs`` — DuckDB ``median()``'s numeric
+    semantics) plus every ``extra`` name, mapped to the rank columns
+    over the census it averages (one rank for a CI endpoint).  Returns
+    the rank columns and one aggregate per name over pairs ranked by
+    ``__rn``.  The value at a rank is the same under any tie order
+    row_number picks between equal slopes.
+    """
+    n = F.col("n_pairs")
+    picks = {"sen_slope": (F.floor((n + 1) / 2), F.floor((n + 2) / 2)),
+             **extra}
+    ranks, aggs = [], []
+    for name, rs in picks.items():
+        cols = [f"__{name}{i}" for i in range(len(rs))]
+        ranks += [r.alias(c) for r, c in zip(rs, cols)]
+        hit = F.col("__rn").isin(*[F.col(c) for c in cols])
+        aggs.append(F.avg(F.when(hit, F.col("s"))).alias(name))
+    return ranks, aggs
+
+
+def _kendall_sen(
+    sig: DataFrame,
+    period: int | None = None,
+    sen: dict | None = None,
+    ndigits: int | None = None,
+) -> DataFrame:
+    """The Kendall–Sen read of the zero-filled signal ``sig``, one row
+    per series with at least one pair: the :func:`_kendall_census`
+    columns, the :func:`_sen_pick` order statistics when ``sen`` is a
+    dict (``{}`` for the median alone) and, when ``ndigits`` is set,
+    Mann–Kendall's ``s_stat``, ``var_s`` and the continuity-corrected
+    ``z`` rounded to ``ndigits`` (NULL when Var(S) = 0).  Seasons are
+    ``h % period``; ``period=None`` is one season.  The census is
+    broadcast to the pairs and carried through their one groupBy.
+    """
+    m = F.lit(0) if period is None else F.col("h") % period
+    sig = sig.select("g", m.alias("m"), "h", "c")
+    census = _kendall_census(sig)
+    pairs = _kendall_pairs(sig)
+    ranks, aggs = [], []
+    if sen is not None:
+        ranks, aggs = _sen_pick(sen)
+        pairs = pairs.withColumn("__rn", F.row_number().over(
+            Window.partitionBy("g").orderBy("s")))
+    if ndigits is not None:
+        aggs.append(F.sum("sgn").alias("s_stat"))
+    out = (
+        pairs.join(F.broadcast(census.select("*", *ranks)), "g")
+        .groupBy(*census.columns).agg(*aggs)
+    )
+    if ndigits is None:
+        return out
+    s, var_num = F.col("s_stat"), F.col("var_num")
+    var_s = var_num.cast("double") / F.lit(18.0)
+    z = (F.when(s > 0, (s - 1).cast("double") / F.sqrt(var_s))
+         .when(s < 0, (s + 1).cast("double") / F.sqrt(var_s))
+         .otherwise(F.lit(0.0)))
+    return out.withColumn("var_s", var_s).withColumn(
+        "z", F.when(var_num > 0, F.round(z, ndigits)))
+
+
 def theil_sen(
     df: DataFrame | None = None,
     bucket: str = "1h",
@@ -1011,9 +1147,9 @@ def theil_sen(
     slope order puts the same value at each rank).
 
     Plan shape: the only raw-scale work is ONE partial-aggregatable
-    groupBy to bucket counts; the self-join producing the O(m^2)
-    pairs and the per-series median window run on the tiny signal
-    frame (m = span/bucket buckets per series — a monitoring read over
+    groupBy to bucket counts; the Kendall–Sen pair self-join and the
+    per-series rank window run on the tiny signal frame (m =
+    span/bucket buckets per series — a monitoring read over
     hours/days, thousands of points, not a corpus-scale op).
 
     Output: ``g, n_buckets, n_pairs, sen_slope`` (counts per bucket
@@ -1021,32 +1157,8 @@ def theil_sen(
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
                               counts=counts)
-    a = sig.select("g", F.col("h").alias("hi"), F.col("c").alias("ci"))
-    b = sig.select("g", F.col("h").alias("hj"), F.col("c").alias("cj"))
-    slopes = (
-        a.join(b, "g")
-        .filter(F.col("hj") > F.col("hi"))
-        .select(
-            "g",
-            (
-                (F.col("cj") - F.col("ci")).cast("double")
-                / (F.col("hj") - F.col("hi")).cast("double")
-            ).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("s")
-    ranked = slopes.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy("g"))
-    )
-    mid = ranked.filter(
-        (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-        | (F.col("__rn") == F.floor((F.col("__n") + 2) / 2))
-    )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    med = mid.groupBy("g").agg(
-        F.max("__n").alias("n_pairs"), F.avg("s").alias("sen_slope")
-    )
-    return nb.join(med, "g")
+    return _kendall_sen(sig, sen={}).select(
+        "g", "n_buckets", "n_pairs", "sen_slope")
 
 
 def seasonal_strength(
@@ -1264,53 +1376,21 @@ def mann_kendall(
         z = (S -/+ 1) / sqrt(Var(S))    (continuity-corrected; 0 at S=0)
 
     Exactness: S is an integer sum of signs; the variance NUMERATOR is
-    an exact integer assembled from n and the tie-group sizes (one
+    an exact integer assembled from n and the tie-group sizes (a
     groupBy on the tiny signal frame), so z is doubles-of-exact-
     integers through one /18, one sqrt, one division — identical IEEE
     results in both engines, rounded to ``ndigits`` only as a guard.
     Constant series (Var = 0) report z NULL — no trend is decidable.
 
-    Plan shape: theil_sen's exactly — ONE raw-scale partial-
-    aggregatable groupBy to bucket counts; the O(m^2) sign pairs and
-    the tie census run on the tiny signal frame.  Output: ``g,
-    n_buckets, s_stat, var_s, z``.
+    Plan shape: ONE raw-scale partial-aggregatable groupBy to bucket
+    counts; the Kendall–Sen pair self-join (sign sums only, no rank
+    window) and the tie census run on the tiny signal frame.  Output:
+    ``g, n_buckets, s_stat, var_s, z``.
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
                               counts=counts)
-    a = sig.select("g", F.col("h").alias("hi"), F.col("c").alias("ci"))
-    b = sig.select("g", F.col("h").alias("hj"), F.col("c").alias("cj"))
-    s = (
-        a.join(b, "g")
-        .filter(F.col("hj") > F.col("hi"))
-        .groupBy("g")
-        .agg(F.sum(F.signum(F.col("cj") - F.col("ci")).cast("long"))
-             .alias("s_stat"))
-    )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    tie = (
-        sig.groupBy("g", "c").agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g")
-        .agg(F.sum(
-            F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-        ).alias("__tt"))
-    )
-    n = F.col("n_buckets")
-    var_num = n * (n - 1) * (2 * n + 5) - F.col("__tt")
-    var_s = var_num.cast("double") / F.lit(18.0)
-    z = F.when(
-        F.col("s_stat") > 0,
-        (F.col("s_stat") - 1).cast("double") / F.sqrt(var_s),
-    ).when(
-        F.col("s_stat") < 0,
-        (F.col("s_stat") + 1).cast("double") / F.sqrt(var_s),
-    ).otherwise(F.lit(0.0))
-    return (
-        nb.join(s, "g").join(tie, "g")
-        .select(
-            "g", "n_buckets", "s_stat", var_s.alias("var_s"),
-            F.when(var_num > 0, F.round(z, ndigits)).alias("z"),
-        )
-    )
+    return _kendall_sen(sig, ndigits=ndigits).select(
+        "g", "n_buckets", "s_stat", "var_s", "z")
 
 
 def acf_lags(
@@ -2702,11 +2782,13 @@ def seasonal_mk(
     is doubles-of-exact-integers through one division and one sqrt,
     ``ndigits``-fenced.  All-seasons-constant series (Var = 0) report
     NULL z; ``significant`` is the alpha=0.05 two-sided |z| > 1.96.
+    With ``period=1`` (one season) every column equals
+    :func:`mann_kendall`'s.
 
-    Plan shape: mann_kendall's exactly — ONE raw-scale partial-
-    aggregatable groupBy to the signal (or none via ``counts=``); the
-    pair join keys on (g, season) so the quadratic shrinks period-fold
-    to O(m^2/period) rows, tie census and variance assembly on tiny
+    Plan shape: ONE raw-scale partial-aggregatable groupBy to the
+    signal (or none via ``counts=``); the Kendall–Sen pair self-join
+    keys on (g, season), so the quadratic shrinks period-fold to
+    O(m^2/period) rows; tie census and variance assembly run on tiny
     frames.  Output: ``g, n_buckets, n_seasons, s_stat, var_s, z,
     significant``.
 
@@ -2715,53 +2797,10 @@ def seasonal_mk(
     that judgment as the field's calibrated test, fleet-wide.
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
-                              counts=counts).withColumn(
-        "m", F.col("h") % period)
-    a = sig.select("g", "m", F.col("h").alias("hi"),
-                   F.col("c").alias("ci"))
-    b = sig.select("g", "m", F.col("h").alias("hj"),
-                   F.col("c").alias("cj"))
-    s = (
-        a.join(b, ["g", "m"])
-        .filter(F.col("hj") > F.col("hi"))
-        .groupBy("g")
-        .agg(F.sum(F.signum(F.col("cj") - F.col("ci")).cast("long"))
-             .alias("s_stat"))
-    )
-    per = (
-        sig.groupBy("g", "m", "c").agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g", "m")
-        .agg(
-            F.sum("t").alias("n_m"),
-            F.sum(F.col("t") * (F.col("t") - 1)
-                  * (2 * F.col("t") + 5)).alias("tt_m"),
-        )
-    )
-    nm = F.col("n_m")
-    var_g = per.groupBy("g").agg(
-        F.sum(nm * (nm - 1) * (2 * nm + 5) - F.col("tt_m"))
-         .alias("var_num"),
-        F.sum("n_m").alias("n_buckets"),
-        F.count(F.lit(1)).alias("n_seasons"),
-    )
-    var_s = F.col("var_num").cast("double") / F.lit(18.0)
-    z_raw = F.when(
-        F.col("s_stat") > 0,
-        F.round((F.col("s_stat") - 1).cast("double") / F.sqrt(var_s),
-                ndigits),
-    ).when(
-        F.col("s_stat") < 0,
-        F.round((F.col("s_stat") + 1).cast("double") / F.sqrt(var_s),
-                ndigits),
-    ).otherwise(F.lit(0.0))
-    z = F.when(F.col("var_num") > 0, z_raw)
-    return var_g.join(s, "g").select(
-        "g",
-        F.col("n_buckets").cast("long").alias("n_buckets"),
-        F.col("n_seasons").cast("long").alias("n_seasons"),
-        "s_stat",
-        var_s.alias("var_s"),
-        z.alias("z"),
+                              counts=counts)
+    z = F.col("z")
+    return _kendall_sen(sig, period=period, ndigits=ndigits).select(
+        "g", "n_buckets", "n_seasons", "s_stat", "var_s", "z",
         F.when(z.isNotNull(),
                (F.abs(z) > 1.96).cast("int")).alias("significant"),
     )
@@ -2788,44 +2827,18 @@ def seasonal_sen(
     engines), the even-count median averages the two middle DOUBLES
     (DuckDB ``median()`` numeric semantics; middle values well-
     defined under any tie order), pooled across seasons per the
-    standard seasonal-Kendall slope definition.
+    standard seasonal-Kendall slope definition.  With ``period=1``
+    (one season) it equals :func:`theil_sen`.
 
-    Plan shape: seasonal_mk's exactly — ONE raw-scale partial-
-    aggregatable groupBy (or none via ``counts=``); the pair join
-    keys on (g, season), shrinking the quadratic period-fold.
+    Plan shape: ONE raw-scale partial-aggregatable groupBy (or none
+    via ``counts=``); the Kendall–Sen pair self-join keys on
+    (g, season), shrinking the quadratic period-fold.
     Output: ``g, n_buckets, n_pairs, sen_slope``.
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
-                              counts=counts).withColumn(
-        "m", F.col("h") % period)
-    a = sig.select("g", "m", F.col("h").alias("hi"),
-                   F.col("c").alias("ci"))
-    b = sig.select("g", "m", F.col("h").alias("hj"),
-                   F.col("c").alias("cj"))
-    slopes = (
-        a.join(b, ["g", "m"])
-        .filter(F.col("hj") > F.col("hi"))
-        .select(
-            "g",
-            (
-                (F.col("cj") - F.col("ci")).cast("double")
-                / (F.col("hj") - F.col("hi")).cast("double")
-            ).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("s")
-    ranked = slopes.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy("g"))
-    )
-    mid = ranked.filter(
-        (F.col("__rn") == F.floor((F.col("__n") + 1) / 2))
-        | (F.col("__rn") == F.floor((F.col("__n") + 2) / 2))
-    )
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    med = mid.groupBy("g").agg(
-        F.max("__n").alias("n_pairs"), F.avg("s").alias("sen_slope")
-    )
-    return nb.join(med, "g")
+                              counts=counts)
+    return _kendall_sen(sig, period=period, sen={}).select(
+        "g", "n_buckets", "n_pairs", "sen_slope")
 
 
 def hurst_rs(
@@ -3057,17 +3070,25 @@ def fleet_report(
     """The fleet owner's one-page health report: every single-row-
     per-series monitor of the counts= family joined into ONE wide
     frame — dispersion (:func:`fano_dispersion`), robust trend
-    (:func:`theil_sen` + :func:`mann_kendall`), seasonality
-    (:func:`seasonal_strength`, :func:`dominant_period`), randomness
-    (:func:`runs_test`), persistence (:func:`variance_ratio`,
-    :func:`hurst_rs`), stationarity (:func:`kpss_level`) and change
-    detection (:func:`pettitt_change`).  This is the payoff of the
-    shared ``counts=`` contract: the zero-filled signal is built ONCE
-    (one raw-scale partial-aggregatable groupBy — or ZERO raw work
-    when served off a stored rollup tier) and persisted; all ten
-    monitors then run on the cached (|series| x span) frame and join
-    back on ``g`` — at 100 TB this whole report costs one scan of the
-    tier, never ten scans of raw.
+    (:func:`theil_sen`'s slope + :func:`mann_kendall`'s z, read from
+    ONE Kendall–Sen pair pass), seasonality (:func:`seasonal_strength`,
+    :func:`dominant_period`), randomness (:func:`runs_test`),
+    persistence (:func:`variance_ratio`, :func:`hurst_rs`),
+    stationarity (:func:`kpss_level`) and change detection
+    (:func:`pettitt_change`).  This is the payoff of the shared
+    ``counts=`` contract: raw is scanned by ONE partial-aggregatable
+    groupBy to the zero-filled signal (or not at all when served off a
+    stored rollup tier), and every monitor runs on the small
+    (|series| x span) signal frame and joins back on ``g`` — at 100 TB
+    this whole report costs one scan of the tier, never ten scans of
+    raw.
+
+    Caching, as it stands: each ``counts=``-fed monitor re-zero-fills
+    the signal through :func:`bucket_count_signal` and persists that
+    copy (identical plans share one cache entry), so one run leaves
+    three persisted frames — the raw count frame, the signal and its
+    re-zero-filled copy — in the session's CacheManager until
+    ``unpersist()`` or ``spark.catalog.clearCache()``.
 
     Monitors that emit nothing for degenerate series (hurst on
     all-constant, runs on all-tied) contribute NULL columns via left
@@ -3081,13 +3102,12 @@ def fleet_report(
     statistical panel a 100k-series deployment actually reads.
     """
     sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
-                              counts=counts).persist()
+                              counts=counts)
     base = fano_dispersion(counts=sig).select(
         "g", "n_buckets", "mean_c", "fano")
     parts = [
-        theil_sen(counts=sig).select("g", "sen_slope"),
-        mann_kendall(counts=sig).select(
-            "g", F.col("z").alias("mk_z")),
+        _kendall_sen(sig, sen={}, ndigits=9).select(
+            "g", "sen_slope", F.col("z").alias("mk_z")),
         seasonal_strength(counts=sig, period=period).select(
             "g", "strength"),
         dominant_period(counts=sig, max_lag=period_max_lag).select(
@@ -3140,101 +3160,35 @@ def sen_slope_ci(
     theil_sen median argument).  Series with Var(S) = 0 (all tied)
     report NULL bounds.
 
-    Plan shape: theil_sen's exactly — ONE raw-scale groupBy (or none
-    via ``counts=``), the O(m^2) slope pairs + rank window on the
-    tiny signal frame, the per-series (lo_rank, hi_rank) scalars
-    broadcast back.  Output: ``g, n_pairs, sen_slope, lo, hi,
-    significant``.
+    Plan shape: ONE raw-scale groupBy (or none via ``counts=``); the
+    median and both endpoints are read in ONE aggregation over the
+    ranked Kendall–Sen pairs, with the per-series rank scalars
+    broadcast in from the tie census.  Output: ``g, n_pairs,
+    sen_slope, lo, hi, significant``.
 
     Reference: traval reports trends from pastas model fits with
     model-based CIs (rulelib.py); this is the distribution-free CI
     for series where no model exists.
     """
-    # the signal feeds the slope self-join, the bucket count, the tie
-    # census (and previously a theil_sen call that re-derived the whole
-    # O(m^2) pair frame): persist it — the r5 plan re-ran the raw
-    # groupBy per consumer (lambda-carrying subtrees defeat exchange
-    # reuse)
-    sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
-                              counts=counts).persist()
-    a = sig.select("g", F.col("h").alias("hi_"), F.col("c").alias("ci"))
-    b = sig.select("g", F.col("h").alias("hj"), F.col("c").alias("cj"))
-    slopes = (
-        a.join(b, "g")
-        .filter(F.col("hj") > F.col("hi_"))
-        .select(
-            "g",
-            (
-                (F.col("cj") - F.col("ci")).cast("double")
-                / (F.col("hj") - F.col("hi_")).cast("double")
-            ).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g").orderBy("s")
-    ranked = slopes.withColumn("rn", F.row_number().over(w))
-    # MK variance from the tie census (exact integer numerator)
-    nb = sig.groupBy("g").agg(F.count(F.lit(1)).alias("n_buckets"))
-    tie = (
-        sig.groupBy("g", "c").agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("g")
-        .agg(F.sum(F.col("t") * (F.col("t") - 1)
-                   * (2 * F.col("t") + 5)).alias("tt"))
-    )
-    nn = F.col("n_buckets")
-    var_num = nn * (nn - 1) * (2 * nn + 5) - F.col("tt")
-    npairs = (nn * (nn - 1) / 2).cast("long")
+    n = F.col("n_pairs")
     c_half = F.round(
-        F.lit(float(z_crit)) * F.sqrt(var_num.cast("double")
-                                      / F.lit(18.0)),
+        F.lit(float(z_crit))
+        * F.sqrt(F.col("var_num").cast("double") / F.lit(18.0)),
         9,
     )
-    idx = (
-        nb.join(tie, "g")
-        .select(
-            "g",
-            npairs.alias("n_pairs"),
-            var_num.alias("__vn"),
-            F.greatest(
-                F.lit(1),
-                (F.floor((npairs.cast("double") - c_half) / 2)
-                 + 1).cast("long"),
-            ).alias("__lor"),
-            F.least(
-                npairs,
-                F.ceil((npairs.cast("double") + c_half) / 2)
-                .cast("long"),
-            ).alias("__hir"),
-        )
-    )
-    # ONE pass over the ranked slope multiset extracts all four order
-    # statistics (previously: two rank-filter passes here plus a
-    # theil_sen call that rebuilt the identical pair frame and rank
-    # window a third and fourth time).  The median replicates
-    # theil_sen's selection verbatim — avg of the values at ascending
-    # ranks floor((N+1)/2) and floor((N+2)/2) of the SAME multiset
-    # (n_pairs == the slope count: every zero-filled bucket pair has a
-    # distinct h), so sen_slope is value-identical.
-    idx = idx.withColumn(
-        "__m1", F.floor((F.col("n_pairs") + 1) / 2)
-    ).withColumn("__m2", F.floor((F.col("n_pairs") + 2) / 2))
-    j = ranked.join(F.broadcast(idx), "g")
-    stats = j.groupBy("g").agg(
-        F.max(F.when(F.col("rn") == F.col("__lor"), F.col("s")))
-        .alias("lo"),
-        F.max(F.when(F.col("rn") == F.col("__hir"), F.col("s")))
-        .alias("hi"),
-        F.avg(
-            F.when((F.col("rn") == F.col("__m1"))
-                   | (F.col("rn") == F.col("__m2")), F.col("s"))
-        ).alias("sen_slope"),
-    )
-    out = idx.join(stats, "g")
-    valid = F.col("__vn") > 0
-    lo_o = F.when(valid, F.col("lo"))
-    hi_o = F.when(valid, F.col("hi"))
-    return out.select(
+    ci = {
+        "lo": (F.greatest(F.lit(1), (F.floor(
+            (n.cast("double") - c_half) / 2) + 1).cast("long")),),
+        "hi": (F.least(n, F.ceil(
+            (n.cast("double") + c_half) / 2).cast("long")),),
+    }
+    sig = bucket_count_signal(df, bucket=bucket, by=by, ts=ts,
+                              counts=counts)
+    valid = F.col("var_num") > 0
+    return _kendall_sen(sig, sen=ci).select(
         "g", "n_pairs", "sen_slope",
-        lo_o.alias("lo"), hi_o.alias("hi"),
+        F.when(valid, F.col("lo")).alias("lo"),
+        F.when(valid, F.col("hi")).alias("hi"),
         F.when(
             valid,
             ((F.col("lo") > 0) | (F.col("hi") < 0)).cast("int"),

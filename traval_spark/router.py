@@ -324,6 +324,7 @@ def _read_routed_kind(store, resolution, day_min, day_max, spark, raw,
 def read_routed_distinct(
     store,
     resolution: str,
+    *,
     key_col: str = "n_tok",
     k: int = 256,
     day_min: str | None = None,
@@ -341,6 +342,8 @@ def read_routed_distinct(
     and KMV merge composes through ANY coarsening, so tier choice stays
     a pure scan-cost decision.  Returns (source, bucket, kmv) at the
     requested resolution; extract counts with ``sketch.distinct_counts``.
+    Every kind reader takes its parameters after ``resolution`` by
+    keyword only, so a day bound cannot bind the kind's column.
     """
     from traval_spark.sketch import distinct_tier, kmv_merge
 
@@ -356,6 +359,7 @@ def read_routed_distinct(
 def read_routed_hist(
     store,
     resolution: str,
+    *,
     value_col: str = "n_tok",
     scale: int = 1,
     day_min: str | None = None,
@@ -386,6 +390,7 @@ def read_routed_hist(
 def read_routed_dds(
     store,
     resolution: str,
+    *,
     value_col: str = "n_tok",
     alpha: float = 0.05,
     day_min: str | None = None,
@@ -416,6 +421,7 @@ def read_routed_dds(
 def read_routed_cms(
     store,
     resolution: str,
+    *,
     key_col: str = "n_tok",
     depth: int = 4,
     width: int = 256,
@@ -448,6 +454,7 @@ def read_routed_cms(
 def read_routed_bloom(
     store,
     resolution: str,
+    *,
     key_col: str = "n_tok",
     nhash: int = 4,
     nbits: int = 4096,
@@ -481,6 +488,7 @@ def read_routed_bloom(
 def read_routed_m4(
     store,
     resolution: str,
+    *,
     value_col: str = "n_tok",
     day_min: str | None = None,
     day_max: str | None = None,
@@ -515,6 +523,7 @@ def read_routed_m4(
 def read_routed_fl(
     store,
     resolution: str,
+    *,
     value_col: str = "n_tok",
     ident_col: str = "doc_id",
     day_min: str | None = None,
