@@ -185,6 +185,39 @@ def test_knn_join_batch_exact_and_ivf_degradation(emb):
             for r in full.collect()} == got
 
 
+def test_unrolled_cosine_scores_wrong_length_vectors_null(spark):
+    """The dim-unrolled dot/norm chains score a vector whose length is
+    not ``dim`` NULL, as the higher-order fold does: a longer vector is
+    not scored on its first ``dim`` elements, and a shorter one does not
+    raise INVALID_ARRAY_INDEX under ANSI."""
+    from traval_spark.operators.similarity import (
+        cosine_dup_pairs,
+        cosine_to_query,
+        knn_join,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0, 5.0]), (3, [1.0, 0.0]),
+         (4, [0.6, 0.8, 0.0])],
+        "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame([(0, [1.0, 0.0, 0.0])],
+                                    "vec_id long, embedding array<double>")
+    want = {1: 1.0, 2: None, 3: None, 4: 0.6}
+
+    for dim in (3, None):
+        got = {r["nn_id"]: r["cos"]
+               for r in knn_join(queries, corpus, k=4, dim=dim).collect()}
+        assert got == want, dim
+    got = {r["vec_id"]: r["cos"]
+           for r in cosine_to_query(corpus, [1.0, 0.0, 0.0]).collect()}
+    assert got == want
+
+    for dim in (3, None):
+        pairs = {(r["a"], r["b"]): r["cos"] for r in cosine_dup_pairs(
+            corpus, threshold=0.5, bucketed=False, dim=dim).collect()}
+        assert pairs == {(1, 4): 0.6}, dim
+
+
 def test_minhash_incremental_equals_restricted_full(spark):
     """minhash_incremental_pairs == lsh_banded_pairs restricted to pairs
     with >= 1 new member; corpus-vs-corpus pairs never surface."""

@@ -542,69 +542,215 @@ class _FakeState:
         self._t = tuple(t)
 
 
-def _kernel_batches(fn, frames):
+def _kernel_batches(fn, frames, schema=None):
     """Run a stateful kernel over successive micro-batch frames with one
-    carried state; returns the concatenated emitted rows per batch."""
+    carried state; returns the concatenated emitted rows per batch (an
+    empty frame with ``schema``'s columns when a batch emits nothing)."""
     import pandas as pd
 
+    from traval_spark.streaming.stateful_rules import OUTPUT_SCHEMA
+
+    columns = [f.split()[0] for f in (schema or OUTPUT_SCHEMA).split(",")]
     state = _FakeState()
     out = []
     for f in frames:
         emitted = list(fn(("src",), iter([f]), state))
         out.append(pd.concat(emitted) if emitted
-                   else pd.DataFrame(columns=["source", "ts", "value",
-                                              "code"]))
+                   else pd.DataFrame(columns=columns))
     return out
 
 
 def test_stateful_late_rows_observable():
     """ADVICE r3: a cross-batch late row must not vanish silently —
-    late_code= emits it with the marker code; default still drops it,
-    and fresh-row flags are identical either way."""
+    late_code= emits it with the marker, in each kernel's own late-row
+    shape; default still drops it, and fresh rows are identical either
+    way."""
     import numpy as np
     import pandas as pd
 
     from traval_spark.streaming.stateful_rules import (
+        ALERT_OUTPUT_SCHEMA,
+        CHANGES_OUTPUT_SCHEMA,
+        COUNTER_OUTPUT_SCHEMA,
         LATE_ARRIVAL_CODE,
+        OUTPUT_SCHEMA,
+        make_alert_state_func,
+        make_changes_state_func,
+        make_counter_state_func,
+        make_flat_state_func,
         make_hampel_state_func,
         make_spike_state_func,
     )
 
     t0 = pd.Timestamp("2024-01-01")
+    late_ts = t0 + pd.Timedelta("30min")
     b1 = pd.DataFrame({
         "ts": [t0, t0 + pd.Timedelta("1h"), t0 + pd.Timedelta("2h")],
+        "ident": ["a", "b", "c"],
         "value": [1.0, 1.1, 0.9],
     })
     b2 = pd.DataFrame({
         # first row is LATE (before the carried tail at t0+2h)
-        "ts": [t0 + pd.Timedelta("30min"), t0 + pd.Timedelta("3h")],
+        "ts": [late_ts, t0 + pd.Timedelta("3h")],
+        "ident": ["x", "d"],
         "value": [5.0, 1.2],
     })
 
-    for factory, kw in (
+    def coded(late):
+        assert list(late["code"]) == [LATE_ARRIVAL_CODE]
+        assert list(late["value"]) == [5.0]
+
+    def counter(late):
+        assert list(late["ident"]) == ["x"]
+        assert list(late["value"]) == [5.0]
+        assert list(late["step"]) == [0.0]
+        assert list(late["reset"]) == [LATE_ARRIVAL_CODE]
+
+    def changes(late):
+        assert list(late["ident"]) == ["late:x"]
+        assert np.isnan(late["value"]).all()
+
+    def alerts(late):
+        assert list(late["ident"]) == ["late:x"]
+        assert list(late["value"]) == [5.0]
+        assert list(late["alert"]) == [LATE_ARRIVAL_CODE]
+
+    def is_late(f):
+        return (f["ts"] == late_ts).to_numpy()
+
+    cases = (
         (make_spike_state_func,
-         dict(threshold=2.0, spike_tol=2.0, max_gap_us=10**12)),
+         dict(threshold=2.0, spike_tol=2.0, max_gap_us=10**12),
+         OUTPUT_SCHEMA, False, coded),
         (make_hampel_state_func,
-         dict(window_us=4 * 3600 * 10**6, k=3.0, min_obs=2)),
-    ):
-        silent = _kernel_batches(factory(**kw), [b1, b2])
+         dict(window_us=4 * 3600 * 10**6, k=3.0, min_obs=2),
+         OUTPUT_SCHEMA, False, coded),
+        (make_flat_state_func,
+         dict(window_us=4 * 3600 * 10**6, min_obs=2, std_threshold=0.5),
+         OUTPUT_SCHEMA, False, coded),
+        (make_counter_state_func, {}, COUNTER_OUTPUT_SCHEMA, True, counter),
+        (make_changes_state_func, {}, CHANGES_OUTPUT_SCHEMA, True, changes),
+        # hi=1.05 fires on 1.1, lo=1.0 releases on 0.9: fresh rows emit
+        (make_alert_state_func, dict(hi=1.05, lo=1.0),
+         ALERT_OUTPUT_SCHEMA, True, alerts),
+    )
+    for factory, kw, schema, with_ids, check in cases:
+        frames = [b if with_ids else b.drop(columns="ident")
+                  for b in (b1, b2)]
+        silent = _kernel_batches(factory(**kw), frames, schema)
         marked = _kernel_batches(
-            factory(**kw, late_code=LATE_ARRIVAL_CODE), [b1, b2])
+            factory(**kw, late_code=LATE_ARRIVAL_CODE), frames, schema)
 
         # default: the late row is gone entirely
         all_silent = pd.concat(silent)
-        assert (t0 + pd.Timedelta("30min")) not in set(all_silent["ts"])
-        # late_code: exactly that row surfaces with the marker
-        late = pd.concat(marked)
-        late = late[late["code"] == LATE_ARRIVAL_CODE]
-        assert list(late["ts"]) == [t0 + pd.Timedelta("30min")]
-        assert list(late["value"]) == [5.0]
+        assert not is_late(all_silent).any(), factory.__name__
+        # late_code: exactly that row surfaces, in the kernel's shape
+        all_marked = pd.concat(marked)
+        assert list(all_marked.columns) == list(all_silent.columns)
+        check(all_marked[is_late(all_marked)])
         # fresh rows identical across policies
-        a = all_silent[all_silent["code"] != LATE_ARRIVAL_CODE]
-        b = pd.concat(marked)
-        b = b[b["code"] != LATE_ARRIVAL_CODE]
-        assert list(a["ts"]) == list(b["ts"])
-        assert list(a["code"]) == list(b["code"])
+        fresh = all_marked[~is_late(all_marked)]
+        assert len(fresh) > 0
+        pd.testing.assert_frame_equal(
+            fresh.reset_index(drop=True),
+            all_silent.reset_index(drop=True), check_dtype=False)
+
+
+def test_stateful_equal_ts_higher_ident_not_late():
+    """A row at the carried timestamp with a higher ident is fresh, one
+    with a lower ident is late — for the changes, alert and episode
+    kernels, driven across a micro-batch split (the Spark-level counter
+    test pins the same tie-break through a real stream)."""
+    import pandas as pd
+
+    from traval_spark.streaming.stateful_rules import (
+        ALERT_OUTPUT_SCHEMA,
+        CHANGES_OUTPUT_SCHEMA,
+        EPISODE_OUTPUT_SCHEMA,
+        make_alert_state_func,
+        make_changes_state_func,
+        make_episode_state_func,
+    )
+
+    t = pd.Timestamp("2024-01-01")
+    b1 = pd.DataFrame({"ts": [t - pd.Timedelta("1h"), t],
+                       "ident": ["a", "m"], "value": [1.0, 9.0]})
+    # "z" ties the carried (t, "m") from above: fresh; "c" from below: late
+    b2 = pd.DataFrame({"ts": [t, t, t + pd.Timedelta("1h")],
+                       "ident": ["c", "z", "n"], "value": [9.0, 2.0, 2.0]})
+
+    changes = pd.concat(_kernel_batches(
+        make_changes_state_func(), [b1, b2], CHANGES_OUTPUT_SCHEMA))
+    assert list(changes["ident"]) == ["a", "m", "z"]
+    assert list(changes["value"]) == [1.0, 9.0, 2.0]
+
+    alerts = pd.concat(_kernel_batches(
+        make_alert_state_func(hi=5.0, lo=3.0), [b1, b2],
+        ALERT_OUTPUT_SCHEMA))
+    assert list(alerts["ident"]) == ["m", "z"]
+    assert list(alerts["alert"]) == [1, 0]
+
+    # "z" closes the episode "m" opened; a late "c" would have extended it
+    first, episodes = _kernel_batches(
+        make_episode_state_func(threshold=5.0), [b1, b2],
+        EPISODE_OUTPUT_SCHEMA)
+    assert first.empty
+    assert list(episodes["episode"]) == [1]
+    assert list(episodes["t_start"]) == [t]
+    assert list(episodes["n_pts"]) == [1]
+    assert list(episodes["peak"]) == [9.0]
+
+
+def test_spike_kernel_keeps_pre_1970_predecessor():
+    """A carried predecessor before 1970 (negative epoch micros) is
+    still the pending point's predecessor: a 1965 spike flags the same
+    whether or not a micro-batch boundary falls right after it, as the
+    2024 series does."""
+    import pandas as pd
+
+    from traval_spark.streaming.stateful_rules import make_spike_state_func
+
+    for start in ("1965-01-01", "2024-01-01"):
+        f = pd.DataFrame({
+            "ts": pd.date_range(start, periods=6, freq="h"),
+            "value": [1.0, 1.0, 9.0, 1.0, 1.0, 1.0],
+        })
+        codes = []
+        for frames in ([f], [f.iloc[:3], f.iloc[3:]]):
+            out = pd.concat(_kernel_batches(
+                make_spike_state_func(threshold=5.0, spike_tol=1.0,
+                                      max_gap_us=10**12), frames))
+            codes.append(list(out["code"]))
+        assert codes[0] == codes[1] == [0, 0, 99, 0, 0], (start, codes)
+
+
+def test_episode_kernel_keeps_pre_1970_rows():
+    """A series' first batch has no late rows: the 1965 series yields
+    the 2024 series' episodes shifted by the offset (no state yet must
+    not mean "everything before the epoch is late")."""
+    import pandas as pd
+
+    from traval_spark.streaming.stateful_rules import (
+        EPISODE_OUTPUT_SCHEMA,
+        make_episode_state_func,
+    )
+
+    def episodes(start):
+        f = pd.DataFrame({
+            "ts": pd.date_range(start, periods=6, freq="h"),
+            "ident": list("abcdef"),
+            "value": [1.0, 7.0, 8.0, 1.0, 9.0, 1.0],
+        })
+        return pd.concat(_kernel_batches(
+            make_episode_state_func(threshold=5.0), [f.iloc[:4], f.iloc[4:]],
+            EPISODE_OUTPUT_SCHEMA)).reset_index(drop=True)
+
+    new, old = episodes("2024-01-01"), episodes("1965-01-01")
+    assert list(new["episode"]) == [1, 2]
+    shift = pd.Timestamp("2024-01-01") - pd.Timestamp("1965-01-01")
+    old["t_start"] += shift
+    old["t_end"] += shift
+    pd.testing.assert_frame_equal(old, new)
 
 
 def test_streaming_hist_and_kmv_match_batch(spark, tmp_path):

@@ -73,22 +73,33 @@ def _elem(col: str, i: int) -> str:
     return f"CAST(`{col}`[{i}] AS DOUBLE)"
 
 
+def _sized(expr: str, dim: int, *cols: str) -> str:
+    """``expr`` where every array in ``cols`` has exactly ``dim``
+    elements, else NULL — the fold's answer for a wrong-length vector
+    (``zip_with`` pads the shorter side with NULLs).  CASE evaluates its
+    branch only when the guard holds, so a short vector never reaches
+    an out-of-range ``col[i]`` (an error under ANSI) and a long one is
+    never scored on its first ``dim`` elements."""
+    guard = " AND ".join(f"size(`{c}`) = {int(dim)}" for c in cols)
+    return f"(CASE WHEN {guard} THEN {expr} END)"
+
+
 def _dot_sql(a: str, b: str, dim: int) -> str:
     terms = "".join(
         f" + {_elem(a, i)}*{_elem(b, i)}" for i in range(int(dim)))
-    return f"(0.0D{terms})"
+    return _sized(f"(0.0D{terms})", dim, a, b)
 
 
 def _dot_lit_sql(a: str, vals: list[float]) -> str:
     terms = "".join(
         f" + {_elem(a, i)}*{_fmt_lit(x)}" for i, x in enumerate(vals))
-    return f"(0.0D{terms})"
+    return _sized(f"(0.0D{terms})", len(vals), a)
 
 
 def _norm_sql(a: str, dim: int) -> str:
     terms = "".join(
         f" + {_elem(a, i)}*{_elem(a, i)}" for i in range(int(dim)))
-    return f"SQRT(0.0D{terms})"
+    return _sized(f"SQRT(0.0D{terms})", dim, a)
 
 
 def _dot(a: Column, b: Column, dim: int | None = None) -> Column:

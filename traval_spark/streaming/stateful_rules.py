@@ -21,15 +21,26 @@ difference is the stream's pending final point per source, which emits
 on the next point's arrival — exactly the latency a lookahead rule must
 pay.
 
+The same carried-state shape serves eight operators: spike, Hampel and
+flat-signal rules, counter steps, changes-only compaction, hysteresis
+alerts, swinging-door compression and threshold episodes. They share one
+private core (:func:`_kernel`) — one drop reader, one batch prelude,
+one in-order test, one late-row decision — and each ``make_*_state_func``
+supplies only its own step over the in-order rows (the Scotty argument:
+one out-of-order-aware core, each aggregate brings its own step).
+
 **In-order contract (API-level)**: input is assumed in-order per source
 (file-source ingestion of time-partitioned drops). A row at or before
-the carried tail is LATE data whose window context is gone; it cannot
-be evaluated correctly anymore. Default policy drops it — but
-observably: pass ``late_code=`` (e.g. :data:`LATE_ARRIVAL_CODE`) to
-emit late rows with that marker code instead, so a downstream count of
-``code = late_code`` rows measures the loss (no silent discard). Either
-way the batch rebuild remains the source of truth for late data, as
-with the streaming rollup tier.
+the carried tail — by timestamp, then ident as a string for the
+ident-keyed kernels — is LATE data whose window context is gone; it
+cannot be evaluated correctly anymore. Default policy drops it — but
+observably: the spike, Hampel, flat, counter, changes and alert kernels
+take ``late_code=`` (e.g. :data:`LATE_ARRIVAL_CODE`) to emit late rows
+with that marker instead, so a downstream count of marked rows measures
+the loss (no silent discard). The swing and episode kernels take no
+``late_code`` and always drop late rows. Either way the batch rebuild
+remains the source of truth for late data, as with the streaming rollup
+tier.
 
 Scale shape: state is O(1) per source (two points), the RocksDB/HDFS
 state store holds |sources| entries, and each micro-batch shuffles only
@@ -38,7 +49,7 @@ by source — the same key the rollup already groups by.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,12 +59,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from traval_spark.codes import CorrectionCode
+from traval_spark.compress import _swing_loop
 from traval_spark.streaming.rollup_stream import SEQUENCE_SCHEMA
 
 #: emitted rows: the input point + its correction code (0 = kept)
 OUTPUT_SCHEMA = "source string, ts timestamp, value double, code int"
 #: carried boundary: last two points as (ts micros, value) pairs;
-#: tsa/va may be -1/NaN when only one point has been seen
+#: tsa/va are -1/NaN when only one point has been seen (the NaN value,
+#: not the sign of tsa, makes the missing predecessor inert)
 STATE_SCHEMA = "tsa long, va double, tsb long, vb double"
 
 _CODE = int(CorrectionCode.UNKNOWN_COMPARISON_VALUE)
@@ -64,15 +77,113 @@ _CODE = int(CorrectionCode.UNKNOWN_COMPARISON_VALUE)
 LATE_ARRIVAL_CODE = -99
 
 
-def _late_frame(key, ts_us: np.ndarray, vals: np.ndarray, late_code: int):
-    return pd.DataFrame(
-        {
-            "source": key[0],
-            "ts": ts_us.astype("datetime64[us]"),
-            "value": vals,
-            "code": np.full(len(ts_us), late_code, dtype="int32"),
-        }
+def _stream(
+    spark: SparkSession, input_path: str, max_files_per_trigger: int,
+    kernel, output_schema: str, state_schema: str,
+    value_col: str = "n_tok", ident_col: str | None = None,
+) -> DataFrame:
+    """The sequence drop dir as (source, ts[, ident], value) rows, grouped
+    by source through one stateful ``kernel`` (append, no timeout)."""
+    ident = ([F.col(ident_col).cast("string").alias("ident")]
+             if ident_col is not None else [])
+    return (
+        spark.readStream.schema(SEQUENCE_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_path)
+        .select(
+            "source",
+            # state/watermark machinery wants TIMESTAMP, not NTZ
+            F.col("ts").cast("timestamp").alias("ts"),
+            *ident,
+            F.col(value_col).cast("double").alias("value"),
+        )
+        .groupBy("source")
+        .applyInPandasWithState(kernel, output_schema, state_schema,
+                                "append", GroupStateTimeout.NoTimeout)
     )
+
+
+def _kernel(
+    step: Callable, tail: Callable | None = None,
+    late: Callable | None = None, late_code: int | None = None,
+):
+    """The one applyInPandasWithState body the eight kernels share.
+
+    Per source and micro-batch: concatenate the frames, sort by
+    (ts, ident) — by ts alone when the stream carries no ident — and
+    hand ``step(carried, ts_us, idents, values)`` the in-order rows.
+    ``carried`` is the state tuple, or None for a series' first batch;
+    ``step`` returns (output columns or None, new state tuple).
+
+    ``tail(carried)`` gives the carried (ts_us, ident) order key. Once
+    state exists, a row at or before it is late: with ``late_code`` it
+    emits as ``late(idents, values, marks)``'s columns (``marks`` holds
+    ``late_code``), else it drops; if no row is fresh, state stays as it
+    is. Streams without idents compare "" to "", so the test reduces to
+    ``ts > tail ts``. Without ``tail`` (swing) idents sort as they come,
+    NULL last, and every row reaches ``step``, which applies its own
+    late rule.
+    """
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        batch = pd.concat(list(pdfs))
+        if batch.empty:
+            return
+        has_ids = "ident" in batch
+        if has_ids and tail is not None:
+            # the in-order test compares idents as strings: NULL is ""
+            batch = batch.assign(ident=batch["ident"].map(
+                lambda i: "" if i is None else str(i)))
+        batch = batch.sort_values(["ts", "ident"] if has_ids else ["ts"])
+        ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
+        ids = (batch["ident"].to_numpy(dtype=object) if has_ids
+               else np.full(len(ts), "", dtype=object))
+        vals = batch["value"].to_numpy(dtype=float)
+
+        carried = state.get if state.exists else None
+        if carried is not None and tail is not None:
+            last_us, last_id = tail(carried)
+            fresh = (ts > last_us) | ((ts == last_us) & (ids > last_id))
+            if late_code is not None and not fresh.all():
+                marks = np.full((~fresh).sum(), late_code, dtype="int32")
+                yield pd.DataFrame({
+                    "source": key[0], "ts": _us(ts[~fresh]),
+                    **late(ids[~fresh], vals[~fresh], marks),
+                })
+            ts, ids, vals = ts[fresh], ids[fresh], vals[fresh]
+            if len(ts) == 0:
+                return
+
+        cols, new_state = step(carried, ts, ids, vals)
+        state.update(new_state)
+        if cols is not None:
+            yield pd.DataFrame({"source": key[0], **cols})
+
+    return fn
+
+
+def _us(ts_us: np.ndarray) -> np.ndarray:
+    return ts_us.astype("datetime64[us]")
+
+
+def _coded(ts_us: np.ndarray, vals: np.ndarray, flags: np.ndarray) -> dict:
+    """OUTPUT_SCHEMA columns: each point under its rule code (0 = kept)."""
+    return {"ts": _us(ts_us), "value": vals,
+            "code": np.where(flags, _CODE, 0).astype("int32")}
+
+
+def _late_coded(ids, vals, marks) -> dict:
+    """Late-row shape of the spike, Hampel and flat kernels."""
+    return {"value": vals, "code": marks}
+
+
+def _round_half_away(x: np.ndarray) -> np.ndarray:
+    """Half-AWAY-from-zero, matching the batch paths' Spark F.round /
+    DuckDB round (np.rint is half-even: 0.5*scale would round 0 here but
+    1 there and flip a door or membership verdict)."""
+    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5))
 
 
 def _spike_flags(
@@ -107,63 +218,27 @@ def make_spike_state_func(
     ``late_code``: emit rows at/before the carried tail with this marker
     code instead of dropping them silently (see module docstring)."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.sort_values("ts")
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_vals = batch["value"].to_numpy(dtype=float)
-
-        carried_ts: list[int] = []
-        carried_vals: list[float] = []
-        if state.exists:
-            tsa, va, tsb, vb = state.get
-            if tsa >= 0:
-                carried_ts.append(tsa)
-                carried_vals.append(va)
-            carried_ts.append(tsb)
-            carried_vals.append(vb)
-            # late rows (at or before the pending point) were already
-            # emitted or superseded: surface with late_code, or drop
-            fresh = b_ts > carried_ts[-1]
-            if late_code is not None and (~fresh).any():
-                yield _late_frame(key, b_ts[~fresh], b_vals[~fresh],
-                                  late_code)
-            b_ts, b_vals = b_ts[fresh], b_vals[fresh]
-        if len(b_ts) == 0:
-            return
-
-        ts_us = np.concatenate([np.array(carried_ts, dtype="int64"), b_ts])
-        vals = np.concatenate([np.array(carried_vals, dtype=float), b_vals])
-        flags = _spike_flags(ts_us, vals, threshold, spike_tol, max_gap_us)
-
+    def step(carried, ts, ids, vals):
+        if carried is not None:
+            # both carried points, whatever the sign of their ts: a
+            # "no predecessor" state (-1, NaN, ...) is inert, since its
+            # NaN value nulls the step exactly as no predecessor does
+            tsa, va, tsb, vb = carried
+            ts = np.concatenate([np.array([tsa, tsb], dtype="int64"), ts])
+            vals = np.concatenate([np.array([va, vb], dtype=float), vals])
+        flags = _spike_flags(ts, vals, threshold, spike_tol, max_gap_us)
         # emit: the pending carried point (now has a successor) + every
         # new point except the last (which becomes the new pending tail)
-        start = len(carried_ts) - 1 if carried_ts else 0
-        end = len(ts_us) - 1  # exclusive: tail stays pending
-        if end > start:
-            sel = slice(start, end)
-            yield pd.DataFrame(
-                {
-                    "source": key[0],
-                    "ts": ts_us[sel].astype("datetime64[us]"),
-                    "value": vals[sel],
-                    "code": np.where(flags[sel], _CODE, 0).astype("int32"),
-                }
-            )
+        sel = slice(0 if carried is None else 1, len(ts) - 1)
+        prev = ((int(ts[-2]), float(vals[-2])) if len(ts) >= 2
+                else (-1, float("nan")))
+        return (
+            _coded(ts[sel], vals[sel], flags[sel])
+            if sel.stop > sel.start else None,
+            (*prev, int(ts[-1]), float(vals[-1])),
+        )
 
-        n = len(ts_us)
-        state.update((
-            int(ts_us[n - 2]) if n >= 2 else -1,
-            float(vals[n - 2]) if n >= 2 else float("nan"),
-            int(ts_us[n - 1]),
-            float(vals[n - 1]),
-        ))
-
-    return fn
+    return _kernel(step, lambda c: (c[2], ""), _late_coded, late_code)
 
 
 #: hampel carried state: every point within `window` of the newest ts,
@@ -176,6 +251,20 @@ def make_spike_state_func(
 HAMPEL_STATE_SCHEMA = (
     "ts array<long>, vals array<double>, devs array<double>"
 )
+
+
+def _window_buffer(carried, ts: np.ndarray, vals: np.ndarray):
+    """Trailing-window kernels' buffer: the carried window's timestamps
+    followed by the fresh rows', the same values as a time-indexed
+    Series, and the carried row count."""
+    c_ts = np.asarray(carried[0] if carried is not None else (),
+                      dtype="int64")
+    c_vals = np.asarray(carried[1] if carried is not None else (),
+                        dtype=float)
+    all_ts = np.concatenate([c_ts, ts])
+    s = pd.Series(np.concatenate([c_vals, vals]),
+                  index=pd.DatetimeIndex(_us(all_ts)))
+    return all_ts, s, len(c_ts)
 
 
 def make_hampel_state_func(
@@ -200,69 +289,27 @@ def make_hampel_state_func(
     w_td = pd.Timedelta(window_us, unit="us")
     consistency = 1.4826 * float(k)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.sort_values("ts")
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_vals = batch["value"].to_numpy(dtype=float)
-
-        if state.exists:
-            c_ts, c_vals, c_devs = (
-                np.asarray(a, dtype=t) for a, t in zip(
-                    state.get, ("int64", float, float))
-            )
-            fresh = b_ts > c_ts[-1]  # late rows: already emitted/superseded
-            if late_code is not None and (~fresh).any():
-                yield _late_frame(key, b_ts[~fresh], b_vals[~fresh],
-                                  late_code)
-            b_ts, b_vals = b_ts[fresh], b_vals[fresh]
-        else:
-            c_ts = np.empty(0, dtype="int64")
-            c_vals = np.empty(0, dtype=float)
-            c_devs = np.empty(0, dtype=float)
-        if len(b_ts) == 0:
-            return
-
-        ts_us = np.concatenate([c_ts, b_ts])
-        vals = np.concatenate([c_vals, b_vals])
-        idx = pd.DatetimeIndex(ts_us.astype("datetime64[us]"))
-        s = pd.Series(vals, index=idx)
-        n_old = len(c_ts)
-
+    def step(carried, ts, ids, vals):
+        all_ts, s, n_old = _window_buffer(carried, ts, vals)
         # pandas time rolling is (t-w, t] (closed='right'), the batch
         # rule's range frame; values at carried positions are WRONG here
         # (their windows were truncated by retention) and are discarded —
         # only the new tail is read, whose windows are fully in-buffer
         med = s.rolling(w_td, min_periods=1).median()
         dev_new = (s - med).abs().to_numpy()[n_old:]
-        devs = np.concatenate([c_devs, dev_new])
-        dev_s = pd.Series(devs, index=idx)
+        devs = np.concatenate([np.asarray(
+            carried[2] if carried is not None else (), dtype=float), dev_new])
+        dev_s = pd.Series(devs, index=s.index)
         mad = dev_s.rolling(w_td, min_periods=1).median().to_numpy()[n_old:]
         cnt = s.rolling(w_td, min_periods=1).count().to_numpy()[n_old:]
-
         with np.errstate(invalid="ignore"):
             flags = (cnt >= min_obs) & (dev_new > consistency * mad)
-        yield pd.DataFrame(
-            {
-                "source": key[0],
-                "ts": b_ts.astype("datetime64[us]"),
-                "value": b_vals,
-                "code": np.where(flags, _CODE, 0).astype("int32"),
-            }
-        )
+        keep = all_ts > all_ts[-1] - window_us
+        return _coded(ts, vals, flags), (
+            all_ts[keep].tolist(), s.to_numpy()[keep].tolist(),
+            devs[keep].tolist())
 
-        keep = ts_us > ts_us[-1] - window_us
-        state.update((
-            [int(x) for x in ts_us[keep]],
-            [float(x) for x in vals[keep]],
-            [float(x) for x in devs[keep]],
-        ))
-
-    return fn
+    return _kernel(step, lambda c: (c[0][-1], ""), _late_coded, late_code)
 
 
 def stream_hampel_clean(
@@ -283,24 +330,11 @@ def stream_hampel_clean(
     Input must be in-order per source; ``late_code`` makes violations
     observable instead of silently dropped (module docstring).
     """
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.col("n_tok").cast("double").alias("value"),
-        )
-    )
     window_us = int(pd.Timedelta(window).value // 1_000)
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_hampel_state_func(window_us, k, min_obs, late_code=late_code),
-        OUTPUT_SCHEMA,
-        HAMPEL_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+        OUTPUT_SCHEMA, HAMPEL_STATE_SCHEMA)
 
 
 def stream_spike_clean(
@@ -320,26 +354,12 @@ def stream_spike_clean(
     per source; ``late_code`` makes violations observable instead of
     silently dropped (module docstring).
     """
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source",
-            # state/watermark machinery wants TIMESTAMP, not NTZ
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.col("n_tok").cast("double").alias("value"),
-        )
-    )
     max_gap_us = int(pd.Timedelta(max_gap).value // 1_000)
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_spike_state_func(threshold, spike_tol, max_gap_us,
                               late_code=late_code),
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+        OUTPUT_SCHEMA, STATE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -375,67 +395,25 @@ def make_flat_state_func(
     """
     w_td = pd.Timedelta(window_us, unit="us")
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.sort_values("ts")
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_vals = batch["value"].to_numpy(dtype=float)
-
-        if state.exists:
-            c_ts, c_vals = (
-                np.asarray(a, dtype=t)
-                for a, t in zip(state.get, ("int64", float))
-            )
-            fresh = b_ts > c_ts[-1]
-            if late_code is not None and (~fresh).any():
-                yield _late_frame(key, b_ts[~fresh], b_vals[~fresh],
-                                  late_code)
-            b_ts, b_vals = b_ts[fresh], b_vals[fresh]
-        else:
-            c_ts = np.empty(0, dtype="int64")
-            c_vals = np.empty(0, dtype=float)
-        if len(b_ts) == 0:
-            return
-
-        ts_us = np.concatenate([c_ts, b_ts])
-        vals = np.concatenate([c_vals, b_vals])
-        idx = pd.DatetimeIndex(ts_us.astype("datetime64[us]"))
-        s = pd.Series(vals, index=idx)
-        n_old = len(c_ts)
-
+    def step(carried, ts, ids, vals):
+        all_ts, s, n_old = _window_buffer(carried, ts, vals)
         roll = s.rolling(w_td, min_periods=1)
         std = roll.std().to_numpy()[n_old:]   # ddof=1 == stddev_samp
         cnt = roll.count().to_numpy()[n_old:]
         with np.errstate(invalid="ignore"):
             flags = (cnt >= min_obs) & (std < std_threshold)
         if hbelow is not None and habove is not None:
-            flags &= (b_vals > habove) | (b_vals < hbelow)
+            flags &= (vals > habove) | (vals < hbelow)
         elif hbelow is not None:
-            flags &= b_vals < hbelow
+            flags &= vals < hbelow
         elif habove is not None:
-            flags &= b_vals > habove
-        flags &= ~np.isnan(b_vals)
+            flags &= vals > habove
+        flags &= ~np.isnan(vals)
+        keep = all_ts > all_ts[-1] - window_us
+        return _coded(ts, vals, flags), (
+            all_ts[keep].tolist(), s.to_numpy()[keep].tolist())
 
-        yield pd.DataFrame(
-            {
-                "source": key[0],
-                "ts": b_ts.astype("datetime64[us]"),
-                "value": b_vals,
-                "code": np.where(flags, _CODE, 0).astype("int32"),
-            }
-        )
-
-        keep = ts_us > ts_us[-1] - window_us
-        state.update((
-            [int(x) for x in ts_us[keep]],
-            [float(x) for x in vals[keep]],
-        ))
-
-    return fn
+    return _kernel(step, lambda c: (c[0][-1], ""), _late_coded, late_code)
 
 
 def stream_flat_clean(
@@ -455,26 +433,13 @@ def stream_flat_clean(
     ``rule_flat_signal`` (std + hard gates; quantile gates batch-only,
     see :func:`make_flat_state_func`). State per source is the last
     ``window`` of (ts, value) pairs."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.col("n_tok").cast("double").alias("value"),
-        )
-    )
     window_us = int(pd.Timedelta(window).value // 1_000)
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_flat_state_func(window_us, min_obs, std_threshold,
                              hbelow=hbelow, habove=habove,
                              late_code=late_code),
-        OUTPUT_SCHEMA,
-        FLAT_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
+        OUTPUT_SCHEMA, FLAT_STATE_SCHEMA)
 
 
 #: counter-step rows: the input point + its PromQL-style step
@@ -484,6 +449,13 @@ COUNTER_OUTPUT_SCHEMA = (
 )
 #: carried boundary: the last sample per source
 COUNTER_STATE_SCHEMA = "tsl long, vl double, il string"
+
+
+def _prev_values(carried, vals: np.ndarray) -> np.ndarray:
+    """Each row's predecessor value under COUNTER_STATE_SCHEMA: the
+    carried last value (NaN for a new series), then the batch's own."""
+    return np.concatenate(
+        [[carried[1] if carried is not None else float("nan")], vals[:-1]])
 
 
 def make_counter_state_func(late_code: int | None = None):
@@ -500,69 +472,30 @@ def make_counter_state_func(late_code: int | None = None):
     increase/rate/resets are plain batch aggregations over the emitted
     step rows (asserted equal to batch ``counter_windows`` in tests).
 
-    Late rows (at/before the carried sample) emit with step 0 and the
+    Late rows (at/before the carried sample in (ts, ident) order — the
+    ident tie-break keeps equal-timestamp samples split across
+    micro-batches from reading as late) emit with step 0 and the
     ``late_code`` marker in the ``reset`` column (outside its 0/1
     domain) when requested, else drop — same observability contract as
     the other stateful kernels.
     """
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        # NULL idents normalize to "" so the tie-break total-orders
-        # (and sorts consistently) even when the ident column is absent
-        batch = batch.assign(
-            ident=batch["ident"].map(lambda i: "" if i is None else str(i))
-        ).sort_values(["ts", "ident"])
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_ids = batch["ident"].to_numpy(dtype=object)
-        b_vals = batch["value"].to_numpy(dtype=float)
-
-        prev_us, prev_v = -1, float("nan")
-        if state.exists:
-            prev_us, prev_v, prev_id = state.get
-            # tie-break on ident (string order — the kernel's sort key)
-            # so equal-timestamp samples split across micro-batches are
-            # NOT misclassified as late; matches the batch (ts, ident)
-            # ordering when idents compare consistently as strings
-            fresh = (b_ts > prev_us) | (
-                (b_ts == prev_us)
-                & np.array([i > prev_id for i in b_ids], dtype=bool)
-            )
-            if late_code is not None and (~fresh).any():
-                yield pd.DataFrame({
-                    "source": key[0],
-                    "ts": b_ts[~fresh].astype("datetime64[us]"),
-                    "ident": b_ids[~fresh],
-                    "value": b_vals[~fresh],
-                    "step": np.zeros((~fresh).sum()),
-                    "reset": np.full((~fresh).sum(), late_code,
-                                     dtype="int32"),
-                })
-            b_ts, b_ids, b_vals = b_ts[fresh], b_ids[fresh], b_vals[fresh]
-        if len(b_ts) == 0:
-            return
-
-        prev_vals = np.concatenate([[prev_v], b_vals[:-1]])
-        delta = b_vals - prev_vals
+    def step(carried, ts, ids, vals):
+        prev_vals = _prev_values(carried, vals)
+        delta = vals - prev_vals
         first = np.isnan(prev_vals)
         reset = (~first) & (delta < 0)
-        step = np.where(first, 0.0, np.where(reset, b_vals, delta))
-        yield pd.DataFrame({
-            "source": key[0],
-            "ts": b_ts.astype("datetime64[us]"),
-            "ident": b_ids,
-            "value": b_vals,
-            "step": step,
+        return {
+            "ts": _us(ts), "ident": ids, "value": vals,
+            "step": np.where(first, 0.0, np.where(reset, vals, delta)),
             "reset": reset.astype("int32"),
-        })
-        state.update((int(b_ts[-1]), float(b_vals[-1]),
-                      str(b_ids[-1])))
+        }, (int(ts[-1]), float(vals[-1]), str(ids[-1]))
 
-    return fn
+    def late(ids, vals, marks):
+        return {"ident": ids, "value": vals, "step": np.zeros(len(vals)),
+                "reset": marks}
+
+    return _kernel(step, lambda c: (c[0], c[2]), late, late_code)
 
 
 def stream_counter_steps(
@@ -580,23 +513,10 @@ def stream_counter_steps(
     from the emitted rows (a second stateful operator is deliberately
     avoided — steps are per-point facts, windows are plain batch math
     over the step sink)."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source", F.col("ts").cast("timestamp").alias("ts"),
-            F.col(ident_col).cast("string").alias("ident"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-    )
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_counter_state_func(late_code=late_code),
-        outputStructType=COUNTER_OUTPUT_SCHEMA,
-        stateStructType=COUNTER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        COUNTER_OUTPUT_SCHEMA, COUNTER_STATE_SCHEMA, value_col, ident_col)
 
 
 #: compacted rows: only change points pass through
@@ -614,50 +534,19 @@ def make_changes_state_func(late_code: int | None = None):
     contract as the counter kernel; late rows (if surfaced) carry
     NaN value and the marker ident prefix 'late:'."""
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.assign(
-            ident=batch["ident"].map(lambda i: "" if i is None else str(i))
-        ).sort_values(["ts", "ident"])
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_ids = batch["ident"].to_numpy(dtype=object)
-        b_vals = batch["value"].to_numpy(dtype=float)
+    def step(carried, ts, ids, vals):
+        prev_vals = _prev_values(carried, vals)
+        keep = np.isnan(prev_vals) | (vals != prev_vals)
+        return (
+            {"ts": _us(ts[keep]), "ident": ids[keep], "value": vals[keep]}
+            if keep.any() else None,
+            (int(ts[-1]), float(vals[-1]), str(ids[-1])),
+        )
 
-        prev_v = float("nan")
-        if state.exists:
-            prev_us, prev_v, prev_id = state.get
-            fresh = (b_ts > prev_us) | (
-                (b_ts == prev_us)
-                & np.array([i > prev_id for i in b_ids], dtype=bool)
-            )
-            if late_code is not None and (~fresh).any():
-                yield pd.DataFrame({
-                    "source": key[0],
-                    "ts": b_ts[~fresh].astype("datetime64[us]"),
-                    "ident": ["late:" + str(i) for i in b_ids[~fresh]],
-                    "value": np.full((~fresh).sum(), np.nan),
-                })
-            b_ts, b_ids, b_vals = b_ts[fresh], b_ids[fresh], b_vals[fresh]
-        if len(b_ts) == 0:
-            return
+    def late(ids, vals, marks):
+        return {"ident": "late:" + ids, "value": np.full(len(vals), np.nan)}
 
-        prev_vals = np.concatenate([[prev_v], b_vals[:-1]])
-        keep = np.isnan(prev_vals) | (b_vals != prev_vals)
-        if keep.any():
-            yield pd.DataFrame({
-                "source": key[0],
-                "ts": b_ts[keep].astype("datetime64[us]"),
-                "ident": b_ids[keep],
-                "value": b_vals[keep],
-            })
-        state.update((int(b_ts[-1]), float(b_vals[-1]),
-                      str(b_ids[-1])))
-
-    return fn
+    return _kernel(step, lambda c: (c[0], c[2]), late, late_code)
 
 
 def stream_changes_only(
@@ -672,23 +561,10 @@ def stream_changes_only(
     only change points flow downstream (the batch ``changes_only``
     semantics, applied at ingest).  Reconstruction stays exact via
     as-of join / forward fill, as in batch."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source", F.col("ts").cast("timestamp").alias("ts"),
-            F.col(ident_col).cast("string").alias("ident"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-    )
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_changes_state_func(late_code=late_code),
-        outputStructType=CHANGES_OUTPUT_SCHEMA,
-        stateStructType=COUNTER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        CHANGES_OUTPUT_SCHEMA, COUNTER_STATE_SCHEMA, value_col, ident_col)
 
 
 #: alert transition events: alert=1 fired (crossed hi from released),
@@ -712,61 +588,30 @@ def make_alert_state_func(hi: float, lo: float,
     late_code when surfaced, else dropped."""
     h, l = float(hi), float(lo)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.assign(
-            ident=batch["ident"].map(lambda i: "" if i is None else str(i))
-        ).sort_values(["ts", "ident"])
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_ids = batch["ident"].to_numpy(dtype=object)
-        b_vals = batch["value"].to_numpy(dtype=float)
-
-        st = 0
-        if state.exists:
-            prev_us, prev_id, st = state.get
-            fresh = (b_ts > prev_us) | (
-                (b_ts == prev_us)
-                & np.array([i > prev_id for i in b_ids], dtype=bool)
-            )
-            if late_code is not None and (~fresh).any():
-                yield pd.DataFrame({
-                    "source": key[0],
-                    "ts": b_ts[~fresh].astype("datetime64[us]"),
-                    "ident": ["late:" + str(i) for i in b_ids[~fresh]],
-                    "value": b_vals[~fresh],
-                    "alert": np.full((~fresh).sum(), late_code,
-                                     dtype="int32"),
-                })
-            b_ts, b_ids, b_vals = b_ts[fresh], b_ids[fresh], b_vals[fresh]
-        if len(b_ts) == 0:
-            return
-
+    def step(carried, ts, ids, vals):
+        st = carried[2] if carried is not None else 0
         # sequential latch scan (numpy-light loop over the micro-batch:
         # transitions are rare, batches bounded)
         out_idx, out_alert = [], []
-        for i, v in enumerate(b_vals):
+        for i, v in enumerate(vals):
             if st == 0 and v > h:
                 st = 1
                 out_idx.append(i); out_alert.append(1)
             elif st == 1 and v < l:
                 st = 0
                 out_idx.append(i); out_alert.append(0)
-        if out_idx:
-            sel = np.array(out_idx)
-            yield pd.DataFrame({
-                "source": key[0],
-                "ts": b_ts[sel].astype("datetime64[us]"),
-                "ident": b_ids[sel],
-                "value": b_vals[sel],
-                "alert": np.array(out_alert, dtype="int32"),
-            })
-        state.update((int(b_ts[-1]), str(b_ids[-1]), int(st)))
+        return (
+            {"ts": _us(ts[out_idx]), "ident": ids[out_idx],
+             "value": vals[out_idx],
+             "alert": np.array(out_alert, dtype="int32")}
+            if out_idx else None,
+            (int(ts[-1]), str(ids[-1]), int(st)),
+        )
 
-    return fn
+    def late(ids, vals, marks):
+        return {"ident": "late:" + ids, "value": vals, "alert": marks}
+
+    return _kernel(step, lambda c: (c[0], c[1]), late, late_code)
 
 
 def stream_alerts(
@@ -783,23 +628,10 @@ def stream_alerts(
     one row per latch transition, latch carried across micro-batches
     (no day reset — the always-on alerting channel next to the batch
     per-day report)."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source", F.col("ts").cast("timestamp").alias("ts"),
-            F.col(ident_col).cast("string").alias("ident"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-    )
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_alert_state_func(hi, lo, late_code=late_code),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        stateStructType=ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        ALERT_OUTPUT_SCHEMA, ALERT_STATE_SCHEMA, value_col, ident_col)
 
 
 #: streaming swinging-door: emitted rows are the STORED anchors
@@ -829,42 +661,27 @@ def make_swing_state_func(eps_scaled: int, value_scale: int = 1):
     wired here to keep replay idempotent.
 
     Late/duplicate rule: rows at or before the carried candidate's
-    timestamp (same ms) are dropped — the stream's analog of the batch
-    last-by-ident same-ms dedup, disclosed (a late row can't reopen
-    doors that already advanced past its instant).  State is O(1): the
+    timestamp (same ms) are dropped inside the door loop — the stream's
+    analog of the batch last-by-ident same-ms dedup, disclosed (a late
+    row can't reopen doors that already advanced past its instant).
+    Rows sort by (ts, ident) with NULL idents last.  State is O(1): the
     8-tuple of door integers.
     """
     E = int(eps_scaled)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.sort_values(["ts", "ident"])
-        t_arr = (batch["ts"].to_numpy("datetime64[us]").astype("int64")
-                 // 1000)
-        # half-AWAY-from-zero, matching the batch paths' Spark
-        # F.round/DuckDB round (np.rint is half-even: 0.5*scale would
-        # round 0 here but 1 there and flip a door verdict)
-        x = batch["value"].to_numpy(dtype=float) * value_scale
-        v_arr = np.where(x >= 0, np.floor(x + 0.5),
-                         np.ceil(x - 0.5)).astype("int64")
-        from traval_spark.compress import _swing_loop
-
-        st = (tuple(int(x) for x in state.get) if state.exists else None)
+    def step(carried, ts, ids, vals):
+        v_arr = _round_half_away(vals * value_scale).astype("int64")
         kept, new_state = _swing_loop(
-            t_arr.tolist(), v_arr.tolist(), E, state=st)
-        state.update(new_state)
-        if kept:
-            yield pd.DataFrame({
-                "source": key[0],
-                "t_ms": np.array([k[0] for k in kept], dtype="int64"),
-                "v_i": np.array([k[1] for k in kept], dtype="int64"),
-            })
+            (ts // 1000).tolist(), v_arr.tolist(), E,
+            state=None if carried is None else tuple(int(x) for x in carried))
+        return (
+            {"t_ms": np.array([k[0] for k in kept], dtype="int64"),
+             "v_i": np.array([k[1] for k in kept], dtype="int64")}
+            if kept else None,
+            new_state,
+        )
 
-    return fn
+    return _kernel(step)
 
 
 def stream_swing_compress(
@@ -880,23 +697,10 @@ def stream_swing_compress(
     sequence drop dir: stored anchors stream out as their doors close,
     bit-identical to the batch ``swing_compress`` kept list minus the
     per-series trailing point (see :func:`make_swing_state_func`)."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source", F.col("ts").cast("timestamp").alias("ts"),
-            F.col(ident_col).cast("string").alias("ident"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-    )
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_swing_state_func(eps_scaled, value_scale=value_scale),
-        outputStructType=SWING_OUTPUT_SCHEMA,
-        stateStructType=SWING_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        SWING_OUTPUT_SCHEMA, SWING_STATE_SCHEMA, value_col, ident_col)
 
 
 EPISODE_OUTPUT_SCHEMA = (
@@ -934,39 +738,14 @@ def make_episode_state_func(threshold: float, value_scale: int = 1000):
     thr_fp = int(round(float(threshold) * value_scale))
     vs = float(value_scale)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(pdfs))
-        if batch.empty:
-            return
-        batch = batch.assign(
-            ident=batch["ident"].map(lambda i: "" if i is None else str(i))
-        ).sort_values(["ts", "ident"])
-        b_ts = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        b_ids = batch["ident"].to_numpy(dtype=object)
-        x = batch["value"].to_numpy(dtype=float) * vs
-        b_y = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5))
-        b_nan = ~np.isfinite(x)
-
-        if state.exists:
-            (last_us, last_id, n_started, open_, ep_start, ep_end,
-             ep_n, ep_peak, ep_exc) = state.get
-        else:
-            last_us, last_id, n_started, open_ = -1, "", 0, 0
-            ep_start = ep_end = ep_n = ep_peak = ep_exc = 0
-        fresh = (b_ts > last_us) | (
-            (b_ts == last_us)
-            & np.array([i > last_id for i in b_ids], dtype=bool)
-        )
-        b_ts, b_ids = b_ts[fresh], b_ids[fresh]
-        b_y, b_nan = b_y[fresh], b_nan[fresh]
-        if len(b_ts) == 0:
-            return
-
+    def step(carried, ts, ids, vals):
+        (_, _, n_started, open_, ep_start, ep_end, ep_n, ep_peak,
+         ep_exc) = carried if carried is not None else (-1, "", 0, 0, 0, 0,
+                                                        0, 0, 0)
+        x = vals * vs
         closed = []
-        for us, nan, yf in zip(b_ts.tolist(), b_nan.tolist(),
-                               b_y.tolist()):
+        for us, nan, yf in zip(ts.tolist(), (~np.isfinite(x)).tolist(),
+                               _round_half_away(x).tolist()):
             y = None if nan else int(yf)
             if y is not None and y > thr_fp:
                 if not open_:
@@ -981,26 +760,24 @@ def make_episode_state_func(threshold: float, value_scale: int = 1000):
                 closed.append((n_started, ep_start, ep_end, ep_n,
                                ep_peak, ep_exc))
                 open_ = 0
-        state.update((int(b_ts[-1]), str(b_ids[-1]), int(n_started),
-                      int(open_), int(ep_start), int(ep_end),
-                      int(ep_n), int(ep_peak), int(ep_exc)))
-        if closed:
-            yield pd.DataFrame({
-                "source": key[0],
-                "episode": np.array([c[0] for c in closed], "int64"),
-                "t_start": np.array([c[1] for c in closed],
-                                    "int64").astype("datetime64[us]"),
-                "t_end": np.array([c[2] for c in closed],
-                                  "int64").astype("datetime64[us]"),
-                "n_pts": np.array([c[3] for c in closed], "int64"),
-                "duration_s": np.array(
-                    [(c[2] - c[1]) / 1e6 for c in closed], "float64"),
-                "peak": np.array([c[4] / vs for c in closed], "float64"),
-                "excess": np.array([c[5] / vs for c in closed],
-                                   "float64"),
-            })
+        new_state = (int(ts[-1]), str(ids[-1]), int(n_started), int(open_),
+                     int(ep_start), int(ep_end), int(ep_n), int(ep_peak),
+                     int(ep_exc))
+        if not closed:
+            return None, new_state
+        eid, t0, t1, n_pts, peak, exc = zip(*closed)
+        return {
+            "episode": np.array(eid, "int64"),
+            "t_start": _us(np.array(t0, "int64")),
+            "t_end": _us(np.array(t1, "int64")),
+            "n_pts": np.array(n_pts, "int64"),
+            "duration_s": np.array(
+                [(b - a) / 1e6 for a, b in zip(t0, t1)], "float64"),
+            "peak": np.array([p / vs for p in peak], "float64"),
+            "excess": np.array([e / vs for e in exc], "float64"),
+        }, new_state
 
-    return fn
+    return _kernel(step, lambda c: (c[0], c[1]))
 
 
 def stream_threshold_episodes(
@@ -1018,20 +795,7 @@ def stream_threshold_episodes(
     bit-identical to batch ``threshold_episodes`` minus each series'
     trailing still-open episode (parity-tested across micro-batch
     boundaries)."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source", F.col("ts").cast("timestamp").alias("ts"),
-            F.col(ident_col).cast("string").alias("ident"),
-            F.col(value_col).cast("double").alias("value"),
-        )
-    )
-    return stream.groupBy("source").applyInPandasWithState(
+    return _stream(
+        spark, input_path, max_files_per_trigger,
         make_episode_state_func(threshold, value_scale=value_scale),
-        outputStructType=EPISODE_OUTPUT_SCHEMA,
-        stateStructType=EPISODE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        EPISODE_OUTPUT_SCHEMA, EPISODE_STATE_SCHEMA, value_col, ident_col)
