@@ -96,9 +96,22 @@ def _ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(key)
 
 
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the parquet
+    footer on the driver: Spark's own schema inference is a Spark job
+    (about 0.1 s on a small table), the footer read none. Timestamps
+    without a zone read as TIMESTAMP_NTZ, as Spark infers them."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = from_arrow_schema(ds.dataset(path, format="parquet").schema,
+                               prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
+
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ship_package(spark)
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _read(spark, f"{sf_dir}/events.parquet")
 
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,13 +125,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition so per-row operators use every core (at real scale the
     # scan has thousands of splits and this is a no-op concern)
     _ship_package(spark)
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+    return _read(spark, f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
+    return _read(spark, f"{sf_dir}/embeddings.parquet").repartition(
         spark.sparkContext.defaultParallelism
     )
 
@@ -2307,7 +2320,7 @@ def q_kmeans_components(spark, sf_dir):
 
 def _tpch(spark, sf_dir, name):
     _ship_package(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def q_sessionize(spark, sf_dir):
@@ -4310,7 +4323,7 @@ def q_dsir_resample(spark, sf_dir):
     from traval_spark.operators.lm import dsir_weights
     from traval_spark.operators.sampling import dsir_resample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _read(spark, f"{sf_dir}/documents.parquet")
     w = dsir_weights(docs, docs.filter(F.col("lang") == "en"),
                      buckets=1024)
     return dsir_resample(w, k=100, seed=7)
@@ -4479,7 +4492,7 @@ def q_dsir_weights(spark, sf_dir):
     exact-integer ratio, per-doc dot product 6dp-fenced."""
     from traval_spark.operators.lm import dsir_weights
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _read(spark, f"{sf_dir}/documents.parquet")
     return dsir_weights(docs, docs.filter(F.col("lang") == "en"),
                         buckets=1024)
 

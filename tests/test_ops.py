@@ -541,6 +541,86 @@ def test_simhash64_banding_equals_bruteforce(spark):
     assert banded == brute and len(brute) > 0
 
 
+def _simhash64_reference(text: str) -> tuple[int, int]:
+    """with_simhash64's fingerprint in plain Python: per whitespace
+    token, the first 16 hex digits of md5 as two 32-bit words; bit j of
+    the fingerprint (j < 32 in fp_lo, the rest in fp_hi at j - 32) is
+    set when more tokens than not have bit 31 - j % 32 of word j // 32
+    set (a tie leaves it clear)."""
+    import hashlib
+    import re
+
+    words = []
+    for tok in re.split(r"\s+", text):
+        h = hashlib.md5(tok.encode()).hexdigest()
+        words.append((int(h[:8], 16), int(h[8:16], 16)))
+    lo = hi = 0
+    for j in range(64):
+        vote = sum(1 if (w[j // 32] >> (31 - j % 32)) & 1 else -1
+                   for w in words)
+        if vote > 0:
+            if j < 32:
+                lo |= 1 << j
+            else:
+                hi |= 1 << (j - 32)
+    return lo, hi
+
+
+def test_simhash64_bits_equal_python_reference(spark):
+    """Every fingerprint bit equals the plain-Python reference on a
+    seeded doc set: one-token docs, two-token docs (every bit where the
+    two tokens differ is a tie), repeated tokens and longer docs."""
+    import random
+
+    from traval_spark.operators.dedup import with_simhash64
+
+    rng = random.Random(1313)
+    vocab = [f"w{i}" for i in range(30)] + ["the", "a", "ü", "x-y"]
+    texts = ["solo", "the", "a b", "b a", "same same", "ü ü w1"]
+    texts += [" ".join(rng.choice(vocab) for _ in range(rng.randint(1, 12)))
+              for _ in range(60)]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+    got = {r["doc_id"]: (r["fp_lo"], r["fp_hi"])
+           for r in with_simhash64(docs).collect()}
+    assert got == {i: _simhash64_reference(t) for i, t in enumerate(texts)}
+    assert [f.dataType.simpleString()
+            for f in with_simhash64(docs).schema] == ["bigint"] * 3
+
+
+def test_simhash64_build_round_trip_budget(spark):
+    """Building the SimHash plan stays within a py4j round-trip budget.
+    Its votes and halves are SQL strings and the session captures no
+    Python call site per Column call: as Column chains with call-site
+    capture this plan took 8,242 round trips, as strings it takes 366.
+    Counted on a second build, after one-time lookups, leaving out
+    py4j's deferred releases of earlier objects ("m" commands)."""
+    import py4j.clientserver
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from traval_spark.operators.dedup import with_simhash64
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    docs = spark.createDataFrame([(0, "a b c"), (1, "a b d")],
+                                 "doc_id long, text string")
+    with_simhash64(docs)
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+    calls = [0]
+
+    def counting(self, command, *args, **kwargs):
+        calls[0] += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(self, command, *args, **kwargs)
+
+    conn.send_command = counting
+    try:
+        with_simhash64(docs)
+    finally:
+        conn.send_command = send
+    assert 0 < calls[0] <= 500, calls[0]
+
+
 def test_multimodal_resize(docs):
     from traval_spark.operators.multimodal import resize_images
 
@@ -788,6 +868,36 @@ def test_dup_clusters_star_equals_union_find_random(spark):
         got = {r["doc_id"]: r["cluster"]
                for r in dup_clusters(docs, pairs).collect()}
         assert got == _union_find_min_labels(nodes, edges), (seed, ddl)
+
+
+def test_star_round_runs_five_spark_jobs(spark):
+    """A star round (window-min large star, window-min small star, the
+    checkpoint that observes its scalars) launches at most 5 Spark jobs
+    on the seed-42 random graph, counted through job groups."""
+    from traval_spark.operators.dedup import connected_components
+
+    rng = np.random.default_rng(42)
+    edges = sorted({(int(a), int(b))
+                    for a, b in rng.integers(0, 200, (180, 2)) if a != b})
+    pairs = spark.createDataFrame(edges, "a long, b long")
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the pairs checkpoint that precedes the rounds, built the same way
+    _, n_init = jobs("cc-init", lambda: pairs.select(
+        F.col("a").alias("u"), F.col("b").alias("v"))
+        .filter(F.col("u") != F.col("v")).localCheckpoint())
+    (_, rounds), n = jobs("cc-rounds", lambda: connected_components(pairs))
+    assert rounds >= 2
+    assert n - n_init <= 5 * rounds, (n, n_init, rounds)
 
 
 def test_hot_bucket_cap_discloses_and_bounds(spark, caplog):

@@ -396,3 +396,24 @@ def test_dsir_resample_is_gumbel_topk_without_replacement(spark):
                  key=lambda t: (-t[0], t[1]))[:10]
     assert [(r["gumbel_key"], r["doc_id"]) for r in got] == exp
     assert any(r["doc_id"] == 17 for r in got)
+
+
+def test_entry_reads_take_the_footer_schema(spark):
+    """The entry module reads its tables with the schema converted from
+    the parquet footer (no inference job): for every table of the sf0.01
+    testdata (a sibling of the checkout) it equals Spark's inferred
+    schema."""
+    import os
+
+    import __spark_entry__ as em
+
+    sf = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__)))), "testdata", "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip("sf0.01 testdata not present")
+    tables = sorted(t for t in os.listdir(sf) if t.endswith(".parquet"))
+    assert len(tables) >= 10
+    for t in tables:
+        path = os.path.join(sf, t)
+        assert em._read(spark, path).schema == \
+            spark.read.parquet(path).schema, t

@@ -1662,6 +1662,60 @@ def test_swing_kernel_rounds_half_away_from_zero():
     assert state.get[3] == 9
 
 
+def test_swing_kernel_same_ms_keeps_last_ident_like_batch(spark):
+    """Rows sharing a millisecond inside one micro-batch: the streaming
+    kernel keeps the last by ident (NULL last), as the batch Arrow
+    kernel does, so its anchors equal swing_compress_arrow's kept points
+    minus the trailing one. Inputs: the 4-row case ((0 s, "a", 1),
+    (0 s, "b", 5): the anchor is 5, not 1) and a seeded series full of
+    same-ms ties and NULL idents, split between milliseconds into 3
+    micro-batches."""
+    import numpy as np
+    import pandas as pd
+
+    from traval_spark.compress import swing_compress_arrow
+    from traval_spark.streaming.stateful_rules import (
+        SWING_OUTPUT_SCHEMA,
+        make_swing_state_func,
+    )
+
+    rng = np.random.default_rng(1301)
+    ms = np.sort(rng.integers(0, 40, 120)) * 250
+    # one row per (ms, ident): which of two such rows wins is unordered
+    # on both paths
+    seeded = pd.DataFrame({
+        "ms": ms,
+        "ts": pd.to_datetime(ms * 1000 + rng.integers(0, 1000, len(ms)),
+                             unit="us"),
+        "ident": [None if x == 0 else f"i{x}"
+                  for x in rng.integers(0, 6, len(ms))],
+        "value": rng.integers(-40, 40, len(ms)) / 10,
+    }).drop_duplicates(["ms", "ident"])
+    ms = seeded.pop("ms").to_numpy()
+    small = pd.DataFrame({
+        "ts": pd.to_datetime([0, 0, 10, 20], unit="s"),
+        "ident": ["a", "b", "c", "d"],
+        "value": [1.0, 5.0, 1.0, 1.0],
+    })
+    cuts = [ms[len(ms) // 3], ms[2 * len(ms) // 3]]
+    for frame, eps, parts in (
+        (small, 10, [small]),
+        (seeded, 15, [seeded[ms < cuts[0]],
+                      seeded[(ms >= cuts[0]) & (ms < cuts[1])],
+                      seeded[ms >= cuts[1]]]),
+    ):
+        streamed = pd.concat(_kernel_batches(
+            make_swing_state_func(eps, value_scale=10), parts,
+            SWING_OUTPUT_SCHEMA))
+        batch = swing_compress_arrow(
+            spark.createDataFrame(frame.assign(source="src").rename(
+                columns={"ident": "event_id"})),
+            eps_scaled=eps, value_scale=10).orderBy("t_ms").collect()
+        want = [(r["t_ms"], r["v_i"]) for r in batch][:-1]
+        got = list(zip(streamed["t_ms"].tolist(), streamed["v_i"].tolist()))
+        assert got == want and len(want) > 1
+
+
 def test_stream_threshold_episodes_match_batch(spark, tmp_path):
     """Streamed CLOSED breach episodes == batch threshold_episodes
     minus each series' trailing still-open episode, across a forced

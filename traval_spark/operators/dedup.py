@@ -294,6 +294,10 @@ def with_simhash64(df: DataFrame, text_col: str = "text",
     map-side-combinable. Two bigint halves < 2^32 sidestep the sign bit
     and give DuckDB-portable arithmetic. Bit numbering is unchanged:
     bit j = hex digit j//4 shifted by 3-j%4, i.e. half >> (31-j or 63-j).
+
+    The 64 vote sums and the two 32-term halves are SQL strings, one
+    py4j call each: as Column chains they would be about a thousand
+    Column nodes, each at least one py4j round trip.
     """
     toks = df.select(
         F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("__t")
@@ -303,22 +307,21 @@ def with_simhash64(df: DataFrame, text_col: str = "text",
         F.conv(F.substring("__h", 1, 8), 16, 10).cast("bigint").alias("__w0"),
         F.conv(F.substring("__h", 9, 8), 16, 10).cast("bigint").alias("__w1"),
     )
-    votes = []
-    for j in range(64):
-        word = F.col("__w0") if j < 32 else F.col("__w1")
-        shift = (31 - j) if j < 32 else (63 - j)
-        bit = F.shiftright(word, shift).bitwiseAND(F.lit(1))
-        votes.append(
-            F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"__v{j}")
-        )
-    agg = toks.groupBy(id_col).agg(*votes)
-    lo = F.lit(0).cast("bigint")
-    hi = F.lit(0).cast("bigint")
-    for j in range(32):
-        lo = lo + F.when(F.col(f"__v{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        hi = hi + F.when(F.col(f"__v{j + 32}") > 0,
-                         F.lit(1 << j)).otherwise(F.lit(0))
-    return agg.select(F.col(id_col), lo.alias("fp_lo"), hi.alias("fp_hi"))
+    votes = [
+        F.expr(f"sum(CASE WHEN (shiftright(__w{j // 32}, {31 - j % 32}) & 1)"
+               f" = 1 THEN 1 ELSE -1 END) AS __v{j}")
+        for j in range(64)
+    ]
+
+    def half(off: int) -> str:
+        return " + ".join(
+            ["CAST(0 AS BIGINT)"]
+            + [f"CASE WHEN __v{j + off} > 0 THEN {1 << j} ELSE 0 END"
+               for j in range(32)])
+
+    return toks.groupBy(id_col).agg(*votes).select(
+        F.col(id_col), F.expr(half(0)).alias("fp_lo"),
+        F.expr(half(32)).alias("fp_hi"))
 
 
 def _simhash64_bands(fp: DataFrame, id_col: str) -> DataFrame:
@@ -639,14 +642,17 @@ def _large_star(e: DataFrame) -> DataFrame:
     """One large-star round (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SOCC'14): symmetrize, then for every vertex u
     with m = min(N(u) + {u}) connect each STRICTLY LARGER neighbor v > u
-    to m. Output edges are directed larger -> smaller (v > u >= m)."""
+    to m. Output edges are directed larger -> smaller (v > u >= m).
+
+    ``min(v) OVER (PARTITION BY u)`` reads the neighborhood minimum in
+    the one shuffle by u, where a groupBy-min joined back to the edges
+    would shuffle them twice."""
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    m = sym.groupBy("u").agg(F.min("v").alias("mn"))
-    m = m.select("u", F.least(F.col("u"), F.col("mn")).alias("m"))
+    m = F.least(F.col("u"), F.min("v").over(Window.partitionBy("u")))
     return (
-        sym.join(m, "u")
+        sym.withColumn("m", m)
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
         .distinct()
@@ -656,12 +662,18 @@ def _large_star(e: DataFrame) -> DataFrame:
 def _small_star(e: DataFrame) -> DataFrame:
     """One small-star round: input edges directed u > v (large-star output
     shape); for every u with m = min(N(u)) connect each smaller neighbor
-    v != m AND u itself to m. Output stays directed larger -> smaller."""
-    m = e.groupBy("u").agg(F.min("v").alias("m"))
-    j = e.join(m, "u")
+    v != m AND u itself to m. Output stays directed larger -> smaller.
+
+    One window pass by u gives each edge its m; each edge then emits
+    (v, m) and (u, m), the self-edges drop and ``distinct`` folds the
+    (u, m) copies."""
+    m = F.min("v").over(Window.partitionBy("u"))
     return (
-        j.select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .unionByName(m.select("u", F.col("m").alias("v")))
+        e.withColumn("m", m)
+        .select(F.inline(F.array(
+            F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
+            F.struct(F.col("u"), F.col("m").alias("v")),
+        )))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
@@ -676,9 +688,9 @@ def connected_components(
     propagation. Returns ((node, root) edges for every NON-ROOT node
     touched by a pair, rounds-to-converge).
 
-    Per round: two groupBy-min + two joins (all partial-aggregatable;
-    no vertex state frame, the edge set IS the state) followed by a
-    localCheckpoint to truncate iterative lineage. The round's
+    Per round: two window-min passes, each followed by a distinct (no
+    vertex state frame, the edge set IS the state; 5 Spark jobs under
+    AQE) and a localCheckpoint to truncate iterative lineage. The round's
     convergence scalars (count + xxhash64 edge-set checksum) are
     observed in the checkpoint's own job, so a round is one driver
     synchronization and the driver only ever sees two scalars. At the

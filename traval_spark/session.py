@@ -13,6 +13,20 @@ Configuration rationale (SURVEY.md §4.2):
 - shuffle partitions default to the core count: the engine is designed for
   a 1000-executor cluster where this would be raised to O(cores*2-3); the
   value here only serves local runs and is overridable.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark wraps
+  every ``F.*`` function and ``Column`` method in a call-site capture
+  that looks up the active session, reads a conf, walks the Python
+  stack and sets then clears an origin in the JVM, several py4j round
+  trips per Column node. Off, building the ``dup_clusters`` entry
+  query's plan made 4,558 round trips instead of 11,646,
+  ``drift_report`` 1,291 instead of 5,979 and ``binary_classifier``
+  725 instead of 2,785 (medians of 3 warm builds on a 400-document,
+  3,000-event input, ``local[4]``). The cost is that an analysis error
+  carries no Python file:line "DataFrame query context"; its error
+  class and message are unchanged. Pass ``extra_conf={"spark.python.
+  sql.dataFrameDebugging.enabled": "true"}`` to turn it back on
+  (PySpark reads it once per process, at the first Column call with
+  an active session).
 """
 
 from __future__ import annotations
@@ -80,6 +94,7 @@ def get_spark(
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -122,7 +122,7 @@ def _kernel(
     is. Streams without idents compare "" to "", so the test reduces to
     ``ts > tail ts``. Without ``tail`` (swing) idents sort as they come,
     NULL last, and every row reaches ``step``, which applies its own
-    late rule.
+    same-ms and late rules.
     """
 
     def fn(
@@ -660,19 +660,23 @@ def make_swing_state_func(eps_scaled: int, value_scale: int = 1):
     would emit the pending point on state timeout; deliberately not
     wired here to keep replay idempotent.
 
-    Late/duplicate rule: rows at or before the carried candidate's
-    timestamp (same ms) are dropped inside the door loop — the stream's
-    analog of the batch last-by-ident same-ms dedup, disclosed (a late
-    row can't reopen doors that already advanced past its instant).
-    Rows sort by (ts, ident) with NULL idents last.  State is O(1): the
-    8-tuple of door integers.
+    Same-ms rule: within one micro-batch, rows sort by (ms, ident) with
+    NULL idents last and the last row of each ms is kept, the batch
+    kernel's last-by-ident dedup.  Late rule: rows at or before the
+    carried candidate's ms are dropped inside the door loop, disclosed
+    (a late row can't reopen doors that already advanced past its
+    instant, nor replace a candidate a past batch chose).  State is
+    O(1): the 8-tuple of door integers.
     """
     E = int(eps_scaled)
 
     def step(carried, ts, ids, vals):
-        v_arr = _round_half_away(vals * value_scale).astype("int64")
+        pts = pd.DataFrame({
+            "t": ts // 1000, "i": ids,
+            "v": _round_half_away(vals * value_scale).astype("int64"),
+        }).sort_values(["t", "i"]).drop_duplicates("t", keep="last")
         kept, new_state = _swing_loop(
-            (ts // 1000).tolist(), v_arr.tolist(), E,
+            pts["t"].tolist(), pts["v"].tolist(), E,
             state=None if carried is None else tuple(int(x) for x in carried))
         return (
             {"t_ms": np.array([k[0] for k in kept], dtype="int64"),
