@@ -26,6 +26,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from traval_spark.session import hold
+
 # ---------------------------------------------------------------------------
 # shared constants (single source of truth for Spark + oracle SQL)
 # ---------------------------------------------------------------------------
@@ -486,7 +488,7 @@ def q_swing_compress(spark, sf_dir):
     swing_compress): the lossy industrial-historian reduction ahead of
     the lossless Gorilla packer — exact-integer rational-slope doors
     (cross-multiplied, sentinel infinities) make the kept set
-    engine-identical; one whole-stage-codegen aggregate() fold per
+    identical to the oracle's list_reduce fold; one Arrow kernel per
     bounded series, eps 2.0 value units at the x1000 fixed-point
     scale."""
     from traval_spark.compress import swing_compress
@@ -859,9 +861,9 @@ def q_hist_mad_1h(spark, sf_dir):
         F.col("value").alias("n_tok"),
     )
     # hist_mad reads its input tier twice (median pick + deviation
-    # fold); persist the derived tier so raw is binned once per
-    # evaluation — at 100 TB the tier is STORED and this is moot
-    t1h = hist_cascade(hist_tier(src, "1m", scale=100), "1h").persist()
+    # fold); the second read is a ReusedExchange of the first, so raw is
+    # binned once with no cache (a cache here cost 2 more Spark jobs)
+    t1h = hist_cascade(hist_tier(src, "1m", scale=100), "1h")
     return hist_mad(t1h, scale=100)
 
 
@@ -876,12 +878,12 @@ def q_robust_outliers(spark, sf_dir):
     src = _events(spark, sf_dir).select(
         "event_id", F.col("event_type").alias("source"), "ts", "value",
     )
-    # the hist_mad stats inside robust_outliers read the tier twice;
-    # persist the derived tier (stored at 100 TB — see q_hist_mad_1h)
+    # the hist_mad stats inside robust_outliers read the tier twice,
+    # the second as a ReusedExchange (see q_hist_mad_1h)
     t1h = hist_tier(
         src.withColumnRenamed("value", "n_tok"), "1h", scale=100,
         value_col="n_tok",
-    ).persist()
+    )
     return robust_outliers(src, t1h, tier="1h", k=3.0, scale=100)
 
 
@@ -1069,7 +1071,7 @@ def q_curate(spark, sf_dir):
     # narrow (id, source, n_tok) projection, persisted, so the
     # dedup+mixture chain runs once and the second pass re-reads 3
     # columns from cache (pack assignment never looks at the payload)
-    narrow = mixed.select("doc_id", "source", "n_tok").persist()
+    narrow = hold(mixed.select("doc_id", "source", "n_tok"))
     return assign_packs(narrow, target_tokens=512).select(
         "doc_id", "source",
         F.col("n_tok").cast("long").alias("n_tok"),
@@ -4447,8 +4449,8 @@ def q_fleet_report(spark, sf_dir):
     change detection — left-joined on g from the always-total fano
     base (degenerate-series monitors contribute NULLs, absence
     reported not dropped).  Each counts=-fed monitor re-zero-fills the
-    signal, and a run leaves three persisted frames cached until
-    unpersist() or clearCache()."""
+    signal; a run holds three cached frames, released by the enclosing
+    held() and kept until unpersist()/clearCache() without one."""
     from traval_spark.operators.monitor import fleet_report
 
     ev = _events(spark, sf_dir).select(

@@ -192,13 +192,15 @@ def test_swing_reconstruct_bound_and_edges(spark):
 
 
 def test_swing_engines_identical(spark):
-    """engine='arrow' (Arrow kernel, production) == engine='sql' (pure
-    JVM fold) on randomized data INCLUDING same-ms duplicate
-    timestamps — one door machine, two execution paths, byte-identical
-    kept sets."""
+    """swing_compress (the Arrow kernel) == the entry module's DuckDB
+    oracle for ``swing_compress`` (an independent list_reduce fold over
+    the same door rules) on seeded frames INCLUDING same-ms duplicate
+    timestamps: byte-identical kept sets."""
+    import duckdb
     import numpy as np
     import pandas as pd
 
+    import __spark_entry__ as em
     from traval_spark.compress import swing_compress
 
     rng = np.random.default_rng(7)
@@ -210,10 +212,40 @@ def test_swing_engines_identical(spark):
             rows.append((s, pd.Timestamp("2024-01-01")
                          + pd.Timedelta(seconds=t),
                          float(np.round(rng.normal(0, 2.0), 3)), i))
-    df = spark.createDataFrame(pd.DataFrame(
-        rows, columns=["source", "ts", "value", "event_id"]))
-    for eps in (500, 2000):
-        a = swing_compress(df, eps_scaled=eps, engine="arrow")
-        s = swing_compress(df, eps_scaled=eps, engine="sql")
-        assert a.exceptAll(s).count() == 0
-        assert s.exceptAll(a).count() == 0
+    events = pd.DataFrame(rows, columns=["event_type", "ts", "value",
+                                         "event_id"])
+    # the oracle's eps (2000) and x1000 value scale are the operator's
+    # defaults
+    got = swing_compress(spark.createDataFrame(
+        events.rename(columns={"event_type": "source"}))).toPandas()
+    con = duckdb.connect()
+    con.register("events", events)
+    want = con.sql(em.oracle_sql()["swing_compress"]).df()
+    key = ["source", "t_ms", "v_i"]
+    got = sorted(map(tuple, got[key].astype(str).to_numpy().tolist()))
+    want = sorted(map(tuple, want[key].astype(str).to_numpy().tolist()))
+    assert got == want
+    # both regimes: door closes and long open corridors
+    assert 40 < len(got) < 700
+
+
+def test_swing_compress_drops_null_and_nan_values(spark):
+    """A NULL or NaN value carries no point: it is dropped before the
+    same-ms dedup, as the lttb and m4/hist tiers drop it, so
+    [1, 100, NULL, 1] at 0/10/20/30 s keeps (0,1), (10000,100),
+    (30000,1) and a NaN there keeps the same."""
+    import pandas as pd
+
+    from traval_spark.compress import swing_compress
+
+    for missing in (None, float("nan")):
+        pdf = pd.DataFrame({
+            "source": ["s"] * 5,
+            "ts": pd.to_datetime([0, 10, 20, 30, 30], unit="s"),
+            "value": [1.0, 100.0, missing, 1.0, missing],
+            "event_id": [1, 2, 3, 4, 5],  # the missing row is last at 30 s
+        })
+        out = swing_compress(spark.createDataFrame(pdf), eps_scaled=1,
+                             value_scale=1)
+        assert sorted((r["t_ms"], r["v_i"]) for r in out.collect()) == [
+            (0, 1), (10000, 100), (30000, 1)]

@@ -417,3 +417,52 @@ def test_entry_reads_take_the_footer_schema(spark):
         path = os.path.join(sf, t)
         assert em._read(spark, path).schema == \
             spark.read.parquet(path).schema, t
+
+
+def _check_entry_tool():
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "check_entry.py")
+    spec = importlib.util.spec_from_file_location("check_entry", path)
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    return tool
+
+
+def test_check_entry_rejects_unknown_query_names(monkeypatch, capsys):
+    """tools/check_entry.py exits non-zero and names a query it does not
+    know, before it starts a Spark session (a typo must not read as a
+    green gate)."""
+    import sys
+
+    import traval_spark.session
+
+    tool = _check_entry_tool()
+
+    def no_session(*a, **k):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(traval_spark.session, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", [
+        "check_entry.py", "/nonexistent", "swing_compress", "no_such_query"])
+    assert tool.main() != 0
+    err = capsys.readouterr().err
+    assert "no_such_query" in err and "swing_compress" not in err
+
+
+def test_check_entry_pairs_rows_on_exact_columns():
+    """Rows whose float columns differ in the last ulp pair up by their
+    exact columns: the lm_score shape (doc_id, avg_logp) with two
+    near-tied scores matches, and a real value difference still fails."""
+    import pandas as pd
+
+    tool = _check_entry_tool()
+    spark_side = pd.DataFrame({"doc_id": [1, 2],
+                               "avg_logp": [-2.0000000000000004, -2.0]})
+    oracle = pd.DataFrame({"doc_id": [1, 2],
+                           "avg_logp": [-2.0, -2.0000000000000004]})
+    assert tool.compare(spark_side, oracle) is None
+    oracle.loc[0, "avg_logp"] = -2.5
+    assert tool.compare(spark_side, oracle) is not None

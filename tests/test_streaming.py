@@ -1665,7 +1665,7 @@ def test_swing_kernel_rounds_half_away_from_zero():
 def test_swing_kernel_same_ms_keeps_last_ident_like_batch(spark):
     """Rows sharing a millisecond inside one micro-batch: the streaming
     kernel keeps the last by ident (NULL last), as the batch Arrow
-    kernel does, so its anchors equal swing_compress_arrow's kept points
+    kernel does, so its anchors equal swing_compress's kept points
     minus the trailing one. Inputs: the 4-row case ((0 s, "a", 1),
     (0 s, "b", 5): the anchor is 5, not 1) and a seeded series full of
     same-ms ties and NULL idents, split between milliseconds into 3
@@ -1673,7 +1673,7 @@ def test_swing_kernel_same_ms_keeps_last_ident_like_batch(spark):
     import numpy as np
     import pandas as pd
 
-    from traval_spark.compress import swing_compress_arrow
+    from traval_spark.compress import swing_compress
     from traval_spark.streaming.stateful_rules import (
         SWING_OUTPUT_SCHEMA,
         make_swing_state_func,
@@ -1707,13 +1707,42 @@ def test_swing_kernel_same_ms_keeps_last_ident_like_batch(spark):
         streamed = pd.concat(_kernel_batches(
             make_swing_state_func(eps, value_scale=10), parts,
             SWING_OUTPUT_SCHEMA))
-        batch = swing_compress_arrow(
+        batch = swing_compress(
             spark.createDataFrame(frame.assign(source="src").rename(
                 columns={"ident": "event_id"})),
             eps_scaled=eps, value_scale=10).orderBy("t_ms").collect()
         want = [(r["t_ms"], r["v_i"]) for r in batch][:-1]
         got = list(zip(streamed["t_ms"].tolist(), streamed["v_i"].tolist()))
         assert got == want and len(want) > 1
+
+
+def test_swing_kernel_drops_null_values_like_batch():
+    """The streaming swinging door drops a NULL/NaN value before the
+    same-ms dedup, as the batch kernel does: [1, 100, NULL, 1] at
+    0/10/20/30 s (eps 1, scale 1) emits (0,1), (10000,100) with (30000,1)
+    pending, and a batch holding only a NULL value leaves the series
+    without state, so the next batch's first row still anchors it."""
+    import numpy as np
+    import pandas as pd
+
+    from traval_spark.streaming.stateful_rules import make_swing_state_func
+
+    def frame(secs, vals):
+        return pd.DataFrame({
+            "ts": pd.to_datetime(secs, unit="s"),
+            "ident": [f"i{s}" for s in secs],
+            "value": vals,
+        })
+
+    fn = make_swing_state_func(1, value_scale=1)
+    state = _FakeState()
+    assert list(fn(("src",), iter([frame([5], [np.nan])]), state)) == []
+    assert not state.exists
+    out = list(fn(("src",), iter([frame([0, 10, 20, 30],
+                                        [1.0, 100.0, None, 1.0])]), state))
+    got = pd.concat(out)
+    assert list(zip(got["t_ms"], got["v_i"])) == [(0, 1), (10000, 100)]
+    assert tuple(state.get[2:4]) == (30000, 1)
 
 
 def test_stream_threshold_episodes_match_batch(spark, tmp_path):

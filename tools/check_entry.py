@@ -4,6 +4,10 @@ Runs every ``queries()[name]`` against its ``oracle_sql()[name]`` via
 DuckDB on the same parquet (default sf0.01), compares row count, sorted
 schema, and order-insensitive values (exact for ints/strings/timestamps,
 1e-9 for floats). Usage: python tools/check_entry.py [sf_dir] [names...]
+
+The summary counts the queries actually run. A name that is not a query
+is an error: it is reported, and the tool exits 2 before it starts a
+Spark session.
 """
 
 from __future__ import annotations
@@ -28,7 +32,10 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("datetime64[us]")
         if df[c].dtype == object:
             df[c] = df[c].astype(str)
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
+    # exact columns lead the sort: two rows whose floats differ in the
+    # last ulp would otherwise pair up in opposite orders on the two sides
+    keys = sorted(df.columns, key=lambda c: df[c].dtype.kind == "f")
+    return df.sort_values(keys).reset_index(drop=True)
 
 
 def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
@@ -62,6 +69,13 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from traval_spark.session import get_spark
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    qs = {n: fn for n, fn in qs.items() if not only or n in only}
+
     spark = get_spark("check-entry", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
@@ -70,12 +84,9 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"create view {t} as select * from '{p}'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             spark_df = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -98,7 +109,7 @@ def main() -> int:
             print(f"FAIL  {name}: {diff}")
         else:
             print(f"   OK  {name}: {len(spark_df)} rows")
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {len(qs)} queries run")
     for n, d in failures:
         print(f"  - {n}: {d[:200]}")
     spark.stop()

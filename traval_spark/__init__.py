@@ -35,7 +35,7 @@ from traval_spark.plans.comparison_plots import (  # noqa: F401
 from traval_spark.plans.detector import Detector  # noqa: F401
 from traval_spark.plans.params import TravalParameters  # noqa: F401
 from traval_spark.plans.ruleset import ParamRef, SparkRuleSet, apply_ruleset  # noqa: F401
-from traval_spark.session import get_spark  # noqa: F401
+from traval_spark.session import get_spark, held, hold  # noqa: F401
 
 # drop-in names for code ported from the reference package
 # (/root/reference/traval/__init__.py): `from traval import RuleSet,

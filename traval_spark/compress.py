@@ -672,7 +672,6 @@ def swing_compress(
     val: str = "value",
     ident: str = "event_id",
     value_scale: int = 1000,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Swinging-door trending (SDT) — ERROR-BOUNDED lossy compression,
     the industrial-historian companion to the lossless Gorilla codec
@@ -687,8 +686,9 @@ def swing_compress(
     integer milliseconds, and each candidate point's corridor slopes
     ``(v ± eps - v_anchor) / (t - t_anchor)`` stay RATIONAL PAIRS
     (num, den) compared by cross-multiplication with positive
-    denominators, so door ordering — hence the kept set — is
-    engine-identical bit for bit.  Open doors start at ±infinity,
+    denominators, so door ordering — hence the kept set — is identical
+    bit for bit in the Arrow kernel, the streaming kernel and the
+    DuckDB oracle's fold.  Open doors start at ±infinity,
     encoded as (±1, 0): the cross-multiply comparison handles the
     sentinel with no special case (n*0 < 1*d reduces to 0 < d).
     Magnitude budget: |num| <= value span + eps, den <= series span in
@@ -710,88 +710,63 @@ def swing_compress(
     and the triangle inequality gives 2*eps against the stored segment.
     Pass ``eps_scaled = bound/2`` for a user-facing bound.
 
-    Duplicate timestamps cannot anchor a door (zero denominator), so
-    per (series, t_ms) the LAST row by ``ident`` wins first — one
-    partial-aggregatable ``max_by`` groupBy, deterministic.
+    Rows whose value is NULL or NaN carry no point and are dropped
+    first (the lttb and m4/hist tier rule). Duplicate timestamps cannot
+    anchor a door (zero denominator), so per (series, t_ms) the LAST
+    row by ``ident`` wins next.
 
-    Execution engines (identical semantics, parity-tested, one shared
-    DuckDB oracle): ``engine='arrow'`` (DEFAULT, the production path)
-    runs the door loop per bounded series inside an Arrow
-    ``applyInPandas`` kernel — see :func:`swing_compress_arrow` for why
-    (the JVM fold's kept-array concat is O(n * kept) per series, which
-    degenerates on noisy data where kept ≈ n: 40s vs <1s on a 100k-row
-    noise series).  ``engine='sql'`` keeps the pure-JVM ``aggregate()``
-    fold (the ewma/holt/BPE shape): dedup groupBy -> per-series sorted
-    array -> one fold, zero Python — right when data is slowly-varying
-    (kept << n) or Python workers are unwanted.  Output: one row per
-    KEPT point, ``*by, t_ms, v_i``.
+    Execution: the door loop (:func:`_swing_loop`, shared with the
+    streaming kernel) runs per bounded series inside an Arrow
+    ``applyInPandas`` kernel (the Gorilla pack/unpack precedent —
+    sequential within a series exactly as the algorithm requires,
+    embarrassingly parallel across series). A JVM ``aggregate()`` fold
+    would copy its kept array at every door close, O(n * kept) per
+    series: 40s on a 100k-row noise series where this kernel takes
+    well under a second. Python-int arithmetic is exact at ANY
+    magnitude, so the int64 cross-product budget above only binds the
+    DuckDB oracle. Output: one row per KEPT point, ``*by, t_ms, v_i``.
 
     Reference: traval has no compression; this is north-rule retention
     machinery (BASELINE.json "Gorilla/delta-of-delta compression,
     continuous aggregates" family).
     """
-    if engine == "arrow":
-        return swing_compress_arrow(
-            df, eps_scaled=eps_scaled, by=by, ts=ts, val=val,
-            ident=ident, value_scale=value_scale,
-        )
-    if engine != "sql":
-        raise ValueError(f"unknown engine {engine!r}")
-    from traval_spark.functions.ts import unix_us
+    import pandas as pd
+
+    from traval_spark.functions.ts import ensure_ntz
 
     E = int(eps_scaled)
-    src = df.select(
+    src = ensure_ntz(df, ts).filter(
+        F.col(val).isNotNull() & ~F.isnan(F.col(val))
+    ).select(
         *by,
-        unix_us(F.col(ts)).alias("__u"),
+        F.col(ts).alias("__ts"),
         F.round(F.col(val) * value_scale).cast("long").alias("__v"),
         F.col(ident).alias("__i"),
-    ).select(*by, F.expr("__u div 1000").alias("t"), "__v", "__i")
-    ded = src.groupBy(*by, "t").agg(F.expr("max_by(__v, __i)").alias("v"))
-    arrs = ded.groupBy(*by).agg(
-        F.array_sort(F.collect_list(F.struct("t", "v"))).alias("__arr")
     )
-    # rational corridor slopes of e w.r.t. the standing anchor
-    su_n = f"(e.v + {E} - acc.va)"
-    sd_n = f"(e.v - {E} - acc.va)"
-    den = "(e.t - acc.ta)"
-    u_lt = f"({su_n} * acc.ud < acc.un * {den})"      # su < U ?
-    un1 = f"IF({u_lt}, {su_n}, acc.un)"
-    ud1 = f"IF({u_lt}, {den}, acc.ud)"
-    d_gt = f"({sd_n} * acc.dd > acc.dn * {den})"      # sd > D ?
-    dn1 = f"IF({d_gt}, {sd_n}, acc.dn)"
-    dd1 = f"IF({d_gt}, {den}, acc.dd)"
-    closed = f"({dn1} * {ud1} > {un1} * {dd1})"
-    closed_state = (
-        "named_struct("
-        "'ta', acc.tp, 'va', acc.vp, 'tp', e.t, 'vp', e.v, "
-        f"'un', (e.v + {E} - acc.vp), 'ud', (e.t - acc.tp), "
-        f"'dn', (e.v - {E} - acc.vp), 'dd', (e.t - acc.tp), "
-        "'kept', concat(acc.kept, "
-        "array(named_struct('t', acc.tp, 'v', acc.vp))))"
+    out_fields = ", ".join(
+        f"`{c}` {src.schema[c].dataType.simpleString()}" for c in by
     )
-    open_state = (
-        "named_struct("
-        "'ta', acc.ta, 'va', acc.va, 'tp', e.t, 'vp', e.v, "
-        f"'un', {un1}, 'ud', {ud1}, 'dn', {dn1}, 'dd', {dd1}, "
-        "'kept', acc.kept)"
-    )
-    fold = f"""aggregate(
-      slice(__arr, 2, greatest(size(__arr) - 1, 0)),
-      named_struct(
-        'ta', element_at(__arr, 1).t, 'va', element_at(__arr, 1).v,
-        'tp', element_at(__arr, 1).t, 'vp', element_at(__arr, 1).v,
-        'un', 1L, 'ud', 0L, 'dn', -1L, 'dd', 0L,
-        'kept', array(named_struct('t', element_at(__arr, 1).t,
-                                   'v', element_at(__arr, 1).v))),
-      (acc, e) -> IF({closed}, {closed_state}, {open_state}),
-      acc -> IF(acc.tp = acc.ta, acc.kept,
-                concat(acc.kept,
-                       array(named_struct('t', acc.tp, 'v', acc.vp)))))"""
-    return (
-        arrs.select(*by, F.explode(F.expr(fold)).alias("__k"))
-        .select(*by, F.col("__k")["t"].alias("t_ms"),
-                F.col("__k")["v"].alias("v_i"))
-    )
+    schema = f"{out_fields}, t_ms long, v_i long"
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        # same-ms dedup, last-by-ident wins — keyed on the MS bucket,
+        # not the us instant
+        pdf = pdf.assign(
+            __t=pdf["__ts"].to_numpy("datetime64[us]").astype("int64")
+            // 1000
+        ).sort_values(["__t", "__i"]).drop_duplicates("__t", keep="last")
+        kept, (ta, va, tp, vp, *_rest) = _swing_loop(
+            pdf["__t"].tolist(), pdf["__v"].tolist(), E)
+        if not (tp == ta and vp == va):  # the trailing candidate
+            kept.append((tp, vp))
+        head = {c: pdf.iloc[0][c] for c in by}
+        return pd.DataFrame({
+            **{c: [head[c]] * len(kept) for c in by},
+            "t_ms": np.array([p[0] for p in kept], dtype="int64"),
+            "v_i": np.array([p[1] for p in kept], dtype="int64"),
+        })
+
+    return src.groupBy(*by).applyInPandas(kernel, schema=schema)
 
 
 def swing_reconstruct(
@@ -883,10 +858,11 @@ def _swing_loop(
 ) -> tuple[list[tuple[int, int]], tuple]:
     """The swinging-door state machine on plain Python ints (exact:
     arbitrary precision makes every cross-multiplied door comparison
-    identical to the JVM fold inside its magnitude budget, and valid
-    beyond it).  ONE implementation shared by the Arrow batch kernel
-    below and the streaming applyInPandasWithState kernel
-    (streaming/stateful_rules.py) — the door rules live here once.
+    identical to the DuckDB oracle's fold inside its magnitude budget,
+    and valid beyond it).  ONE implementation shared by the Arrow batch
+    kernel of :func:`swing_compress` and the streaming
+    applyInPandasWithState kernel (streaming/stateful_rules.py) — the
+    door rules live here once.
 
     ``state`` = (ta, va, tp, vp, un, ud, dn, dd) or None for a fresh
     series; input must be strictly increasing in t (callers dedup).
@@ -923,65 +899,3 @@ def _swing_loop(
         tp, vp = t, v
     return kept, (ta, va, tp, vp, un, ud, dn, dd)
 
-
-def swing_compress_arrow(
-    df: DataFrame,
-    eps_scaled: int = 2000,
-    by: tuple[str, ...] = ("source",),
-    ts: str = "ts",
-    val: str = "value",
-    ident: str = "event_id",
-    value_scale: int = 1000,
-) -> DataFrame:
-    """The PRODUCTION execution path for :func:`swing_compress`: the
-    identical door machine as an Arrow ``applyInPandas`` kernel per
-    bounded series (the Gorilla pack/unpack precedent — sequential
-    within a series exactly as the algorithm requires, embarrassingly
-    parallel across series).
-
-    Why not the JVM fold: ``aggregate()``'s kept-array ``concat``
-    copies the accumulated array at every door close, so on NOISY data
-    (kept ≈ n) the fold degenerates to O(n * kept) per series — 40s on
-    a 100k-row noise series where this kernel takes well under a
-    second.  On slowly-varying data (kept << n) the fold is fine; the
-    semantics are identical either way (parity-tested, incl. the
-    same-ms last-by-ident dedup) and the shared DuckDB oracle pins
-    both.  Python-int arithmetic is exact at ANY magnitude, so this
-    path also lifts the fold's documented int64 cross-product budget.
-    """
-    import pandas as pd
-
-    from traval_spark.functions.ts import ensure_ntz
-
-    E = int(eps_scaled)
-    src = ensure_ntz(df, ts).select(
-        *by,
-        F.col(ts).alias("__ts"),
-        F.round(F.col(val) * value_scale).cast("long").alias("__v"),
-        F.col(ident).alias("__i"),
-    )
-    out_fields = ", ".join(
-        f"`{c}` {src.schema[c].dataType.simpleString()}" for c in by
-    )
-    schema = f"{out_fields}, t_ms long, v_i long"
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # same-ms dedup, last-by-ident wins — keyed on the MS bucket
-        # (not the us instant), exactly the SQL path's groupBy(t_ms)
-        # + max_by(v, ident)
-        pdf = pdf.assign(
-            __t=pdf["__ts"].to_numpy("datetime64[us]").astype("int64")
-            // 1000
-        ).sort_values(["__t", "__i"]).drop_duplicates("__t", keep="last")
-        kept, (ta, va, tp, vp, *_rest) = _swing_loop(
-            pdf["__t"].tolist(), pdf["__v"].tolist(), E)
-        if not (tp == ta and vp == va):  # mirror the fold's finish rule
-            kept.append((tp, vp))
-        head = {c: pdf.iloc[0][c] for c in by}
-        return pd.DataFrame({
-            **{c: [head[c]] * len(kept) for c in by},
-            "t_ms": np.array([p[0] for p in kept], dtype="int64"),
-            "v_i": np.array([p[1] for p in kept], dtype="int64"),
-        })
-
-    return src.groupBy(*by).applyInPandas(kernel, schema=schema)

@@ -35,6 +35,8 @@ import json
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from traval_spark.session import held, hold
+
 # a benchmark suite's SHORT items (fewer words/tokens than the shingle
 # k) can't form a k-gram: they fall back to whole-text containment
 # against the corpus via plan-time literals, capped so a mislabeled
@@ -65,7 +67,6 @@ def curate_corpus(
     target_tokens: int = 2048,
     seed: int = 0,
     metrics: dict | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
     """Run the curation chain, returning the packed corpus frame
     (id, source, n_tok, split, pack_id, pack_pos). Stages (each
@@ -109,15 +110,14 @@ def curate_corpus(
     the caller's object, whose cache state stays untouched) and
     released when the next stage is counted. The LAST stage (the narrow
     pre-packing projection — the smallest frame in the chain, and the
-    one the packer's two passes re-read) stays cached; pass ``caches=``
-    a list to receive it for unpersisting after the output is
-    materialized (``main()`` does), or accept one session-lifetime
-    cached narrow frame.
+    one the packer's two passes re-read) stays cached, like the dedup
+    operators' fingerprint and signature frames: all are released by
+    the enclosing ``held()`` (``main()`` wraps the job in one); kept
+    until ``unpersist``/``clearCache`` without one.
 
-    In lazy mode (``metrics=None``) nothing persists and the packer's
-    shard-totals pass recomputes the chain once more — the dedup
-    machinery's internal materialization (persisted pair frames,
-    localCheckpointed components) still only runs once.
+    In lazy mode (``metrics=None``) no stage is counted or cached
+    except that pre-packing projection, which the packer's
+    shard-totals pass would otherwise recompute the whole chain for.
     """
     from traval_spark.operators.dedup import (
         connected_components,
@@ -142,14 +142,11 @@ def curate_corpus(
         # — without this a metrics run holds ~7 full-corpus copies for
         # the life of the session
         if metrics is not None:
-            df = df.select("*").persist()
+            df = hold(df.select("*"))
             metrics[stage] = df.count()
             if prev:
                 prev.pop().unpersist()
             prev.append(df)
-            if caches is not None:
-                caches.clear()
-                caches.append(df)
         return df
 
     cur = note("input", docs)
@@ -289,10 +286,7 @@ def curate_corpus(
         # frame in the chain (4 columns, one row per surviving doc), so
         # cache it in both modes. metrics mode already persists it via
         # note() below.
-        pre = pre.persist()
-        if caches is not None:
-            caches.clear()
-            caches.append(pre)
+        pre = hold(pre)
     pre_pack = note("pre_pack", pre)
     packed = assign_packs(
         pre_pack, target_tokens, by=["split", source_col], id_col=id_col,
@@ -514,33 +508,32 @@ def main() -> None:
     docs = spark.read.parquet(args.input)
     bench = spark.read.parquet(args.benchmark) if args.benchmark else None
     metrics: dict | None = None if args.no_metrics else {}
-    caches: list = []
-    packed = curate_corpus(
-        docs,
-        tokens_col=args.tokens_col,
-        quality=quality,
-        near_dup=not args.no_near_dup,
-        max_hamming=args.max_hamming,
-        trim_spans_k=args.trim_spans_k,
-        benchmark=bench,
-        decontaminate_k=args.decontaminate_k,
-        weights=json.loads(args.weights) if args.weights else None,
-        splits=[(n, f) for n, f in json.loads(args.splits)]
-        if args.splits else None,
-        target_tokens=args.target_tokens,
-        seed=args.seed,
-        metrics=metrics,
-        caches=caches,
-    )
-    write_curated(packed, args.output, metrics)
-    if args.materialize_packs:
-        materialize_curated(
-            packed, docs, args.tokens_col,
-            f"{args.output.rstrip('/')}_packs",
-            sep_token=args.sep_token,
+    # one owner for every cache the job takes: the curation stages and
+    # the dedup operators' fingerprint/signature frames alike
+    with held():
+        packed = curate_corpus(
+            docs,
+            tokens_col=args.tokens_col,
+            quality=quality,
+            near_dup=not args.no_near_dup,
+            max_hamming=args.max_hamming,
+            trim_spans_k=args.trim_spans_k,
+            benchmark=bench,
+            decontaminate_k=args.decontaminate_k,
+            weights=json.loads(args.weights) if args.weights else None,
+            splits=[(n, f) for n, f in json.loads(args.splits)]
+            if args.splits else None,
+            target_tokens=args.target_tokens,
+            seed=args.seed,
+            metrics=metrics,
         )
-    for df in caches:   # release the last cached stage once written
-        df.unpersist()
+        write_curated(packed, args.output, metrics)
+        if args.materialize_packs:
+            materialize_curated(
+                packed, docs, args.tokens_col,
+                f"{args.output.rstrip('/')}_packs",
+                sep_token=args.sep_token,
+            )
     print(json.dumps(metrics, default=str))
 
 

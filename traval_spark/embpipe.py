@@ -30,6 +30,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from traval_spark.session import held, hold
 from traval_spark.sources import fsutil
 
 
@@ -97,10 +98,10 @@ def run(
             .write.mode("overwrite").parquet(f"{out_root}/drift_centroid")
 
     # -- scan 2: centroid training + assignment layout ---------------
-    # persist: kmeans_refine scans once per Lloyd pass and the
+    # cached: kmeans_refine scans once per Lloyd pass and the
     # assignment write + occupancy drift reuse the same frame
-    clean = clean.persist()
-    try:
+    with held():
+        clean = hold(clean)
         cents = kmeans_refine(
             clean, k=n_list, iters=lloyd_iters,
             id_col=id_col, vec_col=vec_col,
@@ -125,8 +126,6 @@ def run(
                 clean, cents, period_col, vec_col=vec_col,
             ).write.mode("overwrite").parquet(
                 f"{out_root}/drift_occupancy")
-    finally:
-        clean.unpersist()
 
     m.update({"n_list": n_list, "lloyd_iters": lloyd_iters,
               "pca_k": pca_k or len(mean), "period_col": period_col})

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from traval_spark.operators.text import fold_hash, kgrams, ws_tokens
+from traval_spark.session import hold
 
 logger = logging.getLogger("traval_spark.dedup")
 
@@ -190,7 +191,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_shingle_df: int | None = 10_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by exact k-gram Jaccard, via inverted-index join.
 
@@ -205,26 +205,22 @@ def ngram_jaccard_pairs(
     undercount (the standard recall/cost trade). Pass None for the exact
     uncapped join.
     """
-    base = docs.select(
+    # the shingled corpus feeds the df-count aggregation AND (via the
+    # self-join below) TWO probe sides; without this the tokenize +
+    # shingle pass runs 3x (self-joins duplicate their input subtree
+    # in the physical plan — see simhash64_dup_pairs)
+    base = hold(docs.select(
         F.col(id_col).alias("doc_id"),
         shingles(F.col(text_col), k).alias("sh"),
-    ).withColumn("n_sh", F.size("sh"))
-    if materialize:
-        # the shingled corpus feeds the df-count aggregation AND (via the
-        # self-join below) TWO probe sides; without this the tokenize +
-        # shingle pass runs 3x (self-joins duplicate their input subtree
-        # in the physical plan — see simhash64_dup_pairs)
-        base = base.persist()
+    ).withColumn("n_sh", F.size("sh")))
     inv = base.select("doc_id", "n_sh", F.explode("sh").alias("shingle"))
     if max_shingle_df is not None:
         df_counts = inv.groupBy("shingle").agg(F.count("*").alias("df"))
-        inv = inv.join(
+        # the capped inverted index is probed by BOTH pair sides;
+        # caching it runs the df-cap shuffle join once instead of twice
+        inv = hold(inv.join(
             df_counts.filter(F.col("df") <= max_shingle_df), on="shingle"
-        )
-        if materialize:
-            # the capped inverted index is probed by BOTH pair sides;
-            # caching it runs the df-cap shuffle join once instead of twice
-            inv = inv.persist()
+        ))
     a = inv.select(
         F.col("shingle"),
         F.col("doc_id").alias("a"),
@@ -356,7 +352,6 @@ def simhash64_dup_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by banded 64-bit SimHash Hamming search.
@@ -367,26 +362,22 @@ def simhash64_dup_pairs(
     Hamming verification via xor + bit_count. Candidate volume is
     O(sum bucket^2) per band; a hot band bucket falls to AQE skew-join.
 
-    ``materialize``: persist the fingerprint frame before the self-join.
-    A self-join duplicates its input subtree in the physical plan (no
-    exchange reuse across a broadcast boundary), so without this the
-    expensive text-hashing aggregation runs TWICE over the corpus;
-    persisting the tiny (id, 2xbigint) frame instead measured 6.7x
-    faster at sf0.1 (21.2s -> 3.1s). At warehouse scale write the
-    fingerprints to a table and join from that. ``persist`` registers
-    the frame in the session's CacheManager, which holds it until it is
-    unpersisted or the session's cache is cleared
-    (``spark.catalog.clearCache()``); dropping the returned plan does not
-    release it.
+    The fingerprint frame is cached (:func:`~traval_spark.session.hold`)
+    before the self-join. A self-join duplicates its input subtree in
+    the physical plan (no exchange reuse across a broadcast boundary),
+    so without the cache the expensive text-hashing aggregation runs
+    TWICE over the corpus; caching the tiny (id, 2xbigint) frame
+    instead measured 6.7x faster at sf0.1 (21.2s -> 3.1s). At warehouse
+    scale write the fingerprints to a table and join from that. The
+    cache is released by the enclosing ``held()``; kept until
+    ``unpersist``/``clearCache`` without one.
 
     ``max_bucket_size``: bound the worst-case hot band bucket (see
     :func:`_cap_bucket_size`) — drops oversize buckets with a logged
     disclosure count instead of leaving a degenerate f^2 self-join to
     AQE. Default None = exact (every candidate pair generated).
     """
-    fp = with_simhash64(docs, text_col, id_col)
-    if materialize:
-        fp = fp.persist()
+    fp = hold(with_simhash64(docs, text_col, id_col))
     bands = _simhash64_bands(fp, id_col)
     if max_bucket_size is not None:
         bands = _cap_bucket_size(bands, ["band", "key"], max_bucket_size,
@@ -418,7 +409,6 @@ def simhash64_incremental_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
     max_bucket_size: int | None = None,
     new_fp: DataFrame | None = None,
 ) -> DataFrame:
@@ -444,13 +434,11 @@ def simhash64_incremental_pairs(
     (id, fp_lo, fp_hi) frame in precomputed when the caller also needs
     it (e.g. to append it to the corpus store — the streaming sink does)
     so the expensive text-hash aggregation runs once, not twice; the
-    caller owns its persistence then (``materialize`` is ignored).
+    caller owns its persistence then.
     """
     if new_fp is None:
-        new_fp = with_simhash64(new_docs, text_col, id_col)
-        if materialize:
-            # probed once per band side; keeps the text-hash agg single-run
-            new_fp = new_fp.persist()
+        # probed once per band side; keeps the text-hash agg single-run
+        new_fp = hold(with_simhash64(new_docs, text_col, id_col))
     all_fp = corpus_fp.select(id_col, "fp_lo", "fp_hi").unionByName(new_fp)
 
     probe = _simhash64_bands(new_fp, id_col).select(
@@ -513,7 +501,6 @@ def minhash_incremental_pairs(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Banded-MinHash candidate pairs for a NEW batch against an existing
@@ -530,9 +517,9 @@ def minhash_incremental_pairs(
     (the oracle relation). After the run, append the new signatures to
     the corpus table; the corpus never re-shingles.
     """
-    new_sig = with_minhash(new_docs, text_col, id_col, n_hashes=b * r, k=k)
-    if materialize:
-        new_sig = new_sig.persist()  # probe side AND a union leg of build
+    # probe side AND a union leg of build
+    new_sig = hold(
+        with_minhash(new_docs, text_col, id_col, n_hashes=b * r, k=k))
     sig_cols = [f"sig_{i}" for i in range(b * r)]
     all_sig = corpus_sig.select(id_col, *sig_cols).unionByName(new_sig)
 
@@ -562,7 +549,6 @@ def lsh_banded_pairs(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash LSH candidate pairs with explicit (b, r) banding.
@@ -574,16 +560,16 @@ def lsh_banded_pairs(
     (band_idx, md5(sig_i..sig_{i+r-1})) so each band joins independently;
     pairs are distinct-ed across bands.
 
-    ``materialize``: persist the (id, b*r ints) signature frame before
-    the self-join — same double-computation trap as simhash64_dup_pairs
-    (the shingle+minhash aggregation would otherwise run twice).
+    The (id, b*r ints) signature frame is cached before the self-join
+    — same double-computation trap as simhash64_dup_pairs (the
+    shingle+minhash aggregation would otherwise run twice).
 
     ``max_bucket_size``: bound the worst-case hot band bucket with a
     logged disclosure count (see :func:`_cap_bucket_size`); None = exact.
     """
     sig = with_minhash(docs, text_col, id_col, n_hashes=b * r, k=k)
-    return _banded_pairs_from_sig(sig, id_col, b, r, materialize,
-                                  max_bucket_size, "lsh_banded_pairs")
+    return _banded_pairs_from_sig(sig, id_col, b, r, max_bucket_size,
+                                  "lsh_banded_pairs")
 
 
 def _banded_pairs_from_sig(
@@ -591,18 +577,15 @@ def _banded_pairs_from_sig(
     id_col: str,
     b: int,
     r: int,
-    materialize: bool,
     max_bucket_size: int | None,
     what: str,
 ) -> DataFrame:
     """(a, b) candidate pairs from a MinHash signature frame via (b, r)
     banding — the join tail shared by the word-shingle and token-shingle
-    banded searches (``materialize`` persists the signature frame so the
+    banded searches (the signature frame is cached so the
     shingle+minhash aggregation doesn't run twice through the self-join's
     duplicated input subtree)."""
-    if materialize:
-        sig = sig.persist()
-    bands = _minhash_bands(sig, id_col, b, r)
+    bands = _minhash_bands(hold(sig), id_col, b, r)
     if max_bucket_size is not None:
         bands = _cap_bucket_size(bands, ["band", "key"], max_bucket_size,
                                  what)
@@ -624,7 +607,6 @@ def token_lsh_banded_pairs(
     k: int = 3,
     tokens_col: str = "tokens",
     id_col: str = "doc_id",
-    materialize: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash LSH candidate pairs over k-TOKEN shingles of a
@@ -634,8 +616,8 @@ def token_lsh_banded_pairs(
     Same banding, persistence, and hot-bucket-cap machinery; only the
     shingle source differs (:func:`token_shingles`)."""
     sig = with_minhash_tokens(seqs, tokens_col, id_col, n_hashes=b * r, k=k)
-    return _banded_pairs_from_sig(sig, id_col, b, r, materialize,
-                                  max_bucket_size, "token_lsh_banded_pairs")
+    return _banded_pairs_from_sig(sig, id_col, b, r, max_bucket_size,
+                                  "token_lsh_banded_pairs")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -869,7 +851,7 @@ def duplicated_spans(
     # probe; the window transform's lambda variables defeat exchange
     # canonicalization (no ReusedExchange), so persist it — one window
     # explosion + md5 pass instead of two (the dsir_weights finding)
-    win = _window_grams(seqs, k, tokens_col, id_col).persist()
+    win = hold(_window_grams(seqs, k, tokens_col, id_col))
     dup = (
         win.groupBy("gram")
         .agg(F.count("*").alias("__c"))
@@ -939,7 +921,7 @@ def duplicated_spans_incremental(
     shape of the whole incremental family."""
     # persist: the batch window index feeds the within-batch census AND
     # the probe join (see duplicated_spans)
-    win = _window_grams(new_seqs, k, tokens_col, id_col).persist()
+    win = hold(_window_grams(new_seqs, k, tokens_col, id_col))
     batch_dup = (
         win.groupBy("gram")
         .agg(F.count("*").alias("__c"))
@@ -1373,7 +1355,7 @@ def cluster_cohesion(
     """
     # the fingerprint frame is joined twice (member side + root side);
     # persist so the SimHash fold over the corpus text runs once
-    fp = with_simhash64(docs, text_col, id_col).persist()
+    fp = hold(with_simhash64(docs, text_col, id_col))
     mem = clusters.filter(F.col(id_col) != F.col("cluster"))
     rfp = fp.select(
         F.col(id_col).alias("cluster"),

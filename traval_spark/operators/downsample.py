@@ -78,6 +78,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from traval_spark.functions.ts import gap_micros, unix_us
+from traval_spark.session import hold
 
 __all__ = [
     "m4_downsample", "m4_merge", "m4_aggs", "m4_project",
@@ -240,7 +241,7 @@ def lttb_downsample(
     # persist the 1-row global-min scalar: ``src`` is consumed twice
     # (bucket sums + the join back), and each evaluation would re-run
     # the full raw min-scan embedded in the cross join
-    gmin = df.select(F.min(unix_us(F.col(ts))).alias("__g0")).persist()
+    gmin = hold(df.select(F.min(unix_us(F.col(ts))).alias("__g0")))
     # carry the ABSOLUTE microsecond alongside the g0-relative __x: the
     # final projection then reads t_sel straight off the row
     # (timestamp_micros(__us) == timestamp_micros(__x + g0), an exact

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from traval_spark.session import hold
+
 
 # -- n-gram counting ----------------------------------------------------------
 
@@ -112,7 +114,7 @@ def lm_score(
         # higher-order lambdas that defeat exchange canonicalization,
         # so without an explicit persist the corpus is re-exploded and
         # re-counted once per consumer (the dsir_weights finding)
-        model = ngram_counts(seqs, n, tokens_col, id_col).persist()
+        model = hold(ngram_counts(seqs, n, tokens_col, id_col))
     prefix_counts = model.groupBy("prefix").agg(
         F.sum("cnt").alias("c_prefix"))
     vocab = (
@@ -220,10 +222,10 @@ def bpe_train(
     rewrite the working corpus with one fold pass.  Returns (merges,
     rewritten corpus).  One shuffle + one 1-row collect per iteration;
     the working frame is cached across iterations and uncached when
-    replaced (the standard iterative-algorithm persist chain)."""
+    replaced (the standard iterative-algorithm persist chain); the last
+    one is released by the enclosing ``held()``."""
     merges: list[tuple[int, int, int]] = []
     cur = seqs
-    cached = None
     for step in range(int(n_merges)):
         top = (
             bpe_pair_counts(cur, tokens_col, id_col)
@@ -236,13 +238,12 @@ def bpe_train(
         a, b = int(top[0]["p"]), int(top[0]["w"])
         c = int(vocab_base) + step
         merges.append((a, b, c))
-        nxt = cur.withColumn(
-            tokens_col, merge_pair(F.col(tokens_col), a, b, c)
-        ).persist()
+        nxt = hold(cur.withColumn(
+            tokens_col, merge_pair(F.col(tokens_col), a, b, c)))
         nxt.count()  # materialize before dropping the previous cache
-        if cached is not None:
-            cached.unpersist()
-        cur, cached = nxt, nxt
+        if cur is not seqs:
+            cur.unpersist()
+        cur = nxt
     return merges, cur
 
 
@@ -390,12 +391,12 @@ def dsir_weights(
     # with an explicit persist.  This is within-plan reuse of the
     # current input, not cross-run result caching; both frames are
     # bounded (docs x <= B cells, <= B cells).
-    db = grams(corpus, True).groupBy(id_col, "b").agg(
-        F.count(F.lit(1)).alias("n_db")).persist()
+    db = hold(grams(corpus, True).groupBy(id_col, "b").agg(
+        F.count(F.lit(1)).alias("n_db")))
     raw = db.groupBy("b").agg(
         F.sum("n_db").cast("decimal(38,0)").alias("r_b"))
-    tgt = grams(target, False).groupBy("b").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("t_b")).persist()
+    tgt = hold(grams(target, False).groupBy("b").agg(
+        F.count(F.lit(1)).cast("decimal(38,0)").alias("t_b")))
     rt = raw.agg(F.sum("r_b").alias("rtot"))
     tt = tgt.agg(F.coalesce(F.sum("t_b"), F.lit(0))
                  .cast("decimal(38,0)").alias("ttot"))

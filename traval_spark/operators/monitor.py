@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from traval_spark.functions.ts import gap_micros, unix_us
+from traval_spark.session import hold
 
 __all__ = [
     "counter_windows", "gap_stats", "cusum_changepoint",
@@ -130,8 +131,7 @@ def bucket_count_signal(
         # groupBy (the ONLY raw work a monitor does) runs once per
         # reference, because lambda-free canonicalization can't be
         # relied on across these branches
-        counts = src.groupBy("g", "h").agg(
-            F.count("*").alias("c")).persist()
+        counts = hold(src.groupBy("g", "h").agg(F.count("*").alias("c")))
     counts = counts.filter(F.col("g").isNotNull())
     span = counts.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
     spine = (
@@ -140,12 +140,14 @@ def bucket_count_signal(
         .select("g", F.explode(F.sequence("h0", "h1")).alias("h"))
     )
     # every monitor references the returned signal several times (lag
-    # windows, tie censuses, pair joins); persist it so the signal is
+    # windows, tie censuses, pair joins); cache it so the signal is
     # materialized once per evaluation — it is the tiny (|series| x
-    # span) frame, the design already relies on it being cheap
-    return spine.join(counts, ["g", "h"], "left").select(
+    # span) frame, the design already relies on it being cheap. Both
+    # caches are released by the enclosing held(); kept until
+    # unpersist/clearCache without one
+    return hold(spine.join(counts, ["g", "h"], "left").select(
         "g", "h", F.coalesce("c", F.lit(0)).alias("c")
-    ).persist()
+    ))
 
 
 def counts_from_tier(
@@ -3083,12 +3085,12 @@ def fleet_report(
     this whole report costs one scan of the tier, never ten scans of
     raw.
 
-    Caching, as it stands: each ``counts=``-fed monitor re-zero-fills
-    the signal through :func:`bucket_count_signal` and persists that
-    copy (identical plans share one cache entry), so one run leaves
-    three persisted frames — the raw count frame, the signal and its
-    re-zero-filled copy — in the session's CacheManager until
-    ``unpersist()`` or ``spark.catalog.clearCache()``.
+    Caching: each ``counts=``-fed monitor re-zero-fills the signal
+    through :func:`bucket_count_signal` and caches that copy (identical
+    plans share one cache entry), so one run holds three frames — the
+    raw count frame, the signal and its re-zero-filled copy. They are
+    released by the enclosing ``held()``; kept until
+    ``unpersist``/``clearCache`` without one.
 
     Monitors that emit nothing for degenerate series (hurst on
     all-constant, runs on all-tied) contribute NULL columns via left

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from traval_spark.operators.text import FOLD_MOD
+from traval_spark.session import hold
 
 
 def _fold_hash_py(s: str) -> int:
@@ -441,13 +442,11 @@ def cosine_dup_pairs(
     materializes if ANY table buckets it together (OR across tables,
     distinct pairs) — recall 1-(1-p)^L for per-table collision
     probability p, at L bucket joins of cost. The bucketed frame carries
-    all L bucket ids from one pass and is persisted before the
-    self-joins (a self-join duplicates its input subtree — the round-2
-    dedup lesson), so every action on the returned plan reuses it.
-    ``persist`` registers the frame in the session's CacheManager, which
-    holds it until it is unpersisted or the session's cache is cleared
-    (``spark.catalog.clearCache()``); dropping or materializing the
-    returned plan does not release it."""
+    all L bucket ids from one pass and is cached before the self-joins
+    (a self-join duplicates its input subtree — the round-2 dedup
+    lesson), so every action on the returned plan reuses it. The cache
+    is released by the enclosing ``held()``; kept until
+    ``unpersist``/``clearCache`` without one."""
     # norm stays higher-order: the bucketed path's projection also
     # carries the HOF bucket expressions, so it is interpreted either
     # way, and an unrolled chain evaluates SLOWER interpreted than the
@@ -513,7 +512,7 @@ def cosine_dup_pairs(
     # rows, and the vectors are re-attached afterwards from the (small,
     # persisted) base frame — decide with small rows, move big rows
     # once (guide §8 / §2.3 "shuffle keys instead of payloads")
-    base = base.persist()
+    base = hold(base)
     per_table = []
     for t in range(int(n_tables)):
         key = f"bucket_{t}"

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from traval_spark.session import hold
+
 #: portable polynomial char hash modulus (fits int64 under acc*31+127)
 FOLD_MOD = 1_000_000_007
 
@@ -667,14 +669,13 @@ def source_overlap(
     # the distinct shingle frame feeds BOTH self-join sides and the
     # size census; persist so the corpus is shingled once, not three
     # times (lambda-bearing subtrees defeat exchange reuse)
-    sh = (
+    sh = hold(
         docs.select(
             F.col(by).alias("g"),
             F.explode(kgrams(ws_tokens(F.col(text_col)), k)).alias("sh"),
         )
         .filter(F.col("sh").isNotNull())
         .distinct()
-        .persist()
     )
     sizes = sh.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("g").alias("a"), "sh")

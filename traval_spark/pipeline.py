@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from traval_spark.compress import pack_tier
 from traval_spark.plans.ruleset import SparkRuleSet, apply_ruleset
 from traval_spark.rollup import gap_fill, rollup_cascade, salted_rollup
-from traval_spark.session import get_spark
+from traval_spark.session import get_spark, held, hold
 from traval_spark.sources.synth import synth_sequences
 from traval_spark.sources.tierstore import TierStore, partition_fingerprints
 
@@ -400,30 +400,31 @@ def run(
 
         # kmv + m4 + fl share the grouping key, so their leaves come
         # out of ONE pass over the landed cleaned frame; the combined
-        # frame is tier-scale, persisted so the three store writes do
-        # not re-run the pass. hist groups by (source, bucket, bin) —
-        # its own (column-pruned) pass.
-        combined = combined_sketch_leaf(cleaned).persist()
-        leaves = split_combined_leaf(combined)
-        for kind, leaf, casc in (
-            ("kmv", leaves["kmv"], distinct_cascade),
-            ("hist", hist_tier(cleaned, "1m"), hist_cascade),
-            ("m4", leaves["m4"],
-             lambda cur, t: m4_merge(cur, t, bucket_col="bucket")),
-            ("fl", leaves["fl"], fl_cascade),
-        ):
-            sub = TierStore(os.path.join(out_root, kind))
-            cur = leaf
-            for tname in ("1m", "1h", "1d"):
-                if tname != "1m":
-                    cur = casc(cur, tname)
-                res, _, skipped = _land(sub, tname, cur, resume)
-                metrics["partitions"][f"{kind}_{tname}"] = res[
-                    "written_partitions"]
-                metrics["rows"][f"{kind}_{tname}"] = res["rows"]
-                metrics["skipped"][f"{kind}_{tname}"] = skipped
-                cur = _stored(sub, tname, spark)
-        combined.unpersist()
+        # frame is tier-scale, cached so the three store writes do
+        # not re-run the pass (and released when they are done, or
+        # fail). hist groups by (source, bucket, bin) — its own
+        # (column-pruned) pass.
+        with held():
+            combined = hold(combined_sketch_leaf(cleaned))
+            leaves = split_combined_leaf(combined)
+            for kind, leaf, casc in (
+                ("kmv", leaves["kmv"], distinct_cascade),
+                ("hist", hist_tier(cleaned, "1m"), hist_cascade),
+                ("m4", leaves["m4"],
+                 lambda cur, t: m4_merge(cur, t, bucket_col="bucket")),
+                ("fl", leaves["fl"], fl_cascade),
+            ):
+                sub = TierStore(os.path.join(out_root, kind))
+                cur = leaf
+                for tname in ("1m", "1h", "1d"):
+                    if tname != "1m":
+                        cur = casc(cur, tname)
+                    res, _, skipped = _land(sub, tname, cur, resume)
+                    metrics["partitions"][f"{kind}_{tname}"] = res[
+                        "written_partitions"]
+                    metrics["rows"][f"{kind}_{tname}"] = res["rows"]
+                    metrics["skipped"][f"{kind}_{tname}"] = skipped
+                    cur = _stored(sub, tname, spark)
 
     # gap-filled + packed views of the 1m tier
     dense = gap_fill(t1m, "1m", method=gapfill_method)

@@ -27,13 +27,33 @@ Configuration rationale (SURVEY.md §4.2):
   sql.dataFrameDebugging.enabled": "true"}`` to turn it back on
   (PySpark reads it once per process, at the first Column call with
   an active session).
+
+Operator caches have one owner. Every operator that reads one of its
+intermediate frames more than once caches it through :func:`hold`, and
+the caller decides when those caches go by running the consuming
+actions inside ``with held():``. On exit the scope unpersists every
+frame held inside it, by the caller or by any operator it called. A
+frame belongs to the innermost open scope. Without a scope a held frame
+stays cached until ``unpersist()`` or ``spark.catalog.clearCache()``,
+exactly as a bare ``persist()``. Operators return lazy frames, so only
+the caller knows when the last action on them has run: that is why the
+release is a scope around the actions and not a handle the operator
+returns.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
+from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# one scope stack per thread: a streaming foreachBatch body runs on its
+# own callback thread, and its scope must not collect the frames of a
+# scope the driver thread has open
+_scopes = threading.local()
 
 
 def get_spark(
@@ -99,3 +119,29 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at Spark's default level, owned by the innermost
+    open :func:`held` scope; outside any scope, a plain persist."""
+    df = df.persist()
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(df)
+    return df
+
+
+@contextmanager
+def held() -> Iterator[None]:
+    """Unpersist, on exit, every frame :func:`hold` cached inside this
+    scope and not inside a nested one. Spark keys its cache by plan, so
+    the release also drops an equal plan cached elsewhere."""
+    stack = _scopes.__dict__.setdefault("stack", [])
+    frames: list[DataFrame] = []
+    stack.append(frames)
+    try:
+        yield
+    finally:
+        stack.pop()
+        for df in frames:
+            df.unpersist()

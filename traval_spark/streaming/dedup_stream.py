@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from traval_spark.session import held, hold
 from traval_spark.streaming.rollup_stream import (
     _hadoop_exists,
     _hadoop_touch,
@@ -98,27 +99,26 @@ def dedup_upsert_batch(
     fdir = f"{store_root}/fp/qid={run_id or 'default'}/batch_id={batch_id}"
 
     # fingerprints computed once, shared by the probe (passed via
-    # new_fp=) and the corpus append
-    new_fp = with_simhash64(batch_df, text_col, id_col).persist()
-
-    if not _hadoop_exists(s, f"{pdir}/_COMMITTED"):
-        pairs = simhash64_incremental_pairs(
-            batch_df,
-            _corpus_fp(s, store_root, id_col),
-            max_hamming=max_hamming,
-            text_col=text_col,
-            id_col=id_col,
-            new_fp=new_fp,
-        )
-        # no batch_id data column: the qid=/batch_id= directory keys are
-        # partition columns on any basePath read, and a duplicate data
-        # column would collide with them
-        pairs.write.mode("overwrite").parquet(pdir)
-        _hadoop_touch(s, f"{pdir}/_COMMITTED")
-    if not _hadoop_exists(s, f"{fdir}/_COMMITTED"):
-        new_fp.write.mode("overwrite").parquet(fdir)
-        _hadoop_touch(s, f"{fdir}/_COMMITTED")
-    new_fp.unpersist()
+    # new_fp=) and the corpus append; released when the batch is done
+    with held():
+        new_fp = hold(with_simhash64(batch_df, text_col, id_col))
+        if not _hadoop_exists(s, f"{pdir}/_COMMITTED"):
+            pairs = simhash64_incremental_pairs(
+                batch_df,
+                _corpus_fp(s, store_root, id_col),
+                max_hamming=max_hamming,
+                text_col=text_col,
+                id_col=id_col,
+                new_fp=new_fp,
+            )
+            # no batch_id data column: the qid=/batch_id= directory keys
+            # are partition columns on any basePath read, and a duplicate
+            # data column would collide with them
+            pairs.write.mode("overwrite").parquet(pdir)
+            _hadoop_touch(s, f"{pdir}/_COMMITTED")
+        if not _hadoop_exists(s, f"{fdir}/_COMMITTED"):
+            new_fp.write.mode("overwrite").parquet(fdir)
+            _hadoop_touch(s, f"{fdir}/_COMMITTED")
 
 
 def run_streaming_dedup(

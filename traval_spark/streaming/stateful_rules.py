@@ -113,7 +113,8 @@ def _kernel(
     (ts, ident) — by ts alone when the stream carries no ident — and
     hand ``step(carried, ts_us, idents, values)`` the in-order rows.
     ``carried`` is the state tuple, or None for a series' first batch;
-    ``step`` returns (output columns or None, new state tuple).
+    ``step`` returns (output columns or None, new state tuple or None
+    to leave the state as it is).
 
     ``tail(carried)`` gives the carried (ts_us, ident) order key. Once
     state exists, a row at or before it is late: with ``late_code`` it
@@ -157,7 +158,8 @@ def _kernel(
                 return
 
         cols, new_state = step(carried, ts, ids, vals)
-        state.update(new_state)
+        if new_state is not None:
+            state.update(new_state)
         if cols is not None:
             yield pd.DataFrame({"source": key[0], **cols})
 
@@ -645,11 +647,12 @@ SWING_STATE_SCHEMA = (
 
 def make_swing_state_func(eps_scaled: int, value_scale: int = 1):
     """applyInPandasWithState kernel for STREAMING swinging-door
-    compression — identical exact-integer door state machine as the
-    batch ``compress.swing_compress`` fold (rational slopes compared by
-    cross-multiplication; Python ints are arbitrary-precision, so the
-    comparisons are exact by construction, same verdicts as the JVM
-    fold inside its documented magnitude budget).
+    compression — the batch ``compress.swing_compress`` kernel's door
+    state machine, :func:`~traval_spark.compress._swing_loop` (rational
+    slopes compared by cross-multiplication; Python ints are
+    arbitrary-precision, so the comparisons are exact by construction,
+    same verdicts as the DuckDB oracle's fold inside its documented
+    magnitude budget).
 
     Emission contract: an anchor row is emitted THE MOMENT its doors
     close (plus the series' first point, always kept, on arrival);
@@ -660,20 +663,24 @@ def make_swing_state_func(eps_scaled: int, value_scale: int = 1):
     would emit the pending point on state timeout; deliberately not
     wired here to keep replay idempotent.
 
-    Same-ms rule: within one micro-batch, rows sort by (ms, ident) with
-    NULL idents last and the last row of each ms is kept, the batch
-    kernel's last-by-ident dedup.  Late rule: rows at or before the
-    carried candidate's ms are dropped inside the door loop, disclosed
-    (a late row can't reopen doors that already advanced past its
-    instant, nor replace a candidate a past batch chose).  State is
-    O(1): the 8-tuple of door integers.
+    NULL rule: a row whose value is NULL or NaN is dropped first, as in
+    the batch kernel. Same-ms rule: within one micro-batch, rows sort by
+    (ms, ident) with NULL idents last and the last row of each ms is
+    kept, the batch kernel's last-by-ident dedup.  Late rule: rows at
+    or before the carried candidate's ms are dropped inside the door
+    loop, disclosed (a late row can't reopen doors that already
+    advanced past its instant, nor replace a candidate a past batch
+    chose).  State is O(1): the 8-tuple of door integers.
     """
     E = int(eps_scaled)
 
     def step(carried, ts, ids, vals):
+        ok = ~np.isnan(vals)
+        if not ok.any():
+            return None, None
         pts = pd.DataFrame({
-            "t": ts // 1000, "i": ids,
-            "v": _round_half_away(vals * value_scale).astype("int64"),
+            "t": ts[ok] // 1000, "i": ids[ok],
+            "v": _round_half_away(vals[ok] * value_scale).astype("int64"),
         }).sort_values(["t", "i"]).drop_duplicates("t", keep="last")
         kept, new_state = _swing_loop(
             pts["t"].tolist(), pts["v"].tolist(), E,
