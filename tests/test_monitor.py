@@ -607,6 +607,38 @@ def test_ks_hand_value_and_identical_zero(spark):
     assert r1["ks_d"] == 1.0 and r1["drifted"] == 1
 
 
+def test_two_sample_family_drops_null_by_keys(spark):
+    """A NULL ``by`` key belongs to no series: identical snapshots give
+    KS D = 0 for the keyed group, and the NULL group is absent from
+    ``*_from_hists``, ``*_drift`` and ``drift_report`` alike (its bins
+    once appeared twice, each zero-filled on one side, so identical
+    NULL-keyed snapshots read D = 0.5)."""
+    from traval_spark.operators.monitor import (
+        drift_report,
+        ks_drift,
+        ks_from_hists,
+        psi_from_hists,
+    )
+
+    def counts(cname):
+        return spark.createDataFrame(
+            [("x", 1, 5), ("x", 2, 5), (None, 1, 5), (None, 2, 5)],
+            f"source string, bin long, {cname} long")
+
+    ha, hb = counts("ca"), counts("cb")
+    rows = ks_from_hists(ha, hb).collect()
+    assert [(r["source"], r["ks_d"]) for r in rows] == [("x", 0.0)]
+    assert [r["source"] for r in psi_from_hists(ha, hb).collect()] == ["x"]
+
+    raw = spark.createDataFrame(
+        [(s, float(v)) for s in ("x", None) for v in (1, 1, 2, 2)],
+        "source string, value double")
+    assert [(r["source"], r["ks_d"]) for r in
+            ks_drift(raw, raw).collect()] == [("x", 0.0)]
+    rep = drift_report(raw, raw).collect()
+    assert [(r["source"], r["ks_d"]) for r in rep] == [("x", 0.0)]
+
+
 def test_ks_served_from_hist_tier_equals_direct(spark):
     """KS read off the STORED hist tier (per-period bin counts summed
     from 1m tier rows) == direct ks_drift on raw — PSI's tier-served

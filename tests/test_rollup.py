@@ -1515,6 +1515,62 @@ def test_routed_fl_reads(spark, seqs, tmp_path):
     assert dense.filter(F.col("locf_val").isNull()).count() == 0
 
 
+def _routed_kind_builders():
+    """kind -> (router reader name, the kind's batch leaf builder
+    ``build(raw_df, tier)`` with the reader's default parameters)."""
+    from traval_spark.hist import dds_tier, hist_tier
+    from traval_spark.operators.downsample import m4_downsample
+    from traval_spark.rollup import fl_rollup
+    from traval_spark.sketch import bloom_tier, cms_tier, distinct_tier
+
+    return {
+        "distinct": ("read_routed_distinct",
+                     lambda df, t: distinct_tier(df, t, "n_tok")),
+        "hist": ("read_routed_hist", lambda df, t: hist_tier(df, t)),
+        "dds": ("read_routed_dds",
+                lambda df, t: dds_tier(df, t, value_col="n_tok")),
+        "cms": ("read_routed_cms",
+                lambda df, t: cms_tier(df, t, key_col="n_tok")),
+        "bloom": ("read_routed_bloom",
+                  lambda df, t: bloom_tier(df, t, key_col="n_tok")),
+        "m4": ("read_routed_m4",
+               lambda df, t: m4_downsample(df, bucket=t, val="n_tok",
+                                           bucket_col="bucket")),
+        "fl": ("read_routed_fl", lambda df, t: fl_rollup(df, t)),
+    }
+
+
+@pytest.mark.parametrize(
+    "kind", ["distinct", "hist", "dds", "cms", "bloom", "m4", "fl"])
+def test_routed_kind_reads_serve_raw_segment(spark, seqs, tmp_path, kind):
+    """Each kind reader over a store whose 'raw' tier covers the newest
+    day: the plan serves the older days from the stored 1h tier and the
+    newest from ``raw=``, and the stitched read equals the kind's batch
+    leaf builder run on raw at the requested resolution."""
+    from traval_spark import router
+
+    reader, build = _routed_kind_builders()[kind]
+    days = sorted(
+        r["d"] for r in seqs.select(
+            F.col("ts").cast("date").cast("string").alias("d")
+        ).distinct().collect()
+    )
+    assert len(days) >= 2
+    day = F.col("ts").cast("date").cast("string")
+    store = TierStore(str(tmp_path / kind))
+    store.write_tier("1h", build(seqs.filter(day != days[-1]), "1h"))
+    store.write_tier("raw", seqs.filter(day == days[-1]).select(
+        "source", F.col("ts").alias("bucket"), "n_tok"))
+
+    plan = router.route_plan(router.coverage_of(store), "1h")
+    assert [s.tier for s in plan.segments] == ["1h", "raw"]
+    got = getattr(router, reader)(store, "1h", spark=spark, raw=seqs,
+                                  strict=True)
+    want = build(seqs, "1h")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_sliding_from_tier_equals_raw_sliding(spark, seqs):
     """Sliding windows served from the stored 1m tier are identical to
     the raw-built sliding rollup — every measure is mergeable over the

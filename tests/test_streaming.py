@@ -1158,6 +1158,27 @@ def test_stream_cms_1m_matches_batch(spark, tmp_path):
     assert est.filter(F.col("est") < 0).count() == 0
 
 
+def test_stream_cms_1m_width_guard_raises_before_query(spark, tmp_path):
+    """A count-min width above 2^31 does not fit the int cell column:
+    the streaming leaf raises the same ValueError as cms_tier while the
+    plan is built, before any streaming query starts (it once built
+    without error and died with CAST_OVERFLOW at run time)."""
+    import pytest
+
+    from traval_spark.sketch import cms_tier
+    from traval_spark.streaming.rollup_stream import stream_cms_1m
+
+    inp = str(tmp_path / "win")
+    seqs = synth_sequences(spark, 20, seed=5, span_days=1)
+    seqs.write.parquet(inp)
+    with pytest.raises(ValueError, match="exceeds 2\\^31"):
+        cms_tier(seqs, "1m", key_col="n_tok", width=2**32)
+    before = len(spark.streams.active)
+    with pytest.raises(ValueError, match="exceeds 2\\^31"):
+        stream_cms_1m(spark, inp, key_col="n_tok", width=2**32)
+    assert len(spark.streams.active) == before
+
+
 def test_stream_bloom_1m_matches_batch(spark, tmp_path):
     """Streaming Bloom leaf == batch bloom_tier on every finalized
     window (same hash ladder, same long-form set-bit rows), and the

@@ -27,11 +27,18 @@ every requested quantile.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from traval_spark.functions.ts import ensure_ntz
 from traval_spark.rollup import TIERS
+
+
+def hist_bin(v: Column, scale: int = 1) -> Column:
+    """THE histogram bin, ``round(v * scale)`` as long — shared by every
+    histogram tier, pane and drift snapshot, batch and streaming, so
+    they all bin identically and merge."""
+    return F.round(v * scale).cast("long")
 
 
 def hist_tier(
@@ -50,7 +57,7 @@ def hist_tier(
     unit, _ = TIERS[tier]
     df = ensure_ntz(df, ts_col)
     bucket = F.date_trunc(unit, F.col(ts_col)).cast("timestamp_ntz")
-    b = F.round(F.col(value_col) * scale).cast("long")
+    b = hist_bin(F.col(value_col), scale)
     return (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col("source"), bucket.alias("bucket"), b.alias("bin"))
@@ -296,7 +303,7 @@ def sliding_hist_quantiles(
     pane = (
         F.floor(unix_us(F.col(ts_col)) / F.lit(s_us)) * F.lit(s_us)
     ).alias("__pane_us")
-    b = F.round(F.col(value_col) * scale).cast("long")
+    b = hist_bin(F.col(value_col), scale)
     panes = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col("source"), pane, b.alias("bin"))
@@ -549,7 +556,7 @@ def robust_outliers(
     stats = hist_mad(hist_df, scale=1)  # bin units: exact arithmetic
     df = ensure_ntz(df, ts_col)
     bucket = F.date_trunc(unit, F.col(ts_col)).cast("timestamp_ntz")
-    b = F.round(F.col(value_col) * scale).cast("long")
+    b = hist_bin(F.col(value_col), scale)
     raw = df.filter(F.col(value_col).isNotNull()).select(
         F.col(ident), "source", F.col(ts_col).alias("ts"),
         F.col(value_col).alias("value"),

@@ -98,20 +98,27 @@ def _bucket_start_us(ts_col, gus: int):
 
 def m4_aggs() -> list:
     """The M4 aggregate list over prepared ``__us``/``__v`` columns —
-    shared by the batch operator and the streaming 1m leaf so the tie
-    rules cannot drift between the two."""
+    shared by the batch operator, the streaming 1m leaf and the
+    pipeline's combined leaf so the tie rules cannot drift between
+    them.  Rows with a NULL ``__v`` are masked out of every aggregate
+    (a bucket of only such rows has ``n_points`` 0 and NULL extremes);
+    the batch operator and the stream drop them up front anyway."""
+    nn = F.col("__v").isNotNull()
+    us = F.when(nn, F.col("__us"))
+    uv = F.when(nn, F.struct("__us", "__v"))
+    vu = F.when(nn, F.struct("__v", "__us"))
     return [
-        F.count("*").alias("n_points"),
-        F.min("__us").alias("__t_first_us"),
-        F.max("__us").alias("__t_last_us"),
+        F.count("__v").alias("n_points"),
+        F.min(us).alias("__t_first_us"),
+        F.max(us).alias("__t_last_us"),
         # value at the earliest/latest instant (ties: min/max value there)
-        F.min(F.struct("__us", "__v"))["__v"].alias("v_first"),
-        F.max(F.struct("__us", "__v"))["__v"].alias("v_last"),
+        F.min(uv)["__v"].alias("v_first"),
+        F.max(uv)["__v"].alias("v_last"),
         F.min("__v").alias("v_min"),
         F.max("__v").alias("v_max"),
         # earliest instant attaining the min / latest attaining the max
-        F.min(F.struct("__v", "__us"))["__us"].alias("__t_min_us"),
-        F.max(F.struct("__v", "__us"))["__us"].alias("__t_max_us"),
+        F.min(vu)["__us"].alias("__t_min_us"),
+        F.max(vu)["__us"].alias("__t_max_us"),
     ]
 
 

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from traval_spark.functions.ts import gap_micros, unix_us
+from traval_spark.hist import hist_bin
 from traval_spark.session import hold
 
 __all__ = [
@@ -2193,6 +2194,11 @@ def kw_from_hists(
     at df = k-1 (literal table, df <= 20; NULL beyond).  Degenerate
     regimes return NULL H: all values tied (SST2 = 0) and k < 2.
 
+    A row with a NULL ``by`` key belongs to no series: the equi-joins
+    on ``by`` never match it, so the NULL group drops out of the
+    output (the rule the two-sample family applies in
+    ``_aligned_bins``).
+
     Plan shape: one window cumsum + two partial-aggregatable groupBys
     and one equi-join, all on the tiny bin-by-group table; serve
     per-group ``cnt`` by summing a stored hist tier's counts
@@ -2291,7 +2297,7 @@ def kruskal_drift(
     bin-by-group table."""
     hist = df.groupBy(
         *by, grp,
-        F.round(F.col(val) * scale).cast("long").alias("bin"),
+        hist_bin(F.col(val), scale).alias("bin"),
     ).agg(F.count("*").alias("cnt"))
     return kw_from_hists(hist, by=by, grp=grp, ndigits=ndigits)
 
@@ -3222,7 +3228,7 @@ def _pair_hists(df_a, df_b, by, val, scale):
     also be served from a stored histogram tier."""
     def hist(d, cname):
         return d.groupBy(
-            *by, F.round(F.col(val) * scale).cast("long").alias("bin")
+            *by, hist_bin(F.col(val), scale).alias("bin")
         ).agg(F.count("*").alias(cname))
 
     return hist(df_a, "ca"), hist(df_b, "cb")
@@ -3239,7 +3245,13 @@ def _aligned_bins(ha, hb, by):
 
     the totals as window aggregates over the group, so no join back.
     Every window partitions by ``by`` over bins: bin-table-sized, never
-    raw-sized."""
+    raw-sized.  A row with a NULL ``by`` key belongs to no group and is
+    dropped from both frames first (the full-outer join would never
+    match it, so each of its bins would appear twice, each copy
+    zero-filled on one side)."""
+    for c in by:
+        ha = ha.filter(F.col(c).isNotNull())
+        hb = hb.filter(F.col(c).isNotNull())
     grp = Window.partitionBy(*by)
     ordered = grp.orderBy("bin")
     upto = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -63,18 +63,20 @@ def combined_sketch_leaf(
     """The kmv + M4 + first/last leaf aggregates in ONE
     groupBy(source, bucket) pass — three tier kinds share the exact
     same grouping key, so building them as three separate jobs scans
-    the cleaned corpus three times for no reason.  Per-kind NULL
-    conventions are preserved by masking INPUTS, not rows (kmv keeps
-    NULL-only buckets with an empty sketch, exactly like
-    ``distinct_tier`` on the unfiltered frame; the M4/fl extremes see
-    NULL for flagged rows and skip them, exactly like the builders'
-    pre-filters), so the three split projections
+    the cleaned corpus three times for no reason.  The aggregates are
+    the batch builders' own (``kmv_agg``, ``m4_aggs``, ``fl_aggs``).
+    Per-kind NULL conventions are preserved by masking INPUTS, not rows
+    (kmv keeps NULL-only buckets with an empty sketch, exactly like
+    ``distinct_tier`` on the unfiltered frame; ``m4_aggs`` and
+    ``fl_aggs`` mask rows with a NULL value, which the builders drop up
+    front), so the three split projections
     (:func:`split_combined_leaf`) are row- and byte-identical to
     ``distinct_tier`` / ``m4_downsample`` / ``fl_rollup`` run
     separately — pinned by the parity pytest.
     """
     from traval_spark.functions.ts import ensure_ntz, unix_us
-    from traval_spark.rollup import TIERS
+    from traval_spark.operators.downsample import m4_aggs
+    from traval_spark.rollup import TIERS, fl_aggs
     from traval_spark.sketch import kmv_agg
 
     unit, _ = TIERS[tier]
@@ -87,28 +89,10 @@ def combined_sketch_leaf(
         F.col(value_col).alias("__v"),
         F.col(ident_col).alias("__i"),
     )
-    nn = F.col("__v").isNotNull()
-    us_m = F.when(nn, F.col("__us"))
-    uv = F.when(nn, F.struct(F.col("__us"), F.col("__v")))
-    vu = F.when(nn, F.struct(F.col("__v"), F.col("__us")))
-    obs = F.when(
-        nn,
-        F.struct(
-            F.col("__us").alias("u"), F.col("__i").alias("i"),
-            F.col("__v").cast("double").alias("v"),
-        ),
-    )
     return src.groupBy("source", "bucket").agg(
         kmv_agg("__v", k).alias("kmv"),
-        F.count("__v").alias("n_points"),
-        F.min(us_m).alias("__t_first_us"),
-        F.max(us_m).alias("__t_last_us"),
-        F.min(uv)["__v"].alias("v_first"),
-        F.max(uv)["__v"].alias("v_last"),
-        F.min("__v").alias("v_min"), F.max("__v").alias("v_max"),
-        F.min(vu)["__us"].alias("__t_min_us"),
-        F.max(vu)["__us"].alias("__t_max_us"),
-        F.min(obs).alias("first"), F.max(obs).alias("last"),
+        *m4_aggs(),
+        *fl_aggs(F.col("__us"), F.col("__i"), F.col("__v")),
     )
 
 

@@ -200,17 +200,23 @@ def fl_rollup(
 
     unit, _ = TIERS[tier]
     df = ensure_ntz(df, ts_col)
-    obs = F.struct(
-        unix_us(F.col(ts_col)).alias("u"),
-        F.col(ident_col).alias("i"),
-        F.col(value_col).cast("double").alias("v"),
-    )
     bucket = F.date_trunc(unit, F.col(ts_col)).cast("timestamp_ntz")
     return (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col("source"), bucket.alias("bucket"))
-        .agg(F.min(obs).alias("first"), F.max(obs).alias("last"))
+        .agg(*fl_aggs(unix_us(F.col(ts_col)), F.col(ident_col),
+                      F.col(value_col)))
     )
+
+
+def fl_aggs(us: Column, ident: Column, value: Column) -> list[Column]:
+    """The first/last aggregates: min/max of the ``(u: epoch-micros, i:
+    ident, v: value as double)`` observation struct, rows with a NULL
+    value masked out — the one definition :func:`fl_rollup`, the
+    streaming 1m leaf and the pipeline's combined leaf aggregate with."""
+    obs = F.when(value.isNotNull(), F.struct(
+        us.alias("u"), ident.alias("i"), value.cast("double").alias("v")))
+    return [F.min(obs).alias("first"), F.max(obs).alias("last")]
 
 
 def fl_cascade(tier_df: DataFrame, tier: str) -> DataFrame:

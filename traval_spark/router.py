@@ -8,6 +8,14 @@ is the Thanos/M3-style downsample-on-read pattern: recent history is
 served from fine tiers (raw/1m), old history from coarse ones (1h/1d),
 and the caller sees one seamless frame.
 
+The router builds no aggregate of its own. Every routed read — the
+measure read and the seven tier-kind readers (histogram, DDSketch, KMV,
+count-min, Bloom, M4, first/last) — runs one per-segment loop
+(``_read_plan``) that calls the kind's batch leaf builder on raw
+segments (``rollup_raw``, ``hist_tier``, ...) and the kind's batch merge
+on stored ones (``rollup_cascade``, ``hist_cascade``, ...), so a routed
+read and a batch build of the same kind cannot disagree.
+
 Why this is exactly correct (not approximately): count/sum/min/max
 compose through the cascade (the partial+final aggregation identity
 proven by test_rollup_cascade_identity), so ANY eligible tier produces
@@ -43,12 +51,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from traval_spark.functions.ts import ensure_ntz
-from traval_spark.rollup import (
-    TIERS,
-    _agg_exprs_cascade,
-    _agg_exprs_raw,
-)
+from traval_spark.rollup import TIERS, rollup_cascade, rollup_raw
 
 #: bucket width per tier; raw is width-0 (can serve any resolution).
 TIER_SECONDS: dict[str, int] = {"raw": 0, "1m": 60, "1h": 3600, "1d": 86400}
@@ -146,37 +149,6 @@ def coverage_of(store, tiers: list[str] | None = None) -> dict[str, tuple[str, s
     return out
 
 
-def _segment_frame(
-    frame: DataFrame, tier: str, seg: RouteSegment, resolution: str,
-    ts_col: str,
-) -> DataFrame:
-    """One segment: day-pruned scan of its tier, re-aggregated to the
-    requested resolution. Raw frames carry (source, ts, n_tok); tier
-    frames carry the (source, bucket, n_points, sum_tok, min_tok,
-    max_tok) rollup schema."""
-    unit, _ = TIERS[resolution]
-    lo = F.lit(seg.day_lo).cast("date")
-    hi = F.lit(seg.day_hi).cast("date")
-    if tier == "raw":
-        df = ensure_ntz(frame, ts_col)
-        tcol = F.col(ts_col)
-        df = df.filter(tcol.cast("date").between(lo, hi))
-        bucket = F.date_trunc(unit, tcol).cast("timestamp_ntz")
-        return (
-            df.groupBy("source", bucket.alias("bucket"))
-            .agg(*_agg_exprs_raw())
-        )
-    if "day" in frame.columns:  # stored tier: prune on the partition column
-        df = frame.filter(F.col("day").between(lo, hi))
-    else:
-        df = frame.filter(F.col("bucket").cast("date").between(lo, hi))
-    bucket = F.date_trunc(unit, F.col("bucket")).cast("timestamp_ntz")
-    return (
-        df.groupBy("source", bucket.alias("bucket"))
-        .agg(*_agg_exprs_cascade())
-    )
-
-
 def read_routed(
     frames: dict[str, DataFrame],
     plan: RoutePlan,
@@ -198,18 +170,15 @@ def read_routed(
     over an empty day range: no rows, a covered read's schema.
     """
     _check_gaps(plan, strict)
-    segments = _read_segments(plan, frames)
-    missing = sorted({s.tier for s in segments} - set(frames))
+    missing = sorted(
+        {s.tier for s in _read_segments(plan, frames)} - set(frames))
     if missing:
         raise ValueError(f"plan needs tier frames not provided: {missing}")
-    parts = []
-    for seg in segments:
-        part = _segment_frame(frames[seg.tier], seg.tier, seg,
-                              plan.resolution, ts_col)
-        if with_provenance:
-            part = part.withColumn("tier", F.lit(seg.tier))
-        parts.append(part)
-    return _routed_union(parts)
+    res = plan.resolution
+    return _read_plan(
+        frames, plan, ts_col,
+        lambda df: rollup_raw(df, res, ts_col=ts_col),
+        lambda df: rollup_cascade(df, res), with_provenance)
 
 
 def read_resolution(
@@ -226,11 +195,12 @@ def read_resolution(
     listings, read the chosen tiers, stitch. ``raw=`` supplies the raw
     frame if the store has a 'raw' tier serving recent days (its schema
     is the ingest (source, ts, n_tok), not a rollup)."""
-    coverage = coverage_of(store)
-    plan = route_plan(coverage, resolution, day_min, day_max)
-    _check_gaps(plan, strict)
-    frames = _plan_frames(store, _read_segments(plan, coverage), spark, raw)
-    return read_routed(frames, plan, with_provenance=with_provenance)
+    return _read_routed_kind(
+        store, resolution, day_min, day_max, spark, raw, strict, "ts",
+        raw_builder=lambda df: rollup_raw(df, resolution),
+        merge=lambda df: rollup_cascade(df, resolution),
+        with_provenance=with_provenance,
+    )
 
 
 def _check_gaps(plan: RoutePlan, strict: bool) -> None:
@@ -258,13 +228,6 @@ def _read_segments(plan: RoutePlan, available) -> list[RouteSegment]:
     return [RouteSegment(tier, "0001-01-02", "0001-01-01")]
 
 
-def _routed_union(parts: list[DataFrame]) -> DataFrame:
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _plan_frames(store, segments, spark, raw):
     frames: dict[str, DataFrame] = {}
     for seg in segments:
@@ -279,46 +242,49 @@ def _plan_frames(store, segments, spark, raw):
 
 
 def _read_routed_kind(store, resolution, day_min, day_max, spark, raw,
-                      strict, ts_col, raw_builder, extra_keys=None,
-                      aggs=None, stored_builder=None):
-    """Shared skeleton of the per-kind routed readers (sketch / hist /
-    dds / m4): plan -> strict-gap check -> per-segment day pruning ->
-    raw-tier leaf build vs stored-tier bucket re-truncation + merge.
-    One copy so a routing fix cannot drift between tier kinds.
-    ``raw_builder(df)`` builds the leaf tier at the requested
-    resolution from raw rows; stored segments merge with ``aggs``
-    grouped by (source, bucket, *extra_keys), or — for kinds whose
-    merge is not a flat groupBy (M4's struct extremes) — with
-    ``stored_builder(day_pruned_tier_df)``."""
+                      strict, ts_col, raw_builder, merge,
+                      with_provenance=False):
+    """Every routed read over a TierStore (the measure read and the
+    seven kind readers): plan from the manifest listings -> strict-gap
+    check -> the tier frames the plan scans -> :func:`_read_plan`.
+    ``raw_builder`` and ``merge`` are the kind's own batch leaf builder
+    and merge, bound to the requested resolution."""
     coverage = coverage_of(store)
     plan = route_plan(coverage, resolution, day_min, day_max)
     _check_gaps(plan, strict)
-    segments = _read_segments(plan, coverage)
-    frames = _plan_frames(store, segments, spark, raw)
-    unit, _ = TIERS[resolution]
+    frames = _plan_frames(store, _read_segments(plan, coverage), spark, raw)
+    return _read_plan(frames, plan, ts_col, raw_builder, merge,
+                      with_provenance)
+
+
+def _read_plan(frames, plan, ts_col, raw_builder, merge, with_provenance):
+    """The one per-segment loop: day-prune each segment's tier frame,
+    then build the kind's leaf at the plan's resolution from raw rows
+    (``raw_builder``) or re-aggregate a stored tier (``merge``), and
+    union the parts. Stored frames prune on their ``day`` partition
+    column when they have one, else on ``bucket``; every merge ignores
+    the ``day`` column, and every leaf builder normalizes its own
+    timestamps."""
     parts = []
-    for seg in segments:
+    for seg in _read_segments(plan, frames):
         lo = F.lit(seg.day_lo).cast("date")
         hi = F.lit(seg.day_hi).cast("date")
         frame = frames[seg.tier]
         if seg.tier == "raw":
-            df = ensure_ntz(frame, ts_col).filter(
-                F.col(ts_col).cast("date").between(lo, hi))
-            parts.append(raw_builder(df))
-            continue
-        if "day" in frame.columns:
-            df = frame.filter(F.col("day").between(lo, hi)).drop("day")
+            day = F.col(ts_col).cast("date")
+        elif "day" in frame.columns:  # stored tier: its partition column
+            day = F.col("day")
         else:
-            df = frame.filter(F.col("bucket").cast("date").between(lo, hi))
-        if stored_builder is not None:
-            parts.append(stored_builder(df))
-            continue
-        bucket = F.date_trunc(unit, F.col("bucket")).cast("timestamp_ntz")
-        parts.append(
-            df.groupBy("source", bucket.alias("bucket"), *extra_keys)
-            .agg(*aggs)
-        )
-    return _routed_union(parts)
+            day = F.col("bucket").cast("date")
+        pruned = frame.filter(day.between(lo, hi))
+        part = raw_builder(pruned) if seg.tier == "raw" else merge(pruned)
+        if with_provenance:
+            part = part.withColumn("tier", F.lit(seg.tier))
+        parts.append(part)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def read_routed_distinct(
@@ -345,14 +311,13 @@ def read_routed_distinct(
     Every kind reader takes its parameters after ``resolution`` by
     keyword only, so a day bound cannot bind the kind's column.
     """
-    from traval_spark.sketch import distinct_tier, kmv_merge
+    from traval_spark.sketch import distinct_cascade, distinct_tier
 
     return _read_routed_kind(
         store, resolution, day_min, day_max, spark, raw, strict, ts_col,
         raw_builder=lambda df: distinct_tier(df, resolution, key_col, k,
                                              ts_col=ts_col),
-        extra_keys=[],
-        aggs=[kmv_merge("kmv", k).alias("kmv")],
+        merge=lambda df: distinct_cascade(df, resolution, k),
     )
 
 
@@ -376,14 +341,13 @@ def read_routed_hist(
     exactly.  Returns (source, bucket, bin, cnt) at the requested
     resolution; extract percentiles with ``hist.hist_quantiles``.
     """
-    from traval_spark.hist import hist_tier
+    from traval_spark.hist import hist_cascade, hist_tier
 
     return _read_routed_kind(
         store, resolution, day_min, day_max, spark, raw, strict, ts_col,
         raw_builder=lambda df: hist_tier(df, resolution, value_col, scale,
                                          ts_col=ts_col),
-        extra_keys=[F.col("bin")],
-        aggs=[F.sum("cnt").alias("cnt")],
+        merge=lambda df: hist_cascade(df, resolution),
     )
 
 
@@ -407,14 +371,13 @@ def read_routed_dds(
     serves its days exactly.  Returns (source, bucket, sign, bin, cnt)
     at the requested resolution; extract quantile estimates with
     ``hist.dds_quantiles`` (same ``alpha``)."""
-    from traval_spark.hist import dds_tier
+    from traval_spark.hist import dds_cascade, dds_tier
 
     return _read_routed_kind(
         store, resolution, day_min, day_max, spark, raw, strict, ts_col,
         raw_builder=lambda df: dds_tier(df, resolution, value_col, alpha,
                                         ts_col=ts_col),
-        extra_keys=[F.col("sign"), F.col("bin")],
-        aggs=[F.sum("cnt").alias("cnt")],
+        merge=lambda df: dds_cascade(df, resolution),
     )
 
 
@@ -440,14 +403,13 @@ def read_routed_cms(
     eligible tier serves its days exactly.  Returns (source, bucket, d,
     w, cnt) at the requested resolution; extract per-key estimates with
     ``sketch.cms_point`` (same depth/width)."""
-    from traval_spark.sketch import cms_tier
+    from traval_spark.sketch import cms_cascade, cms_tier
 
     return _read_routed_kind(
         store, resolution, day_min, day_max, spark, raw, strict, ts_col,
         raw_builder=lambda df: cms_tier(df, resolution, key_col, depth,
                                         width, ts_col=ts_col),
-        extra_keys=[F.col("d"), F.col("w")],
-        aggs=[F.sum("cnt").alias("cnt")],
+        merge=lambda df: cms_cascade(df, resolution),
     )
 
 
@@ -473,16 +435,14 @@ def read_routed_bloom(
     serves its days exactly.  Returns distinct (source, bucket, bit) at
     the requested resolution; probe membership with
     ``sketch.bloom_probe`` (same nhash/nbits)."""
-    from traval_spark.sketch import bloom_tier
+    from traval_spark.sketch import bloom_cascade, bloom_tier
 
     return _read_routed_kind(
         store, resolution, day_min, day_max, spark, raw, strict, ts_col,
         raw_builder=lambda df: bloom_tier(df, resolution, key_col, nhash,
-                                          nbits, ts_col=ts_col)
-        .withColumn("__n", F.lit(1).cast("bigint")),
-        extra_keys=[F.col("bit")],
-        aggs=[F.count(F.lit(1)).alias("__n")],
-    ).select("source", "bucket", "bit")
+                                          nbits, ts_col=ts_col),
+        merge=lambda df: bloom_cascade(df, resolution),
+    )
 
 
 def read_routed_m4(
@@ -515,8 +475,7 @@ def read_routed_m4(
         raw_builder=lambda df: m4_downsample(
             df, bucket=resolution, ts=ts_col, val=value_col,
             bucket_col="bucket"),
-        stored_builder=lambda df: m4_merge(
-            df, bucket=resolution, bucket_col="bucket"),
+        merge=lambda df: m4_merge(df, bucket=resolution, bucket_col="bucket"),
     )
 
 
@@ -537,18 +496,17 @@ def read_routed_fl(
     (rollup.py:fl_rollup).
 
     The first/last structs are lexicographic extremes, so stored
-    segments coarsen with a plain min/max groupBy and the stitched read
-    is bit-identical to the direct fl_rollup on raw (routed pytest).
+    segments coarsen with ``fl_cascade`` (a plain min/max groupBy) and
+    the stitched read is bit-identical to the direct fl_rollup on raw
+    (routed pytest).
     Feed the result to ``rollup.locf_from_tier`` / ``rollup.fl_increase``
     for LOCF and counter-increase reads at the requested resolution."""
-    from traval_spark.rollup import fl_rollup
+    from traval_spark.rollup import fl_cascade, fl_rollup
 
-    unit_bucket = resolution
     return _read_routed_kind(
         store, resolution, day_min, day_max, spark, raw, strict, ts_col,
         raw_builder=lambda df: fl_rollup(
-            df, unit_bucket, value_col=value_col, ts_col=ts_col,
+            df, resolution, value_col=value_col, ts_col=ts_col,
             ident_col=ident_col),
-        extra_keys=[],
-        aggs=[F.min("first").alias("first"), F.max("last").alias("last")],
+        merge=lambda df: fl_cascade(df, resolution),
     )

@@ -246,6 +246,22 @@ def kmv_overlap(
 # DuckDB, so the whole sketch has a value-exact oracle.
 
 
+def cms_cells(key: Column, depth: int = 4, width: int = 256) -> Column:
+    """Array of the ``depth`` count-min cells ``(d, w)`` of ``key`` — THE
+    cell definition the batch leaf and the streaming 1m leaf both count
+    into, so their grids coincide.  ``width`` above 2^31 raises
+    ``ValueError`` when the column is built (``hash_bucket``)."""
+    from traval_spark.operators.sampling import hash_bucket
+
+    return F.array(*[
+        F.struct(
+            F.lit(d).alias("d"),
+            hash_bucket(key, seed=d, width=int(width)).alias("w"),
+        )
+        for d in range(int(depth))
+    ])
+
+
 def cms_tier(
     df: DataFrame,
     tier: str = "1m",
@@ -259,23 +275,14 @@ def cms_tier(
     the grid (a depth-way explode that collapses map-side — at most
     source x buckets x depth x width reduced rows ever shuffle). NULL
     keys are excluded, matching COUNT(key)."""
-    from traval_spark.operators.sampling import hash_bucket
-
     unit, _ = TIERS[tier]
     df = ensure_ntz(df, ts_col)
     bucket = F.date_trunc(unit, F.col(ts_col)).cast("timestamp_ntz")
     key = F.col(key_col).cast("string")
-    cells = F.array(*[
-        F.struct(
-            F.lit(d).alias("d"),
-            hash_bucket(key, seed=d, width=int(width)).alias("w"),
-        )
-        for d in range(int(depth))
-    ])
     return (
         df.filter(key.isNotNull())
         .select(F.col("source"), bucket.alias("bucket"),
-                F.explode(cells).alias("__c"))
+                F.explode(cms_cells(key, depth, width)).alias("__c"))
         .groupBy("source", "bucket", F.col("__c.d").alias("d"),
                  F.col("__c.w").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))

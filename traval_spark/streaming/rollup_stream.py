@@ -36,13 +36,18 @@ def _stream_leaf_1m(
     pre_filter=None,
     pre_transform=None,
 ) -> DataFrame:
-    """Shared scaffolding for every streaming 1m leaf tier (rollup,
-    histogram, DDSketch, KMV distinct): file-source readStream ->
-    watermark -> tumbling-window groupBy(source, 1m window, *extra_keys)
-    -> aggs. One copy so the shared contract (SEQUENCE_SCHEMA, the ts
-    cast — watermark requires TIMESTAMP, window start cast back to NTZ
-    to match the batch tier schema — and the watermark plumbing) cannot
-    drift between tier kinds."""
+    """Shared scaffolding for every streaming 1m leaf tier (measure,
+    histogram, DDSketch, KMV, count-min, Bloom, M4, first/last):
+    file-source readStream -> watermark -> tumbling-window
+    groupBy(source, 1m window, *extra_keys) -> aggs. One copy so the
+    shared contract (SEQUENCE_SCHEMA, the ts cast — watermark requires
+    TIMESTAMP, window start cast back to NTZ to match the batch tier
+    schema — and the watermark plumbing) cannot drift between tier
+    kinds. Grouping stays on ``F.window`` because append mode needs a
+    window on the watermarked column; the per-row expressions
+    (``extra_keys``, ``pre_transform``) and the ``aggs`` each leaf
+    passes come from its kind's batch module, so a streamed leaf and
+    the batch tier cannot define a kind twice."""
     stream = (
         spark.readStream.schema(SEQUENCE_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -75,17 +80,15 @@ def stream_rollup_1m(
     max_files_per_trigger: int = 64,
 ) -> DataFrame:
     """Streaming 1m tier: file-source readStream -> watermark -> tumbling
-    window agg. Same measures as the batch tier (count/sum/min/max n_tok).
+    window agg, with the batch tier's own measure aggregates
+    (``rollup._agg_exprs_raw``: count/sum/min/max n_tok).
     """
+    from traval_spark.rollup import _agg_exprs_raw
+
     return _stream_leaf_1m(
         spark, input_path, watermark, max_files_per_trigger,
         extra_keys=[],
-        aggs=[
-            F.count("n_tok").alias("n_points"),
-            F.sum("n_tok").alias("sum_tok"),
-            F.min("n_tok").alias("min_tok"),
-            F.max("n_tok").alias("max_tok"),
-        ],
+        aggs=_agg_exprs_raw(),
     )
 
 
@@ -100,11 +103,13 @@ def stream_hist_1m(
     """Streaming leaf histogram tier (hist.py long form): (source, bucket,
     bin, cnt) per finalized 1m window — counts-only state, so the
     streaming agg carries the same bounded per-(bucket, bin) long as the
-    batch tier row it becomes."""
-    b = F.round(F.col(value_col) * scale).cast("long")
+    batch tier row it becomes.  The bin is the batch tier's own
+    (``hist.hist_bin``)."""
+    from traval_spark.hist import hist_bin
+
     return _stream_leaf_1m(
         spark, input_path, watermark, max_files_per_trigger,
-        extra_keys=[b.alias("bin")],
+        extra_keys=[hist_bin(F.col(value_col), scale).alias("bin")],
         aggs=[F.count(F.lit(1)).alias("cnt")],
         pre_filter=F.col(value_col).isNotNull(),
     )
@@ -169,22 +174,17 @@ def stream_cms_1m(
 ) -> DataFrame:
     """Streaming leaf count-min tier (sketch.py long-form grid):
     (source, bucket, d, w, cnt) per finalized 1m window — the frequency
-    companion to :func:`stream_hist_1m`. The depth-way cell explode runs
-    BEFORE the windowed agg (same portable md5 hash ladder as the batch
-    cms_tier), so state stays counts-only and the streamed rows are
+    companion to :func:`stream_hist_1m`. The depth-way explode of the
+    batch tier's own cells (``sketch.cms_cells``) runs BEFORE the
+    windowed agg, so state stays counts-only and the streamed rows are
     identical to batch cms_tier rows: cms_cascade / cms_point /
-    read_routed_cms serve the streamed store unchanged."""
-    from traval_spark.operators.sampling import hash_uniform
+    read_routed_cms serve the streamed store unchanged.  A ``width``
+    above 2^31 raises ``ValueError`` here, before any query starts, as
+    it does in ``cms_tier``."""
+    from traval_spark.sketch import cms_cells
 
     key = F.col(key_col).cast("string")
-    cells = F.array(*[
-        F.struct(
-            F.lit(d).alias("d"),
-            F.floor(hash_uniform(key, seed=d) * F.lit(int(width)))
-            .cast("int").alias("w"),
-        )
-        for d in range(int(depth))
-    ])
+    cells = cms_cells(key, depth, width)
     # the width key is aggregated as __w: the shared helper's tumbling
     # window is aliased `w`, and a bare `w` grouping column would make
     # the helper's `w.start` projection ambiguous
@@ -572,8 +572,8 @@ def stream_m4_1m(
     """Streaming leaf M4 visual-downsample tier
     (operators/downsample.py): first/last/min/max points with the
     pinned tie rules per finalized 1m window.  The aggregate list is
-    the SAME ``m4_aggs()`` the batch operator uses (tie rules cannot
-    drift), state per (source, window) is four (us, value) extremes —
+    the SAME ``m4_aggs()`` the batch operator and the pipeline's
+    combined leaf use (tie rules cannot drift), state per (source, window) is four (us, value) extremes —
     bounded — and the streamed rows are identical to batch
     ``m4_downsample`` rows, so ``m4_merge`` / ``read_routed_m4`` serve
     the streamed store unchanged."""
@@ -653,19 +653,15 @@ def stream_fl_1m(
     — state per (source, window) is two structs, bounded, and the
     streamed rows are identical to batch ``fl_rollup`` rows so
     ``fl_cascade`` / ``read_routed_fl`` / ``locf_from_tier`` /
-    ``fl_increase`` serve the streamed store unchanged."""
-    obs = F.struct(
-        F.unix_micros(F.col("ts")).alias("u"),
-        F.col("doc_id").alias("i"),
-        F.col(value_col).cast("double").alias("v"),
-    )
+    ``fl_increase`` serve the streamed store unchanged.  The
+    aggregates are the batch operator's own (``rollup.fl_aggs``)."""
+    from traval_spark.functions.ts import unix_us
+    from traval_spark.rollup import fl_aggs
+
     return _stream_leaf_1m(
         spark, input_path, watermark, max_files_per_trigger,
         extra_keys=[],
-        aggs=[F.min("__obs").alias("first"),
-              F.max("__obs").alias("last")],
+        aggs=fl_aggs(unix_us(F.col("ts")), F.col("doc_id"),
+                     F.col(value_col)),
         pre_filter=F.col(value_col).isNotNull(),
-        pre_transform=lambda df: df.select(
-            "source", "ts", obs.alias("__obs")
-        ),
     )
