@@ -639,17 +639,37 @@ def test_two_sample_family_drops_null_by_keys(spark):
     assert [(r["source"], r["ks_d"]) for r in rep] == [("x", 0.0)]
 
 
+def test_two_sample_family_drops_null_values(spark):
+    """A NULL value is in no bin, as in a stored hist tier: x=[1, 2,
+    NULL] against x=[1, 2] is no drift (KS D = 0 over n_a = 2, PSI = 0
+    over 2 bins). A NULL bin once counted it, giving n_a = 3,
+    D = 0.333, and a third PSI bin with psi = 0.209."""
+    from traval_spark.operators.monitor import ks_drift, psi_drift
+
+    def snap(vals):
+        return spark.createDataFrame([("x", v) for v in vals],
+                                     "source string, value double")
+
+    a, b = snap([1.0, 2.0, None]), snap([1.0, 2.0])
+    ks = ks_drift(a, b).collect()[0]
+    assert (ks["n_a"], ks["ks_d"]) == (2, 0.0)
+    psi = psi_drift(a, b).collect()[0]
+    assert (psi["n_bins"], psi["psi"]) == (2, 0.0)
+
+
 def test_ks_served_from_hist_tier_equals_direct(spark):
     """KS read off the STORED hist tier (per-period bin counts summed
     from 1m tier rows) == direct ks_drift on raw — PSI's tier-served
-    property holds for the rank-based drift monitor too."""
+    property holds for the rank-based drift monitor too. Some values
+    are NULL: the tier drops them, so the raw read must too."""
     from traval_spark.hist import hist_tier
     from traval_spark.operators.monitor import ks_drift, ks_from_hists
     from traval_spark.sources.synth import synth_sequences
 
     import pyspark.sql.functions as FF
 
-    seqs = synth_sequences(spark, 4000, seed=31, span_days=2)
+    seqs = synth_sequences(spark, 4000, seed=31, span_days=2).withColumn(
+        "n_tok", FF.when(FF.xxhash64("doc_id") % 9 != 0, FF.col("n_tok")))
     cut = "2024-01-02"
     tier = hist_tier(seqs, "1m", value_col="n_tok")
 
@@ -1409,12 +1429,13 @@ def test_kruskal_from_hists_equals_raw_and_counts_parity(spark):
         bucket_count_signal, kruskal_drift, kw_from_hists, runs_test)
     import pyspark.sql.functions as F
 
-    rows = [("s", str(g), float(v % 17 + 3 * g))
+    rows = [("s", str(g), float(v % 17 + 3 * g) if v % 11 else None)
             for g in range(3) for v in range(40)]
     df = spark.createDataFrame(rows,
                                "source string, grp string, value double")
     raw = kruskal_drift(df).collect()
-    hist = df.groupBy(
+    # a stored hist tier holds no NULL values
+    hist = df.filter(F.col("value").isNotNull()).groupBy(
         "source", "grp",
         F.round(F.col("value")).cast("long").alias("bin"),
     ).agg(F.count("*").alias("cnt"))

@@ -165,6 +165,76 @@ def test_streaming_cascade_matches_batch(spark, tmp_path):
     assert want_1d.exceptAll(t1d).count() == 0
 
 
+def test_stream_landed_store_serves_like_a_batch_store(spark, tmp_path):
+    """The streaming cascade lands 1h/1d through TierStore.write_tier:
+    after a two-batch drain the store's own readers serve it — routed
+    reads equal the batch cascade of the drained 1m rows, the cascade
+    audit is clean, the manifests list the drained days — and a plain
+    parquet read of a tier skips its ``_manifests`` directory."""
+    import os
+    import time as _time
+
+    from traval_spark.rollup import rollup_cascade
+    from traval_spark.router import read_resolution
+    from traval_spark.sources.tierstore import (
+        TierStore,
+        tier_freshness,
+        verify_cascade,
+    )
+    from traval_spark.streaming.rollup_stream import run_streaming_cascade
+
+    inp = str(tmp_path / "sin")
+    root = str(tmp_path / "sstore")
+    ckpt = str(tmp_path / "sckpt")
+    seqs = synth_sequences(spark, 3000, seed=17, span_days=2)
+    mid = "2024-01-02 00:00:00"
+    seqs.filter(F.col("ts") < mid).coalesce(1).write.parquet(inp,
+                                                             mode="append")
+    _time.sleep(1.1)  # distinct mtimes: two separate micro-batches
+    seqs.filter(F.col("ts") >= mid).coalesce(1).write.parquet(
+        inp, mode="append")
+    run_streaming_cascade(spark, inp, root, ckpt, watermark="1 minute",
+                          max_files_per_trigger=1)
+
+    t1m = spark.read.parquet(f"{root}/1m").drop("day", "batch_id", "qid")
+    days = sorted({r["d"] for r in t1m.select(
+        F.col("bucket").cast("date").cast("string").alias("d")).collect()})
+    assert len(days) == 2
+    store = TierStore(root)
+    want = {"1h": rollup_cascade(t1m, "1h")}
+    want["1d"] = rollup_cascade(want["1h"], "1d")
+    for tier in ("1h", "1d"):
+        assert store.days(tier) == days
+        assert os.path.exists(f"{root}/{tier}/_manifests/_schema.json")
+        got = read_resolution(store, tier)
+        assert got.exceptAll(want[tier]).count() == 0
+        assert want[tier].exceptAll(got).count() == 0
+        plain = spark.read.parquet(f"{root}/{tier}")
+        assert plain.filter(
+            F.input_file_name().contains("_manifests")).count() == 0
+        assert plain.drop("day").exceptAll(want[tier]).count() == 0
+    assert verify_cascade(store, "1h", "1d").count() == 0
+    fresh = tier_freshness(store, ["1h", "1d"], as_of=days[-1])
+    assert [(r["min_day"], r["max_day"], r["n_days"]) for r in fresh] == [
+        (days[0], days[-1], 2)] * 2
+
+
+def test_cascade_upsert_empty_batch_lands_nothing(spark, tmp_path):
+    """An empty micro-batch leaves no batch directory and no manifest."""
+    import os
+
+    from traval_spark.rollup import rollup_raw
+    from traval_spark.streaming.rollup_stream import cascade_upsert_batch
+
+    root = str(tmp_path / "estore")
+    empty = rollup_raw(
+        synth_sequences(spark, 10, seed=3, span_days=1).limit(0), "1m")
+    cascade_upsert_batch(empty, 0, root, run_id="q")
+    assert not os.path.exists(f"{root}/1m/qid=q/batch_id=0")
+    assert not os.path.exists(f"{root}/1h")
+    assert not os.path.exists(f"{root}/1d")
+
+
 def test_cascade_upsert_replay_is_idempotent(spark, tmp_path):
     """A foreachBatch replay (same batch_id, same content — what the
     checkpoint guarantees after a crash) must not duplicate 1m rows or
@@ -957,9 +1027,9 @@ def test_streaming_dedup_probe_ignores_uncommitted_batches(spark, tmp_path):
     assert probe.filter("doc_id = 999").count() == 0
 
     # once committed (a healthy run), the same dir joins the corpus
-    from traval_spark.streaming.rollup_stream import _hadoop_touch
+    from traval_spark.sources import fsutil
 
-    _hadoop_touch(spark, f"{root}/fp/qid=runB/batch_id=0/_COMMITTED")
+    fsutil.touch(spark, f"{root}/fp/qid=runB/batch_id=0/_COMMITTED")
     assert _corpus_fp(spark, root, "doc_id").count() == 9
 
 

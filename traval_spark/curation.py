@@ -402,7 +402,9 @@ def write_curated(
     parquet part-file."""
     packed.write.mode("overwrite").partitionBy("split").parquet(out_path)
     if metrics is not None:
-        _hadoop_write_text(
+        from traval_spark.sources import fsutil
+
+        fsutil.write_text(
             packed.sparkSession,
             f"{out_path.rstrip('/')}/_curation_metrics.json",
             json.dumps(metrics, indent=2, default=str),
@@ -440,14 +442,6 @@ def materialize_curated(
         sep_token=sep_token,
     )
     m.write.mode("overwrite").partitionBy("split").parquet(out_path)
-
-
-def _hadoop_write_text(spark, path: str, text: str) -> None:
-    """Write a small text file through the Hadoop FS API (works for any
-    store the session can write to, not just the local filesystem)."""
-    from traval_spark.sources import fsutil
-
-    fsutil.write_text(spark, path, text)
 
 
 def main() -> None:

@@ -2287,19 +2287,16 @@ def kruskal_drift(
     scale: int = 1,
     ndigits: int = 6,
 ) -> DataFrame:
-    """Kruskal-Wallis omnibus drift over raw rows: bins ``val`` with
-    the hist.py discretization (``round(v*scale)``) so the identical
-    read serves from raw or from a stored histogram tier
+    """Kruskal-Wallis omnibus drift over raw rows: bins the non-NULL
+    ``val`` values with the hist.py discretization (``round(v*scale)``)
+    so the identical read serves from raw or from a stored histogram tier
     (:func:`kw_from_hists`, parity-tested), then runs the exact
     half-unit rank construction per ``by`` partition across the
     ``grp`` groups.  One partial-aggregatable groupBy is the only
     raw-scale stage; everything downstream runs on the tiny
     bin-by-group table."""
-    hist = df.groupBy(
-        *by, grp,
-        hist_bin(F.col(val), scale).alias("bin"),
-    ).agg(F.count("*").alias("cnt"))
-    return kw_from_hists(hist, by=by, grp=grp, ndigits=ndigits)
+    return kw_from_hists(_bin_counts(df, (*by, grp), val, scale, "cnt"),
+                         by=by, grp=grp, ndigits=ndigits)
 
 
 def runs_test(
@@ -3221,17 +3218,21 @@ _DEC = "decimal(38,0)"
 _LN2 = 0.6931471805599453
 
 
-def _pair_hists(df_a, df_b, by, val, scale):
-    """The snapshot discretization of the whole family (``round(v*scale)``,
-    the hist.py bin convention) — two count frames ready for any
-    ``*_from_hists`` read, so every drift statistic in this family can
-    also be served from a stored histogram tier."""
-    def hist(d, cname):
-        return d.groupBy(
-            *by, hist_bin(F.col(val), scale).alias("bin")
-        ).agg(F.count("*").alias(cname))
+def _bin_counts(df, keys, val, scale, cname):
+    """Rows per (``keys``, bin) of ``df``'s non-NULL ``val`` values, with
+    the hist.py discretization (``round(v*scale)``): what a stored
+    histogram tier holds, since ``hist_tier`` drops NULL values too."""
+    return df.filter(F.col(val).isNotNull()).groupBy(
+        *keys, hist_bin(F.col(val), scale).alias("bin")
+    ).agg(F.count("*").alias(cname))
 
-    return hist(df_a, "ca"), hist(df_b, "cb")
+
+def _pair_hists(df_a, df_b, by, val, scale):
+    """The snapshot discretization of the whole family — two count
+    frames ready for any ``*_from_hists`` read, so every drift statistic
+    in this family can also be served from a stored histogram tier."""
+    return (_bin_counts(df_a, by, val, scale, "ca"),
+            _bin_counts(df_b, by, val, scale, "cb"))
 
 
 def _aligned_bins(ha, hb, by):

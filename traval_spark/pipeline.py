@@ -29,6 +29,7 @@ from traval_spark.compress import pack_tier
 from traval_spark.plans.ruleset import SparkRuleSet, apply_ruleset
 from traval_spark.rollup import gap_fill, rollup_cascade, salted_rollup
 from traval_spark.session import get_spark, held, hold
+from traval_spark.sources import fsutil
 from traval_spark.sources.synth import synth_sequences
 from traval_spark.sources.tierstore import TierStore, partition_fingerprints
 
@@ -456,10 +457,8 @@ def run(
     )
     # Hadoop FS API, not builtin open(): out_root may be hdfs://, s3://,
     # ... on a cluster (same rule as curation.write_curated)
-    from traval_spark.curation import _hadoop_write_text
-
-    _hadoop_write_text(spark, f"{out_root}/run_metrics.json",
-                       json.dumps(metrics, indent=2, default=str))
+    fsutil.write_text(spark, f"{out_root}/run_metrics.json",
+                      json.dumps(metrics, indent=2, default=str))
     return metrics
 
 
@@ -484,7 +483,6 @@ def run_maintenance(
     """
     import datetime as real_dt
 
-    from traval_spark.sources import fsutil
     from traval_spark.sources.tierstore import (
         MANIFEST_DIR, compact_tier_day, file_census, tier_freshness,
     )

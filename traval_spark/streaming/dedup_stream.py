@@ -11,20 +11,21 @@ union of per-batch pair outputs equals the full-batch pair set: every
 pair surfaces exactly when its later member arrives (parity-tested in
 tests/test_streaming.py).
 
-Store layout (same conventions as the rollup cascade sink —
-rollup_stream.py:cascade_upsert_batch):
+Store layout (the shared sink protocol of streaming/sink.py, as in the
+rollup cascade's 1m staging):
 
     {root}/fp/qid=<query_id>/batch_id=N/     fingerprints (id, fp_lo, fp_hi)
     {root}/pairs/qid=<query_id>/batch_id=N/  (a, b, hamming)
 
-Both writes are batch_id-keyed with ``_COMMITTED`` markers, so checkpoint
-replays skip committed work and partial crashed attempts are overwritten
-wholesale. Crash-ordering note: pairs are written before fingerprints,
-but either order converges — if a crashed attempt left this batch's OWN
-fingerprints in the corpus, the replayed probe still emits the identical
-pair set (self-pairs are excluded by id inequality and duplicated
-new-vs-new candidates collapse in the distinct), so replays never
-duplicate or lose pairs.
+Both writes commit through ``sink.commit`` (batch_id-keyed, with
+``_COMMITTED`` markers), so checkpoint replays skip committed work,
+partial crashed attempts are overwritten wholesale, and the corpus reads
+only committed batches. Crash-ordering note: pairs are written before
+fingerprints, but either order converges — if a crashed attempt left
+this batch's OWN fingerprints in the corpus, the replayed probe still
+emits the identical pair set (self-pairs are excluded by id inequality
+and duplicated new-vs-new candidates collapse in the distinct), so
+replays never duplicate or lose pairs.
 """
 
 from __future__ import annotations
@@ -32,11 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from traval_spark.session import held, hold
-from traval_spark.streaming.rollup_stream import (
-    _hadoop_exists,
-    _hadoop_touch,
-    _stream_query_id,
-)
+from traval_spark.streaming import sink
 
 _FP_SCHEMA = "doc_id long, fp_lo long, fp_hi long"
 
@@ -44,28 +41,12 @@ _FP_SCHEMA = "doc_id long, fp_lo long, fp_hi long"
 def _corpus_fp(
     spark: SparkSession, store_root: str, id_col: str
 ) -> DataFrame:
-    """The accumulated fingerprint corpus (empty frame on first batch).
-
-    Only ``_COMMITTED`` batch directories are read: a crashed run's
-    partial fingerprint write that is never replayed (checkpoint deleted,
-    new run_id) would otherwise sit silently incomplete in every later
-    probe — the docstring's replay-convergence argument only covers
-    same-batch replays, so uncommitted dirs must be invisible, not merely
-    rare. One glob round-trip lists the markers."""
-    from traval_spark.sources import fsutil
-
-    committed = fsutil.glob(
-        spark, f"{store_root}/fp/qid=*/batch_id=*/_COMMITTED"
-    )
-    if committed:
-        dirs = [p[: -len("/_COMMITTED")] for p in committed]
-        return (
-            spark.read.option("basePath", f"{store_root}/fp").parquet(*dirs)
-            .select(id_col, "fp_lo", "fp_hi")
-        )
-    return spark.createDataFrame(
-        [], _FP_SCHEMA.replace("doc_id", id_col)
-    )
+    """The accumulated fingerprint corpus (empty frame on first batch),
+    committed batches only: the replay-convergence argument above only
+    covers same-batch replays, so uncommitted dirs must be invisible,
+    not merely rare."""
+    return sink.read_committed(spark, f"{store_root}/fp",
+                               _FP_SCHEMA.replace("doc_id", id_col))
 
 
 def dedup_upsert_batch(
@@ -95,30 +76,24 @@ def dedup_upsert_batch(
     if batch_df.isEmpty():
         return
     s = batch_df.sparkSession
-    pdir = f"{store_root}/pairs/qid={run_id or 'default'}/batch_id={batch_id}"
-    fdir = f"{store_root}/fp/qid={run_id or 'default'}/batch_id={batch_id}"
 
     # fingerprints computed once, shared by the probe (passed via
-    # new_fp=) and the corpus append; released when the batch is done
+    # new_fp=) and the corpus append; released when the batch is done.
+    # No batch_id data column in either write: the qid=/batch_id=
+    # directory keys are partition columns on any basePath read, and a
+    # duplicate data column would collide with them
     with held():
         new_fp = hold(with_simhash64(batch_df, text_col, id_col))
-        if not _hadoop_exists(s, f"{pdir}/_COMMITTED"):
-            pairs = simhash64_incremental_pairs(
-                batch_df,
-                _corpus_fp(s, store_root, id_col),
-                max_hamming=max_hamming,
-                text_col=text_col,
-                id_col=id_col,
+        sink.commit(
+            s, sink.batch_dir(f"{store_root}/pairs", run_id, batch_id),
+            lambda d: simhash64_incremental_pairs(
+                batch_df, _corpus_fp(s, store_root, id_col),
+                max_hamming=max_hamming, text_col=text_col, id_col=id_col,
                 new_fp=new_fp,
-            )
-            # no batch_id data column: the qid=/batch_id= directory keys
-            # are partition columns on any basePath read, and a duplicate
-            # data column would collide with them
-            pairs.write.mode("overwrite").parquet(pdir)
-            _hadoop_touch(s, f"{pdir}/_COMMITTED")
-        if not _hadoop_exists(s, f"{fdir}/_COMMITTED"):
-            new_fp.write.mode("overwrite").parquet(fdir)
-            _hadoop_touch(s, f"{fdir}/_COMMITTED")
+            ).write.mode("overwrite").parquet(d),
+        )
+        sink.commit(s, sink.batch_dir(f"{store_root}/fp", run_id, batch_id),
+                    new_fp.write.mode("overwrite").parquet)
 
 
 def run_streaming_dedup(
@@ -143,28 +118,11 @@ def run_streaming_dedup(
     ``input_path`` must be a DIRECTORY (Spark's file-stream source
     rejects a bare file path: "Option 'basePath' must be a directory").
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    docs = reader.parquet(input_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_upsert_batch(
-            batch_df, batch_id, store_root,
-            run_id=_stream_query_id(checkpoint_path),
-            max_hamming=max_hamming, text_col=text_col, id_col=id_col,
-        )
-
-    writer = (
-        docs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
+    return sink.run_upserts(
+        sink.file_stream(spark, input_path, schema, max_files_per_trigger),
+        dedup_upsert_batch, store_root, checkpoint_path, available_now,
+        max_hamming=max_hamming, text_col=text_col, id_col=id_col,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
 
 
 # ---------------------------------------------------------------------------
@@ -182,18 +140,7 @@ def run_streaming_dedup(
 def _corpus_grams(spark: SparkSession, store_root: str) -> DataFrame:
     """The accumulated distinct-gram index (committed batches only —
     same invisibility rule as _corpus_fp)."""
-    from traval_spark.sources import fsutil
-
-    committed = fsutil.glob(
-        spark, f"{store_root}/grams/qid=*/batch_id=*/_COMMITTED"
-    )
-    if committed:
-        dirs = [p[: -len("/_COMMITTED")] for p in committed]
-        return (
-            spark.read.option("basePath", f"{store_root}/grams")
-            .parquet(*dirs).select("gram")
-        )
-    return spark.createDataFrame([], "gram string")
+    return sink.read_committed(spark, f"{store_root}/grams", "gram string")
 
 
 def span_upsert_batch(
@@ -223,23 +170,18 @@ def span_upsert_batch(
     if batch_df.isEmpty():
         return
     s = batch_df.sparkSession
-    sdir = f"{store_root}/spans/qid={run_id or 'default'}/batch_id={batch_id}"
-    gdir = f"{store_root}/grams/qid={run_id or 'default'}/batch_id={batch_id}"
-
-    if not _hadoop_exists(s, f"{sdir}/_COMMITTED"):
-        spans = duplicated_spans_incremental(
+    sink.commit(
+        s, sink.batch_dir(f"{store_root}/spans", run_id, batch_id),
+        lambda d: duplicated_spans_incremental(
             batch_df, _corpus_grams(s, store_root), k=k,
             tokens_col=tokens_col, id_col=id_col,
-        )
-        spans.write.mode("overwrite").parquet(sdir)
-        _hadoop_touch(s, f"{sdir}/_COMMITTED")
-    if not _hadoop_exists(s, f"{gdir}/_COMMITTED"):
-        (
-            _window_grams(batch_df, k, tokens_col, id_col)
-            .select("gram").distinct()
-            .write.mode("overwrite").parquet(gdir)
-        )
-        _hadoop_touch(s, f"{gdir}/_COMMITTED")
+        ).write.mode("overwrite").parquet(d),
+    )
+    sink.commit(
+        s, sink.batch_dir(f"{store_root}/grams", run_id, batch_id),
+        lambda d: _window_grams(batch_df, k, tokens_col, id_col)
+        .select("gram").distinct().write.mode("overwrite").parquet(d),
+    )
 
 
 def run_streaming_span_dedup(
@@ -257,27 +199,8 @@ def run_streaming_span_dedup(
     """Drain a sequence directory through the incremental span-dedup
     sink (availableNow catch-up + exactly-once checkpoint semantics,
     same shape as run_streaming_dedup)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    seqs = reader.parquet(input_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        span_upsert_batch(
-            batch_df, batch_id, store_root,
-            run_id=_stream_query_id(checkpoint_path),
-            k=k, tokens_col=tokens_col, id_col=id_col,
-        )
-
-    writer = (
-        seqs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
+    return sink.run_upserts(
+        sink.file_stream(spark, input_path, schema, max_files_per_trigger),
+        span_upsert_batch, store_root, checkpoint_path, available_now,
+        k=k, tokens_col=tokens_col, id_col=id_col,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

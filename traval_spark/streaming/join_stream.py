@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from traval_spark.streaming.rollup_stream import SEQUENCE_SCHEMA
+from traval_spark.streaming.sink import file_stream
 
 
 def stream_range_join(
@@ -58,9 +59,8 @@ def stream_range_join(
     """
     def side(pred, tag):
         return (
-            spark.readStream.schema(SEQUENCE_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(input_path)
+            file_stream(spark, input_path, SEQUENCE_SCHEMA,
+                        max_files_per_trigger)
             .filter(pred)
             .select(
                 F.col(key).alias(f"{tag}_key"),

@@ -11,13 +11,14 @@ recompute — old vectors are never re-read, the serving cost is the
 |batches|·d² cell frame. Parity-tested: a maxFilesPerTrigger=1 drain
 equals the one-shot batch embedding_cov exactly.
 
-Store layout (dedup_stream.py conventions):
+Store layout (the shared sink protocol of streaming/sink.py):
 
     {root}/moments/qid=<query_id>/batch_id=N/   (i, j, n, p, si, sj)
 
-Writes are batch_id-keyed with ``_COMMITTED`` markers: checkpoint
-replays skip committed batches, crashed partial writes are overwritten
-wholesale, and uncommitted directories are invisible to the serve.
+Writes commit through ``sink.commit`` (batch_id-keyed, with
+``_COMMITTED`` markers): checkpoint replays skip committed batches,
+crashed partial writes are overwritten wholesale, and uncommitted
+directories are invisible to the serve.
 
 Ingest-exactly-once contract: a store accumulates ADDITIVE statistics,
 so each vector must be ingested exactly once per store root. Within a
@@ -31,11 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from traval_spark.streaming.rollup_stream import (
-    _hadoop_exists,
-    _hadoop_touch,
-    _stream_query_id,
-)
+from traval_spark.streaming import sink
 
 _MOMENT_SCHEMA = (
     "i int, j int, n long, p decimal(38,0), "
@@ -46,20 +43,9 @@ _MOMENT_SCHEMA = (
 def committed_moments(spark: SparkSession, store_root: str) -> DataFrame:
     """Every committed moment cell in the store (empty typed frame
     before the first commit). Uncommitted batch directories are
-    invisible — same rule as dedup_stream._corpus_fp."""
-    from traval_spark.sources import fsutil
-
-    committed = fsutil.glob(
-        spark, f"{store_root}/moments/qid=*/batch_id=*/_COMMITTED"
-    )
-    if committed:
-        dirs = [p[: -len("/_COMMITTED")] for p in committed]
-        return (
-            spark.read.option("basePath", f"{store_root}/moments")
-            .parquet(*dirs)
-            .select("i", "j", "n", "p", "si", "sj")
-        )
-    return spark.createDataFrame([], _MOMENT_SCHEMA)
+    invisible (``sink.read_committed``)."""
+    return sink.read_committed(spark, f"{store_root}/moments",
+                               _MOMENT_SCHEMA)
 
 
 def moments_upsert_batch(
@@ -76,14 +62,13 @@ def moments_upsert_batch(
 
     if batch_df.isEmpty():
         return
-    s = batch_df.sparkSession
-    mdir = (f"{store_root}/moments/qid={run_id or 'default'}"
-            f"/batch_id={batch_id}")
-    if _hadoop_exists(s, f"{mdir}/_COMMITTED"):
-        return
-    cells = embedding_moments(batch_df, emb=emb, value_scale=value_scale)
-    cells.write.mode("overwrite").parquet(mdir)
-    _hadoop_touch(s, f"{mdir}/_COMMITTED")
+    sink.commit(
+        batch_df.sparkSession,
+        sink.batch_dir(f"{store_root}/moments", run_id, batch_id),
+        lambda d: embedding_moments(batch_df, emb=emb,
+                                    value_scale=value_scale)
+        .write.mode("overwrite").parquet(d),
+    )
 
 
 def run_streaming_moments(
@@ -100,27 +85,8 @@ def run_streaming_moments(
     """Drain an embedding directory through the incremental moment sink
     (availableNow catch-up + exactly-once checkpoint semantics, same
     shape as run_streaming_dedup). ``input_path`` must be a directory."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", int(max_files_per_trigger)
-        )
-    vecs = reader.parquet(input_path)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        moments_upsert_batch(
-            batch_df, batch_id, store_root,
-            run_id=_stream_query_id(checkpoint_path),
-            emb=emb, value_scale=value_scale,
-        )
-
-    writer = (
-        vecs.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
+    return sink.run_upserts(
+        sink.file_stream(spark, input_path, schema, max_files_per_trigger),
+        moments_upsert_batch, store_root, checkpoint_path, available_now,
+        emb=emb, value_scale=value_scale,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

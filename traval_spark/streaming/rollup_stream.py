@@ -6,7 +6,11 @@ checkpoint/resume. This module adds the natural streaming twin: new
 tokenized-sequence files land in a directory, the 1m tier updates
 incrementally with watermarked tumbling windows, and the batch cascade
 (1h/1d) re-aggregates from the streamed 1m tier — identical tier
-semantics, verified against the batch rollup in tests.
+semantics, verified against the batch rollup in tests. The coarse tiers
+land through ``TierStore.write_tier``, the batch job's own landing
+path, so a stream-landed 1h/1d carries the same manifests and schema
+sidecar and every store reader serves it; the 1m staging commits
+through the shared sink protocol (:mod:`traval_spark.streaming.sink`).
 
 Late data: events older than the watermark relative to the max seen ts
 are dropped by Spark's state eviction — the batch job remains the
@@ -18,6 +22,16 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from traval_spark.sources import fsutil
+from traval_spark.streaming import sink
 
 #: input schema = the graft table (BASELINE.json input_hint) + event time
 SEQUENCE_SCHEMA = (
@@ -48,12 +62,9 @@ def _stream_leaf_1m(
     (``extra_keys``, ``pre_transform``) and the ``aggs`` each leaf
     passes come from its kind's batch module, so a streamed leaf and
     the batch tier cannot define a kind twice."""
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = sink.file_stream(
+        spark, input_path, SEQUENCE_SCHEMA, max_files_per_trigger
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
     if pre_filter is not None:
         stream = stream.filter(pre_filter)
     if pre_transform is not None:
@@ -218,50 +229,24 @@ def run_incremental_rollup(
     finalized buckets, never rewritten, exactly the batch tier rows.
     """
     agg = stream_rollup_1m(spark, input_path, watermark)
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return sink.start(
+        agg.writeStream.format("parquet").option("path", output_path),
+        checkpoint_path, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
 
 
-def _hadoop_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FS API (works for any store the
-    session can write to, not just the local filesystem)."""
-    from traval_spark.sources import fsutil
-
-    return fsutil.exists(spark, path)
-
-
-def _hadoop_touch(spark: SparkSession, path: str) -> None:
-    """Create an empty marker file (underscore-prefixed files are ignored
-    by Spark's file listing)."""
-    from traval_spark.sources import fsutil
-
-    fsutil.touch(spark, path)
-
-
-def _stream_query_id(checkpoint_path: str) -> str | None:
-    """The streaming query id from ``{checkpoint}/metadata`` — written by
-    Spark at query start, STABLE across restarts of the same checkpoint,
-    and regenerated for a fresh checkpoint. The correct idempotency scope
-    for batch_id-keyed sinks: batch numbering restarts at 0 with a fresh
-    checkpoint, so un-scoped batch dirs from an earlier run would falsely
-    satisfy the already-written check and silently drop the new data."""
-    import json
-
-    try:
-        with open(f"{checkpoint_path}/metadata") as f:
-            return json.load(f)["id"]
-    except (OSError, KeyError, ValueError):
-        return None
+def _read_staging(spark: SparkSession, store_root: str,
+                  leaf: StructType) -> DataFrame:
+    """The 1m staging, read with the schema it is known to have: the
+    ``leaf`` tier's columns, then the ``qid``/``batch_id``/``day``
+    directory keys — no footer-inference job."""
+    schema = StructType(
+        [StructField(f.name, f.dataType) for f in leaf.fields]
+        + [StructField("qid", StringType()),
+           StructField("batch_id", IntegerType()),
+           StructField("day", DateType())]
+    )
+    return spark.read.schema(schema).parquet(f"{store_root}/1m")
 
 
 def cascade_upsert_batch(
@@ -272,74 +257,60 @@ def cascade_upsert_batch(
 
     1. write this batch's 1m rows under
        ``{store_root}/1m/qid=<run_id>/batch_id=N`` (day-partitioned
-       inside; ``run_id`` = the streaming query id, see
-       :func:`_stream_query_id`). The write is **idempotent within a
-       checkpoint lineage**: a replayed batch (same query id + batch_id,
-       same deterministic content) finds the batch directory's
-       ``_COMMITTED`` marker (written by THIS sink after the data
-       commits — dynamic-partition-overwrite writes produce no
-       ``_SUCCESS``) and skips; a partial directory from a crashed
-       attempt (no marker) is overwritten wholesale. The 1m tier
-       therefore never holds duplicate rows from replays, and the
-       marker doubles as the compaction tombstone
-       (:func:`compact_stream_store`). A FRESH
+       inside; ``run_id`` = the streaming query id,
+       :func:`~traval_spark.streaming.sink.stream_query_id`) through the
+       shared commit protocol (:func:`~traval_spark.streaming.sink.commit`):
+       a replayed batch (same query id + batch_id, same deterministic
+       content) finds the batch directory's ``_COMMITTED`` marker and
+       skips; a partial directory from a crashed attempt (no marker) is
+       overwritten wholesale. The 1m staging therefore never holds
+       duplicate rows from replays, and the marker doubles as the
+       compaction tombstone (:func:`compact_stream_store`). A FRESH
        checkpoint pointed at an existing store gets a new query id, so
        its batches land instead of being silently skipped (reprocessing
        the same input under a new checkpoint appends a second copy —
        detectable via the qid column; rebuild from the batch cascade to
-       reconcile, the documented lambda split).
-    2. recompute the 1h tier for ONLY the days touched by this batch by
-       re-aggregating the (partition-pruned) 1m tier, and replace just
-       those day partitions via dynamic partition overwrite;
-    3. same for 1d from 1h.
+       reconcile, the documented lambda split). An empty micro-batch
+       leaves no batch directory.
+    2. recompute the 1h tier for ONLY the days this batch touched — the
+       ``day=`` directories of its batch directory, one listing that
+       also serves a replay whose write was skipped — by re-aggregating
+       the (partition-pruned) 1m staging, and land those days through
+       ``TierStore.write_tier(days=...)``: dynamic partition overwrite,
+       one manifest per day and the ``_schema.json`` sidecar, exactly
+       as the batch job lands a tier;
+    3. same for 1d from the 1h days just landed.
 
     A replay that crashed between steps 1 and 3 re-runs 2/3 as full
-    recomputes of their day partitions over the duplicate-free 1m tier,
-    so every tier converges to the exact batch-cascade result.
+    recomputes of their day partitions over the duplicate-free 1m
+    staging, so every tier converges to the exact batch-cascade result.
     """
     from traval_spark.rollup import rollup_cascade
+    from traval_spark.sources.tierstore import TierStore
 
-    if batch_df.isEmpty():
-        return
-    day = F.date_trunc("day", F.col("bucket")).cast("date").alias("day")
     s = batch_df.sparkSession
-    batch_df = batch_df.withColumn("day", day)
-    bdir = f"{store_root}/1m/qid={run_id or 'default'}/batch_id={batch_id}"
-    if not _hadoop_exists(s, f"{bdir}/_COMMITTED"):
-        # enforce dynamic overwrite on the writer: under a session with
-        # the static default this would otherwise truncate sibling
-        # partitions
-        (
-            batch_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day").parquet(bdir)
-        )
-        _hadoop_touch(s, f"{bdir}/_COMMITTED")
-    days = [r["day"] for r in batch_df.select("day").distinct().collect()]
-    t1m = (
-        s.read.parquet(f"{store_root}/1m")
-        .filter(F.col("day").isin(days))
-    )
-    t1h = rollup_cascade(
-        t1m.drop("day", "batch_id", "qid"), "1h"
-    ).withColumn("day", day)
-    # dynamic overwrite enforced per-writer (not just the session
-    # default): only the touched day directories are replaced
-    (
-        t1h.write.mode("overwrite")
+    bdir = sink.batch_dir(f"{store_root}/1m", run_id, batch_id)
+    day = F.date_trunc("day", F.col("bucket")).cast("date")
+    # dynamic overwrite enforced on the writer: under a session with the
+    # static default this would otherwise truncate sibling partitions
+    wrote = sink.commit(s, bdir, lambda d: (
+        batch_df.withColumn("day", day).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(f"{store_root}/1h")
-    )
-    t1h_all = (
-        s.read.parquet(f"{store_root}/1h")
-        .filter(F.col("day").isin(days))
-    )
-    t1d = rollup_cascade(t1h_all.drop("day"), "1d").withColumn("day", day)
-    (
-        t1d.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(f"{store_root}/1d")
-    )
+        .partitionBy("day").parquet(d)
+    ))
+    days = sorted(n[4:] for n in fsutil.list_names(s, bdir)
+                  if n.startswith("day="))
+    if not days:
+        if wrote:  # an empty micro-batch: its write left an empty dir
+            fsutil.delete(s, bdir)
+        return
+    touched = F.col("day").cast("string").isin(days)
+    store = TierStore(store_root, spark=s)
+    t1m = _read_staging(s, store_root, batch_df.schema).filter(touched)
+    store.write_tier("1h", rollup_cascade(
+        t1m.drop("qid", "batch_id", "day"), "1h"), days=days)
+    t1h = store.read_tier("1h").filter(touched).drop("day")
+    store.write_tier("1d", rollup_cascade(t1h, "1d"), days=days)
 
 
 #: qid used for compacted data — never a real streaming query id
@@ -365,6 +336,11 @@ def compact_stream_store(
        as a tombstone, so a late replay of an old batch still finds its
        marker and skips instead of resurrecting the rows.
 
+    One glob lists every staged day directory: it names the days to
+    compact and the directories to delete. The staging is read with the
+    cascade's schema, whose leaf columns the stored 1h tier carries
+    (``rollup_cascade`` keeps each measure's type).
+
     Crash-safe by invariant, not ordering: 1m rows are unique per
     (source, bucket) — append-mode windows + the idempotent batch sink —
     so the consolidation always runs ``dropDuplicates(source, bucket)``.
@@ -374,25 +350,20 @@ def compact_stream_store(
     no-op rewrite. Returns the number of day partitions compacted.
     Row-for-row lossless (asserted in tests).
     """
-    from pyspark.sql.utils import AnalysisException
+    from traval_spark.sources.tierstore import TierStore
 
-    try:
-        t1m = spark.read.parquet(f"{store_root}/1m")
-    except AnalysisException:
-        return 0
-    cut = pd.Timestamp(before_day).date()
+    cut = pd.Timestamp(before_day).date().isoformat()
     # only days that still have un-compacted source rows; fully compacted
     # days would just be rewritten identically
-    days = [
-        r["day"]
-        for r in t1m.filter(
-            (F.col("day") < F.lit(cut))
-            & (F.col("qid") != COMPACT_QID)
-        ).select("day").distinct().collect()
-    ]
+    staged = fsutil.glob(spark, f"{store_root}/1m/qid=*/batch_id=*/day=*")
+    src = [p for p in staged if f"/qid={COMPACT_QID}/" not in p
+           and p.rsplit("day=", 1)[1] < cut]
+    days = sorted({p.rsplit("day=", 1)[1] for p in src})
     if not days:
         return 0
-    old = t1m.filter(F.col("day").isin(days))
+    leaf = TierStore(store_root, spark=spark).read_tier("1h").drop("day")
+    old = _read_staging(spark, store_root, leaf.schema).filter(
+        F.col("day").cast("string").isin(days))
     consolidated = (
         old.drop("qid", "batch_id").dropDuplicates(["source", "bucket"])
         # eager materialization BEFORE the write: the target dir is under
@@ -414,23 +385,8 @@ def compact_stream_store(
     )
     # drop the compacted day dirs from every source batch dir (markers
     # and batch dirs themselves stay as replay tombstones)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(f"{store_root}/1m")
-    fs = root.getFileSystem(conf)
-    for qdir in fs.listStatus(root):
-        qname = qdir.getPath().getName()
-        if not qdir.isDirectory() or qname == f"qid={COMPACT_QID}":
-            continue
-        for bdir in fs.listStatus(qdir.getPath()):
-            if not bdir.isDirectory():
-                continue
-            for ddir in fs.listStatus(bdir.getPath()):
-                name = ddir.getPath().getName()
-                if not name.startswith("day="):
-                    continue
-                if pd.Timestamp(name[4:]).date() < cut:
-                    fs.delete(ddir.getPath(), True)
+    for p in src:
+        fsutil.delete(spark, p)
     return len(days)
 
 
@@ -451,9 +407,11 @@ def run_streaming_cascade(
     :func:`cascade_upsert_batch` — idempotent under checkpoint replay
     (batch_id-keyed 1m writes + full day-partition recomputes of the
     coarse tiers), so an interrupted-and-replayed batch cannot
-    double-count in any tier. The batch-mode ``rollup_cascade`` remains
-    the source of truth for full-history rebuilds (lambda split as in
-    :func:`run_incremental_rollup`).
+    double-count in any tier. ``store_root``'s 1h and 1d are TierStore
+    tiers (``TierStore(store_root)`` reads, routes and verifies them);
+    its 1m is the sink's staging. The batch-mode ``rollup_cascade``
+    remains the source of truth for full-history rebuilds (lambda split
+    as in :func:`run_incremental_rollup`).
 
     At 100 TB the per-batch work is bounded by (touched days x sources):
     the coarse-tier recomputes scan the pruned 1m/1h day partitions
@@ -461,23 +419,8 @@ def run_streaming_cascade(
     """
     agg = stream_rollup_1m(spark, input_path, watermark,
                            max_files_per_trigger=max_files_per_trigger)
-
-    writer = (
-        agg.writeStream.foreachBatch(
-            lambda df, bid: cascade_upsert_batch(
-                df, bid, store_root,
-                run_id=_stream_query_id(checkpoint_path),
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return sink.run_upserts(agg, cascade_upsert_batch, store_root,
+                            checkpoint_path, available_now)
 
 
 def stream_sessionize(
@@ -497,15 +440,12 @@ def stream_sessionize(
     from traval_spark.functions.ts import gap_micros
 
     g_us = gap_micros(gap)  # same parser as batch session_rollup
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.col("n_tok").cast("double").alias("value"),
-        )
+    stream = sink.file_stream(
+        spark, input_path, SEQUENCE_SCHEMA, max_files_per_trigger
+    ).select(
+        "source",
+        F.col("ts").cast("timestamp").alias("ts"),
+        F.col("n_tok").cast("double").alias("value"),
     )
     out = (
         stream.withWatermark("ts", watermark)
@@ -610,16 +550,9 @@ def stream_burst_dedup(
     from traval_spark.functions.ts import gap_micros
 
     g_us = gap_micros(gap)
-    stream = (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-        .select(
-            "source",
-            F.col("ts").cast("timestamp").alias("ts"),
-            "doc_id",
-        )
-    )
+    stream = sink.file_stream(
+        spark, input_path, SEQUENCE_SCHEMA, max_files_per_trigger
+    ).select("source", F.col("ts").cast("timestamp").alias("ts"), "doc_id")
     first = F.min(
         F.struct(F.col("ts").alias("t"), F.col("doc_id").alias("i"))
     ).alias("__f")

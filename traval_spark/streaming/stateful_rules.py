@@ -61,6 +61,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from traval_spark.codes import CorrectionCode
 from traval_spark.compress import _swing_loop
 from traval_spark.streaming.rollup_stream import SEQUENCE_SCHEMA
+from traval_spark.streaming.sink import file_stream
 
 #: emitted rows: the input point + its correction code (0 = kept)
 OUTPUT_SCHEMA = "source string, ts timestamp, value double, code int"
@@ -87,9 +88,7 @@ def _stream(
     ident = ([F.col(ident_col).cast("string").alias("ident")]
              if ident_col is not None else [])
     return (
-        spark.readStream.schema(SEQUENCE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
+        file_stream(spark, input_path, SEQUENCE_SCHEMA, max_files_per_trigger)
         .select(
             "source",
             # state/watermark machinery wants TIMESTAMP, not NTZ
