@@ -376,6 +376,37 @@ def test_pipeline_retention(spark, tmp_path):
         t1m.select(F.min("bucket")).collect()[0][0]
 
 
+def _jobs_in(spark, group, fn):
+    """Run ``fn()`` under a job group; returns (its result, the number of
+    Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("retention", [{"raw": 7}, {"1m": 1, "1hr": 30}])
+def test_run_rejects_unknown_retention_keys(spark, tmp_path, retention):
+    """``run`` owns only the 1m/1h/1d tiers: a TTL for any other name
+    (``raw``, a misspelt tier) raises before any Spark job, instead of
+    being skipped without a word."""
+    from traval_spark.pipeline import run
+
+    out = str(tmp_path / "pipe_bad_ret")
+
+    def go():
+        with pytest.raises(ValueError, match="unknown tiers"):
+            run(spark, out, synth_rows=3000, ruleset=None,
+                retention=retention)
+
+    _, n = _jobs_in(spark, f"bad-retention-{sorted(retention)}", go)
+    assert n == 0
+
+
 def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     from traval_spark.pipeline import default_ruleset, run
 
@@ -384,6 +415,10 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
              ruleset=default_ruleset())
     assert m1["rows"]["1m"] > 0 and m1["rows"]["1d"] > 0
     assert m1["compression_ratio"] > 1.0
+    blocks = spark.read.parquet(f"{out}/1m_gorilla").agg(
+        F.sum("raw_bytes"), F.sum("packed_bytes")).collect()[0]
+    assert (m1["gorilla_raw_bytes"], m1["gorilla_packed_bytes"]) == tuple(
+        blocks)
     # resume with identical input: every partition skipped
     m2 = run(spark, out, synth_rows=3000, resume=True,
              ruleset=default_ruleset())
@@ -801,7 +836,9 @@ def test_read_resolution_runs_two_spark_jobs(spark, tmp_path):
 def test_read_tier_without_schema_sidecar(spark, seqs, tmp_path):
     """A tier written before the schema sidecar existed is read with
     inference: the same rows and types as a plain parquet read. The
-    next landing records the sidecar again."""
+    next landing records the sidecar again. The raw table (``init_raw``)
+    records the same sidecar, reads through it without a Spark job, and
+    without it still reads through inference."""
     from traval_spark.sources import fsutil
     from traval_spark.sources.tierstore import MANIFEST_DIR, SCHEMA_FILE
 
@@ -821,6 +858,26 @@ def test_read_tier_without_schema_sidecar(spark, seqs, tmp_path):
     store.write_tier("1h", t1h)
     assert fsutil.exists(spark, sidecar)
     assert store.read_tier("1h", spark).schema == want.schema
+
+    # the raw table records and reads the same sidecar
+    from traval_spark.pipeline import init_raw
+    from traval_spark.sources.tierstore import read_days
+
+    raw_root = str(tmp_path / "raw")
+    init_raw(seqs, raw_root)
+    raw_sidecar = str(tmp_path / "raw" / MANIFEST_DIR / SCHEMA_FILE)
+    assert fsutil.exists(spark, raw_sidecar)
+    got, n = _jobs_in(spark, "raw-read-days",
+                      lambda: read_days(spark, raw_root))
+    assert n == 0
+    want = spark.read.parquet(raw_root)
+    assert got.schema == want.schema
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    fsutil.delete(spark, raw_sidecar, recursive=False)
+    got = read_days(spark, raw_root)
+    assert got.schema == want.schema
+    assert got.exceptAll(want).count() == 0
 
 
 def test_day_without_manifest_has_not_landed(spark, tmp_path):

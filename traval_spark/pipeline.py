@@ -22,7 +22,7 @@ import time
 # spark-submit --py-files, make the package importable from its location
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from traval_spark.compress import pack_tier
@@ -31,7 +31,13 @@ from traval_spark.rollup import gap_fill, rollup_cascade, salted_rollup
 from traval_spark.session import get_spark, held, hold
 from traval_spark.sources import fsutil
 from traval_spark.sources.synth import synth_sequences
-from traval_spark.sources.tierstore import TierStore, partition_fingerprints
+from traval_spark.sources.tierstore import (
+    TierStore, partition_fingerprints, read_days, write_days,
+)
+
+
+#: the measure tiers ``run`` and ``ingest_late`` land, finest first
+TIER_NAMES = ("1m", "1h", "1d")
 
 
 def default_ruleset() -> SparkRuleSet:
@@ -147,39 +153,52 @@ def init_raw(df: DataFrame, raw_root: str) -> None:
     :func:`ingest_late` upserts into. Day partitioning is what makes the
     invalidation path partition-pruned: refreshing K late days scans K
     day directories, never the corpus."""
-    (
-        df.withColumn("day", F.col("ts").cast("date"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(raw_root)
-    )
+    write_days(df.withColumn("day", F.col("ts").cast("date")), raw_root)
 
 
-def _stored(store: TierStore, tier: str, spark,
-            days: list[str] | None = None) -> DataFrame:
-    """Reread a tier ``write_tier`` just landed, pruned to ``days`` if
-    given, without the ``day`` column."""
-    df = store.read_tier(tier, spark)
-    if days is not None:
-        df = df.filter(F.col("day").cast("string").isin(days))
-    return df.drop("day")
+def land_cascade(
+    store: TierStore,
+    first: DataFrame,
+    cascade,
+    tiers: tuple[str, ...] = TIER_NAMES,
+    days: list[str] | None = None,
+    resume: bool = False,
+) -> dict[str, tuple[dict, list[str], list[str]]]:
+    """Land ``first`` as ``tiers[0]``, then each coarser tier as
+    ``cascade(prev, tier)``; returns, per tier, the write result, the
+    tier's days and the days skipped as already current.
 
-
-def _land(store: TierStore, tier: str, df: DataFrame,
-          resume: bool) -> tuple[dict, list[str], list[str]]:
-    """Write one tier of ``run``; returns the write result, the tier's
-    days and the days skipped as already current. Without ``resume`` the
-    plan executes once, inside the write; with it, the plan is first
-    fingerprinted, because the skip decision needs the fingerprints."""
-    if not resume:
-        res = store.write_tier(tier, df)
-        return res, res["written_partitions"], []
-    fps = partition_fingerprints(df.withColumn(
-        "day", F.date_trunc("day", F.col("bucket")).cast("timestamp_ntz")))
-    todo = store.stale_days(tier, fps)
-    res = store.write_tier(tier, df, fps, days=todo)
-    return res, sorted(fps), sorted(set(fps) - set(todo))
+    ``prev`` is the finer tier reread from the store (pruned to
+    ``days`` if given), so the plan behind ``first`` executes once. If
+    retention already dropped a day of ``days`` from the finer tier,
+    ``prev`` is the finer tier's plan instead. With ``days`` only those
+    day partitions are (over)written. With ``resume`` each plan is first
+    fingerprinted and only the stale days are written; without it the
+    plan executes once, inside the write."""
+    spark = first.sparkSession
+    out: dict = {}
+    df = first
+    for i, tier in enumerate(tiers):
+        if i:
+            fine = tiers[i - 1]
+            cutoff = store.retention_cutoff(fine) if days else None
+            if cutoff is None or days[0] >= cutoff:
+                df = store.read_tier(fine, spark)
+                if days is not None:
+                    df = df.filter(F.col("day").cast("string").isin(days))
+                df = df.drop("day")
+            df = cascade(df, tier)
+        if resume:
+            fps = partition_fingerprints(df.withColumn(
+                "day",
+                F.date_trunc("day", F.col("bucket")).cast("timestamp_ntz")))
+            todo = store.stale_days(tier, fps)
+            res = store.write_tier(tier, df, fps, days=todo)
+            out[tier] = (res, sorted(fps), sorted(set(fps) - set(todo)))
+        else:
+            res = store.write_tier(tier, df, days=days)
+            out[tier] = (res, res["written_partitions"], [])
+    return out
 
 
 def _expand_days(days: set[str], margin: int) -> set[str]:
@@ -256,7 +275,7 @@ def ingest_late(
 
     # -- 1. merge into the dirty raw day partitions ----------------------
     base = (
-        spark.read.parquet(raw_root)
+        read_days(spark, raw_root)
         .filter(F.col("day").cast("string").isin(dirty))
         .select(*cols)
         .withColumn("__pri", F.lit(0))
@@ -272,44 +291,27 @@ def ingest_late(
         )
         .select(key, "__r.*")
     )
-    (
-        merged.withColumn("day", F.col("ts").cast("date"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(raw_root)
-    )
+    write_days(merged.withColumn("day", F.col("ts").cast("date")), raw_root)
 
     # -- 2. rebuild the invalidated tier partitions ----------------------
     affected = _expand_days(set(dirty), margin_days)
     window = sorted(_expand_days(affected, margin_days))
     raw = (
-        spark.read.parquet(raw_root)
+        read_days(spark, raw_root)
         .filter(F.col("day").cast("string").isin(window))
         .select(*cols)
     )
     cleaned = clean_sequences(raw, ruleset)
-    store = TierStore(out_root)
     todo = sorted(affected)
-    metrics: dict = {
+    landed = land_cascade(
+        TierStore(out_root), salted_rollup(cleaned, "1m", n_salt=n_salt),
+        rollup_cascade, days=todo)
+    return {
         "dirty_days": dirty,
         "refreshed_days": todo,
-        "partitions": {},
+        "partitions": {t: res["written_partitions"]
+                       for t, (res, _, _) in landed.items()},
     }
-    for tier_name in ("1m", "1h", "1d"):
-        tier_df = (
-            salted_rollup(cleaned, "1m", n_salt=n_salt)
-            if tier_name == "1m"
-            else rollup_cascade(tier_df, tier_name)
-        )
-        res = store.write_tier(tier_name, tier_df, days=todo)
-        metrics["partitions"][tier_name] = res["written_partitions"]
-        # the next tier cascades from the refreshed stored one, unless
-        # retention already dropped some affected day from it
-        cutoff = store.retention_cutoff(tier_name)
-        if cutoff is None or todo[0] >= cutoff:
-            tier_df = _stored(store, tier_name, spark, todo)
-    return metrics
 
 
 def run(
@@ -325,7 +327,13 @@ def run(
     sketches: bool = False,
 ) -> dict:
     """Execute the cascade; returns a metrics dict (also written to the
-    store root as run_metrics.json)."""
+    store root as run_metrics.json). ``retention`` maps tier names
+    (``1m``, ``1h``, ``1d``) to days kept; any other key raises
+    ``ValueError`` before any Spark job runs."""
+    unknown = sorted(set(retention or ()) - set(TIER_NAMES))
+    if unknown:
+        raise ValueError(f"retention names unknown tiers {unknown}; "
+                         f"run lands {list(TIER_NAMES)}")
     t0 = time.time()
     if input_path:
         raw = spark.read.parquet(input_path)
@@ -351,24 +359,17 @@ def run(
 
     store = TierStore(out_root)
     metrics: dict = {"partitions": {}, "rows": {}, "skipped": {}}
-    max_day = None
-    tier_names = ("1m", "1h", "1d")
-    prev_stored = None
-    for tier_name in tier_names:
-        tier_df = (
-            salted_rollup(cleaned, "1m", n_salt=n_salt)
-            if tier_name == "1m"
-            else rollup_cascade(prev_stored, tier_name)
-        )
-        res, tier_days, skipped = _land(store, tier_name, tier_df, resume)
-        if tier_days:
-            max_day = max(tier_days[-1], max_day or "")
-        metrics["partitions"][tier_name] = res["written_partitions"]
-        metrics["rows"][tier_name] = res["rows"]
-        metrics["skipped"][tier_name] = skipped
-        prev_stored = _stored(store, tier_name, spark)
-        if tier_name == "1m":
-            t1m = prev_stored
+
+    def record(prefix: str, landed: dict) -> None:
+        for t, (res, _, skipped) in landed.items():
+            metrics["partitions"][prefix + t] = res["written_partitions"]
+            metrics["rows"][prefix + t] = res["rows"]
+            metrics["skipped"][prefix + t] = skipped
+
+    landed = land_cascade(store, salted_rollup(cleaned, "1m", n_salt=n_salt),
+                          rollup_cascade, resume=resume)
+    record("", landed)
+    max_day = max((d[-1] for _, d, _ in landed.values() if d), default=None)
 
     if sketches:
         # companion mergeable-tier stores (one root per tier kind; the
@@ -399,28 +400,23 @@ def run(
                  lambda cur, t: m4_merge(cur, t, bucket_col="bucket")),
                 ("fl", leaves["fl"], fl_cascade),
             ):
-                sub = TierStore(os.path.join(out_root, kind))
-                cur = leaf
-                for tname in ("1m", "1h", "1d"):
-                    if tname != "1m":
-                        cur = casc(cur, tname)
-                    res, _, skipped = _land(sub, tname, cur, resume)
-                    metrics["partitions"][f"{kind}_{tname}"] = res[
-                        "written_partitions"]
-                    metrics["rows"][f"{kind}_{tname}"] = res["rows"]
-                    metrics["skipped"][f"{kind}_{tname}"] = skipped
-                    cur = _stored(sub, tname, spark)
+                record(f"{kind}_", land_cascade(
+                    TierStore(os.path.join(out_root, kind)), leaf, casc,
+                    resume=resume))
 
     # gap-filled + packed views of the 1m tier
+    t1m = store.read_tier("1m", spark).drop("day")
     dense = gap_fill(t1m, "1m", method=gapfill_method)
     dense.write.mode("overwrite").parquet(f"{out_root}/1m_dense")
-    packed = pack_tier(t1m, measures=["sum_tok", "n_points"])
-    packed.write.mode("overwrite").parquet(f"{out_root}/1m_gorilla")
-    # byte totals from the written blocks, not a second pack
-    comp = spark.read.schema(packed.schema).parquet(
-        f"{out_root}/1m_gorilla").agg(
-        F.sum("raw_bytes").alias("raw"), F.sum("packed_bytes").alias("packed")
-    ).collect()[0]
+    # byte totals observed on the packed write, not read back: the
+    # observed node sits after pack_tier's applyInPandas, in the
+    # write's result stage, whose retried tasks are counted once
+    packed_bytes = Observation()
+    pack_tier(t1m, measures=["sum_tok", "n_points"]).observe(
+        packed_bytes, F.sum("raw_bytes").alias("raw"),
+        F.sum("packed_bytes").alias("packed"),
+    ).write.mode("overwrite").parquet(f"{out_root}/1m_gorilla")
+    comp = packed_bytes.get
     # rolled-up (non-flagged) point count read back from the tiny
     # written 1m tier — never re-execute the full cleaning plan just
     # for a metrics field (it is the dominant stage of the job)
@@ -433,7 +429,6 @@ def run(
         metrics["retention"] = {
             t: store.apply_retention(t, keep, as_of=max_day)
             for t, keep in retention.items()
-            if t in tier_names
         }
 
     metrics.update(
@@ -513,7 +508,7 @@ def run_maintenance(
     if action == "audit":
         from traval_spark.sources.tierstore import verify_cascade
 
-        order = [t for t in ("1m", "1h", "1d") if t in tiers]
+        order = [t for t in TIER_NAMES if t in tiers]
         pairs = list(zip(order, order[1:]))
         out = {}
         for fine, coarse in pairs:
@@ -559,7 +554,7 @@ def main() -> None:
                          "(default: today UTC)")
     ap.add_argument(
         "--retention", default=None,
-        help="per-tier TTL in days, e.g. 'raw=7,1m=30,1h=365' or 'default' "
+        help="per-tier TTL in days, e.g. '1m=30,1h=365' or 'default' "
              "(= tierstore.DEFAULT_RETENTION); omitted tiers keep forever",
     )
     args = ap.parse_args()

@@ -81,11 +81,68 @@ def use_iceberg(warehouse: str, catalog: str = "tiers") -> dict[str, str]:
             ".IcebergSparkSessionExtensions",
     }
 
+
+def _schema_path(path: str) -> str:
+    return os.path.join(path, MANIFEST_DIR, SCHEMA_FILE)
+
+
+def _stored_schema(spark, path: str) -> StructType | None:
+    p = _schema_path(path)
+    if not fsutil.exists(spark, p):
+        return None
+    return StructType.fromJson(json.loads(fsutil.read_text(spark, p)))
+
+
+def write_days(df: DataFrame, path: str, sidecar: bool = True) -> None:
+    """The one day-partitioned parquet writer: ``df`` (which carries a
+    ``day`` column) overwrites exactly the ``day=`` partitions it holds.
+
+    Dynamic overwrite is ENFORCED on the writer, not left to the
+    session default: under a STATIC-default session (plain
+    ``SparkSession.builder``) a subset write would truncate every
+    sibling partition. With ``sidecar``, the table's schema is recorded
+    in ``path/_manifests/_schema.json`` (``day`` last), rewritten only
+    when it differs, so :func:`read_days` skips Spark's
+    footer-inference job."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day").parquet(path)
+    )
+    if not sidecar:
+        return
+    # as a reread sees it: the partition column comes last, and
+    # parquet reads every column as nullable
+    fields = [f for f in df.schema.fields if f.name != "day"] + [
+        f for f in df.schema.fields if f.name == "day"]
+    schema = StructType([StructField(f.name, f.dataType, True, f.metadata)
+                         for f in fields])
+    spark = df.sparkSession
+    if _stored_schema(spark, path) != schema:
+        fsutil.write_text(spark, _schema_path(path), schema.json())
+
+
+def read_days(spark, path: str) -> DataFrame:
+    """Read a table :func:`write_days` landed, with the schema from its
+    sidecar: no footer-inference job. A table without one (written
+    before the sidecar existed) is read with inference."""
+    schema = _stored_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 #: days of history each tier keeps (None = forever) — the downsample
-#: story: raw ages out fast, coarser tiers keep (cheaper) history longer.
-DEFAULT_RETENTION: dict[str, int | None] = {
-    "raw": 7, "1m": 30, "1h": 365, "1d": None,
-}
+#: story: the fine tier ages out fast, coarser tiers keep (cheaper)
+#: history longer.
+DEFAULT_RETENTION: dict[str, int | None] = {"1m": 30, "1h": 365, "1d": None}
+
+
+def _ttl_cutoff(keep_days: int, as_of: str | dt.date) -> str:
+    """The first day (YYYY-MM-DD) a ``keep_days`` TTL anchored on
+    ``as_of`` keeps; days strictly before it are dropped."""
+    if isinstance(as_of, str):
+        as_of = dt.date.fromisoformat(as_of)
+    return (as_of - dt.timedelta(days=int(keep_days))).isoformat()
 
 
 def _fingerprint_aggs(cols: list[Column]) -> list[Column]:
@@ -139,42 +196,14 @@ class TierStore:
             self.root, tier, MANIFEST_DIR, f"day={day}.json"
         )
 
-    def _schema_path(self, tier: str) -> str:
-        return os.path.join(self.tier_path(tier), MANIFEST_DIR, SCHEMA_FILE)
-
-    def _stored_schema(self, spark, tier: str) -> StructType | None:
-        p = self._schema_path(tier)
-        if not fsutil.exists(spark, p):
-            return None
-        return StructType.fromJson(json.loads(fsutil.read_text(spark, p)))
-
     # -- data plane (overridden by IcebergTierStore; manifests/retention
     # -- state stay fsutil JSON in both backends) ----------------------------
 
     def _write_data(self, sub: DataFrame, tier: str) -> None:
-        # dynamic overwrite ENFORCED per-writer (not just the session
-        # default): a --resume subset write under a STATIC-default
-        # session would truncate every day partition NOT in ``todo``
-        (
-            sub.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day").parquet(self.tier_path(tier))
-        )
-        # as a reread sees it: the partition column comes last, and
-        # parquet reads every column as nullable
-        fields = [f for f in sub.schema.fields if f.name != "day"] + [
-            f for f in sub.schema.fields if f.name == "day"]
-        schema = StructType([StructField(f.name, f.dataType, True, f.metadata)
-                             for f in fields])
-        spark = sub.sparkSession
-        if self._stored_schema(spark, tier) != schema:
-            fsutil.write_text(spark, self._schema_path(tier), schema.json())
+        write_days(sub, self.tier_path(tier))
 
     def _read_data(self, spark, tier: str) -> DataFrame:
-        # the stored schema skips Spark's footer-inference job
-        schema = self._stored_schema(spark, tier)
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        return reader.parquet(self.tier_path(tier))
+        return read_days(spark, self.tier_path(tier))
 
     def _drop_day(self, tier: str, day: str) -> None:
         part_dir = os.path.join(self.tier_path(tier), f"day={day}")
@@ -367,7 +396,7 @@ class TierStore:
             return {"tier": tier, "cutoff": None, "dropped": []}
         if isinstance(as_of, str):
             as_of = dt.date.fromisoformat(as_of)
-        cutoff = (as_of - dt.timedelta(days=keep_days)).isoformat()
+        cutoff = _ttl_cutoff(keep_days, as_of)
         drop = [d for d in self.days(tier) if d < cutoff]
         for day in drop:
             self._drop_day(tier, day)
@@ -551,19 +580,14 @@ def retention_preview(
     """Dry run of :meth:`TierStore.apply_retention`'s TTL rule over any
     timestamp-carrying frame — the read you run BEFORE retention
     mutates anything: per day, how many rows exist and whether the TTL
-    would keep or drop them.  Uses the same cutoff arithmetic and the
-    same strict ``day < cutoff`` comparison as ``apply_retention`` (one
-    copy of the rule would be better, but the rule is one line and the
-    coherence pytest pins them together: preview's drop set == the days
-    apply_retention actually drops).
+    would keep or drop them.  The cutoff is ``apply_retention``'s own
+    (``_ttl_cutoff``), with the same strict ``day < cutoff`` comparison.
 
     One partial-aggregatable groupBy over the frame; at scale the day
     column is the partition key, so the scan prunes to footers.
     Output: ``day (YYYY-MM-DD), n_rows, action`` ('keep' | 'drop').
     """
-    if isinstance(as_of, str):
-        as_of = dt.date.fromisoformat(as_of)
-    cutoff = (as_of - dt.timedelta(days=int(keep_days))).isoformat()
+    cutoff = _ttl_cutoff(keep_days, as_of)
     day = F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd")
     return (
         df.groupBy(day.alias("day"))
@@ -694,7 +718,7 @@ def compact_tier_day(
     if manifest is None:
         raise ValueError(f"no manifest for {tier} day={day}: not a "
                          "landed partition (nothing to compact)")
-    part = store._read_data(spark, tier).filter(
+    part = store.read_tier(tier, spark).filter(
         F.col("day").cast("string") == day
     )
     before = file_census(store, tier)
@@ -704,7 +728,7 @@ def compact_tier_day(
     if cols:
         sub = sub.sortWithinPartitions(*cols)
     store._write_data(sub, tier)
-    reread = store._read_data(spark, tier).filter(
+    reread = store.read_tier(tier, spark).filter(
         F.col("day").cast("string") == day
     )
     rows_after = reread.count()

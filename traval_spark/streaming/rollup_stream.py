@@ -7,10 +7,11 @@ tokenized-sequence files land in a directory, the 1m tier updates
 incrementally with watermarked tumbling windows, and the batch cascade
 (1h/1d) re-aggregates from the streamed 1m tier — identical tier
 semantics, verified against the batch rollup in tests. The coarse tiers
-land through ``TierStore.write_tier``, the batch job's own landing
-path, so a stream-landed 1h/1d carries the same manifests and schema
-sidecar and every store reader serves it; the 1m staging commits
-through the shared sink protocol (:mod:`traval_spark.streaming.sink`).
+land through ``pipeline.land_cascade``, the batch job's own lander, so
+a stream-landed 1h/1d carries the same manifests and schema sidecar and
+every store reader serves it; the 1m staging is written by
+``tierstore.write_days`` and commits through the shared sink protocol
+(:mod:`traval_spark.streaming.sink`).
 
 Late data: events older than the watermark relative to the max seen ts
 are dropped by Spark's state eviction — the batch job remains the
@@ -257,8 +258,9 @@ def cascade_upsert_batch(
 
     1. write this batch's 1m rows under
        ``{store_root}/1m/qid=<run_id>/batch_id=N`` (day-partitioned
-       inside; ``run_id`` = the streaming query id,
-       :func:`~traval_spark.streaming.sink.stream_query_id`) through the
+       inside, through :func:`~traval_spark.sources.tierstore.write_days`;
+       ``run_id`` = the streaming query id,
+       :func:`~traval_spark.streaming.sink.stream_query_id`) under the
        shared commit protocol (:func:`~traval_spark.streaming.sink.commit`):
        a replayed batch (same query id + batch_id, same deterministic
        content) finds the batch directory's ``_COMMITTED`` marker and
@@ -276,41 +278,36 @@ def cascade_upsert_batch(
        ``day=`` directories of its batch directory, one listing that
        also serves a replay whose write was skipped — by re-aggregating
        the (partition-pruned) 1m staging, and land those days through
-       ``TierStore.write_tier(days=...)``: dynamic partition overwrite,
-       one manifest per day and the ``_schema.json`` sidecar, exactly
-       as the batch job lands a tier;
-    3. same for 1d from the 1h days just landed.
+       :func:`~traval_spark.pipeline.land_cascade`, the batch job's own
+       lander (``TierStore.write_tier(days=...)``: dynamic partition
+       overwrite, one manifest per day and the ``_schema.json`` sidecar);
+    3. same for 1d from the 1h days just landed (the lander rereads
+       them, pruned to the touched days).
 
     A replay that crashed between steps 1 and 3 re-runs 2/3 as full
     recomputes of their day partitions over the duplicate-free 1m
     staging, so every tier converges to the exact batch-cascade result.
     """
+    from traval_spark.pipeline import land_cascade
     from traval_spark.rollup import rollup_cascade
-    from traval_spark.sources.tierstore import TierStore
+    from traval_spark.sources.tierstore import TierStore, write_days
 
     s = batch_df.sparkSession
     bdir = sink.batch_dir(f"{store_root}/1m", run_id, batch_id)
     day = F.date_trunc("day", F.col("bucket")).cast("date")
-    # dynamic overwrite enforced on the writer: under a session with the
-    # static default this would otherwise truncate sibling partitions
-    wrote = sink.commit(s, bdir, lambda d: (
-        batch_df.withColumn("day", day).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day").parquet(d)
-    ))
+    wrote = sink.commit(s, bdir, lambda d: write_days(
+        batch_df.withColumn("day", day), d, sidecar=False))
     days = sorted(n[4:] for n in fsutil.list_names(s, bdir)
                   if n.startswith("day="))
     if not days:
         if wrote:  # an empty micro-batch: its write left an empty dir
             fsutil.delete(s, bdir)
         return
-    touched = F.col("day").cast("string").isin(days)
-    store = TierStore(store_root, spark=s)
-    t1m = _read_staging(s, store_root, batch_df.schema).filter(touched)
-    store.write_tier("1h", rollup_cascade(
-        t1m.drop("qid", "batch_id", "day"), "1h"), days=days)
-    t1h = store.read_tier("1h").filter(touched).drop("day")
-    store.write_tier("1d", rollup_cascade(t1h, "1d"), days=days)
+    t1m = _read_staging(s, store_root, batch_df.schema).filter(
+        F.col("day").cast("string").isin(days))
+    land_cascade(TierStore(store_root, spark=s),
+                 rollup_cascade(t1m.drop("qid", "batch_id", "day"), "1h"),
+                 rollup_cascade, tiers=("1h", "1d"), days=days)
 
 
 #: qid used for compacted data — never a real streaming query id
@@ -350,7 +347,7 @@ def compact_stream_store(
     no-op rewrite. Returns the number of day partitions compacted.
     Row-for-row lossless (asserted in tests).
     """
-    from traval_spark.sources.tierstore import TierStore
+    from traval_spark.sources.tierstore import TierStore, write_days
 
     cut = pd.Timestamp(before_day).date().isoformat()
     # only days that still have un-compacted source rows; fully compacted
@@ -372,17 +369,12 @@ def compact_stream_store(
         # warehouse scale: stage to a temp table instead.)
         .localCheckpoint(eager=True)
     )
-    (
-        # batch_id=0 level keeps the partition-directory depth uniform
-        # with the live batch dirs (qid/batch_id/day) for discovery.
-        # Dynamic overwrite ENFORCED on the writer: under a static-mode
-        # session this overwrite would truncate previously compacted
-        # days whose source dirs are already deleted — silent data loss
-        consolidated.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(f"{store_root}/1m/qid={COMPACT_QID}/batch_id=0")
-    )
+    # batch_id=0 level keeps the partition-directory depth uniform with
+    # the live batch dirs (qid/batch_id/day) for discovery. write_days
+    # enforces dynamic overwrite: a static one would truncate previously
+    # compacted days whose source dirs are already deleted — data loss
+    write_days(consolidated, f"{store_root}/1m/qid={COMPACT_QID}/batch_id=0",
+               sidecar=False)
     # drop the compacted day dirs from every source batch dir (markers
     # and batch dirs themselves stay as replay tombstones)
     for p in src:
