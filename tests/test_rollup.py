@@ -820,16 +820,9 @@ def test_read_resolution_runs_two_spark_jobs(spark, tmp_path):
     out = str(tmp_path / "tiers")
     run(spark, out, synth_rows=3000, ruleset=None)
     store = TierStore(out, spark)
-    sc = spark.sparkContext
     for res in ("1m", "1h", "1d"):
-        group = f"routed-read-{res}"
-        sc.setJobGroup(group, group)
-        try:
-            read_resolution(store, res, spark=spark).toPandas()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        _, n = _jobs_in(spark, f"routed-read-{res}", lambda: read_resolution(
+            store, res, spark=spark).toPandas())
         assert n == 2, (res, n)
 
 

@@ -182,7 +182,7 @@ def land_cascade(
         if i:
             fine = tiers[i - 1]
             cutoff = store.retention_cutoff(fine) if days else None
-            if cutoff is None or days[0] >= cutoff:
+            if cutoff is None or min(days) >= cutoff:
                 df = store.read_tier(fine, spark)
                 if days is not None:
                     df = df.filter(F.col("day").cast("string").isin(days))
